@@ -166,51 +166,6 @@ private[graft] object CacheScope {
     }
 }
 
-/** Loop-scoped session for the iterative operators
-  * ([[Dedup.connectedComponents]], [[GraphOps.kCore]],
-  * [[GraphOps.bfsDistances]]): their convergence loops want AQE off and
-  * shuffle partitions sized to the (small, fixed) candidate graph — but
-  * mutating the CALLER's session conf for the loop's duration races any
-  * query planned concurrently on that session, and two overlapping loop
-  * invocations would restore each other's stale values. So each loop runs
-  * its plans on a CLONED session (same SparkContext, SharedState — the
-  * cache manager and catalog are shared, so persists made inside the loop
-  * are visible outside and vice versa) whose SQLConf copy carries the
-  * loop's overrides; the caller's session is never touched. Frames cross
-  * the boundary by re-binding their logical plans
-  * ([[org.apache.spark.sql.graftbridge.Bridge.rebind]]) — plans are
-  * session-agnostic, and cached fragments still match by canonicalized
-  * plan.
-  */
-private[graft] object LoopSession {
-
-  /** A clone of `spark` with AQE off — adaptive re-optimization of
-    * accumulated iterative lineage is pure driver tax on tiny fixed-size
-    * shuffles (measured 3x wall on the composed dedup; see
-    * [[Dedup.connectedComponents]]).
-    */
-  def enter(spark: SparkSession): SparkSession = {
-    val clone = org.apache.spark.sql.graftbridge.Bridge.cloneSession(spark)
-    clone.conf.set("spark.sql.adaptive.enabled", "false")
-    clone
-  }
-
-  /** Size the CLONE's loop shuffles to the loop's row count — ≥1
-    * partition per 250k rows, capped at the parent session's own setting
-    * (the manual version of the coalescing AQE would have done).
-    */
-  def sizeShuffles(clone: SparkSession, parent: SparkSession, rows: Long): Unit = {
-    val parts = math.max(1L, math.min(
-      parent.conf.get("spark.sql.shuffle.partitions").toLong,
-      (rows + 249999L) / 250000L))
-    clone.conf.set("spark.sql.shuffle.partitions", parts.toString)
-  }
-
-  /** Re-bind a frame into / out of the loop session. */
-  def rebind(df: DataFrame, to: SparkSession): DataFrame =
-    org.apache.spark.sql.graftbridge.Bridge.rebind(df, to)
-}
-
 /** Public cache-release handle for composed pipeline results
   * ([[Dedup.dedupCorpus]], [[TextAnalysis.curateCorpus]], …): their
   * internal hub caches normally release at the caller's first

@@ -1429,106 +1429,54 @@ object Dedup {
     * blocking graph and lost 8x to this loop — the extra per-action
     * materialization dominates until diameters reach the hundreds.
     *
-    * SIZE-ADAPTIVE: below `graft.cc.localEdgeThreshold` edges (default
-    * 1M — order 100 MB of driver heap with string ids, a bounded
-    * metadata-scale handoff with the bound CHECKED against an exact
-    * count of the checkpointed edge frame, not guessed; lower it on a
-    * thin driver), labels come from a driver-side union-find
-    * instead: the iterative loop's cost on a small deep graph is pure
-    * action cadence (~0.75 s/action x O(diameter) actions, measured on
-    * the 17-round ER chain graph), while union-find is O(E alpha) — ~ms.
-    * Same fixpoint by construction (min id per component), so gate
-    * hashes are unchanged; a spec pins local == distributed on a deep
-    * fixture. At 100 TB the candidate graph exceeds any sane threshold
-    * and the distributed loop runs — this cutover only removes the
-    * small-graph regime where a 1000-executor cluster would otherwise
-    * burn seconds of scheduler round-trips on kilobytes of edges.
+    * SIZE-ADAPTIVE through [[Iterate]]: under its local cutover labels
+    * come from a driver-side union-find instead — the loop's cost on a
+    * small deep graph is pure action cadence (~0.75 s/action x
+    * O(diameter) actions, measured on the 17-round ER chain graph), while
+    * union-find is O(E alpha) — ~ms. Same fixpoint by construction (min
+    * id per component), so gate hashes are unchanged; a spec pins local ==
+    * distributed on a deep fixture. At 100 TB the candidate graph exceeds
+    * any sane threshold and the distributed loop runs — this cutover only
+    * removes the small-graph regime where a 1000-executor cluster would
+    * otherwise burn seconds of scheduler round-trips on kilobytes of edges.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // EAGER LINEAGE TRUNCATION, not just a cache: the loop references the
-    // edge frame twice per step and analyzes the accumulated plan at every
-    // convergence action, so the caller's upstream lineage is re-walked by
-    // the ANALYZER once per reference per round — with an expensive
+    // the loop roots the pair list at a flat leaf: with an expensive
     // upstream expression (a Jaro-Winkler column filter, an LSH pipeline)
-    // that alone took 300+ s on a 7k-edge graph at sf0.1 while the actual
-    // shuffles were sub-second. localCheckpoint materializes the edge list
-    // (small by design: the candidate graph, ~0.1% of corpus bytes) and
-    // roots every later plan at a flat leaf. A cluster deployment that
-    // must survive executor loss would use reliable checkpoint() here —
-    // same truncation, durable storage.
-    val p0 = pairs.select(col("id_a"), col("id_b")).localCheckpoint(true)
-    val spark0 = pairs.sparkSession
-    // exact edge count off the checkpointed leaf — it gates the local
-    // cutover AND sizes the loop's shuffles below
-    val edgeRows = p0.count()
-    // the local path is a PURE OPTIMIZATION: it must never change which
-    // inputs are accepted. Ids outside the types the driver union-find
-    // orders (integral/string) or null ids fall through to the
-    // distributed loop — same behavior on either side of the threshold.
-    // The null scan runs only under the threshold, over the checkpointed
-    // leaf (≤ threshold rows, no upstream replay).
-    if (edgeRows <= spark0.conf.get(
-        "graft.cc.localEdgeThreshold", "1000000").toLong &&
-        localIdOrdering(p0.schema.fields(0).dataType).isDefined &&
-        p0.filter(col("id_a").isNull || col("id_b").isNull).isEmpty)
-      return connectedComponentsLocal(p0)
-    // LOOP-SCOPED SESSION (see [[LoopSession]]): the loop's conf
-    // overrides — AQE off (adaptive re-optimization of the accumulated
-    // iterative lineage at every query stage turned each convergence
-    // count into ~10 driver-bound jobs; measured 3x wall on the composed
-    // dedup, 16 s -> 5 s at sf0.1), shuffle partitions sized to the edge
-    // count (a deep-chain graph at sf0.1, 7k edges / ~17 rounds, spent
-    // ~10 s in stage scheduling alone at 32 partitions) — live on a
-    // CLONED session's SQLConf, so a query planned CONCURRENTLY on the
-    // caller's session keeps the caller's settings and two overlapping
-    // loop invocations can't clobber each other. The caller's consuming
-    // action plans under its own session again (result rebound below,
-    // and it sees a shallow cache-backed plan anyway).
-    val loopSpark = LoopSession.enter(spark0)
-    LoopSession.sizeShuffles(loopSpark, spark0, edgeRows)
-    val p0L = LoopSession.rebind(p0, loopSpark)
-    val edges = p0L.select(col("id_a").as("a"), col("id_b").as("b"))
-      .unionAll(p0L.select(col("id_b").as("a"), col("id_a").as("b")))
-      .distinct().persist(lvl)
-    // step 1 folds into initialization: lbl = min(own id, nearest neighbor)
-    var labels = edges.groupBy(col("a"))
-      .agg(least(col("a"), min(col("b"))).as("lbl"))
-      .select(col("a").as("id"), col("lbl")).persist(lvl)
-    // one propagation step as a plan fragment: (id, __old, lbl)
-    def step(l: DataFrame): DataFrame = {
-      val nbrMin = edges
-        .join(l.select(col("id").as("b"), col("lbl").as("__nl")), "b")
-        .groupBy(col("a")).agg(min(col("__nl")).as("__m"))
-        .select(col("a").as("id"), col("__m"))
-      l.join(nbrMin, Seq("id"), "left")
-        .select(col("id"), col("lbl").as("__old"),
-          least(col("lbl"), coalesce(col("__m"), col("lbl"))).as("lbl"))
-    }
-    var converged = false
-    var it = 1
-    var first = true
-    var roundsSinceCut = 0
-    // labels is a PROJECTION over the persisted frame after the first
-    // action, so unpersisting it would be a no-op — track the persisted
-    // handles themselves
-    var persisted: DataFrame = labels
-    while (!converged && it < maxIter) {
-      // FIRST action: one shallow step — it materializes the p0/edges/
-      // labels caches (and, through their lineage, the whole upstream
-      // candidate pipeline) exactly once. A deep two-step first job
-      // instead races its independent cold-cache subtrees into
-      // recomputing that pipeline concurrently (measured 1.5x slower
-      // when the upstream is an expensive projection, e.g. curateCorpus's
-      // regex-heavy quality/language pass).
-      // LATER actions: two steps per job over the now-warm caches,
+    // re-analyzing the caller's lineage at every reference took 300+ s on
+    // a 7k-edge graph at sf0.1 while the actual shuffles were sub-second
+    val it = Iterate(pairs.select(col("id_a"), col("id_b")))
+    it.local().map(r => connectedComponentsLocal(it.caller, r.head, it.idType)).getOrElse {
+      val p = it.edges
+      val edges = it.root(p.select(col("id_a").as("a"), col("id_b").as("b"))
+        .unionAll(p.select(col("id_b").as("a"), col("id_a").as("b"))).distinct())
+      // step 1 folds into initialization: lbl = min(own id, nearest neighbor)
+      val labels = edges.groupBy(col("a"))
+        .agg(least(col("a"), min(col("b"))).as("lbl"))
+        .select(col("a").as("id"), col("lbl"))
+      // one propagation step as a plan fragment: (id, __old, lbl)
+      def step(l: DataFrame): DataFrame = {
+        val nbrMin = edges
+          .join(l.select(col("id").as("b"), col("lbl").as("__nl")), "b")
+          .groupBy(col("a")).agg(min(col("__nl")).as("__m"))
+          .select(col("a").as("id"), col("__m"))
+        l.join(nbrMin, Seq("id"), "left")
+          .select(col("id"), col("lbl").as("__old"),
+            least(col("lbl"), coalesce(col("__m"), col("lbl"))).as("lbl"))
+      }
+      // FIRST round: one shallow step — it materializes the symmetric edge
+      // leaf exactly once. A deep two-step first job instead races its
+      // independent cold-cache subtrees into recomputing it concurrently
+      // (measured 1.5x slower when the upstream is an expensive
+      // projection, e.g. curateCorpus's regex-heavy quality/language pass).
+      // LATER rounds: two steps per action over the now-warm leaves,
       // counting only the SECOND step's changes — zero changes in the
       // second step proves the first step's labels were already the
       // fixpoint, so the usual star/clique graph (2 propagation steps +
       // 1 verify under step-per-action) finishes in TWO driver-
       // synchronized actions instead of three, and deep chains in
       // ~half the actions. The shuffle work per step is unchanged; what
-      // halves is driver sync points and per-round cache materializations
+      // halves is driver sync points and per-round materializations
       // — the cost driver when the candidate graph is small relative to
       // the cluster (at 100 TB the LSH pair graph is ~0.1% of corpus
       // bytes, so action cadence bounds this stage there too).
@@ -1537,71 +1485,27 @@ object Dedup {
       // the next step, and within one job those references RACE the
       // not-yet-populated cache into recomputation — a 4-step chain
       // measured ~3x SLOWER on the 17-round ER chain graph (22 s vs
-      // 7.6 s), the same cold-cache race the first-action note below
+      // 7.6 s), the same cold-cache race the first-round note
       // describes. More steps per action compound it exponentially.
       // (A pointer-jump variant — lbl := min(lbl, lbl(lbl)) folded into
       // each action for O(log diameter) rounds — was MEASURED here on the
       // sf0.1 ER blocking graph and LOST 8x: the extra node-sized
-      // self-join adds a cache materialization and two shuffle stages per
+      // self-join adds a materialization and two shuffle stages per
       // action, and this graph converges in a handful of rounds anyway.
       // At genuinely deep diameters the trade flips; see the class doc.)
-      val mid = if (first) None
-                else Some(step(labels).select("id", "lbl").persist(lvl))
-      val s2 = step(mid.getOrElse(labels)).persist(lvl)
-      val nChanged = s2.filter(col("lbl") < col("__old")).count()
-      persisted.unpersist()
-      mid.foreach(_.unpersist())
-      persisted = s2
-      labels = s2.select("id", "lbl")
-      converged = nChanged == 0
-      it += (if (first) 1 else 2)
-      first = false
-      // PERIODIC LINEAGE TRUNCATION: each step references the previous
-      // labels frame TWICE (the neighbor-min join and the outer merge),
-      // so the accumulated logical plan is a DAG whose tree expansions
-      // (canonicalization, transformUp copies) grow EXPONENTIALLY in
-      // rounds — ~2^rounds nodes. persist() caches execution but the
-      // analyzer still walks the full plan every action; measured: an
-      // 8 GiB driver OOMs in doCanonicalize near round ~24. Deep
-      // diameters are exactly where the distributed loop matters, so
-      // cut the plan to a checkpointed leaf every 8 rounds — one extra
-      // materialization per 8 rounds, analyzer cost back to linear.
-      roundsSinceCut += 2
-      if (!converged && roundsSinceCut >= 8) {
-        val cut = labels.localCheckpoint(true)
-        persisted.unpersist()
-        persisted = cut
-        labels = cut
-        roundsSinceCut = 0
-      }
+      // The init is step 1 and round 0 step 2, so maxIter steps allow
+      // (maxIter + 1) / 2 rounds.
+      val (out, converged) = it.converge(labels, if (maxIter < 2) 0 else (maxIter + 1) / 2) {
+        (s, r) => if (r == 0) step(s) else step(step(s.select("id", "lbl")).select("id", "lbl"))
+      } { (s, _) => s.filter(col("lbl") < col("__old")).count() == 0 }
+      if (!converged) it.release()
+      require(converged, s"connectedComponents did not converge in $maxIter rounds")
+      // reusers must persist the result: the iterative lineage is
+      // expensive to replay
+      it.result(out.select(col("id").as("doc_id"), col("lbl").as("cluster_id")))
     }
-    edges.unpersist()
-    // p0 is a local checkpoint — its blocks are reclaimed by the context
-    // cleaner once unreferenced; nothing to unpersist here
-    // failure path must not strand the per-round cache
-    if (!converged) persisted.unpersist(blocking = false)
-    require(converged, s"connectedComponents did not converge in $maxIter rounds")
-    // the final merged frame backs the returned labels; scope it to the
-    // caller's first consuming action (reusers must persist the result —
-    // the iterative lineage is expensive to replay). Rebound to the
-    // CALLER's session: the loop session's conf must not govern the
-    // consuming action's plan.
-    CacheScope.releaseAfterFirstUse(
-      LoopSession.rebind(
-        labels.select(col("id").as("doc_id"), col("lbl").as("cluster_id")),
-        spark0),
-      Seq(persisted))
   }
 
-  /** Driver-side union-find over a SMALL edge frame (the size-adaptive
-    * cutover on [[connectedComponents]] — the caller has already
-    * count-verified the bound against the checkpointed pairs): path-
-    * halving find, union rooted at the smaller id, so every component's
-    * root IS its min id — the exact fixpoint the distributed loop
-    * converges to, hence identical labels and gate hashes. O(E alpha)
-    * driver work vs O(diameter) cluster actions. Output:
-    * (doc_id, cluster_id), one row per node, id type preserved.
-    */
   /** Driver-side ordering matching the distributed loop's `least`/`min`
     * semantics per id type, or None when the type has no such ordering
     * here (the cutover then stays on the distributed loop). Strings
@@ -1638,11 +1542,18 @@ object Dedup {
     }
   }
 
-  private def connectedComponentsLocal(p0: DataFrame): DataFrame = {
+  /** Driver-side union-find over the [[Iterate]] cutover's pair rows:
+    * path-halving find, union rooted at the smaller id, so every
+    * component's root IS its min id — the exact fixpoint the distributed
+    * loop converges to, hence identical labels and gate hashes. O(E alpha)
+    * driver work vs O(diameter) cluster actions. Output:
+    * (doc_id, cluster_id), one row per node, id type preserved.
+    */
+  private def connectedComponentsLocal(spark: org.apache.spark.sql.SparkSession,
+      pairs: Array[org.apache.spark.sql.Row],
+      idType: org.apache.spark.sql.types.DataType): DataFrame = {
     import org.apache.spark.sql.types._
-    val spark = p0.sparkSession
-    val idType = p0.schema.fields(0).dataType
-    // cutover guarantees a supported type; .get is safe by construction
+    // the cutover guarantees a supported type and no null ids
     val ord: Ordering[Any] = localIdOrdering(idType).get
     val parent = new java.util.HashMap[Any, Any]()
     def find(x0: Any): Any = {
@@ -1656,10 +1567,8 @@ object Dedup {
       }
       x
     }
-    p0.collect().foreach { r =>
+    pairs.foreach { r =>
       val a = r.get(0); val b = r.get(1)
-      require(a != null && b != null,
-        "connectedComponents: null id in the pair table")
       if (!parent.containsKey(a)) parent.put(a, a)
       if (!parent.containsKey(b)) parent.put(b, b)
       val ra = find(a); val rb = find(b)

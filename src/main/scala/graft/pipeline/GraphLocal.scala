@@ -3,18 +3,10 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
-/** Driver-side evaluators for the snapped graph fixed points — the
-  * [[Dedup.connectedComponentsLocal]] cutover generalized to the
-  * PageRank/HITS/LPA family.
-  *
-  * Why: each distributed iteration of these operators is a handful of
-  * keyed joins plus 1-row norm/size broadcast subqueries; on a SMALL graph
-  * (the co-citation / vocabulary graphs the gates exercise are tens of
-  * nodes) the wall time is pure scheduling cadence — measured ~55 jobs and
-  * ~3 s for two HITS rounds on an 18-node graph whose arithmetic is
-  * microseconds. Below an edge-count threshold the operators collect the
-  * (validated, bounded) edge list and run the SAME fixed point on the
-  * driver, exactly like the CC cutover.
+/** Driver-side evaluators for the snapped graph fixed points: the local
+  * side of the [[Iterate]] cutover (connected components' union-find lives
+  * in [[Dedup]]). Each takes the gate's collected rows (non-null ids of one
+  * type) and returns the same rows the distributed loop would.
   *
   * Bit-exactness contract (the reason this file is longer than the math):
   * every stored score lives on the 1e-6 grid, and each iteration's float
@@ -27,21 +19,8 @@ import org.apache.spark.sql.types._
   *  - update expressions keep the distributed form's association order.
   * GraphOpsSpec pins local == distributed on randomized graphs; the gate
   * oracles pin both against DuckDB.
-  *
-  * The cutover is a PURE OPTIMIZATION: unsupported id types or null ids
-  * fall through to the distributed loop (same stance as the CC local
-  * path). Threshold: `graft.graph.localEdgeThreshold` (default 1M edges).
   */
 private[pipeline] object GraphLocal {
-
-  def threshold(spark: SparkSession): Long =
-    spark.conf.get("graft.graph.localEdgeThreshold", "1000000").toLong
-
-  /** Can ids of this type take the local path (hash/equality is enough
-    * for the rank family; LPA ties additionally need [[Dedup.localIdOrdering]],
-    * which supports exactly the same types).
-    */
-  def idsSupported(t: DataType): Boolean = Dedup.localIdOrdering(t).isDefined
 
   /** floor(x*1e6 + 0.5)/1e6 — [[TextAnalysis.round6]]'s exact semantics. */
   private def snap(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
@@ -62,122 +41,95 @@ private[pipeline] object GraphLocal {
     spark.createDataFrame(spark.sparkContext.parallelize(rows, slices), schema)
   }
 
-  /** PageRank over collected (src, dst, outDegree) edge rows.
+  /** Distinct endpoints (then `extra`) in first-seen order. */
+  private def nodesOf(edges: Array[Row], extra: Seq[Any] = Nil): Seq[Any] = {
+    val nodes = new java.util.LinkedHashSet[Any]()
+    edges.foreach { r => nodes.add(r.get(0)); nodes.add(r.get(1)) }
+    extra.foreach(nodes.add)
+    import scala.jdk.CollectionConverters._
+    nodes.asScala.toSeq
+  }
+
+  /** Out-degree of every source over distinct (src, dst) rows. */
+  private def outDegrees(edges: Array[Row]): Map[Any, Double] =
+    edges.groupBy(_.get(0)).map { case (u, rs) => u -> rs.length.toDouble }
+
+  /** The PageRank family's snapped fixed point: each round every edge
+    * (u, v, x) adds micro6(`contrib`(pr(u), x)) to v's exact sum, then
+    * pr(v) = `update`(v, the sum as a double). Output: (node, pr).
+    */
+  private def rank(spark: SparkSession, nodeType: DataType, nodes: Seq[Any],
+      edges: Array[(Any, Any, Double)], iters: Int, pr0: Any => Double,
+      contrib: (Double, Double) => Double, update: (Any, Double) => Double): DataFrame = {
+    val pr = new java.util.HashMap[Any, Double]()
+    nodes.foreach(v => pr.put(v, pr0(v)))
+    for (_ <- 0 until iters) {
+      val sums = new java.util.HashMap[Any, Long]()
+      edges.foreach { case (u, v, x) =>
+        sums.merge(v, micro6(contrib(pr.get(u), x)), (a: Long, b: Long) => a + b)
+      }
+      // a node no edge reaches reads 0 micro-units: coalesce(sum, 0.0)
+      nodes.foreach(v => pr.put(v, update(v, microToDouble(sums.getOrDefault(v, 0L)))))
+    }
+    toDF(spark, nodes.map(v => Row(v, pr.get(v))),
+      StructType(Seq(StructField("node", nodeType), StructField("pr", DoubleType))))
+  }
+
+  /** PageRank over distinct (src, dst) rows:
     * pr_0 = round6(1/N); pr_{i+1}(v) = round6((1-d)/N + d·Σ_{u→v}
     * round6(pr_i(u)/out(u))) with the Σ an exact decimal sum.
     */
-  def pageRank(spark: SparkSession, edges: Array[(Any, Any, Long)],
-      iters: Int, damping: Double, nodeType: DataType): DataFrame = {
-    val nodes = new java.util.LinkedHashSet[Any]()
-    edges.foreach { case (u, v, _) => nodes.add(u); nodes.add(v) }
-    val n = nodes.size.toLong
-    val pr = new java.util.HashMap[Any, Double]()
-    val it0 = nodes.iterator()
-    while (it0.hasNext) pr.put(it0.next(), snap(1.0 / n.toDouble))
-    for (_ <- 0 until iters) {
-      val sums = new java.util.HashMap[Any, Array[Long]]()
-      edges.foreach { case (u, v, out) =>
-        val c = micro6(snap(pr.get(u) / out.toDouble))
-        val e = sums.get(v)
-        if (e == null) sums.put(v, Array(c)) else e(0) += c
-      }
-      val it = nodes.iterator()
-      while (it.hasNext) {
-        val v = it.next()
-        val s = sums.get(v)
-        val sd = if (s == null) 0.0 else microToDouble(s(0))
-        pr.put(v, snap(((1.0 - damping) / n.toDouble) + damping * sd))
-      }
-    }
-    import scala.jdk.CollectionConverters._
-    toDF(spark, nodes.asScala.toSeq.map(v => Row(v, pr.get(v))),
-      StructType(Seq(StructField("node", nodeType), StructField("pr", DoubleType))))
+  def pageRank(spark: SparkSession, edges: Array[Row], iters: Int,
+      damping: Double, nodeType: DataType): DataFrame = {
+    val nodes = nodesOf(edges)
+    val n = nodes.size.toDouble
+    val out = outDegrees(edges)
+    rank(spark, nodeType, nodes, edges.map(r => (r.get(0), r.get(1), out(r.get(0)))),
+      iters, _ => snap(1.0 / n), (p, o) => snap(p / o),
+      (_, sd) => snap(((1.0 - damping) / n) + damping * sd))
   }
 
-  /** Personalized PageRank over collected (src, dst, outDegree) edges and
-    * a seed set: t(v) = round6(1/|S|) on seeds else 0; pr_0 = t;
+  /** Personalized PageRank over distinct (src, dst) rows and a seed set:
+    * t(v) = round6(1/|S|) on seeds else 0; pr_0 = t;
     * pr_{i+1}(v) = round6((1-d)·t(v) + d·Σ round6(pr_i(u)/out(u))).
     */
-  def personalizedPageRank(spark: SparkSession, edges: Array[(Any, Any, Long)],
-      seeds: Array[Any], iters: Int, damping: Double,
+  def personalizedPageRank(spark: SparkSession, edges: Array[Row],
+      seeds: Seq[Any], iters: Int, damping: Double,
       nodeType: DataType): DataFrame = {
-    val nodes = new java.util.LinkedHashSet[Any]()
-    edges.foreach { case (u, v, _) => nodes.add(u); nodes.add(v) }
-    seeds.foreach(nodes.add)
-    val seedSet = new java.util.HashSet[Any]()
-    seeds.foreach(seedSet.add)
-    val nS = seedSet.size.toLong
-    val t = new java.util.HashMap[Any, Double]()
-    val pr = new java.util.HashMap[Any, Double]()
-    val it0 = nodes.iterator()
-    while (it0.hasNext) {
-      val v = it0.next()
-      val tv = if (seedSet.contains(v)) snap(1.0 / nS.toDouble) else 0.0
-      t.put(v, tv); pr.put(v, tv)
-    }
-    for (_ <- 0 until iters) {
-      val sums = new java.util.HashMap[Any, Array[Long]]()
-      edges.foreach { case (u, v, out) =>
-        val c = micro6(snap(pr.get(u) / out.toDouble))
-        val e = sums.get(v)
-        if (e == null) sums.put(v, Array(c)) else e(0) += c
-      }
-      val it = nodes.iterator()
-      while (it.hasNext) {
-        val v = it.next()
-        val s = sums.get(v)
-        val sd = if (s == null) 0.0 else microToDouble(s(0))
-        pr.put(v, snap((1.0 - damping) * t.get(v) + damping * sd))
-      }
-    }
-    import scala.jdk.CollectionConverters._
-    toDF(spark, nodes.asScala.toSeq.map(v => Row(v, pr.get(v))),
-      StructType(Seq(StructField("node", nodeType), StructField("pr", DoubleType))))
+    val seedSet = seeds.toSet
+    val tS = snap(1.0 / seedSet.size.toDouble)
+    def t(v: Any) = if (seedSet.contains(v)) tS else 0.0
+    val out = outDegrees(edges)
+    rank(spark, nodeType, nodesOf(edges, seeds),
+      edges.map(r => (r.get(0), r.get(1), out(r.get(0)))), iters, t,
+      (p, o) => snap(p / o), (v, sd) => snap((1.0 - damping) * t(v) + damping * sd))
   }
 
-  /** Weighted PageRank over collected (src, dst, share) edges — the share
-    * is precomputed upstream exactly as the distributed form does.
-    * pr_{i+1}(v) = round6((1-d)/N + d·Σ round6(pr_i(u)·share(u,v))).
+  /** Weighted PageRank over (src, dst, w) rows (duplicates already summed):
+    * share(u,v) = round6(w / Σ_out w) as the distributed form precomputes
+    * it; pr_{i+1}(v) = round6((1-d)/N + d·Σ round6(pr_i(u)·share(u,v))).
     */
-  def weightedPageRank(spark: SparkSession, edges: Array[(Any, Any, Double)],
-      iters: Int, damping: Double, nodeType: DataType): DataFrame = {
-    val nodes = new java.util.LinkedHashSet[Any]()
-    edges.foreach { case (u, v, _) => nodes.add(u); nodes.add(v) }
-    val n = nodes.size.toLong
-    val pr = new java.util.HashMap[Any, Double]()
-    val it0 = nodes.iterator()
-    while (it0.hasNext) pr.put(it0.next(), snap(1.0 / n.toDouble))
-    for (_ <- 0 until iters) {
-      val sums = new java.util.HashMap[Any, Array[Long]]()
-      edges.foreach { case (u, v, share) =>
-        val c = micro6(snap(pr.get(u) * share))
-        val e = sums.get(v)
-        if (e == null) sums.put(v, Array(c)) else e(0) += c
-      }
-      val it = nodes.iterator()
-      while (it.hasNext) {
-        val v = it.next()
-        val s = sums.get(v)
-        val sd = if (s == null) 0.0 else microToDouble(s(0))
-        pr.put(v, snap(((1.0 - damping) / n.toDouble) + damping * sd))
-      }
-    }
-    import scala.jdk.CollectionConverters._
-    toDF(spark, nodes.asScala.toSeq.map(v => Row(v, pr.get(v))),
-      StructType(Seq(StructField("node", nodeType), StructField("pr", DoubleType))))
+  def weightedPageRank(spark: SparkSession, edges: Array[Row], iters: Int,
+      damping: Double, nodeType: DataType): DataFrame = {
+    val nodes = nodesOf(edges)
+    val n = nodes.size.toDouble
+    val outW = edges.groupBy(_.get(0)).map { case (u, rs) => u -> rs.map(_.getLong(2)).sum }
+    rank(spark, nodeType, nodes,
+      edges.map(r => (r.get(0), r.get(1),
+        snap(r.getLong(2).toDouble / outW(r.get(0)).toDouble))),
+      iters, _ => snap(1.0 / n), (p, share) => snap(p * share),
+      (_, sd) => snap(((1.0 - damping) / n) + damping * sd))
   }
 
-  /** HITS over collected (src, dst) edges: per half-round an exact
+  /** HITS over distinct (src, dst) rows: per half-round an exact
     * decimal spread sum, then the snapped L2 normalization — norm² is the
     * exact LONG sum of floor(raw²·1e6 + 0.5), norm one IEEE sqrt of
     * (sum/1e6), scores round6(raw/norm) (0 when the norm is 0).
     */
-  def hits(spark: SparkSession, edges: Array[(Any, Any)], iters: Int,
+  def hits(spark: SparkSession, rows: Array[Row], iters: Int,
       nodeType: DataType): DataFrame = {
-    val nodes = new java.util.LinkedHashSet[Any]()
-    edges.foreach { case (u, v) => nodes.add(u); nodes.add(v) }
-    import scala.jdk.CollectionConverters._
-    val nodeSeq = nodes.asScala.toSeq
+    val nodeSeq = nodesOf(rows)
+    val edges = rows.map(r => (r.get(0), r.get(1)))
     var h = new java.util.HashMap[Any, Double]()
     var a = new java.util.HashMap[Any, Double]()
     nodeSeq.foreach { v => h.put(v, 1.0); a.put(v, 1.0) }
@@ -217,20 +169,18 @@ private[pipeline] object GraphLocal {
         StructField("hub", DoubleType), StructField("auth", DoubleType))))
   }
 
-  /** Synchronous min-tie label propagation over collected (src, dst)
-    * edges (already symmetrized/distinct upstream when undirected):
+  /** Synchronous min-tie label propagation over distinct (src, dst) rows
+    * (already symmetrized upstream when undirected):
     * each round a node takes its in-neighbors' most frequent label, ties
     * to the MINIMUM label under Spark's own type ordering (UTF-8 bytes
     * for strings); a node with no in-edges RESETS to its own id — the
     * distributed form's coalesce(label, node) semantics.
     */
-  def labelPropagation(spark: SparkSession, edges: Array[(Any, Any)],
+  def labelPropagation(spark: SparkSession, rows: Array[Row],
       iters: Int, nodeType: DataType): DataFrame = {
     val ord = Dedup.localIdOrdering(nodeType).get
-    val nodes = new java.util.LinkedHashSet[Any]()
-    edges.foreach { case (u, v) => nodes.add(u); nodes.add(v) }
-    import scala.jdk.CollectionConverters._
-    val nodeSeq = nodes.asScala.toSeq
+    val nodeSeq = nodesOf(rows)
+    val edges = rows.map(r => (r.get(0), r.get(1)))
     var labels = new java.util.HashMap[Any, Any]()
     nodeSeq.foreach(v => labels.put(v, v))
     for (_ <- 0 until iters) {
@@ -264,5 +214,52 @@ private[pipeline] object GraphLocal {
     }
     toDF(spark, nodeSeq.map(v => Row(v, labels.get(v))),
       StructType(Seq(StructField("node", nodeType), StructField("label", nodeType))))
+  }
+
+  /** BFS hop distances from `sources` over distinct (src, dst) rows:
+    * (node, dist) for every node within `maxDepth` hops.
+    */
+  def bfsDistances(spark: SparkSession, edges: Array[Row], sources: Seq[Any],
+      maxDepth: Int, nodeType: DataType): DataFrame =
+    toDF(spark, bfs(adjacency(edges), sources, maxDepth).map { case (n, d) => Row(n, d) },
+      StructType(Seq(StructField("node", nodeType), StructField("dist", LongType))))
+
+  /** (lm, node, d) for every node within `maxHops` of each landmark. The
+    * table is O(landmarks × reached nodes), up to 16× the edge list the
+    * cutover bounds, so it never materializes on the driver: the
+    * adjacency is broadcast once and each landmark's BFS runs in its own
+    * executor task, so rows are born distributed.
+    */
+  def landmarkDistances(spark: SparkSession, edges: Array[Row], landmarks: Seq[Any],
+      maxHops: Int, nodeType: DataType): DataFrame = {
+    val adjB = spark.sparkContext.broadcast(adjacency(edges))
+    val rows = spark.sparkContext.parallelize(landmarks, math.max(1, landmarks.size))
+      .flatMap(lm => bfs(adjB.value, Seq(lm), maxHops).iterator.map { case (n, d) => Row(lm, n, d) })
+    spark.createDataFrame(rows, StructType(Seq(StructField("lm", nodeType),
+      StructField("node", nodeType), StructField("d", LongType))))
+  }
+
+  /** Adjacency lists of (src, dst) rows. */
+  private def adjacency(edges: Array[Row]): Map[Any, Array[Any]] =
+    edges.groupBy(_.get(0)).map { case (u, rs) => u -> rs.map(_.get(1)) }
+
+  /** Multi-source BFS along edge direction: the min hop distance of every
+    * node within `maxHops` of a source (sources at 0) — the rows the
+    * distributed frontier loop settles.
+    */
+  private def bfs(adj: Map[Any, Array[Any]], sources: Seq[Any], maxHops: Int): Seq[(Any, Long)] = {
+    val dist = scala.collection.mutable.LinkedHashMap[Any, Long]()
+    var frontier = sources.distinct
+    frontier.foreach(s => dist(s) = 0L)
+    var hop = 1L
+    while (hop <= maxHops && frontier.nonEmpty) {
+      val next = scala.collection.mutable.ArrayBuffer[Any]()
+      for (n <- frontier; m <- adj.getOrElse(n, Array.empty[Any]) if !dist.contains(m)) {
+        dist(m) = hop; next += m
+      }
+      frontier = next.toSeq
+      hop += 1
+    }
+    dist.toSeq
   }
 }

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -32,11 +32,9 @@ object GraphOps {
     * no longer sum to exactly 1. Duplicate edge rows are collapsed first
     * (an unweighted simple digraph); self-loops count like any edge.
     *
-    * The edge table is persisted across iterations (out-degree is joined
-    * on once, not per iteration) and released when the result is first
-    * consumed. `iters` is small by design (production PageRank converges
-    * in tens of iterations; each is one keyed shuffle pair), so the plan
-    * stays linear in `iters` with no checkpointing needed.
+    * Out-degree rides on every edge row (joined once, not per iteration).
+    * Runs through [[Iterate]]: the local cutover on a small graph, else a
+    * fixed `iters`-round loop.
     *
     * Output: (node, pr) for every node appearing as a source or target.
     */
@@ -45,53 +43,48 @@ object GraphOps {
     require(iters >= 0, s"pageRank: iters must be >= 0, got $iters")
     require(damping > 0 && damping < 1,
       s"pageRank: damping must be in (0,1), got $damping")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct()
-    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("__out"))
-    // out-degree rides on every edge row so iterations never re-join it
-    val eo = e.join(outdeg, Seq("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // LOCAL CUTOVER (the [[Dedup.connectedComponents]] stance, measured on
-    // q215/q254-class graphs: tens of nodes, ~50 scheduler jobs, ~2-3 s of
-    // pure cadence for microseconds of arithmetic): below the edge
-    // threshold, run the identical snapped fixed point on the driver
-    // ([[GraphLocal]] documents the bit-exactness contract). The count
-    // doubles as the cache-warming first materialization of eo; unsupported
-    // or null ids fall through — pure optimization, never a behavior gate.
-    val spark0 = edges.sparkSession
-    val idT = e.schema.fields(0).dataType
-    // the null check must run on e, NOT eo: eo's null-unsafe inner join on
-    // src already dropped null-src edges, so checking eo could cut over
-    // locally on a graph whose distributed node set includes the null node
-    // (and anything reachable only through it)
-    if (eo.count() <= GraphLocal.threshold(spark0) &&
-        idT == e.schema.fields(1).dataType && GraphLocal.idsSupported(idT) &&
-        e.filter(col("src").isNull || col("dst").isNull).isEmpty) {
-      val rows = eo.collect().map(r => (r.get(0), r.get(1), r.getLong(2)))
-      eo.unpersist(blocking = false)
-      return GraphLocal.pageRank(spark0, rows, iters, damping, idT)
-    }
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // N stays a (broadcast) 1-row frame — no driver-side count action
-    val nRow = nodes.agg(count(lit(1)).as("__n"))
-    def snap(c: org.apache.spark.sql.Column) = TextAnalysis.round6(c)
-    var pr = nodes.crossJoin(broadcast(nRow))
-      .select(col("node"), snap(lit(1.0) / col("__n")).as("pr"))
-    for (_ <- 0 until iters) {
-      val contrib = pr.join(eo, pr("node") === eo("src"))
-        .select(col("dst").as("node"),
-          snap(col("pr") / col("__out")).as("__c"))
+    val it = Iterate(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
+    it.local().map(r => GraphLocal.pageRank(it.caller, r.head, iters, damping, it.idType))
+      .getOrElse {
+        val e = it.edges
+        val eo = it.root(e.join(outDegrees(e), Seq("src")))
+        val nodes = withNodeCount(it, endpoints(e))
+        rankLoop(it, eo, nodes, nodes.select(col("node"), snap(lit(1.0) / col("__n")).as("pr")),
+          iters, col("pr") / col("__out"),
+          (lit(1.0) - damping) / col("__n") + lit(damping) * coalesce(col("__sum"), lit(0.0)))
+      }
+  }
+
+  private def snap(c: Column): Column = TextAnalysis.round6(c)
+
+  /** Distinct (node) over both endpoints of an edge frame. */
+  private def endpoints(e: DataFrame): DataFrame =
+    e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct()
+
+  /** (src, __out) out-degrees of distinct edges. */
+  private def outDegrees(e: DataFrame): DataFrame =
+    e.groupBy(col("src")).agg(count(lit(1)).as("__out"))
+
+  /** The node frame rooted with N riding on every row as `__n` (a
+    * broadcast 1-row count: no driver-side count action).
+    */
+  private def withNodeCount(it: Iterate, nodes: DataFrame): DataFrame =
+    it.root(nodes.crossJoin(broadcast(nodes.agg(count(lit(1)).as("__n")))))
+
+  /** The PageRank family's distributed fixed point: per round every edge
+    * row of `eo` adds round6(`contrib`) (over `pr` and eo's columns) to its
+    * dst's exact DECIMAL(28,6) sum, and every row of `nodes` takes
+    * pr = round6(`update`) (over nodes' columns and the sum, `__sum`).
+    */
+  private def rankLoop(it: Iterate, eo: DataFrame, nodes: DataFrame,
+      pr0: DataFrame, iters: Int, contrib: Column, update: Column): DataFrame =
+    it.result(it.iterate(pr0, iters, readsStateOnce = true) { (pr, _) =>
+      val sums = pr.join(eo, pr("node") === eo("src"))
+        .select(col("dst").as("node"), snap(contrib).as("__c"))
         .groupBy(col("node"))
         .agg(sum(col("__c").cast("decimal(28,6)")).cast("double").as("__sum"))
-      pr = nodes.join(contrib, Seq("node"), "left")
-        .crossJoin(broadcast(nRow))
-        .select(col("node"),
-          snap((lit(1.0) - damping) / col("__n") +
-            lit(damping) * coalesce(col("__sum"), lit(0.0))).as("pr"))
-    }
-    CacheScope.releaseAfterFirstUse(pr, Seq(eo, nodes))
-  }
+      nodes.join(sums, Seq("node"), "left").select(col("node"), snap(update).as("pr"))
+    })
 
   /** PERSONALIZED PageRank: the teleport lands uniformly on a SEED set
     * instead of all nodes — the seed-based trust/quality propagation used
@@ -115,57 +108,23 @@ object GraphOps {
     require(iters >= 0, s"personalizedPageRank: iters must be >= 0, got $iters")
     require(damping > 0 && damping < 1,
       s"personalizedPageRank: damping must be in (0,1), got $damping")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct()
-    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("__out"))
-    val eo = e.join(outdeg, Seq("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val s = seeds.select(col(seedCol).as("node")).distinct()
-    // LOCAL CUTOVER — see [[pageRank]]; seeds ride along (they are the
-    // teleport set, tiny by construction but bounded by the same check).
-    val spark0 = edges.sparkSession
-    val idT = e.schema.fields(0).dataType
-    if (eo.count() <= GraphLocal.threshold(spark0) &&
-        idT == e.schema.fields(1).dataType &&
-        idT == s.schema.fields(0).dataType && GraphLocal.idsSupported(idT) &&
-        // on e, not eo — see [[pageRank]]'s cutover
-        e.filter(col("src").isNull || col("dst").isNull).isEmpty) {
-      val seedIds = s.collect().map(_.get(0))
-      // a null seed is a degenerate-but-defined distributed case (it
-      // becomes an isolated zero-rank node); keep the local path pure by
-      // falling through rather than replicating it
-      if (!seedIds.contains(null) &&
-          seedIds.length <= GraphLocal.threshold(spark0)) {
-        val rows = eo.collect().map(r => (r.get(0), r.get(1), r.getLong(2)))
-        eo.unpersist(blocking = false)
-        return GraphLocal.personalizedPageRank(spark0, rows,
-          seedIds.map(x => x: Any), iters, damping, idT)
+    val it = Iterate(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
+    val s = it.root(seeds.select(col(seedCol).as("node")).distinct())
+    it.local(s).map(r => GraphLocal.personalizedPageRank(it.caller, r(0), r(1).map(_.get(0)).toSeq,
+        iters, damping, it.idType))
+      .getOrElse {
+        val e = it.edges
+        // the teleport rides on the node frame as __t
+        val nodes = it.root(endpoints(e).union(s).distinct()
+          .join(s.withColumn("__seed", lit(1)), Seq("node"), "left")
+          .crossJoin(broadcast(s.agg(count(lit(1)).as("__s"))))
+          .select(col("node"),
+            when(col("__seed").isNotNull, snap(lit(1.0) / col("__s")))
+              .otherwise(lit(0.0)).as("__t")))
+        rankLoop(it, it.root(e.join(outDegrees(e), Seq("src"))), nodes,
+          nodes.select(col("node"), col("__t").as("pr")), iters, col("pr") / col("__out"),
+          (lit(1.0) - damping) * col("__t") + lit(damping) * coalesce(col("__sum"), lit(0.0)))
       }
-    }
-    val sRow = s.agg(count(lit(1)).as("__s"))
-    def snap(c: org.apache.spark.sql.Column) = TextAnalysis.round6(c)
-    // teleport rides on the node frame — computed once, reused per iteration
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .union(s.select(col("node"))).distinct()
-      .join(s.withColumn("__seed", lit(1)), Seq("node"), "left")
-      .crossJoin(broadcast(sRow))
-      .select(col("node"),
-        when(col("__seed").isNotNull, snap(lit(1.0) / col("__s")))
-          .otherwise(lit(0.0)).as("__t"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var pr = nodes.select(col("node"), col("__t").as("pr"))
-    for (_ <- 0 until iters) {
-      val contrib = pr.join(eo, pr("node") === eo("src"))
-        .select(col("dst").as("node"),
-          snap(col("pr") / col("__out")).as("__c"))
-        .groupBy(col("node"))
-        .agg(sum(col("__c").cast("decimal(28,6)")).cast("double").as("__sum"))
-      pr = nodes.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          snap((lit(1.0) - damping) * col("__t") +
-            lit(damping) * coalesce(col("__sum"), lit(0.0))).as("pr"))
-    }
-    CacheScope.releaseAfterFirstUse(pr, Seq(eo, nodes))
   }
 
   /** Undirected co-occurrence edges from an item table: every unordered
@@ -213,39 +172,26 @@ object GraphOps {
       dstCol: String = "dst"): DataFrame = {
     require(iters >= 0, s"labelPropagation: iters must be >= 0, got $iters")
     val raw = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val e = (if (directed) raw
-             else raw.unionByName(raw.select(col("dst").as("src"), col("src").as("dst"))))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // LOCAL CUTOVER — see [[pageRank]]; ties need the same UTF-8-byte
-    // min-label order the distributed struct-min uses, which is exactly
-    // what [[Dedup.localIdOrdering]] (and so [[GraphLocal.idsSupported]])
-    // guarantees.
-    val spark0 = edges.sparkSession
-    val idT = e.schema.fields(0).dataType
-    if (e.count() <= GraphLocal.threshold(spark0) &&
-        idT == e.schema.fields(1).dataType && GraphLocal.idsSupported(idT) &&
-        e.filter(col("src").isNull || col("dst").isNull).isEmpty) {
-      val rows = e.collect().map(r => (r.get(0), r.get(1)))
-      e.unpersist(blocking = false)
-      return GraphLocal.labelPropagation(spark0, rows, iters, idT)
-    }
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = nodes.select(col("node"), col("node").as("label"))
-    for (_ <- 0 until iters) {
-      val best = labels.join(e, labels("node") === e("src"))
-        .select(col("dst").as("node"), col("label"))
-        .groupBy(col("node"), col("label"))
-        .agg(count(lit(1)).as("__c"))
-        .groupBy(col("node"))
-        .agg(min(struct((-col("__c")).as("nc"), col("label").as("l"))).as("__b"))
-        .select(col("node"), col("__b.l").as("label"))
-      labels = nodes.join(best, Seq("node"), "left")
-        .select(col("node"), coalesce(col("label"), col("node")).as("label"))
-    }
-    CacheScope.releaseAfterFirstUse(labels, Seq(e, nodes))
+    val it = Iterate((if (directed) raw
+      else raw.unionByName(raw.select(col("dst").as("src"), col("src").as("dst")))).distinct())
+    it.local().map(r => GraphLocal.labelPropagation(it.caller, r.head, iters, it.idType))
+      .getOrElse {
+        val e = it.edges
+        val nodes = it.root(endpoints(e))
+        it.result(it.iterate(nodes.select(col("node"), col("node").as("label")), iters,
+            readsStateOnce = true) {
+          (labels, _) =>
+            val best = labels.join(e, labels("node") === e("src"))
+              .select(col("dst").as("node"), col("label"))
+              .groupBy(col("node"), col("label"))
+              .agg(count(lit(1)).as("__c"))
+              .groupBy(col("node"))
+              .agg(min(struct((-col("__c")).as("nc"), col("label").as("l"))).as("__b"))
+              .select(col("node"), col("__b.l").as("label"))
+            nodes.join(best, Seq("node"), "left")
+              .select(col("node"), coalesce(col("label"), col("node")).as("label"))
+        })
+      }
   }
 
   /** WEIGHTED co-occurrence edges: like [[coOccurrenceEdges]] but each
@@ -336,56 +282,27 @@ object GraphOps {
     require(iters >= 0, s"weightedPageRank: iters must be >= 0, got $iters")
     require(damping > 0 && damping < 1,
       s"weightedPageRank: damping must be in (0,1), got $damping")
-    def snap(c: org.apache.spark.sql.Column) = TextAnalysis.round6(c)
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
+    val it = Iterate(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
         col(weightCol).cast("long").as("w"))
-      .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w")))
     // validate BEFORE the share division plans (a zero out-weight would
     // otherwise surface as an ANSI arithmetic error mid-pipeline)
-    require(e.filter(col("w") <= 0).limit(1).count() == 0,
-      "weightedPageRank: weights must be positive")
-    val outW = e.groupBy(col("src")).agg(sum(col("w")).as("__ow"))
-    // shares ride on every edge row, computed once — iterations never
-    // touch the weights again
-    val eo = e.join(outW, Seq("src"))
-      .select(col("src"), col("dst"),
-        snap(col("w").cast("double") / col("__ow").cast("double")).as("__share"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // LOCAL CUTOVER — see [[pageRank]]; shares are collected precomputed
-    // (the same snapped division the iterations would read), null weights
-    // fall through with the null-id check (a null w nulls its share).
-    val spark0 = edges.sparkSession
-    val idT = e.schema.fields(0).dataType
-    if (eo.count() <= GraphLocal.threshold(spark0) &&
-        idT == e.schema.fields(1).dataType && GraphLocal.idsSupported(idT) &&
-        // null ids checked on e, not eo — see [[pageRank]]'s cutover; the
-        // null-share check stays on eo (shares only exist post-join)
-        e.filter(col("src").isNull || col("dst").isNull).isEmpty &&
-        eo.filter(col("__share").isNull).isEmpty) {
-      val rows = eo.collect().map(r => (r.get(0), r.get(1), r.getDouble(2)))
-      eo.unpersist(blocking = false); e.unpersist(blocking = false)
-      return GraphLocal.weightedPageRank(spark0, rows, iters, damping, idT)
-    }
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nRow = nodes.agg(count(lit(1)).as("__n"))
-    var pr = nodes.crossJoin(broadcast(nRow))
-      .select(col("node"), snap(lit(1.0) / col("__n")).as("pr"))
-    for (_ <- 0 until iters) {
-      val contrib = pr.join(eo, pr("node") === eo("src"))
-        .select(col("dst").as("node"),
-          snap(col("pr") * col("__share")).as("__c"))
-        .groupBy(col("node"))
-        .agg(sum(col("__c").cast("decimal(28,6)")).cast("double").as("__sum"))
-      pr = nodes.join(contrib, Seq("node"), "left")
-        .crossJoin(broadcast(nRow))
-        .select(col("node"),
-          snap((lit(1.0) - damping) / col("__n") +
-            lit(damping) * coalesce(col("__sum"), lit(0.0))).as("pr"))
-    }
-    CacheScope.releaseAfterFirstUse(pr, Seq(e, eo, nodes))
+    val bad = it.edges.filter(col("w") <= 0).limit(1).count() != 0
+    if (bad) it.release()
+    require(!bad, "weightedPageRank: weights must be positive")
+    it.local().map(r => GraphLocal.weightedPageRank(it.caller, r.head, iters, damping, it.idType))
+      .getOrElse {
+        val e = it.edges
+        // shares ride on every edge row, computed once — iterations never
+        // touch the weights again
+        val eo = it.root(e.join(e.groupBy(col("src")).agg(sum(col("w")).as("__ow")), Seq("src"))
+          .select(col("src"), col("dst"),
+            snap(col("w").cast("double") / col("__ow").cast("double")).as("__share")))
+        val nodes = withNodeCount(it, endpoints(e))
+        rankLoop(it, eo, nodes, nodes.select(col("node"), snap(lit(1.0) / col("__n")).as("pr")),
+          iters, col("pr") * col("__share"),
+          (lit(1.0) - damping) / col("__n") + lit(damping) * coalesce(col("__sum"), lit(0.0)))
+      }
   }
 
   /** k-CORE decomposition by iterative peeling: repeatedly remove nodes
@@ -397,6 +314,7 @@ object GraphOps {
     * shuffles only, no window, rounds bounded by `maxRounds` (peeling
     * converges in at most |V| rounds, in practice a handful; pass the
     * round budget explicitly when mirroring against an unrolled oracle).
+    * Runs on the [[Iterate]] loop; there is no local cutover.
     * Output: (node, degree) of the surviving core — empty when the graph
     * has no k-core.
     */
@@ -405,55 +323,23 @@ object GraphOps {
     require(k >= 1, s"kCore: k must be >= 1, got $k")
     require(maxRounds >= 1, s"kCore: maxRounds must be >= 1, got $maxRounds")
     val raw = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    // LOOP-SCOPED SESSION ([[LoopSession]]): AQE off for the loop's own
-    // actions (re-optimizing the accumulating peeled lineage at every
-    // stage turned 6 rounds into ~18 s of driver work at sf0.1 — the
-    // connectedComponents finding) and loop shuffles sized to the
-    // symmetric edge count (round-11 finding) — both on a CLONED
-    // session, so concurrent queries on the caller's session keep the
-    // caller's conf. Each round runs ONE bounded action — "does any node
-    // sit below k" on the node-sized degree frame (limit(1), not an
-    // edge count).
-    val spark0 = edges.sparkSession
-    val loopSpark = LoopSession.enter(spark0)
-    var e = LoopSession.rebind(
-      raw.unionByName(raw.select(col("dst").as("src"), col("src").as("dst")))
-        .filter(col("src") =!= col("dst")).distinct(), loopSpark)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var held: List[DataFrame] = List(e)
-    var rounds = 0
-    var stable = false
-    // the count doubles as the cache-warming first materialization of e
-    LoopSession.sizeShuffles(loopSpark, spark0, e.count())
-    while (rounds < maxRounds && !stable) {
-      val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("degree"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      if (deg.filter(col("degree") < k).limit(1).count() == 0) {
-        stable = true
-        deg.unpersist()
-      } else {
+    val it = Iterate(raw.unionByName(raw.select(col("dst").as("src"), col("src").as("dst")))
+      .filter(col("src") =!= col("dst")).distinct())
+    // round 0 roots the input's (node, degree) and each later round peels
+    // every node below k: the edges left are those of the input between
+    // the nodes the last round kept (the kept set only shrinks, so that is
+    // the last round's edge set peeled). A round's one action looks for a
+    // node below k; none means the edge set is the core.
+    def degrees(e: DataFrame) = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("degree"))
+    val (core, _) = it.converge(degrees(it.edges), maxRounds + 1) { (deg, r) =>
+      if (r == 0) deg
+      else {
         val keep = deg.filter(col("degree") >= k).select(col("node"))
-        val peeled = e.join(keep.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
-          .join(keep.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
-          .select(col("src"), col("dst"))
-        // periodic lineage truncation (the connectedComponents round-12
-        // finding): each round references `e` three ways (directly + via
-        // keep->deg twice), so the accumulated plan DAG's tree expansions
-        // grow ~3^rounds — bounded fine at the default maxRounds but an
-        // analyzer blowup on deep peels; a checkpointed leaf every 8
-        // rounds keeps it linear for one extra materialization
-        val e2 = if (rounds % 8 == 7) peeled.localCheckpoint(true)
-                 else peeled.persist(StorageLevel.MEMORY_AND_DISK)
-        held = e2 :: deg :: held
-        e = e2
+        degrees(it.edges.join(keep.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
+          .join(keep.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi"))
       }
-      rounds += 1
-    }
-    // result rebound to the CALLER's session — its consuming action must
-    // not plan under the loop clone's conf
-    val out = LoopSession.rebind(
-      e.groupBy(col("src").as("node")).agg(count(lit(1)).as("degree")), spark0)
-    CacheScope.releaseAfterFirstUse(out, held)
+    } { (deg, _) => deg.filter(col("degree") < k).count() == 0 }
+    it.result(core)
   }
 
   /** Per-node triangle counts + local clustering coefficient over an
@@ -528,9 +414,10 @@ object GraphOps {
     *
     * Scale shape: per hop one frontier-to-edges equi-join + one distinct
     * + one anti-join against the settled set — state is O(L·n) rows,
-    * keyed shuffles only; each hop's frontier is persisted and forced
-    * with a count (≤ maxHops tiny driver actions — the CC loop cadence),
-    * which doubles as early termination when the frontier drains.
+    * keyed shuffles only; each hop's one action counts its frontier,
+    * which doubles as early termination when the frontier drains (the
+    * [[bfsDistances]] loop). Under the [[Iterate]] cutover the distances
+    * come from one executor task per landmark instead.
     * Output: (node, h_sum, n_reached) for every node reached by ≥ 1
     * landmark (BFS source rows at d=0 count as reached, contribute 0).
     */
@@ -540,133 +427,43 @@ object GraphOps {
     require(landmarks >= 1, s"harmonicCentrality: need >= 1 landmark")
     require(maxHops >= 1 && maxHops <= 12,
       s"harmonicCentrality: maxHops must be in [1, 12], got $maxHops")
-    val lvl = StorageLevel.MEMORY_AND_DISK
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct().persist(lvl)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
+    val it = Iterate(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
     // deterministic landmark set: L smallest (hash, node)
-    val lms = nodes
+    val lms = it.root(endpoints(it.edges)
       .orderBy(Sampling.keyHash32(col("node"), salt), col("node"))
       .limit(landmarks)
-      .select(col("node").as("lm")).persist(lvl)
-    // renamed-column join frame sidesteps self-join ambiguity (each hop's
-    // frontier descends from the same persisted edge frame)
-    // SIZE-ADAPTIVE (the connectedComponents pattern): a small graph's
-    // hop loop is pure driver-action cadence (<= maxHops persist+count
-    // rounds), so under the edge threshold the (lm, node, d) distance
-    // table comes from a driver-side multi-source BFS instead — EXACT
-    // integer rows fed to the IDENTICAL aggregation below, so the
-    // snapped decimal h_sum arithmetic never leaves Spark and outputs
-    // are unchanged. Above threshold: the distributed hop loop.
-    val spark = edges.sparkSession
-    val hopsHeld = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    val eCount = e.count()
-    val dist: DataFrame =
-      if (eCount <= localGraphThreshold(spark)) {
-        // the threshold bounds DRIVER state at O(edges) — the adjacency.
-        // The distance table is O(landmarks × reached-nodes), up to 16×
-        // larger, so it must never materialize on the driver: broadcast
-        // the adjacency once and run each landmark's BFS in an EXECUTOR
-        // task (landmarks are few; one task each), so rows are born
-        // distributed and flow straight into the aggregation below.
-        val adjB = spark.sparkContext.broadcast(collectAdjacency(e))
-        val lmsL = lms.collect().map(_.get(0)).toSeq
-        import org.apache.spark.sql.types._
-        val nodeT = e.schema.fields(0).dataType
-        val rdd = spark.sparkContext
-          .parallelize(lmsL, math.max(1, lmsL.size))
-          .flatMap { lm =>
-            localBfs(adjB.value, Seq(lm), maxHops).iterator
-              .map { case (n, d) => org.apache.spark.sql.Row(lm, n, d.toInt) }
-          }
-        spark.createDataFrame(rdd,
-          StructType(Seq(StructField("lm", nodeT), StructField("node", nodeT),
-            StructField("d", IntegerType))))
-      } else {
-        val eK = e.select(col("src").as("__fn"), col("dst").as("__to"))
-        val base = lms.select(col("lm"), col("lm").as("node"), lit(0).as("d"))
-          .persist(lvl)
-        base.count()
-        hopsHeld += base
-        var distAcc = base
-        var frontier: DataFrame = base.select(col("lm"), col("node"))
-        var hop = 1
-        var drained = false
-        while (hop <= maxHops && !drained) {
-          val next = frontier.select(col("lm"), col("node").as("__fn"))
-            .join(eK, Seq("__fn"))
-            .select(col("lm"), col("__to").as("node")).distinct()
-            .join(distAcc.select(col("lm"), col("node")), Seq("lm", "node"),
-              "left_anti")
-            .select(col("lm"), col("node"), lit(hop).as("d"))
-            .persist(lvl)
-          drained = next.count() == 0 // forces the hop's cache; early stop
-          hopsHeld += next
-          distAcc = distAcc.unionByName(next) // union of CACHED frames: shallow
-          frontier = next.select(col("lm"), col("node"))
-          hop += 1
-        }
-        distAcc
-      }
-    val out = dist
+      .select(col("node").as("lm")))
+    val dist = it.local(lms)
+      .map(r => GraphLocal.landmarkDistances(it.caller, r(0), r(1).map(_.get(0)).toSeq,
+        maxHops, it.idType))
+      .getOrElse(frontierBfs(it, lms.select(col("lm"), col("lm").as("node"), lit(0L).as("d")),
+        maxHops))
+    it.result(dist
       .groupBy(col("node"))
       .agg(
         TextAnalysis.round6(
           sum(when(col("d") >= 1,
             TextAnalysis.round6(lit(1.0) / col("d"))).otherwise(lit(0.0))
             .cast("decimal(28,6)")).cast("double")).as("h_sum"),
-        sum(when(col("d") >= 1, 1L).otherwise(0L)).as("n_reached"))
-    CacheScope.releaseAfterFirstUse(out, Seq(e, lms) ++ hopsHeld.toSeq)
+        sum(when(col("d") >= 1, 1L).otherwise(0L)).as("n_reached")))
   }
 
-  /** Conf-gated edge threshold shared by the size-adaptive graph ops
-    * (the [[Dedup.connectedComponents]] cutover, same rationale): below
-    * it, BFS frontiers run on the driver over a collected adjacency —
-    * the bound is CHECKED against an exact count, never guessed.
+  /** Multi-source frontier BFS on `it`'s edges from (lm, node, d = 0)
+    * source rows: (lm, node, d) with d the min hop count from lm, for
+    * every node within `maxHops`. Round r joins the frontier (d = r) to
+    * the edges and anti-joins the settled rows; its one action counts the
+    * new frontier, and an empty frontier ends the loop.
     */
-  private def localGraphThreshold(spark: SparkSession): Long =
-    spark.conf.get("graft.graph.localEdgeThreshold", "1000000").toLong
-
-  /** Driver-side adjacency from a SMALL distinct edge frame (caller has
-    * count-verified the bound).
-    */
-  private def collectAdjacency(
-      e: DataFrame): java.util.HashMap[Any, scala.collection.mutable.ArrayBuffer[Any]] = {
-    val adj = new java.util.HashMap[Any, scala.collection.mutable.ArrayBuffer[Any]]()
-    e.collect().foreach { r =>
-      val (s, d) = (r.get(0), r.get(1))
-      var lst = adj.get(s)
-      if (lst == null) { lst = scala.collection.mutable.ArrayBuffer.empty[Any]; adj.put(s, lst) }
-      lst += d
-    }
-    adj
-  }
-
-  /** Multi-source driver BFS along edge direction: min hop distance per
-    * reached node (sources at 0), capped at `maxHops` — the same rows
-    * the distributed frontier loop settles, exactly.
-    */
-  private def localBfs(
-      adj: java.util.HashMap[Any, scala.collection.mutable.ArrayBuffer[Any]],
-      sources: Seq[Any], maxHops: Int): Seq[(Any, Long)] = {
-    val dist = new java.util.HashMap[Any, Long]()
-    var frontier = sources.distinct
-    frontier.foreach(s => dist.put(s, 0L))
-    var hop = 1L
-    while (hop <= maxHops && frontier.nonEmpty) {
-      val next = scala.collection.mutable.ArrayBuffer.empty[Any]
-      frontier.foreach { n =>
-        val lst = adj.get(n)
-        if (lst != null) lst.foreach { m =>
-          if (!dist.containsKey(m)) { dist.put(m, hop); next += m }
-        }
-      }
-      frontier = next.toSeq
-      hop += 1
-    }
-    import scala.jdk.CollectionConverters._
-    dist.entrySet().asScala.iterator.map(e0 => (e0.getKey, e0.getValue)).toSeq
+  private def frontierBfs(it: Iterate, sources: DataFrame, maxHops: Int): DataFrame = {
+    val e = it.edges.select(col("src").as("__fn"), col("dst").as("__to"))
+    it.converge(sources, maxHops) { (settled, r) =>
+      settled.unionByName(settled.filter(col("d") === r)
+        .select(col("lm"), col("node").as("__fn"))
+        .join(e, Seq("__fn"))
+        .select(col("lm"), col("__to").as("node")).distinct()
+        .join(settled.select(col("lm"), col("node")), Seq("lm", "node"), "left_anti")
+        .select(col("lm"), col("node"), lit(r + 1L).as("d")))
+    } { (settled, r) => settled.filter(col("d") === r + 1L).count() == 0 }._1
   }
 
   /** HITS hubs & authorities (Kleinberg 1999) — the directional
@@ -692,70 +489,39 @@ object GraphOps {
   def hits(edges: DataFrame, iters: Int = 2,
       srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(iters >= 1 && iters <= 20, s"hits: iters must be in [1, 20], got $iters")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    // LOCAL CUTOVER — see [[pageRank]]. The q254 co-citation graph is 18
-    // nodes; two distributed HITS rounds cost ~55 scheduler jobs and ~3 s
-    // of cadence for arithmetic the driver does in microseconds.
-    val spark0 = edges.sparkSession
-    val idT = e.schema.fields(0).dataType
-    if (e.count() <= GraphLocal.threshold(spark0) &&
-        idT == e.schema.fields(1).dataType && GraphLocal.idsSupported(idT) &&
-        e.filter(col("src").isNull || col("dst").isNull).isEmpty) {
-      val rows = e.collect().map(r => (r.get(0), r.get(1)))
-      e.unpersist(blocking = false)
-      return GraphLocal.hits(spark0, rows, iters, idT)
+    val it = Iterate(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
+    it.local().map(r => GraphLocal.hits(it.caller, r.head, iters, it.idType)).getOrElse {
+      val e = it.edges
+      // one half-round over the (node, hub, auth) state: spread `from`
+      // along `edgesK` as an exact decimal sum, then L2-normalize it into
+      // `to` — the norm is a 1-row frame (snapped squared terms summed
+      // exactly, one sqrt), broadcast back
+      def half(s: DataFrame, from: String, to: String, edgesK: DataFrame): DataFrame = {
+        val raw = s.join(
+          s.select(col("node").as("__k"), col(from).as("__x"))
+            .join(edgesK, Seq("__k"))
+            .groupBy(col("__t").as("node"))
+            .agg(sum(col("__x").cast("decimal(28,6)")).cast("double").as("__s")),
+          Seq("node"), "left")
+          .select(col("node"), col(from), coalesce(col("__s"), lit(0.0)).as("__raw"))
+        val nrm = raw.agg(
+          sqrt(sum(floor(col("__raw") * col("__raw") * 1e6 + 0.5).cast("long"))
+            .cast("double") / 1e6).as("__nrm"))
+        raw.crossJoin(broadcast(nrm))
+          .select(col("node"), col(from),
+            when(col("__nrm") > 0, snap(col("__raw") / col("__nrm")))
+              .otherwise(lit(0.0)).as(to))
+      }
+      val bySrc = e.select(col("src").as("__k"), col("dst").as("__t"))
+      val byDst = e.select(col("dst").as("__k"), col("src").as("__t"))
+      // even half-rounds: authorities from hubs along u→v; odd: hubs from
+      // the just-normalized authorities
+      val out = it.iterate(endpoints(e).select(col("node"), lit(1.0).as("hub"),
+          lit(1.0).as("auth")), 2 * iters, readsStateOnce = false) { (s, r) =>
+        if (r % 2 == 0) half(s, "hub", "auth", bySrc) else half(s, "auth", "hub", byDst)
+      }
+      it.result(out.select(col("node"), col("hub"), col("auth")))
     }
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    def snap(c: org.apache.spark.sql.Column) = TextAnalysis.round6(c)
-    // raw score -> L2-normalized snapped score; the norm is a 1-row frame
-    // (snapped squared terms summed exactly, one sqrt), broadcast back
-    def normalized(raw: DataFrame, rawCol: String, outCol: String): DataFrame = {
-      val nrm = raw.agg(
-        sqrt(sum(floor(col(rawCol) * col(rawCol) * 1e6 + 0.5).cast("long"))
-          .cast("double") / 1e6).as("__nrm"))
-      raw.crossJoin(broadcast(nrm))
-        .select(col("node"),
-          when(col("__nrm") > 0, snap(col(rawCol) / col("__nrm")))
-            .otherwise(lit(0.0)).as(outCol))
-    }
-    // renamed-column join frames sidestep self-join attribute ambiguity
-    // (scores derive from the SAME persisted edge frame each round)
-    val bySrc = e.select(col("src").as("__k"), col("dst").as("__t"))
-    val byDst = e.select(col("dst").as("__k"), col("src").as("__t"))
-    def spread(scores: DataFrame, scoreCol: String, edgesK: DataFrame): DataFrame =
-      nodes.join(
-        scores.select(col("node").as("__k"), col(scoreCol).as("__x"))
-          .join(edgesK, Seq("__k"))
-          .groupBy(col("__t").as("node"))
-          .agg(sum(col("__x").cast("decimal(28,6)")).cast("double").as("__s")),
-        Seq("node"), "left")
-        .select(col("node"), coalesce(col("__s"), lit(0.0)).as("__raw"))
-    var h = nodes.select(col("node"), lit(1.0).as("hub"))
-    var a = nodes.select(col("node"), lit(1.0).as("auth"))
-    // LAZY localCheckpoint per half-round. The unbroken lazy chain is
-    // marginally faster warm-isolated (2.6 s vs 3.1 s on the q254
-    // graph), but its duplicated-subplan fan-out (each half-round
-    // references the previous one twice: norm agg + select) makes the
-    // ANALYZER walk up to 4^iters subplan copies — measured at 10-40 s
-    // for the same query inside a long bench suite (codegen-cache churn,
-    // old-gen pressure). localCheckpoint(eager = false) truncates the
-    // LOGICAL plan to a leaf, so analysis is O(1) per reference while
-    // the single final action still materializes each half-round exactly
-    // once — unlike persist, which bounds execution but leaves the full
-    // lineage for the analyzer (measured 8-9 s warm). Production HITS
-    // runs inside exactly the kind of long-lived JVM the suite simulates.
-    for (_ <- 0 until iters) {
-      a = normalized(spread(h, "hub", bySrc), "__raw", "auth")
-        .localCheckpoint(false)
-      h = normalized(spread(a, "auth", byDst), "__raw", "hub")
-        .localCheckpoint(false)
-    }
-    val out = h.join(a, Seq("node"))
-      .select(col("node"), col("hub"), col("auth"))
-    CacheScope.releaseAfterFirstUse(out, Seq(e, nodes))
   }
 
   /** Newman MODULARITY of a given community assignment — the "is this
@@ -919,71 +685,24 @@ object GraphOps {
     * caller left-joins if it wants the full node set. For an undirected
     * walk, pass the symmetrized edge table.
     *
-    * Iteration shape (the [[Dedup.connectedComponents]] discipline):
-    * edges localCheckpoint once (flat leaf — the analyzer never re-walks
-    * the caller's upstream), each round is ONE keyed frontier⋈edges join
-    * plus one anti-join against the settled set, both frames re-truncated
-    * per round so the plan stays O(1) deep; AQE is scoped off inside the
-    * loop (tiny fixed-size shuffles, re-planning is pure driver tax). The
-    * frontier SHRINKS monotonically on expander-ish graphs; settled rows
-    * accumulate but only ever join by key. Convergence = empty frontier,
-    * detected on the same action that materializes the round.
+    * Iteration shape: the [[frontierBfs]] loop on [[Iterate]] — each
+    * round is ONE keyed frontier⋈edges join plus one anti-join against the
+    * settled set, and its one action counts the new frontier. The frontier
+    * SHRINKS monotonically on expander-ish graphs; settled rows accumulate
+    * but only ever join by key.
     */
   def bfsDistances(edges: DataFrame, sources: DataFrame, maxDepth: Int = 20,
       srcCol: String = "src", dstCol: String = "dst",
       nodeCol: String = "node"): DataFrame = {
     require(maxDepth >= 1 && maxDepth <= 200,
       s"bfsDistances: maxDepth must be in [1, 200], got $maxDepth")
-    val spark0 = edges.sparkSession
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct().localCheckpoint(true)
-    // size-adaptive: under the edge threshold (exact count of the
-    // checkpointed frame) the frontier loop's per-hop checkpoint+count
-    // cadence costs more than the whole BFS — settle distances on the
-    // driver instead; identical integer rows by construction
-    val eCount = e.count()
-    if (eCount <= localGraphThreshold(spark0)) {
-      val adj = collectAdjacency(e)
-      val srcsDf = sources.select(col(nodeCol).as("node")).distinct()
-      val nodeT = srcsDf.schema.fields(0).dataType
-      val rows = localBfs(adj, srcsDf.collect().map(_.get(0)).toSeq, maxDepth)
-        .map { case (n, d) => org.apache.spark.sql.Row(n, d) }
-      import org.apache.spark.sql.types._
-      return spark0.createDataFrame(
-        spark0.sparkContext.parallelize(rows, 1),
-        StructType(Seq(StructField("node", nodeT),
-          StructField("dist", LongType))))
-    }
-    // LOOP-SCOPED SESSION ([[LoopSession]]): AQE off + loop shuffles
-    // sized to the edge count (a small graph at the session partition
-    // count pays per-round stage scheduling, not shuffle work — the
-    // connectedComponents round-11 finding; e is checkpointed, so the
-    // count was a cached-leaf scan) — on a CLONED session, so concurrent
-    // queries on the caller's session keep the caller's conf.
-    val loopSpark = LoopSession.enter(spark0)
-    LoopSession.sizeShuffles(loopSpark, spark0, eCount)
-    val eL = LoopSession.rebind(e, loopSpark)
-    var settled = LoopSession.rebind(
-      sources.select(col(nodeCol).as("node")).distinct()
-        .select(col("node"), lit(0L).as("dist")), loopSpark)
-      .localCheckpoint(true)
-    var frontier = settled
-    var depth = 1L
-    var done = false
-    while (!done && depth <= maxDepth) {
-      val next = frontier.join(eL, frontier("node") === eL("src"))
-        .select(col("dst").as("node")).distinct()
-        .join(settled, Seq("node"), "left_anti")
-        .select(col("node"), lit(depth).as("dist"))
-        .localCheckpoint(true)
-      if (next.isEmpty) done = true
-      else {
-        settled = settled.unionAll(next).localCheckpoint(true)
-        frontier = next
-        depth += 1
-      }
-    }
-    // rebound: the caller's consuming action plans under its own session
-    LoopSession.rebind(settled, spark0)
+    val it = Iterate(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
+    val srcs = it.root(sources.select(col(nodeCol).as("node")).distinct())
+    it.local(srcs)
+      .map(r => GraphLocal.bfsDistances(it.caller, r(0), r(1).map(_.get(0)).toSeq,
+        maxDepth, it.idType))
+      .getOrElse(it.result(
+        frontierBfs(it, srcs.select(lit(0).as("lm"), col("node"), lit(0L).as("d")), maxDepth)
+          .select(col("node"), col("d").as("dist"))))
   }
 }

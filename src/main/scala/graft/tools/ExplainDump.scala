@@ -21,7 +21,8 @@ object ExplainDump {
       .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // optional conf overrides, e.g. to force a gated cutover's other path:
+    // optional conf overrides, e.g. to put every graph operator (connected
+    // components included) on its distributed loop:
     // GRAFT_EXPLAIN_CONF="graft.graph.localEdgeThreshold=0,other=v"
     sys.env.get("GRAFT_EXPLAIN_CONF").foreach(_.split(',').foreach { kv =>
       val Array(k, v) = kv.split("=", 2)

@@ -51,6 +51,72 @@ object Bridge {
       to: org.apache.spark.sql.SparkSession): org.apache.spark.sql.DataFrame =
     ofRows(to, df.queryExecution.logical)
 
+  /** Re-root `df` at a flat `LogicalRDD` leaf over its own physical rows.
+    * The logical plan is what a `localCheckpoint` leaves (one leaf,
+    * keeping the physical partitioning and the statistics), but nothing
+    * is checkpointed: the leaf keeps its RDD lineage. At `level` NONE
+    * nothing is stored, and every job that reads the leaf recomputes it
+    * from the shuffles its plan ends on. Otherwise the rows are stored at
+    * `level` as the compressed column batches `Dataset.persist` stores
+    * (a deserialized copy of each row takes several times the space).
+    * Lazy: the first job that reads the leaf computes (and stores) it,
+    * but a broadcast inside `df`'s plan starts its job here, when the
+    * plan is prepared.
+    */
+  def root(df: org.apache.spark.sql.DataFrame,
+      level: org.apache.spark.storage.StorageLevel): Leaf = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val rows = ds.queryExecution.toRdd
+    val sc = rows.sparkContext
+    val (bytes, parts) = (sc.longAccumulator, sc.longAccumulator)
+    val (rdd, stored) =
+      if (level == org.apache.spark.storage.StorageLevel.NONE) (rows, None)
+      else {
+        val attrs = ds.queryExecution.executedPlan.output
+        val conf = ds.sparkSession.sessionState.conf
+        val ser = new org.apache.spark.sql.execution.columnar.DefaultCachedBatchSerializer
+        // the batches' bytes and the partitions stored, counted as
+        // `InMemoryRelation` counts them: the driver merges a task's
+        // accumulators before its job returns
+        val batches = ser.convertInternalRowToCachedBatch(rows, attrs, level, conf)
+          .mapPartitions(it => it.map { b => bytes.add(b.sizeInBytes); b } ++ {
+            parts.add(1); Iterator.empty })
+          .persist(level)
+        (ser.convertCachedBatchToInternalRow(batches, attrs, attrs, conf), Some(batches))
+      }
+    new Leaf(ofRows(ds.sparkSession,
+      org.apache.spark.sql.execution.LogicalRDD.fromDataset(rdd, ds, ds.isStreaming)),
+      stored, bytes, parts)
+  }
+
+  /** A leaf from [[root]] and the column batches stored behind it. */
+  final class Leaf private[Bridge] (val df: org.apache.spark.sql.DataFrame,
+      stored: Option[org.apache.spark.rdd.RDD[_]],
+      bytes: org.apache.spark.util.LongAccumulator,
+      parts: org.apache.spark.util.LongAccumulator) {
+
+    /** Drop the stored batches. A later read recomputes them through the
+      * lineage, and can never fail the way a released checkpoint block does.
+      */
+    def release(): Unit = stored.foreach(_.unpersist(blocking = false))
+
+    /** [[df]] planned with the bytes its batches take once a job has
+      * stored every partition (the size a persisted frame reports to the
+      * planner, so a small state can be broadcast), else [[df]] as planned
+      * at the root.
+      */
+    def measured: org.apache.spark.sql.DataFrame = (for {
+      b <- stored
+      if parts.sum >= b.partitions.length
+    } yield df.queryExecution.logical match {
+      case l: org.apache.spark.sql.execution.LogicalRDD =>
+        val session = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        ofRows(session, l.copy()(session, Some(
+          org.apache.spark.sql.catalyst.plans.logical.Statistics(sizeInBytes = bytes.sum)),
+          Some(l.constraints)))
+    }).getOrElse(df)
+  }
+
   /** A `FunctionRegistry` entry for a Column-DSL function: SQL arguments
     * arrive as resolved child expressions, flow through the same Column
     * builder the Scala DSL uses, and lower back to the identical expression

@@ -351,24 +351,69 @@ class GraphOpsSpec extends SparkTestBase {
 
   test("kCore deep peel: a long path drains one endpoint pair per round (lineage truncation)") {
     // path of 41 nodes: k=2 peeling removes the two endpoints each round,
-    // ~20 rounds to drain — drives the every-8-rounds checkpoint cut that
-    // keeps the peeled lineage's analyzer cost linear. Broadcast OFF for
-    // the loop's ~40 tiny semi-joins: each would pin a driver broadcast
-    // relation, and under full-suite heap pressure the exchange runs out
-    // of build memory (the peel itself is partition-count-1 SMJ work).
-    val thKey = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.get(thKey)
-    spark.conf.set(thKey, "-1")
-    try {
-      val path = (1L to 40L).map(i => (i, i + 1)).toDF("src", "dst")
-      assert(GraphOps.kCore(path, k = 2, maxRounds = 25).count() === 0L)
-      // a cycle is its own 2-core: survives any number of rounds intact
-      val cycle = ((1L to 40L).map(i => (i, i % 40 + 1))).toDF("src", "dst")
-      assert(GraphOps.kCore(cycle, k = 2, maxRounds = 25).count() === 40L)
-    } finally {
-      spark.conf.set(thKey, prev)
-      spark.catalog.clearCache()
+    // ~20 rounds to drain — every round re-roots the peeled edge set, so
+    // the analyzer never sees more than one round of plan
+    val path = (1L to 40L).map(i => (i, i + 1)).toDF("src", "dst")
+    assert(GraphOps.kCore(path, k = 2, maxRounds = 25).count() === 0L)
+    // a cycle is its own 2-core: survives any number of rounds intact
+    val cycle = ((1L to 40L).map(i => (i, i % 40 + 1))).toDF("src", "dst")
+    assert(GraphOps.kCore(cycle, k = 2, maxRounds = 25).count() === 40L)
+  }
+
+  /** Optimized-plan node count (tree expansion) of every action `f` runs,
+    * the loops' per-round convergence actions included: a loop session's
+    * listener manager is cloned from this session's.
+    */
+  private def actionPlanSizes(f: => Unit): Seq[Int] = {
+    val sizes = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        sizes.add(qe.optimizedPlan.collect { case p => p }.size)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
     }
+    spark.listenerManager.register(listener)
+    try {
+      f
+      // the execution-listener bus is asynchronous: wait until it is quiet
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      var (prev, quiet) = (-1, 0)
+      while (quiet < 5 && System.nanoTime() < deadline) {
+        val cur = sizes.size
+        if (cur == prev) quiet += 1 else quiet = 0
+        prev = cur
+        Thread.sleep(100)
+      }
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    sizes.asScala.map(_.intValue).toSeq
+  }
+
+  test("graph loops: every round's plan stays bounded, whatever the round count") {
+    // kCore peels one endpoint pair of a path per round, and a chain's CC
+    // labels move one hop per step: 10 / 20 / 40 nodes run ~5 / 10 / 20
+    // rounds. The largest plan any action sees must not grow with them.
+    def kCorePlans(n: Int) = actionPlanSizes {
+      val path = (1L until n.toLong).map(i => (i, i + 1)).toDF("src", "dst")
+      assert(GraphOps.kCore(path, k = 2, maxRounds = 100).count() === 0L)
+    }
+    val key = "graft.graph.localEdgeThreshold"
+    def ccPlans(n: Int) = {
+      val chain = (1 until n).map(i => (i.toLong, i + 1L)).toDF("id_a", "id_b")
+      spark.conf.set(key, "0")
+      try actionPlanSizes {
+        assert(Dedup.connectedComponents(chain, maxIter = 2 * n).collect()
+          .forall(_.getLong(1) == 1L))
+      } finally spark.conf.unset(key)
+    }
+    for ((op, plans) <- Seq[(String, Int => Seq[Int])](
+        "kCore" -> kCorePlans, "connectedComponents" -> ccPlans)) {
+      val maxes = Seq(10, 20, 40).map(n => n -> plans(n).max)
+      assert(maxes.forall(_._2 <= 40), s"$op plan sizes by node count: $maxes")
+      assert(maxes.map(_._2).distinct.size == 1, s"$op plan grows with rounds: $maxes")
+    }
+    spark.catalog.clearCache()
   }
 
   test("local cutover == distributed loop on randomized graphs (rank family + LPA + HITS)") {
@@ -390,24 +435,33 @@ class GraphOpsSpec extends SparkTestBase {
         spark.catalog.clearCache()
       }
     }
+    def cmp(tag: String, f: => org.apache.spark.sql.DataFrame): Unit = {
+      val (loc, dist) = both(f)
+      assert(loc.toSet === dist.toSet, s"$tag diverged")
+    }
     for (trial <- 1 to 3) {
       val e = randomEdges(12 + trial * 3, 25 + trial * 10)
         .persist(); e.count()
       val w = e.groupBy("src", "dst").agg(count(lit(1)).as("weight"))
         .persist(); w.count()
       val seeds = Seq("n1", "n3", "n999").toDF("node")
-      def cmp(tag: String, f: => org.apache.spark.sql.DataFrame): Unit = {
-        val (loc, dist) = both(f)
-        assert(loc.toSet === dist.toSet, s"$tag diverged on trial $trial")
-      }
-      cmp("pageRank", GraphOps.pageRank(e, iters = 3))
-      cmp("personalizedPageRank",
+      cmp(s"pageRank $trial", GraphOps.pageRank(e, iters = 3))
+      cmp(s"personalizedPageRank $trial",
         GraphOps.personalizedPageRank(e, seeds, iters = 3))
-      cmp("weightedPageRank", GraphOps.weightedPageRank(w, iters = 3))
-      cmp("hits", GraphOps.hits(e, iters = 2))
-      cmp("labelPropagation", GraphOps.labelPropagation(e, iters = 3))
+      cmp(s"weightedPageRank $trial", GraphOps.weightedPageRank(w, iters = 3))
+      cmp(s"hits $trial", GraphOps.hits(e, iters = 2))
+      cmp(s"labelPropagation $trial", GraphOps.labelPropagation(e, iters = 3))
       e.unpersist(); w.unpersist()
     }
+    // inputs a driver-side hash map reads differently from Spark's
+    // equi-joins: a null id (a map matches a null key) and sources of
+    // another id type (a boxed Integer never equals a boxed Long)
+    val nullSrc = Seq((null.asInstanceOf[String], "b"), ("b", "c")).toDF("src", "dst")
+    cmp("bfsDistances null source", GraphOps.bfsDistances(nullSrc,
+      Seq(null.asInstanceOf[String]).toDF("node")))
+    cmp("bfsDistances int sources over long edges", GraphOps.bfsDistances(
+      Seq((1L, 2L), (2L, 3L)).toDF("src", "dst"), Seq(1).toDF("node")))
+    cmp("harmonicCentrality null edge id", GraphOps.harmonicCentrality(nullSrc))
   }
 
   test("rank-family cutover falls through on null ids: node set matches distributed") {

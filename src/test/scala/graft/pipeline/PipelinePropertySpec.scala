@@ -43,13 +43,13 @@ class PipelinePropertySpec extends SparkTestBase {
   test("connectedComponents equals union-find on random graphs") {
     // force the DISTRIBUTED loop — the default small-graph path is
     // itself a union-find, which would make this test a tautology
-    spark.conf.set("graft.cc.localEdgeThreshold", "0")
+    spark.conf.set("graft.graph.localEdgeThreshold", "0")
     try samples(edgeList, 12).foreach { edges =>
       val got = Dedup.connectedComponents(edges.toDF("id_a", "id_b"))
         .as[(Long, Long)].collect().toMap
       assert(got == unionFind(edges), s"edges: $edges")
       spark.catalog.clearCache()
-    } finally spark.conf.unset("graft.cc.localEdgeThreshold")
+    } finally spark.conf.unset("graft.graph.localEdgeThreshold")
   }
 
   // ---- chunking coverage ----

@@ -478,7 +478,7 @@ class PipelineSpec extends SparkTestBase {
       .as[(Long, Long)].collect().toMap
     assert(got == want)
     // forced distributed loop: identical labels
-    val key = "graft.cc.localEdgeThreshold"
+    val key = "graft.graph.localEdgeThreshold"
     spark.conf.set(key, "0")
     try {
       val gotDist = Dedup.connectedComponents(pairs)
@@ -495,17 +495,16 @@ class PipelineSpec extends SparkTestBase {
 
   test("connected components: local union-find == distributed loop on a deep chain, string ids") {
     // a 60-deep chain: ~30 propagation rounds — this SPECIFICALLY
-    // exercises the loop's periodic lineage truncation (each round
-    // references labels twice, so without the every-8-rounds checkpoint
-    // cut the plan DAG's tree expansion is ~2^rounds and an 8 GiB driver
-    // OOMs in the analyzer near round ~24 — measured) — plus a star,
-    // over STRING ids
+    // exercises the loop's per-round re-rooting (each round references
+    // labels twice, so an unrooted plan DAG's tree expansion is
+    // ~2^rounds and an 8 GiB driver OOMs in the analyzer near round ~24
+    // — measured) — plus a star, over STRING ids
     val chain = (1 to 60).map(i => (f"s$i%03d", f"s${i + 1}%03d"))
     val star = (2 to 5).map(i => ("zz1", s"zz$i"))
     val pairs = (chain ++ star).toDF("id_a", "id_b")
     val local = Dedup.connectedComponents(pairs)
       .as[(String, String)].collect().toMap
-    val key = "graft.cc.localEdgeThreshold"
+    val key = "graft.graph.localEdgeThreshold"
     spark.conf.set(key, "0")
     val dist = try Dedup.connectedComponents(pairs, maxIter = 200)
       .as[(String, String)].collect().toMap
@@ -518,7 +517,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("connected components: local path is a pure optimization (UTF-8 min-roots, exotic ids fall through)") {
-    val key = "graft.cc.localEdgeThreshold"
+    val key = "graft.graph.localEdgeThreshold"
     // supplementary (non-BMP) string ids: UTF-16 code-unit order and
     // UTF-8 byte order DISAGREE here — U+10400 (surrogate pair, UTF-8
     // F0 90 90 80) sorts BELOW U+FF21 (UTF-8 EF BC A1) in UTF-16 but
@@ -555,14 +554,14 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("iterative loops run on a cloned session: concurrent queries keep the caller's conf") {
-    // the loop's AQE/shuffle-partition overrides live on a LoopSession
-    // clone — the CALLER's session conf must never flicker mid-loop
+    // the loop's AQE/shuffle-partition overrides live on an Iterate
+    // session clone — the CALLER's session conf must never flicker mid-loop
     // (round-12 verdict item: previously the loop mutated session conf
     // and restored it, racing any concurrently planned query)
-    val clone = LoopSession.enter(spark)
+    val clone = Iterate.enter(spark)
     assert(clone ne spark)
     assert(clone.conf.get("spark.sql.adaptive.enabled") == "false")
-    LoopSession.sizeShuffles(clone, spark, 100L)
+    Iterate.sizeShuffles(clone, spark, 100L)
     assert(clone.conf.get("spark.sql.shuffle.partitions") == "1")
     assert(spark.conf.get("spark.sql.shuffle.partitions") != "1")
     assert(spark.conf.get("spark.sql.adaptive.enabled", "true") != "false")
@@ -570,7 +569,7 @@ class PipelineSpec extends SparkTestBase {
     // thread, while this thread keeps planning on the original session —
     // every observed conf sample must be the session's own value
     val sessionParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val key = "graft.cc.localEdgeThreshold"
+    val key = "graft.graph.localEdgeThreshold"
     spark.conf.set(key, "0")
     val pairs = (1 to 40).map(i => (f"c$i%03d", f"c${i + 1}%03d")).toDF("id_a", "id_b")
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()

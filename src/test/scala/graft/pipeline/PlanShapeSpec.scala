@@ -479,12 +479,28 @@ class PlanShapeSpec extends SparkTestBase {
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
     // force the distributed loop (the default would take the small-graph
     // union-find path, whose plan is a parallelize leaf)
-    spark.conf.set("graft.cc.localEdgeThreshold", "0")
-    // the result plan only shows the last round; products in EARLIER rounds
-    // would also surface there through the persisted lineage boundary, so
-    // asserting on the returned frame covers the loop
-    try assertNoProduct(Dedup.connectedComponents(pairs))
-    finally spark.conf.unset("graft.cc.localEdgeThreshold")
+    spark.conf.set("graft.graph.localEdgeThreshold", "0")
+    // every round is re-rooted at an RDD-backed leaf, so the result's own
+    // physical plan is a scan of the last round. The rounds' joins live in
+    // the leaves' RDD lineage: walk it, with whole-stage codegen off so
+    // each operator keeps its own scope name, and broadcasts off, since a
+    // broadcast side runs in a job of its own, outside the lineage
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val cc = Dedup.connectedComponents(pairs)
+      val ops = org.apache.spark.sql.graftbridge.Lineage.operators(cc)
+      assert(ops.exists(o => o == "SortMergeJoin" || o.endsWith("HashJoin")),
+        s"no equi-join in the loop's lineage: $ops")
+      assert(!ops.exists(o => o == "CartesianProduct" || o == "BroadcastNestedLoopJoin"),
+        s"product join in the loop's lineage: $ops")
+      assert(cc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+        Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+    } finally {
+      spark.conf.unset("spark.sql.codegen.wholeStage")
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.unset("graft.graph.localEdgeThreshold")
+    }
   }
 
   test("repetitionSignals aggregates by doc id: no product, no global window") {
