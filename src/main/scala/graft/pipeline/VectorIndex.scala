@@ -25,9 +25,10 @@ import org.apache.spark.sql.functions._
   * Search then never touches a raw corpus vector: candidates stream out of
   * the probed partitions as one-code-array rows and are scored by ONE
   * codegen'd kernel call per (query, candidate) against the broadcast
-  * query vectors + codebook ([[AdcKernel]] documents the bit-exactness
-  * contract with [[Similarity.pqSearch]]'s join+aggregate scoring:
-  * 6-decimal-rounded subspace distances, exact DECIMAL sums,
+  * query vectors and the codebook — one scalar-subquery value, computed
+  * once per search before scoring starts ([[AdcKernel]] documents the
+  * bit-exactness contract with [[Similarity.pqSearch]]'s join+aggregate
+  * scoring: 6-decimal-rounded subspace distances, exact DECIMAL sums,
   * id-ascending ties) — so at-rest results match the recompute path
   * bit-for-bit (VectorIndexSpec pins the parity).
   */
@@ -109,7 +110,8 @@ object VectorIndex {
     * (tiny broadcast-centroid argsort), ONE equi-join of the probe list
     * against the partitioned index on the PARTITION column — only the
     * probed directories are scanned — then inline ADC scoring against the
-    * broadcast query subvectors + codebook and a per-query top-k.
+    * broadcast query subvectors and the scalar-subquery codebook, and a
+    * per-query top-k.
     * Identical semantics (and oracle) to [[Similarity.ivfPqSearch]].
     */
   def searchIndex(index: DataFrame, centroids: DataFrame, codebooks: DataFrame,
@@ -151,14 +153,18 @@ object VectorIndex {
         .otherwise(raise_error(format_string(
           s"searchIndex: codebook subvector width mismatch (%d vs subDim = $subDim dims)",
           size(col("__cv"))))))
-    // the whole codebook as ONE broadcast row of aligned sorted arrays —
-    // the model is m x k rows by definition, so this is small at any scale
+    // the whole codebook as ONE scalar-subquery value of aligned sorted
+    // arrays, computed once per search before any row is scored (the three
+    // field reads below plan as one Subquery + ReusedSubquery) — the model
+    // is m x k rows by definition, so this is small at any scale, and being
+    // a value rather than a joined row it adds no product join to the plan
     val cbRow = cb.groupBy()
       .agg(array_sort(collect_list(struct(col("sub"), col("code_id"),
         col("__cv")))).as("__e"))
-      .select(transform(col("__e"), e => e("sub")).as("__cbSubs"),
-        transform(col("__e"), e => e("code_id")).as("__cbCodes"),
-        flatten(transform(col("__e"), e => e("__cv"))).as("__cbFlat"))
+      .select(struct(transform(col("__e"), e => e("sub")).as("s"),
+        transform(col("__e"), e => e("code_id")).as("c"),
+        flatten(transform(col("__e"), e => e("__cv"))).as("f")))
+      .scalar()
     // ONE kernel call per candidate row ([[AdcKernel.adcSum]] — identical
     // snapped/exact-decimal arithmetic to the join+aggregate scoring it
     // replaces): the pivoted layout puts all m codes on the row, so there
@@ -167,8 +173,8 @@ object VectorIndex {
     val adist = org.apache.spark.sql.graftbridge.Bridge.staticInvoke(
       Class.forName("graft.pipeline.AdcKernel"),
       org.apache.spark.sql.types.DoubleType, "adcSum",
-      Seq(col("codes").cast("array<long>"), col("__qv"), col("__cbSubs"),
-        col("__cbCodes"), col("__cbFlat"), lit(m), lit(subDim)),
+      Seq(col("codes").cast("array<long>"), col("__qv"), cbRow.getField("s"),
+        cbRow.getField("c"), cbRow.getField("f"), lit(m), lit(subDim)),
       Seq(org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType),
         org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.IntegerType),
@@ -184,7 +190,6 @@ object VectorIndex {
       deterministic = false)
     val scored = index.join(broadcast(probes), Seq(centroidIdCol))
       .join(broadcast(qv), Seq(queryIdCol))
-      .crossJoin(broadcast(cbRow))
       .withColumn("adist", adist)
       .filter(col("adist").isNotNull)
       .select(col(queryIdCol), col(idCol), col("adist"))
