@@ -105,14 +105,13 @@ object ImageTiles {
     // no forced broadcast: dims/obs are one row per region — small for
     // typical workloads (AQE broadcasts them), but a forced hint would break
     // at 10^8 regions
-    val assembled = crops
-      .join(dims, Seq("instance_id"))
-      .withColumn("__pos", (col("dy") * col("tw") + col("dx")).cast("int"))
-      .groupBy(col("instance_id"), col("c"), col("th"), col("tw"))
-      .agg(map_from_arrays(collect_list(col("__pos")), collect_list(col("value"))).as("__m"))
-      .select(col("instance_id"), col("c"), col("th"), col("tw"),
-        transform(sequence(lit(0), col("th") * col("tw") - 1),
-          i => coalesce(element_at(col("__m"), i), lit(0.0))).as("px"))
+    val assembled = RasterOps.assembleTiles(
+      crops.join(dims, Seq("instance_id"))
+        .withColumn("__pos", (col("dy") * col("tw") + col("dx")).cast("int")),
+      Seq(col("instance_id"), col("c"), col("th"), col("tw")),
+      col("th") * col("tw"),
+      format_string("tileBatch crop (instance_id=%s, c=%s)",
+        col("instance_id"), col("c")))
     obs match {
       case Some((table, instanceKey, labelCol)) =>
         assembled.join(

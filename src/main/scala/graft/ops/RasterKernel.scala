@@ -1,0 +1,54 @@
+package graft.ops
+
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.unsafe.types.UTF8String
+
+/** Dense tile assembly kernel, invoked via `StaticInvoke` (the
+  * [[graft.geom.GeomKernel]] / [[graft.pipeline.AdcKernel]] pattern) so a
+  * tile's payload is built by one codegen'd static call per tile.
+  *
+  * Every long-form → tiled conversion ([[RasterOps.pixelsToTiles]],
+  * [[RasterOps.pixelsToTilesExact]], [[RasterOps.pixelsToTiles3d]],
+  * [[ImageTiles.tileBatch]]) groups its pixels by tile, collects the
+  * row-major in-tile positions and the values side by side, and hands the
+  * two lists here — the numpy block write of the reference, one pass over
+  * the collected pixels into a zero-filled array.
+  */
+object RasterKernel {
+
+  /** Scatter `value(i)` to `out(pos(i))` over a zero-filled array of `n`
+    * doubles. `what` names the operator and the tile for refusals.
+    *
+    * Refuses (never drops or misplaces a pixel):
+    *  - a position outside `[0, n)`;
+    *  - a position given twice;
+    *  - lists of different lengths — `collect_list` skips nulls, so that is
+    *    a null pixel value (or a null position) in the tile.
+    */
+  def scatter(pos: ArrayData, value: ArrayData, n: Int,
+      what: UTF8String): ArrayData = {
+    val k = pos.numElements()
+    if (value.numElements() != k)
+      throw new IllegalArgumentException(
+        s"$what: null pixel value or position ($k positions, " +
+          s"${value.numElements()} values) — filter or fill nulls upstream")
+    val out = new Array[Double](n)
+    val seen = new Array[Long]((n + 63) >>> 6)
+    var i = 0
+    while (i < k) {
+      val p = pos.getInt(i)
+      if (p < 0 || p >= n)
+        throw new IllegalArgumentException(
+          s"$what: pixel position $p outside the tile's [0, $n)")
+      val bit = 1L << (p & 63)
+      if ((seen(p >>> 6) & bit) != 0)
+        throw new IllegalArgumentException(
+          s"$what: duplicate pixel at in-tile position $p")
+      seen(p >>> 6) |= bit
+      out(p) = value.getDouble(i)
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+}

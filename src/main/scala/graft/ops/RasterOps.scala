@@ -4,6 +4,8 @@ import graft.model.Models
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StringType}
 
 /** Raster operators over the two layouts (SURVEY.md §1.5):
   * long-form pixels `(c?, y, x, value|label)` and tiled images
@@ -13,6 +15,12 @@ import org.apache.spark.sql.functions._
   * per-pixel kernels are higher-order array functions on the tile payload
   * (no shuffle, whole-stage codegen — the analog of `map_blocks`,
   * map.py:22-156); resolution changes are groupBy re-tilings.
+  *
+  * Long-form → tiled assembly has ONE path, [[assembleTiles]]: a
+  * `collect_list` of in-tile positions and values per tile, scattered into
+  * the dense zero-filled payload by the codegen'd [[RasterKernel.scatter]]
+  * (O(1) per pixel). [[pixelsToTiles]], [[pixelsToTilesExact]],
+  * [[pixelsToTiles3d]] and [[ImageTiles.tileBatch]] all go through it.
   */
 object RasterOps {
 
@@ -24,19 +32,51 @@ object RasterOps {
   def pixelsToTiles(pixels: DataFrame, tileSize: Int = TS,
       channelCol: Option[String] = Some("c"), scale: Int = 0): DataFrame = {
     val c = channelCol.map(col).getOrElse(lit(0))
+    assembleTiles(withTilePos(pixels, tileSize, "pixelsToTiles"),
+        Seq(c.as("c"), col("tile_y"), col("tile_x")), lit(tileSize * tileSize),
+        format_string("pixelsToTiles tile (c=%s, tile_y=%s, tile_x=%s)",
+          col("c"), col("tile_y"), col("tile_x")))
+      .select(lit(scale).as("scale"), col("c"), col("tile_y"), col("tile_x"),
+        lit(tileSize).as("h"), lit(tileSize).as("w"), col("px"))
+  }
+
+  /** `tile_y`, `tile_x` and the row-major in-tile `__pos` of every pixel
+    * on a `tileSize` grid. A negative or null coordinate refuses: integer
+    * division and `%` would fold `x = -1` into column `tileSize - 1` of
+    * tile 0 (misplaced) and `y = -1` into a negative position (dropped).
+    */
+  private def withTilePos(pixels: DataFrame, tileSize: Int,
+      op: String): DataFrame = {
     val within = (col("y") % tileSize) * tileSize + (col("x") % tileSize)
     pixels
       .withColumn("tile_y", (col("y") / tileSize).cast("int"))
       .withColumn("tile_x", (col("x") / tileSize).cast("int"))
-      .withColumn("__pos", within.cast("int"))
-      .groupBy(c.as("c"), col("tile_y"), col("tile_x"))
-      .agg(map_from_arrays(collect_list(col("__pos")),
-        collect_list(col("value"))).as("__m"))
-      .select(lit(scale).as("scale"), col("c"), col("tile_y"), col("tile_x"),
-        lit(tileSize).as("h"), lit(tileSize).as("w"),
-        transform(sequence(lit(0), lit(tileSize * tileSize - 1)),
-          i => coalesce(element_at(col("__m"), i), lit(0.0))).as("px"))
+      .withColumn("__pos", when(col("y") >= 0 && col("x") >= 0, within.cast("int"))
+        .otherwise(raise_error(format_string(
+          s"$op: pixel (%s,%s) has a negative or null coordinate",
+          col("y"), col("x"))).cast("int")))
   }
+
+  private val Kernel: Class[_] = Class.forName("graft.ops.RasterKernel")
+
+  /** THE tile-assembly path: group `pixels` (an int `__pos` and a `value`
+    * per row) by `keys`, collect each group's positions and values side by
+    * side, and scatter them into a dense zero-filled payload `px` of `n`
+    * doubles with [[RasterKernel.scatter]] — one codegen'd static call per
+    * tile. `n` and `what` (the operator and tile named in refusals) are
+    * read from the key columns. Output: the keys plus `px`.
+    */
+  private[ops] def assembleTiles(pixels: DataFrame, keys: Seq[Column],
+      n: Column, what: Column): DataFrame =
+    pixels.groupBy(keys: _*)
+      .agg(collect_list(col("__pos")).as("__ps"),
+        collect_list(col("value").cast("double")).as("__vs"))
+      .withColumn("px", Bridge.staticInvoke(Kernel,
+        ArrayType(DoubleType, containsNull = false), "scatter",
+        Seq(col("__ps"), col("__vs"), n, what),
+        Seq(ArrayType(IntegerType), ArrayType(DoubleType), IntegerType, StringType),
+        returnNullable = false))
+      .drop("__ps", "__vs")
 
   /** Long-form pixels -> tiles with EXACT edge tiles: a raster whose
     * shape is not a tile multiple gets partial tiles
@@ -60,7 +100,7 @@ object RasterOps {
     // dims and negative positions — corrupt tiles instead of an error
     val inRange = col("y") >= 0 && col("y") < lit(heightPx) &&
       col("x") >= 0 && col("x") < lit(widthPx)
-    pixels
+    val located = pixels
       .withColumn("tile_y", tyC).withColumn("tile_x", txC)
       .withColumn("h", hC).withColumn("w", wC)
       .withColumn("__pos", when(inRange,
@@ -68,13 +108,13 @@ object RasterOps {
         .otherwise(raise_error(format_string(
           "pixelsToTilesExact: pixel (%s,%s) outside declared %sx%s raster",
           col("y"), col("x"), lit(heightPx), lit(widthPx))).cast("int")))
-      .groupBy(c.as("c"), col("tile_y"), col("tile_x"), col("h"), col("w"))
-      .agg(map_from_arrays(collect_list(col("__pos")),
-        collect_list(col("value"))).as("__m"))
+    assembleTiles(located,
+        Seq(c.as("c"), col("tile_y"), col("tile_x"), col("h"), col("w")),
+        col("h") * col("w"),
+        format_string("pixelsToTilesExact tile (c=%s, tile_y=%s, tile_x=%s)",
+          col("c"), col("tile_y"), col("tile_x")))
       .select(lit(scale).as("scale"), col("c"), col("tile_y"), col("tile_x"),
-        col("h"), col("w"),
-        transform(sequence(lit(0), col("h") * col("w") - 1),
-          i => coalesce(element_at(col("__m"), i), lit(0.0))).as("px"))
+        col("h"), col("w"), col("px"))
   }
 
   /** 3D long-form `(c?, z, y, x, value)` -> z-stacked tiles (the 2D tile
@@ -85,18 +125,13 @@ object RasterOps {
   def pixelsToTiles3d(pixels: DataFrame, tileSize: Int = TS,
       channelCol: Option[String] = Some("c"), scale: Int = 0): DataFrame = {
     val c = channelCol.map(col).getOrElse(lit(0))
-    val within = (col("y") % tileSize) * tileSize + (col("x") % tileSize)
-    pixels
-      .withColumn("tile_y", (col("y") / tileSize).cast("int"))
-      .withColumn("tile_x", (col("x") / tileSize).cast("int"))
-      .withColumn("__pos", within.cast("int"))
-      .groupBy(c.as("c"), col("z").cast("int").as("z"), col("tile_y"), col("tile_x"))
-      .agg(map_from_arrays(collect_list(col("__pos")),
-        collect_list(col("value"))).as("__m"))
+    assembleTiles(withTilePos(pixels, tileSize, "pixelsToTiles3d"),
+        Seq(c.as("c"), col("z").cast("int").as("z"), col("tile_y"), col("tile_x")),
+        lit(tileSize * tileSize),
+        format_string("pixelsToTiles3d tile (c=%s, z=%s, tile_y=%s, tile_x=%s)",
+          col("c"), col("z"), col("tile_y"), col("tile_x")))
       .select(lit(scale).as("scale"), col("c"), col("z"), col("tile_y"), col("tile_x"),
-        lit(tileSize).as("h"), lit(tileSize).as("w"),
-        transform(sequence(lit(0), lit(tileSize * tileSize - 1)),
-          i => coalesce(element_at(col("__m"), i), lit(0.0))).as("px"))
+        lit(tileSize).as("h"), lit(tileSize).as("w"), col("px"))
   }
 
   /** z-stacked tiles -> 3D long-form pixels `(scale, c, z, y, x, value)`. */

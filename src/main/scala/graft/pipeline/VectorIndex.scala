@@ -133,9 +133,15 @@ object VectorIndex {
       .select(col(queryIdCol), explode(col("__cells")).as("__cell"))
       .select(col(queryIdCol), col(s"__cell.$centroidIdCol").as(centroidIdCol))
     // model-side width refusal runs ONCE per model row, up front — a
-    // malformed codebook/query batch refuses even when no candidate is
-    // ever scored (round-13's inline-ADC rewrite had narrowed the check
-    // to scored candidates)
+    // malformed codebook/query batch refuses whenever the scoring plan
+    // runs, also when no candidate row reaches the kernel (an index that
+    // is empty at run time): the codebook check sits in the scalar
+    // subquery and the query check on the broadcast side, and both are
+    // evaluated before the scoring stage starts. An index Catalyst can
+    // prove empty at plan time (an empty local relation) prunes the
+    // scoring subtree and these checks with it, so that search returns no
+    // rows without refusing; refusing there would need an eager action
+    // (a job per search)
     val qv = queries
       .select(col(queryIdCol), col(vecCol).cast("array<double>").as("__qv"))
       .filter(when(col("__qv").isNull, raise_error(lit(

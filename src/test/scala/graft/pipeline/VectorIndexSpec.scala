@@ -131,6 +131,26 @@ class VectorIndexSpec extends SparkTestBase {
     }
   }
 
+  test("codebook width refusal fires on an index that is empty only at run time") {
+    val path = tmpPath("empty_at_runtime")
+    VectorIndex.writeIndex(emb, cent, cb, m = 2, subDim = 8, path)
+    // a data-column filter on the parquet index: no row survives, but only
+    // the scan can tell, so the scoring plan still runs
+    val empty = VectorIndex.readIndex(spark, path).filter(col("vec_id") < 0)
+    val badCb = cb.withColumn("subvec",
+      slice(col("subvec").cast("array<double>"), 1, 3))
+    val ex = intercept[Exception] {
+      VectorIndex.searchIndex(empty, cent, badCb, queries,
+        k = 4, m = 2, subDim = 8, nprobe = 1).collect()
+    }
+    val msg = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .map(e => Option(e.getMessage).getOrElse("")).mkString(" | ")
+    assert(msg.contains("searchIndex: codebook subvector width mismatch (3 vs subDim = 8 dims)"), msg)
+    // the same empty index with a well-formed codebook answers nothing
+    assert(VectorIndex.searchIndex(empty, cent, cb, queries,
+      k = 4, m = 2, subDim = 8, nprobe = 1).isEmpty)
+  }
+
   test("two-stage rerank: with full probe + corpus-wide shortlist it equals exact L2 top-k") {
     val path = tmpPath("rerank_full")
     VectorIndex.writeIndex(emb, cent, cb, m = 2, subDim = 8, path)
