@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.Sort
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Benchmark main: times every gate query on SPARK_GRAFT_SF_DIR and prints
   * ONE JSON line. Per query: three runs, report the minimum (asv-style —
@@ -25,6 +27,17 @@ object Bench {
     if (x == 42L) System.err.println("") // keep the loop live
     (System.nanoTime() - t0) / 1e6
   }
+
+  /** `df` without its top-level global Sort, if it has one. The gate
+    * queries' top-level orderBy is oracle plumbing (deterministic
+    * compare), not operator semantics — the reference's asv bench returns
+    * unsorted results too — so it is stripped before timing.
+    */
+  def stripTopSort(spark: SparkSession, df: DataFrame): DataFrame =
+    df.queryExecution.analyzed match {
+      case Sort(_, true, child, _) => Bridge.ofRows(spark, child)
+      case _ => df
+    }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -56,17 +69,9 @@ object Bench {
           val t0 = System.nanoTime()
           // noop write materializes EVERY row and column — `.count()` would let
           // Catalyst prune all projection columns, under-measuring
-          // projection-heavy queries. The gate queries' TOP-LEVEL orderBy is
-          // oracle plumbing (deterministic compare), not operator semantics —
-          // the reference's asv bench returns unsorted results too — so a
-          // top-level global Sort is stripped before timing.
+          // projection-heavy queries
           try {
-            val df = fn(spark, sfDir)
-            val plan = df.queryExecution.analyzed match {
-              case org.apache.spark.sql.catalyst.plans.logical.Sort(_, true, child, _) => child
-              case p => p
-            }
-            org.apache.spark.sql.graftbridge.Bridge.ofRows(spark, plan)
+            stripTopSort(spark, fn(spark, sfDir))
               .write.mode("overwrite").format("noop").save()
           }
           catch { case _: Throwable => return -1.0 }

@@ -972,7 +972,18 @@ object Similarity {
     */
   def pqSearch(codes: DataFrame, codebooks: DataFrame, queries: DataFrame,
       k: Int, m: Int, subDim: Int, idCol: String = "vec_id",
-      vecCol: String = "embedding", queryIdCol: String = "query_id"): DataFrame = {
+      vecCol: String = "embedding", queryIdCol: String = "query_id"): DataFrame =
+    adcTopK(codes.select(col(idCol), col("sub"), col("code_id")), Seq("sub"),
+      codebooks, queries, k, m, subDim, idCol, vecCol, queryIdCol, "pqSearch")
+
+  /** The ADC scoring tail of [[pqSearch]] and [[ivfPqSearch]]: `rows`
+    * (idCol, sub, code_id, plus queryIdCol when `qsubKeys` names it) are
+    * joined to the query subvectors on `qsubKeys` and to the codebook on
+    * (sub, code_id), scored, summed per (query, vector) and ranked.
+    */
+  private def adcTopK(rows: DataFrame, qsubKeys: Seq[String],
+      codebooks: DataFrame, queries: DataFrame, k: Int, m: Int, subDim: Int,
+      idCol: String, vecCol: String, queryIdCol: String, what: String): DataFrame = {
     val slices = transform(sequence(lit(0), lit(m - 1)),
       s => slice(col(vecCol).cast("array<double>"), s * subDim + 1, lit(subDim)))
     val qsub = queries.select(col(queryIdCol), posexplode(slices).as(Seq("sub", "__qv")))
@@ -991,10 +1002,10 @@ object Similarity {
     // extra arithmetic (subDim mults per scored row instead of a 3-key
     // hash probe) is codegen'd VecDist2 — comparable CPU, and the
     // broadcast no longer grows with the query batch.
-    val scored = codes.select(col(idCol), col("sub"), col("code_id"))
-      .join(broadcast(qsub), Seq("sub"))
+    val scored = rows
+      .join(broadcast(qsub), qsubKeys)
       .join(broadcast(cb), Seq("sub", "code_id"))
-      .filter(sameWidth(col("__qv"), col("__cv"), "pqSearch"))
+      .filter(sameWidth(col("__qv"), col("__cv"), what))
       .withColumn("__d", TextAnalysis.round6(dist2))
       .groupBy(col(queryIdCol), col(idCol))
       .agg(sum(col("__d").cast("decimal(28,6)")).cast("double").as("adist"),
@@ -1041,34 +1052,12 @@ object Similarity {
         1, nprobe).as("__cells"))
       .select(col(queryIdCol), explode(col("__cells")).as("__cell"))
       .select(col(queryIdCol), col(s"__cell.$centroidIdCol").as(centroidIdCol))
-    // per-query ADC lookup table: queries x m x k_codebook rows — broadcasts
-    val slices = transform(sequence(lit(0), lit(m - 1)),
-      s => slice(col(vecCol).cast("array<double>"), s * subDim + 1, lit(subDim)))
-    val qsub = queries.select(col(queryIdCol), posexplode(slices).as(Seq("sub", "__qv")))
-    val cb = codebooks.select(col("sub"), col("code_id"),
-      col("subvec").cast("array<double>").as("__cv"))
-    val dist2 = dist2Fold(col("__qv"), col("__cv"))
     // candidate pairs: probed cells' inverted lists, ids only
     val cand = probes.join(cells, Seq(centroidIdCol))
       .select(col(queryIdCol), col(idCol))
-    // INLINE ADC (see [[pqSearch]]): broadcast the model-side inputs
-    // (query subvecs, codebook) instead of the queries x m x k LUT
-    // relation, and evaluate the identical round6(dist2) per candidate
-    // row — bit-identical sums, no driver-built broadcast that scales
-    // with the query batch.
-    val scored = cand.join(codes, Seq(idCol))
-      .join(broadcast(qsub), Seq(queryIdCol, "sub"))
-      .join(broadcast(cb), Seq("sub", "code_id"))
-      .filter(sameWidth(col("__qv"), col("__cv"), "ivfPqSearch"))
-      .withColumn("__d", TextAnalysis.round6(dist2))
-      .groupBy(col(queryIdCol), col(idCol))
-      .agg(sum(col("__d").cast("decimal(28,6)")).cast("double").as("adist"),
-        count(lit(1)).as("__n"))
-      .filter(col("__n") === m).drop("__n")
-    val w = Window.partitionBy(col(queryIdCol)).orderBy(col("adist"), col(idCol))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col(queryIdCol), col(idCol), col("adist"), col("rank"))
+    // INLINE ADC (see [[pqSearch]]) per candidate row
+    adcTopK(cand.join(codes, Seq(idCol)), Seq(queryIdCol, "sub"),
+      codebooks, queries, k, m, subDim, idCol, vecCol, queryIdCol, "ivfPqSearch")
   }
 
   /** Distance-to-assigned-centroid outlier pruning — the embedding-space

@@ -74,24 +74,6 @@ object CorpusPack extends QueryPack {
        |${normalize("n3", "v3", "y3")}""".stripMargin
   }
 
-  // q180's base index, memoized per (JVM, sf dir) — deterministic
-  // derivation of the test data with a frozen model, so reuse across
-  // bench reps is safe; temp dirs die with the JVM's /tmp
-  private val ivfBaseIndex =
-    scala.collection.mutable.Map[String, java.nio.file.Path]()
-
-  private def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(from).iterator().asScala.foreach { p =>
-      val dst = to.resolve(from.relativize(p))
-      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(dst)
-      else {
-        java.nio.file.Files.createDirectories(dst.getParent)
-        java.nio.file.Files.copy(p, dst)
-      }
-    }
-  }
-
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Lloyd's k-means, 2 iterations from every-100th-vector seeds: the
@@ -585,20 +567,13 @@ object CorpusPack extends QueryPack {
       val queries = corpus.filter(col("vec_id") % 100 === 0)
         .select(col("vec_id").as("query_id"), col("embedding"))
       // unique per-invocation dir (no hashCode collisions, no overwrite-
-      // while-read race between concurrent runs), removed once the search
-      // result is materialized off the index files via localCheckpoint
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ivfpq_")
-      val path = tmp.resolve("index").toString
-      try {
+      // while-read race between concurrent runs)
+      Scratch.run(s) { tmp =>
+        val path = tmp.resolve("index").toString
         VectorIndex.writeIndex(corpus, centroids, cb, m = 4, subDim = 16, path)
         VectorIndex.searchIndex(VectorIndex.readIndex(s, path), centroids, cb,
           queries, k = 5, m = 4, subDim = 16, nprobe = 2)
           .orderBy(col("query_id"), col("rank"))
-          .localCheckpoint(true)
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
       }
     }),
 
@@ -609,18 +584,12 @@ object CorpusPack extends QueryPack {
     "q237_zonemap_range" -> ((s, d) => {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("event_type"), col("value"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_zm_")
-      val path = tmp.resolve("ev").toString
-      try {
+      Scratch.run(s) { tmp =>
+        val path = tmp.resolve("ev").toString
         ZoneMapIndex.writeZoneMapped(ev, path, "event_type", Seq("value"))
         ZoneMapIndex.readRange(s, path, "value", 120.0, 180.0)
           .select(col("event_id"), col("event_type"), col("value"))
           .orderBy(col("event_id"))
-          .localCheckpoint(true)
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
       }
     }),
 
@@ -630,20 +599,14 @@ object CorpusPack extends QueryPack {
     "q242_zonemap_append" -> ((s, d) => {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("event_type"), col("value"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_zma_")
-      val path = tmp.resolve("ev").toString
-      try {
+      Scratch.run(s) { tmp =>
+        val path = tmp.resolve("ev").toString
         ZoneMapIndex.writeZoneMapped(ev.filter(col("event_id") % 5 < 3),
           path, "event_type", Seq("value"))
         ZoneMapIndex.appendZoneMapped(ev.filter(col("event_id") % 5 >= 3), path)
         ZoneMapIndex.readRange(s, path, "value", 120.0, 180.0)
           .select(col("event_id"), col("event_type"), col("value"))
           .orderBy(col("event_id"))
-          .localCheckpoint(true)
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
       }
     }),
 
@@ -656,18 +619,12 @@ object CorpusPack extends QueryPack {
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
       val keys = Seq(3L, 17L, 42L, 77L, 96L)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_bloom_")
-      val path = tmp.resolve("docs").toString
-      try {
+      Scratch.run(s) { tmp =>
+        val path = tmp.resolve("docs").toString
         BloomIndex.writeBloomIndexed(docs, path, "lang", "doc_id")
         BloomIndex.lookupKeys(s, path, keys)
           .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
           .orderBy(col("doc_id"))
-          .localCheckpoint(true)
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
       }
     }),
 
@@ -689,28 +646,23 @@ object CorpusPack extends QueryPack {
             .as(Seq("sub", "subvec")))
       val queries = corpus.filter(col("vec_id") % 100 === 0)
         .select(col("vec_id").as("query_id"), col("embedding"))
-      val base = ivfBaseIndex.synchronized {
-        ivfBaseIndex.getOrElseUpdate(d, {
-          val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_base_")
-          VectorIndex.writeIndex(corpus.filter(col("vec_id") % 5 =!= 0),
-            centroids, cb, m = 4, subDim = 16, dir.resolve("index").toString)
-          dir
-        })
+      // the base index is a deterministic derivation of the test data
+      // with a frozen model, so reuse across bench reps is safe; its
+      // directory lives until the JVM exits (Scratch's shutdown hook)
+      val base = Scratch.memo("ivfpq_base_q180", d) { dir =>
+        val p = dir.resolve("index")
+        VectorIndex.writeIndex(corpus.filter(col("vec_id") % 5 =!= 0),
+          centroids, cb, m = 4, subDim = 16, p.toString)
+        p
       }
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ivfpq_app_")
-      val path = tmp.resolve("index")
-      try {
-        copyTree(base.resolve("index"), path)
+      Scratch.run(s) { tmp =>
+        val path = tmp.resolve("index")
+        org.apache.commons.io.FileUtils.copyDirectory(base.toFile, path.toFile)
         VectorIndex.appendToIndex(corpus.filter(col("vec_id") % 5 === 0),
           centroids, cb, m = 4, subDim = 16, path.toString)
         VectorIndex.searchIndex(VectorIndex.readIndex(s, path.toString),
           centroids, cb, queries, k = 5, m = 4, subDim = 16, nprobe = 2)
           .orderBy(col("query_id"), col("rank"))
-          .localCheckpoint(true)
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
       }
     }),
 
@@ -729,19 +681,13 @@ object CorpusPack extends QueryPack {
             .as(Seq("sub", "subvec")))
       val queries = corpus.filter(col("vec_id") % 100 === 0)
         .select(col("vec_id").as("query_id"), col("embedding"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ivfpq_rr_")
-      val path = tmp.resolve("index").toString
-      try {
+      Scratch.run(s) { tmp =>
+        val path = tmp.resolve("index").toString
         VectorIndex.writeIndex(corpus, centroids, cb, m = 4, subDim = 16, path)
         VectorIndex.searchRerank(VectorIndex.readIndex(s, path), centroids,
           cb, corpus, queries, k = 5, shortlist = 20, m = 4, subDim = 16,
           nprobe = 2)
           .orderBy(col("query_id"), col("rank"))
-          .localCheckpoint(true)
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
       }
     }),
 

@@ -170,25 +170,15 @@ object CurationPack extends QueryPack {
       |       ELSE 'tail' END AS ccnet_bucket
       |FROM scores s, cut""".stripMargin
 
-  // q152's trained BPE merge model, memoized per (JVM, sf dir) —
-  // deterministic derivation of the test corpus (see the q152 comment)
-  private val bpeMergeCache =
-    scala.collection.mutable.Map[String, Seq[(String, String)]]()
-
   // q367's at-rest span-gram index (stored = doc_id % 7 <> 2), memoized
   // per (JVM, sf dir) — reps time the streaming probe, not the build
-  private val spanStreamIndexCache = scala.collection.mutable.Map[String, String]()
-
   private def spanStreamIndex(s: SparkSession, d: String,
       stored: DataFrame): String =
-    spanStreamIndexCache.synchronized {
-      spanStreamIndexCache.getOrElseUpdate(d, {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_span_sidx_")
-        val t = s"graft_span_q367_${Integer.toHexString(d.hashCode)}"
-        graft.pipeline.TextIndex.writeSpanIndex(stored, t,
-          tmp.resolve("idx").toString, k = 8)
-        t
-      })
+    Scratch.memo("graft_span_q367", d) { dir =>
+      val t = dir.getFileName.toString
+      graft.pipeline.TextIndex.writeSpanIndex(stored, t,
+        dir.resolve("idx").toString, k = 8)
+      t
     }
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -277,8 +267,7 @@ object CurationPack extends QueryPack {
       val docs = Tables.documentsSpread(s, d)
       val batch = docs.filter(col("doc_id") % 7 === 2)
       val table = spanStreamIndex(s, d, docs.filter(col("doc_id") % 7 =!= 2))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_span_stream_")
-      try {
+      Scratch.run(s) { tmp =>
         val srcDir = tmp.resolve("src").toString
         (0 to 2).foreach { i =>
           batch.filter(col("doc_id") % 3 === i).coalesce(1)
@@ -295,11 +284,6 @@ object CurationPack extends QueryPack {
           .select(col("doc_id"), col("span_start").cast("int").as("span_start"),
             col("span_tokens").cast("int").as("span_tokens"))
           .orderBy(col("doc_id"), col("span_start"))
-          .localCheckpoint(true)
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
       }
     }),
 
@@ -314,9 +298,8 @@ object CurationPack extends QueryPack {
       val docs = Tables.documentsSpread(s, d)
       val batch = docs.filter(col("doc_id") % 7 === 2)
       val stored = docs.filter(col("doc_id") % 7 =!= 2)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_spanidx_")
       val table = "graft_span_index_q366"
-      try {
+      Scratch.run(s, table) { tmp =>
         graft.pipeline.TextIndex.writeSpanIndex(
           stored.filter(col("doc_id") % 5 =!= 4), table,
           tmp.resolve("idx").toString, k = 8)
@@ -326,12 +309,6 @@ object CurationPack extends QueryPack {
           .select(col("doc_id"), col("span_start").cast("int").as("span_start"),
             col("span_tokens").cast("int").as("span_tokens"))
           .orderBy(col("doc_id"), col("span_start"))
-          .localCheckpoint(true)
-      } finally {
-        s.sql(s"DROP TABLE IF EXISTS `$table`")
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
       }
     }),
 
@@ -822,11 +799,10 @@ object CurationPack extends QueryPack {
     // Profile now noop-writes like Bench.
     "q152_bpe_segment" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val merges = bpeMergeCache.synchronized {
-        bpeMergeCache.getOrElseUpdate(d,
-          TextAnalysis.bpeTrain(docs, numMerges = 3)
-            .orderBy(col("rank")).collect()
-            .map(r => (r.getString(1), r.getString(2))).toSeq)
+      val merges = Scratch.memo("bpe_merges_q152", d) { _ =>
+        TextAnalysis.bpeTrain(docs, numMerges = 3)
+          .orderBy(col("rank")).collect()
+          .map(r => (r.getString(1), r.getString(2))).toSeq
       }
       TextAnalysis.bpeSegment(docs, merges).orderBy(col("doc_id"))
     }),

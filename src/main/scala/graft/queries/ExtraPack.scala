@@ -281,9 +281,8 @@ object ExtraPack extends QueryPack {
     "q310_layout_delete" -> ((s, d) => {
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_vdel_")
-      val path = tmp.resolve("t").toString
-      try {
+      Scratch.run(s) { tmp =>
+        val path = tmp.resolve("t").toString
         graft.ops.VersionedLayout.commit(docs.filter(col("doc_id") % 5 < 3), path)
         graft.ops.VersionedLayout.commit(docs.filter(col("doc_id") % 5 >= 3), path)
         graft.ops.VersionedLayout.deleteWhere(s, path, col("doc_id") % 5 === 4)
@@ -294,11 +293,6 @@ object ExtraPack extends QueryPack {
         }.reduce(_.unionByName(_))
           .select(col("version"), col("n_rows"), col("sum_id"))
           .orderBy(col("version"))
-          .localCheckpoint(true)
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
       }
     }),
 
@@ -310,9 +304,8 @@ object ExtraPack extends QueryPack {
     "q349_ivm" -> ((s, d) => {
       val ev = Tables.eventsWithTs(s, d)
         .select(col("event_id"), col("event_type"), col("value"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ivm_")
-      val path = tmp.resolve("t").toString
-      try {
+      Scratch.run(s) { tmp =>
+        val path = tmp.resolve("t").toString
         val VL = graft.ops.VersionedLayout
         VL.commit(ev.filter(col("event_id") % 3 === 0), path)      // v1
         VL.commit(ev.filter(col("event_id") % 3 === 1), path)      // v2 append
@@ -328,11 +321,6 @@ object ExtraPack extends QueryPack {
           .select(col("event_type"), col("n"),
             col("sum6").cast("double").as("sum_value"))
           .orderBy(col("event_type"))
-          .localCheckpoint(true)
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
       }
     }),
 
@@ -343,9 +331,8 @@ object ExtraPack extends QueryPack {
     "q228_versioned_layout" -> ((s, d) => {
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_vlayout_")
-      val path = tmp.resolve("t").toString
-      try {
+      Scratch.run(s) { tmp =>
+        val path = tmp.resolve("t").toString
         graft.ops.VersionedLayout.commit(docs.filter(col("doc_id") % 5 < 3), path)
         graft.ops.VersionedLayout.commit(docs.filter(col("doc_id") % 5 >= 3), path)
         graft.ops.VersionedLayout.compact(s, path, sortCol = Some("doc_id"))
@@ -356,11 +343,6 @@ object ExtraPack extends QueryPack {
         }.reduce(_.unionByName(_))
           .select(col("version"), col("n_rows"), col("sum_id"))
           .orderBy(col("version"))
-          .localCheckpoint(true)
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
       }
     }),
 
@@ -374,17 +356,12 @@ object ExtraPack extends QueryPack {
         .withColumn("n_chars", col("n_chars") + 1000L)
       val news = docs.filter(col("doc_id") % 50 === 0)
         .select((col("doc_id") + 100000L).as("doc_id"), col("lang"), col("n_chars"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_vup_")
-      val path = tmp.resolve("t").toString
-      try {
+      Scratch.run(s) { tmp =>
+        val path = tmp.resolve("t").toString
         graft.ops.VersionedLayout.commit(docs, path)
         graft.ops.VersionedLayout.upsert(mods.unionByName(news), path, "doc_id")
         graft.ops.VersionedLayout.read(s, path)
-          .orderBy(col("doc_id")).localCheckpoint(true)
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+          .orderBy(col("doc_id"))
       }
     }),
 
@@ -398,17 +375,12 @@ object ExtraPack extends QueryPack {
         .withColumn("n_chars", col("n_chars") + 1000L)
       val news = docs.filter(col("doc_id") % 50 === 0)
         .select((col("doc_id") + 100000L).as("doc_id"), col("lang"), col("n_chars"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_vdiff_")
-      val path = tmp.resolve("t").toString
-      try {
+      Scratch.run(s) { tmp =>
+        val path = tmp.resolve("t").toString
         graft.ops.VersionedLayout.commit(docs, path)
         graft.ops.VersionedLayout.upsert(mods.unionByName(news), path, "doc_id")
         graft.ops.VersionedLayout.diff(s, path, 1, 2)
-          .orderBy(col("doc_id"), col("change")).localCheckpoint(true)
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+          .orderBy(col("doc_id"), col("change"))
       }
     }),
 
@@ -422,9 +394,8 @@ object ExtraPack extends QueryPack {
         .toDF("event_id", "x", "y")
       val probes = pts.filter(col("event_id") % 997 === 5)
         .select(col("event_id").as("qid"), col("x").as("qx"), col("y").as("qy"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_knnz_")
-      val path = tmp.resolve("pts").toString
-      try {
+      Scratch.run(s) { tmp =>
+        val path = tmp.resolve("pts").toString
         graft.ops.ZOrder.writeZOrdered(pts, "x", "y", path,
           0.0, 100.0, 0.0, 100.0, bits = 10, numPartitions = Some(4))
         graft.ops.SpatialJoin.knnWithinRadiusZ(s, path, probes,
@@ -432,11 +403,6 @@ object ExtraPack extends QueryPack {
           .select(col("qid"), col("event_id").as("pid"),
             col("dist2"), col("knn_rank"))
           .orderBy(col("qid"), col("knn_rank"))
-          .localCheckpoint(true)
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
       }
     }),
 
@@ -464,9 +430,8 @@ object ExtraPack extends QueryPack {
         ((col("event_id") * 131) % 997).cast("double") / 10.0,
         ((col("user_id") * 379) % 991).cast("double") / 10.0)
         .toDF("event_id", "x", "y")
-      val tmp = java.nio.file.Files.createTempDirectory("graft_zmb_")
-      val path = tmp.resolve("pts").toString
-      try {
+      Scratch.run(s) { tmp =>
+        val path = tmp.resolve("pts").toString
         graft.ops.ZOrder.writeZOrdered(pts, "x", "y", path,
           0.0, 100.0, 0.0, 100.0, bits = 10, numPartitions = Some(4))
         val t = SequenceT(List(
@@ -478,11 +443,6 @@ object ExtraPack extends QueryPack {
               (Seq(150.0, 100.0), Seq(190.0, 140.0))), level = 5)
           .select(col("event_id"), col("x"), col("y"))
           .orderBy(col("event_id"))
-          .localCheckpoint(true)
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
       }
     }),
 
@@ -496,9 +456,8 @@ object ExtraPack extends QueryPack {
       val pts = Tables.events(s, d).select(col("event_id"),
         (((col("event_id") * 131) % 997).cast("double") / 10.0).as("x"),
         (((col("user_id") * 379) % 991).cast("double") / 10.0).as("y"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_zstream_")
-      val path = tmp.resolve("pts").toString
-      try {
+      Scratch.run(s) { tmp =>
+        val path = tmp.resolve("pts").toString
         // empty layout fixes the grid parameters before data flows
         graft.ops.ZOrder.writeZOrdered(pts.limit(0), "x", "y", path,
           0.0, 100.0, 0.0, 100.0, bits = 10, numPartitions = Some(2))
@@ -514,11 +473,6 @@ object ExtraPack extends QueryPack {
         graft.ops.ZOrder.readBox(s, path, 20.0, 40.0, 15.0, 35.0, level = 5)
           .select(col("event_id"), col("x"), col("y"))
           .orderBy(col("event_id"))
-          .localCheckpoint(true)
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
       }
     }),
 
@@ -531,9 +485,8 @@ object ExtraPack extends QueryPack {
         ((col("event_id") * 131) % 997).cast("double") / 10.0,
         ((col("user_id") * 379) % 991).cast("double") / 10.0)
         .toDF("event_id", "x", "y")
-      val tmp = java.nio.file.Files.createTempDirectory("graft_zpoly_")
-      val path = tmp.resolve("pts").toString
-      try {
+      Scratch.run(s) { tmp =>
+        val path = tmp.resolve("pts").toString
         graft.ops.ZOrder.writeZOrdered(pts, "x", "y", path,
           0.0, 100.0, 0.0, 100.0, bits = 10, numPartitions = Some(4))
         val t = SequenceT(List(
@@ -545,11 +498,6 @@ object ExtraPack extends QueryPack {
             level = 5)
           .select(col("event_id"), col("x"), col("y"))
           .orderBy(col("event_id"))
-          .localCheckpoint(true)
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
       }
     }),
 

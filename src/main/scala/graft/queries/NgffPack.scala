@@ -19,11 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object NgffPack extends QueryPack {
 
-  private def tmp(tag: String, d: String): String = {
-    val h = java.lang.Integer.toHexString(d.hashCode)
-    s"${System.getProperty("java.io.tmpdir")}/graft_ngff_${tag}_$h"
-  }
-
   // 2-channel 64x64 image from events: value = count per (c, y, x) cell
   private def eventPixels(s: SparkSession, d: String): DataFrame =
     Tables.events(s, d).select(
@@ -44,19 +39,21 @@ object NgffPack extends QueryPack {
     // prunes chunk reads at planning time (NgffScanBuilder pushdown);
     // content must equal the direct SQL raster over the same tile row
     "q141_dsv2_ngff" -> ((s, d) => {
-      val dir = tmp("dsv2", d)
-      val tiles = RasterOps.pixelsToTiles(eventPixels(s, d), tileSize = 16)
-      NgffRaster.write(tiles, dir, "events_img", tileSize = 16)
-      val back = s.read.format("ngff").load(dir)
-        .filter(col("scale") === 0 && col("tile_y") === 1)
-      RasterOps.tilesToPixels(back, tileSize = 16)
-        .filter(col("value") =!= 0.0)
-        .groupBy("c")
-        .agg(count(lit(1)).as("n_px"),
-          sum(col("value").cast("decimal(28,6)")).cast("double").as("total"),
-          sum((col("y") * 64 + col("x")) * col("value").cast("decimal(28,6)"))
-            .cast("double").as("pos_weighted"))
-        .orderBy("c")
+      Scratch.run(s) { tmp =>
+        val dir = tmp.resolve("dsv2").toString
+        val tiles = RasterOps.pixelsToTiles(eventPixels(s, d), tileSize = 16)
+        NgffRaster.write(tiles, dir, "events_img", tileSize = 16)
+        val back = s.read.format("ngff").load(dir)
+          .filter(col("scale") === 0 && col("tile_y") === 1)
+        RasterOps.tilesToPixels(back, tileSize = 16)
+          .filter(col("value") =!= 0.0)
+          .groupBy("c")
+          .agg(count(lit(1)).as("n_px"),
+            sum(col("value").cast("decimal(28,6)")).cast("double").as("total"),
+            sum((col("y") * 64 + col("x")) * col("value").cast("decimal(28,6)"))
+              .cast("double").as("pos_weighted"))
+          .orderBy("c")
+      }
     }),
 
     // DataSourceV2 WRITE path: tiles written through df.write
@@ -65,19 +62,21 @@ object NgffPack extends QueryPack {
     // then read back with the v1 reader; content must equal the direct
     // SQL raster over events
     "q142_dsv2_ngff_write" -> ((s, d) => {
-      val dir = tmp("dsv2w", d)
-      val tiles = RasterOps.pixelsToTiles(eventPixels(s, d), tileSize = 16)
-      tiles.write.format("ngff").option("tileSize", 16)
-        .option("name", "events_img").mode("overwrite").save(dir)
-      val (back, _) = NgffRaster.read(s, dir)
-      RasterOps.tilesToPixels(back, tileSize = 16)
-        .filter(col("value") =!= 0.0)
-        .groupBy("c")
-        .agg(count(lit(1)).as("n_px"),
-          sum(col("value").cast("decimal(28,6)")).cast("double").as("total"),
-          sum((col("y") * 64 + col("x")) * col("value").cast("decimal(28,6)"))
-            .cast("double").as("pos_weighted"))
-        .orderBy("c")
+      Scratch.run(s) { tmp =>
+        val dir = tmp.resolve("dsv2w").toString
+        val tiles = RasterOps.pixelsToTiles(eventPixels(s, d), tileSize = 16)
+        tiles.write.format("ngff").option("tileSize", 16)
+          .option("name", "events_img").mode("overwrite").save(dir)
+        val (back, _) = NgffRaster.read(s, dir)
+        RasterOps.tilesToPixels(back, tileSize = 16)
+          .filter(col("value") =!= 0.0)
+          .groupBy("c")
+          .agg(count(lit(1)).as("n_px"),
+            sum(col("value").cast("decimal(28,6)")).cast("double").as("total"),
+            sum((col("y") * 64 + col("x")) * col("value").cast("decimal(28,6)"))
+              .cast("double").as("pos_weighted"))
+          .orderBy("c")
+      }
     }),
 
     // write multiscale NGFF (zstd chunks) -> read back -> bbox crop ->
@@ -85,126 +84,136 @@ object NgffPack extends QueryPack {
     // so zero-filled cells are excluded to compare against the sparse SQL
     // raster (io_raster.py:162-233 read, :261-573 write).
     "q61_ngff_roundtrip" -> ((s, d) => {
-      val dir = tmp("rt", d)
-      val tiles = RasterOps.pixelsToTiles(eventPixels(s, d), tileSize = 16)
-      NgffRaster.write(tiles, dir, "events_img", tileSize = 16,
-        transforms = Map("global" -> ScaleT(Seq(0.5, 0.5), Seq("x", "y"))),
-        channels = Seq("even", "odd"))
-      val (back, meta) = NgffRaster.read(s, dir)
-      require(meta.transforms("global") == ScaleT(Seq(0.5, 0.5), Seq("x", "y")),
-        "transform metadata did not round-trip")
-      require(meta.channels == Seq("even", "odd"), "channels did not round-trip")
-      RasterOps.tilesToPixels(back, tileSize = 16)
-        .filter(col("value") =!= 0.0)
-        .filter(col("y") >= 8 && col("y") < 40 && col("x") >= 8 && col("x") < 40)
-        .groupBy("c")
-        .agg(count(lit(1)).as("n_px"),
-          sum(col("value").cast("decimal(28,6)")).cast("double").as("total"),
-          sum((col("y") * 64 + col("x")) * col("value").cast("decimal(28,6)"))
-            .cast("double").as("pos_weighted"))
-        .orderBy("c")
+      Scratch.run(s) { tmp =>
+        val dir = tmp.resolve("rt").toString
+        val tiles = RasterOps.pixelsToTiles(eventPixels(s, d), tileSize = 16)
+        NgffRaster.write(tiles, dir, "events_img", tileSize = 16,
+          transforms = Map("global" -> ScaleT(Seq(0.5, 0.5), Seq("x", "y"))),
+          channels = Seq("even", "odd"))
+        val (back, meta) = NgffRaster.read(s, dir)
+        require(meta.transforms("global") == ScaleT(Seq(0.5, 0.5), Seq("x", "y")),
+          "transform metadata did not round-trip")
+        require(meta.channels == Seq("even", "odd"), "channels did not round-trip")
+        RasterOps.tilesToPixels(back, tileSize = 16)
+          .filter(col("value") =!= 0.0)
+          .filter(col("y") >= 8 && col("y") < 40 && col("x") >= 8 && col("x") < 40)
+          .groupBy("c")
+          .agg(count(lit(1)).as("n_px"),
+            sum(col("value").cast("decimal(28,6)")).cast("double").as("total"),
+            sum((col("y") * 64 + col("x")) * col("value").cast("decimal(28,6)"))
+              .cast("double").as("pos_weighted"))
+          .orderBy("c")
+      }
     }),
 
     // GeoParquet shapes round trip (io_shapes.py:33-67): WKB written as a
     // plain parquet geometry column, read back via readGeoParquet (Z-drop +
     // geom_type derivation + envelope recompute), measured distributed
     "q68_geoparquet_shapes" -> ((s, d) => {
-      val dir = tmp("gpq", d)
-      val boxes = Tables.supplier(s, d).select(
-        col("s_suppkey").as("index"),
-        ((col("s_suppkey") * 7) % 50).cast("double").as("x0"),
-        ((col("s_suppkey") * 3) % 40).cast("double").as("y0"),
-        (lit(2.0) + (col("s_suppkey") % 5).cast("double")).as("w"))
-        .withColumn("geometry", graft.geom.st.st_make_box(
-          col("x0"), col("y0"), col("x0") + col("w"), col("y0") + col("w") * 2))
-        .select("index", "geometry")
-      boxes.write.mode("overwrite").parquet(dir)
-      val shapes = Models.ShapesModel.readGeoParquet(s, dir)
-      shapes.select(col("index"), col("geom_type"),
-          graft.geom.st.st_area(col("geometry")).as("area"),
-          col("minx"), col("miny"), col("maxx"), col("maxy"))
-        .orderBy("index")
+      Scratch.run(s) { tmp =>
+        val dir = tmp.resolve("gpq").toString
+        val boxes = Tables.supplier(s, d).select(
+          col("s_suppkey").as("index"),
+          ((col("s_suppkey") * 7) % 50).cast("double").as("x0"),
+          ((col("s_suppkey") * 3) % 40).cast("double").as("y0"),
+          (lit(2.0) + (col("s_suppkey") % 5).cast("double")).as("w"))
+          .withColumn("geometry", graft.geom.st.st_make_box(
+            col("x0"), col("y0"), col("x0") + col("w"), col("y0") + col("w") * 2))
+          .select("index", "geometry")
+        boxes.write.mode("overwrite").parquet(dir)
+        val shapes = Models.ShapesModel.readGeoParquet(s, dir)
+        shapes.select(col("index"), col("geom_type"),
+            graft.geom.st.st_area(col("geometry")).as("area"),
+            col("minx"), col("miny"), col("maxx"), col("maxy"))
+          .orderBy("index")
+      }
     }),
 
     // container-level zarr store (io_zarr.py:33-123): write a container of
     // points + labels + annotating table, read it back through the store
     // dispatch, and aggregate the round-tripped points
     "q69_zarr_container" -> ((s, d) => {
-      val dir = tmp("store", d)
-      val pts = Models.PointsModel.parse(Tables.lineitem(s, d).select(
-        col("l_orderkey"), (col("l_extendedprice") / 1000.0).as("x"),
-        col("l_quantity").as("y")))
-      val lab = Tables.events(s, d).select(
-        (col("event_id") % 32).cast("int").as("y"),
-        (col("user_id") % 32).cast("int").as("x"))
-        .groupBy("y", "x").agg((max(col("x")) % 5 + 1).cast("long").as("label"))
-      val obs = Tables.supplier(s, d).select(
-        col("s_suppkey").as("instance_id"), lit("lab").as("region"))
-      val sd = SpatialDataset(s, Seq(
-        SpatialElement(Models.PointsModel.meta("pts"), pts),
-        SpatialElement(ElementMeta("lab", ElementKind.Labels, Seq("y", "x")), lab),
-        SpatialElement(Models.TableModel.meta("tab",
-          Some(TableAnnotation(Seq("lab"), "region", "instance_id"))), obs)))
-      graft.sources.ZarrStore.write(sd, dir, tileSize = 16)
-      val back = graft.sources.ZarrStore.read(s, dir)
-      require(back.manifest.element("tab").table ==
-        Some(TableAnnotation(Seq("lab"), "region", "instance_id")),
-        "table annotation did not round-trip")
-      val p = back("pts").groupBy(floor(col("x") / 10).cast("long").as("bucket"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("y").cast("decimal(28,6)")).cast("double").as("sum_y"))
-      val l = back("lab").groupBy((col("label") + 100).as("bucket"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("y").cast("decimal(28,6)")).cast("double").as("sum_y"))
-      p.unionByName(l).orderBy("bucket")
+      Scratch.run(s) { tmp =>
+        val dir = tmp.resolve("store").toString
+        val pts = Models.PointsModel.parse(Tables.lineitem(s, d).select(
+          col("l_orderkey"), (col("l_extendedprice") / 1000.0).as("x"),
+          col("l_quantity").as("y")))
+        val lab = Tables.events(s, d).select(
+          (col("event_id") % 32).cast("int").as("y"),
+          (col("user_id") % 32).cast("int").as("x"))
+          .groupBy("y", "x").agg((max(col("x")) % 5 + 1).cast("long").as("label"))
+        val obs = Tables.supplier(s, d).select(
+          col("s_suppkey").as("instance_id"), lit("lab").as("region"))
+        val sd = SpatialDataset(s, Seq(
+          SpatialElement(Models.PointsModel.meta("pts"), pts),
+          SpatialElement(ElementMeta("lab", ElementKind.Labels, Seq("y", "x")), lab),
+          SpatialElement(Models.TableModel.meta("tab",
+            Some(TableAnnotation(Seq("lab"), "region", "instance_id"))), obs)))
+        graft.sources.ZarrStore.write(sd, dir, tileSize = 16)
+        val back = graft.sources.ZarrStore.read(s, dir)
+        require(back.manifest.element("tab").table ==
+          Some(TableAnnotation(Seq("lab"), "region", "instance_id")),
+          "table annotation did not round-trip")
+        val p = back("pts").groupBy(floor(col("x") / 10).cast("long").as("bucket"))
+          .agg(count(lit(1)).as("n"),
+            sum(col("y").cast("decimal(28,6)")).cast("double").as("sum_y"))
+        val l = back("lab").groupBy((col("label") + 100).as("bucket"))
+          .agg(count(lit(1)).as("n"),
+            sum(col("y").cast("decimal(28,6)")).cast("double").as("sum_y"))
+        p.unionByName(l).orderBy("bucket")
+      }
     }),
 
     // rank-2 labels store (<i4 chunks, zlib): write -> read -> histogram
     "q62_ngff_labels" -> ((s, d) => {
-      val dir = tmp("lab", d)
-      val labels = Tables.events(s, d).select(
-        lit(0).as("c"),
-        (col("event_id") % 48).cast("int").as("y"),
-        (col("user_id") % 48).cast("int").as("x"),
-        (col("event_id") % 9).cast("double").as("label"))
-        .groupBy("c", "y", "x").agg(max("label").as("value"))
-      val tiles = RasterOps.pixelsToTiles(labels, tileSize = 16)
-      NgffRaster.write(tiles, dir, "events_lab", tileSize = 16,
-        axes = Seq("y", "x"), dtype = "<i4", compressorId = "zlib", isLabels = true)
-      val (back, meta) = NgffRaster.read(s, dir)
-      require(meta.isLabels, "image-label marker did not round-trip")
-      RasterOps.tilesToPixels(back, tileSize = 16)
-        .filter(col("value") =!= 0.0)
-        .groupBy(col("value").cast("long").as("label"))
-        .agg(count(lit(1)).as("n_px"))
-        .orderBy("label")
+      Scratch.run(s) { tmp =>
+        val dir = tmp.resolve("lab").toString
+        val labels = Tables.events(s, d).select(
+          lit(0).as("c"),
+          (col("event_id") % 48).cast("int").as("y"),
+          (col("user_id") % 48).cast("int").as("x"),
+          (col("event_id") % 9).cast("double").as("label"))
+          .groupBy("c", "y", "x").agg(max("label").as("value"))
+        val tiles = RasterOps.pixelsToTiles(labels, tileSize = 16)
+        NgffRaster.write(tiles, dir, "events_lab", tileSize = 16,
+          axes = Seq("y", "x"), dtype = "<i4", compressorId = "zlib", isLabels = true)
+        val (back, meta) = NgffRaster.read(s, dir)
+        require(meta.isLabels, "image-label marker did not round-trip")
+        RasterOps.tilesToPixels(back, tileSize = 16)
+          .filter(col("value") =!= 0.0)
+          .groupBy(col("value").cast("long").as("label"))
+          .agg(count(lit(1)).as("n_px"))
+          .orderBy("label")
+      }
     }),
 
     // rank-3 (z, y, x) labels store round trip (Labels3DModel dims,
     // models.py:409-427; io_raster reads the same rank-3 arrays): write a
     // z-stacked volume, read it back, aggregate per plane
     "q77_ngff_3d_labels" -> ((s, d) => {
-      val dir = tmp("lab3d", d)
-      val vox = Tables.events(s, d).select(
-        lit(0).as("c"),
-        (col("event_id") % 4).cast("int").as("z"),
-        (col("event_id") % 32).cast("int").as("y"),
-        (col("user_id") % 32).cast("int").as("x"))
-        .groupBy("c", "z", "y", "x").agg(count(lit(1)).cast("double").as("value"))
-      val tiles = RasterOps.pixelsToTiles3d(vox, tileSize = 16)
-      NgffRaster.write(tiles, dir, "events_vol", tileSize = 16,
-        axes = Seq("z", "y", "x"), dtype = "<i8", isLabels = true)
-      val (back, meta) = NgffRaster.read(s, dir)
-      require(meta.axes == Seq("z", "y", "x"), s"axes did not round-trip: ${meta.axes}")
-      require(meta.isLabels, "image-label marker did not round-trip")
-      RasterOps.tilesToPixels3d(back, tileSize = 16)
-        .filter(col("value") =!= 0.0)
-        .groupBy("z")
-        .agg(count(lit(1)).as("n_px"),
-          sum(col("value").cast("decimal(28,6)")).cast("double").as("total"),
-          sum((col("y") * 32 + col("x")) * col("value").cast("decimal(28,6)"))
-            .cast("double").as("pos_weighted"))
-        .orderBy("z")
+      Scratch.run(s) { tmp =>
+        val dir = tmp.resolve("lab3d").toString
+        val vox = Tables.events(s, d).select(
+          lit(0).as("c"),
+          (col("event_id") % 4).cast("int").as("z"),
+          (col("event_id") % 32).cast("int").as("y"),
+          (col("user_id") % 32).cast("int").as("x"))
+          .groupBy("c", "z", "y", "x").agg(count(lit(1)).cast("double").as("value"))
+        val tiles = RasterOps.pixelsToTiles3d(vox, tileSize = 16)
+        NgffRaster.write(tiles, dir, "events_vol", tileSize = 16,
+          axes = Seq("z", "y", "x"), dtype = "<i8", isLabels = true)
+        val (back, meta) = NgffRaster.read(s, dir)
+        require(meta.axes == Seq("z", "y", "x"), s"axes did not round-trip: ${meta.axes}")
+        require(meta.isLabels, "image-label marker did not round-trip")
+        RasterOps.tilesToPixels3d(back, tileSize = 16)
+          .filter(col("value") =!= 0.0)
+          .groupBy("z")
+          .agg(count(lit(1)).as("n_px"),
+            sum(col("value").cast("decimal(28,6)")).cast("double").as("total"),
+            sum((col("y") * 32 + col("x")) * col("value").cast("decimal(28,6)"))
+              .cast("double").as("pos_weighted"))
+          .orderBy("z")
+      }
     }),
 
     // 3D zonal statistics: volume labels x a full-grid value volume, joined

@@ -58,21 +58,15 @@ object PipelinePack extends QueryPack {
 
   // q207/q212's at-rest indexes (BM25 postings table name + IVF-PQ
   // path), memoized per (JVM, sf dir) — see the q207 comment
-  private val hybridIndexCache =
-    scala.collection.mutable.Map[String, (String, String)]()
-
   private def hybridIndexes(s: SparkSession, d: String, docs: DataFrame,
       emb: DataFrame, centroids: DataFrame, cb: DataFrame): (String, String) =
-    hybridIndexCache.synchronized {
-      hybridIndexCache.getOrElseUpdate(d, {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_hybrid_")
-        val t = s"graft_bm25_index_q207_${Integer.toHexString(d.hashCode)}"
-        TextIndex.writeBm25Index(docs, t, tmp.resolve("bm25").toString)
-        val ivf = tmp.resolve("ivfpq").toString
-        graft.pipeline.VectorIndex.writeIndex(emb, centroids, cb,
-          m = 4, subDim = 16, ivf)
-        (t, ivf)
-      })
+    Scratch.memo("graft_bm25_index_q207", d) { dir =>
+      val t = dir.getFileName.toString
+      TextIndex.writeBm25Index(docs, t, dir.resolve("bm25").toString)
+      val ivf = dir.resolve("ivfpq").toString
+      graft.pipeline.VectorIndex.writeIndex(emb, centroids, cb,
+        m = 4, subDim = 16, ivf)
+      (t, ivf)
     }
 
   // planted-copy corpus + its exact-content duplicate pairs (id_a < id_b,
@@ -90,9 +84,6 @@ object PipelinePack extends QueryPack {
       .select(col("id_a"), col("id_b"))
     (docs, pairs)
   }
-
-  // q266's positional index, memoized per (JVM, sf dir)
-  private val posIndexCache = scala.collection.mutable.Map[String, String]()
 
   // q354/q360's shared brute-force levenshtein oracle (index- and
   // streaming-invisible)
@@ -131,109 +122,78 @@ object PipelinePack extends QueryPack {
   // q360's full-corpus FastSS index, memoized per (JVM, sf dir) — the
   // q171 precedent (q354 times build+append+probe; the streaming gate
   // times the micro-batch screening)
-  private val fastssStreamIndexCache = scala.collection.mutable.Map[String, String]()
-
   private def fastssStreamIndex(s: SparkSession, d: String,
       terms: DataFrame): String =
-    fastssStreamIndexCache.synchronized {
-      fastssStreamIndexCache.getOrElseUpdate(d, {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_fss_sidx_")
-        val t = s"graft_fastss_q360_${Integer.toHexString(d.hashCode)}"
-        graft.pipeline.ErIndex.writeFastSSIndex(terms, t, tmp.resolve("idx").toString)
-        t
-      })
+    Scratch.memo("graft_fastss_q360", d) { dir =>
+      val t = dir.getFileName.toString
+      graft.pipeline.ErIndex.writeFastSSIndex(terms, t, dir.resolve("idx").toString)
+      t
     }
 
   // q365's at-rest SNM layout (stored 9/10 of the record set), memoized
   // per (JVM, sf dir) — reps time the streaming probe, not the build
-  private val snmStreamLayoutCache = scala.collection.mutable.Map[String, String]()
-
   private def snmStreamLayout(s: SparkSession, d: String,
       stored: DataFrame): String =
-    snmStreamLayoutCache.synchronized {
-      snmStreamLayoutCache.getOrElseUpdate(d, {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_snm_sidx_")
-        val t = s"graft_snm_q365_${Integer.toHexString(d.hashCode)}"
-        graft.pipeline.ErIndex.writeSnmLayout(stored, t,
-          tmp.resolve("layout").toString, "key", "id", numRanges = 8)
-        t
-      })
+    Scratch.memo("graft_snm_q365", d) { dir =>
+      val t = dir.getFileName.toString
+      graft.pipeline.ErIndex.writeSnmLayout(stored, t,
+        dir.resolve("layout").toString, "key", "id", numRanges = 8)
+      t
     }
 
   // q287's forward + reversed-key SNM layouts at rest, memoized per
   // (JVM, sf dir): the layout build (the ONE corpus-wide range sort per
   // key order) is the amortized cost the at-rest form exists to pay once;
   // reps time the production pairing path
-  private val snmErLayoutCache = scala.collection.mutable.Map[String, (String, String)]()
-
   private def snmErLayouts(s: SparkSession, d: String): (String, String) =
-    snmErLayoutCache.synchronized {
-      snmErLayoutCache.getOrElseUpdate(d, {
-        val cust = Tables.customer(s, d)
-        val base = substring(md5(concat(lit("e:"),
-          col("c_custkey").cast("string"))), 1, 8)
-        val terms = cust.select(base.as("term"))
-          .unionByName(cust.filter(col("c_custkey") % 5 === 0)
-            .select(concat(lit("z"), substring(base, 2, 7)).as("term")))
-          .unionByName(cust.filter(col("c_custkey") % 10 === 0)
-            .select(concat(base, lit("q")).as("term")))
-          .distinct()
-        val tmp = java.nio.file.Files.createTempDirectory("graft_snm_er_")
-        val h = Integer.toHexString(d.hashCode)
-        val tFwd = s"graft_snm_q287_fwd_$h"
-        val tRev = s"graft_snm_q287_rev_$h"
-        graft.pipeline.ErIndex.writeSnmLayout(
-          terms.select(col("term").as("tid"), col("term").as("key")),
-          tFwd, tmp.resolve("fwd").toString, "key", "tid")
-        graft.pipeline.ErIndex.writeSnmLayout(
-          terms.select(col("term").as("tid"), reverse(col("term")).as("key")),
-          tRev, tmp.resolve("rev").toString, "key", "tid")
-        (tFwd, tRev)
-      })
+    Scratch.memo("graft_snm_q287", d) { dir =>
+      val cust = Tables.customer(s, d)
+      val base = substring(md5(concat(lit("e:"),
+        col("c_custkey").cast("string"))), 1, 8)
+      val terms = cust.select(base.as("term"))
+        .unionByName(cust.filter(col("c_custkey") % 5 === 0)
+          .select(concat(lit("z"), substring(base, 2, 7)).as("term")))
+        .unionByName(cust.filter(col("c_custkey") % 10 === 0)
+          .select(concat(base, lit("q")).as("term")))
+        .distinct()
+      val tFwd = s"${dir.getFileName}_fwd"
+      val tRev = s"${dir.getFileName}_rev"
+      graft.pipeline.ErIndex.writeSnmLayout(
+        terms.select(col("term").as("tid"), col("term").as("key")),
+        tFwd, dir.resolve("fwd").toString, "key", "tid")
+      graft.pipeline.ErIndex.writeSnmLayout(
+        terms.select(col("term").as("tid"), reverse(col("term")).as("key")),
+        tRev, dir.resolve("rev").toString, "key", "tid")
+      (tFwd, tRev)
     }
 
   // q255's ground-truth pairs (exact Jaccard >= 0.7 — the benchmark
   // labels, not the operator under test), memoized per (JVM, sf dir)
-  private val blockingTruthCache = scala.collection.mutable.Map[String, String]()
-
   private def blockingTruth(s: SparkSession, d: String, docs: DataFrame): String =
-    blockingTruthCache.synchronized {
-      blockingTruthCache.getOrElseUpdate(d, {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_blktruth_")
-        val p = tmp.resolve("truth").toString
-        Dedup.jaccardPrefixPairs(docs, threshold = 0.7)
-          .select(col("id_a"), col("id_b")).write.parquet(p)
-        p
-      })
+    Scratch.memo("blktruth_q255", d) { dir =>
+      val p = dir.resolve("truth").toString
+      Dedup.jaccardPrefixPairs(docs, threshold = 0.7)
+        .select(col("id_a"), col("id_b")).write.parquet(p)
+      p
     }
 
   // q309's BASE band rows (4/5-corpus minhash pass precomputed to parquet),
   // memoized per (JVM, sf dir) — see the q309 comment
-  private val bandBaseCache = scala.collection.mutable.Map[String, String]()
-
   private def bandBaseRows(s: SparkSession, d: String, base: DataFrame): String =
-    bandBaseCache.synchronized {
-      bandBaseCache.getOrElseUpdate(d, {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_bandbase_")
-        val p = tmp.resolve("rows").toString
-        Dedup.lshBands(base, "text", "doc_id").write.parquet(p)
-        p
-      })
+    Scratch.memo("bandbase_q309", d) { dir =>
+      val p = dir.resolve("rows").toString
+      Dedup.lshBands(base, "text", "doc_id").write.parquet(p)
+      p
     }
 
   // q171's corpus band index, memoized per (JVM, sf dir) — see the q171
-  // comment; the backing files live in a JVM-lifetime temp dir
-  private val streamProbeIndexCache = scala.collection.mutable.Map[String, String]()
-
+  // comment
   private def streamProbeIndex(s: SparkSession, d: String,
       corpus: DataFrame): String =
-    streamProbeIndexCache.synchronized {
-      streamProbeIndexCache.getOrElseUpdate(d, {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_sp_idx_")
-        val t = s"graft_band_index_q171_${Integer.toHexString(d.hashCode)}"
-        TextIndex.writeBandIndex(corpus, t, tmp.resolve("idx").toString)
-        t
-      })
+    Scratch.memo("graft_band_index_q171", d) { dir =>
+      val t = dir.getFileName.toString
+      TextIndex.writeBandIndex(corpus, t, dir.resolve("idx").toString)
+      t
     }
 
   // q50's language-ID prediction as a reusable chain ending at
@@ -777,14 +737,10 @@ object PipelinePack extends QueryPack {
     // reads only the phrase's terms). Index memoized per (JVM, sf dir)
     // so bench reps time the QUERY, not the build.
     "q266_phrase_indexed" -> ((s, d) => {
-      val table = posIndexCache.synchronized {
-        posIndexCache.getOrElseUpdate(d, {
-          val tmp = java.nio.file.Files.createTempDirectory("graft_posidx_")
-          val t = s"graft_pos_index_q266_${Integer.toHexString(d.hashCode)}"
-          TextIndex.writePositionalIndex(Tables.documents(s, d), t,
-            tmp.toString)
-          t
-        })
+      val table = Scratch.memo("graft_pos_index_q266", d) { dir =>
+        val t = dir.getFileName.toString
+        TextIndex.writePositionalIndex(Tables.documents(s, d), t, dir.toString)
+        t
       }
       TextIndex.phraseCountIndexed(s, table, "part value")
         .orderBy(col("doc_id"))
@@ -1045,8 +1001,7 @@ object PipelinePack extends QueryPack {
     "q188_jsonl_export" -> ((s, d) => {
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_jsonl_")
-      try {
+      Scratch.run(s) { tmp =>
         Sampling.writeJsonlShards(docs, "doc_id", numShards = 4,
           tmp.toString)
         s.read.schema("doc_id LONG, lang STRING, n_chars LONG")
@@ -1057,11 +1012,6 @@ object PipelinePack extends QueryPack {
             sum(col("n_chars")).as("sum_chars"),
             count(col("lang")).as("n_lang"))
           .orderBy(col("shard"))
-          .localCheckpoint(true)
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
       }
     }),
 
@@ -1119,9 +1069,8 @@ object PipelinePack extends QueryPack {
       val corpus = Tables.documents(s, d).select(col("doc_id"), col("text"))
       val batch = corpus.filter(col("doc_id") % 5 === 0)
       val baseRows = bandBaseRows(s, d, corpus.filter(col("doc_id") % 5 =!= 4))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_bandidx_")
       val table = "graft_band_index_q309"
-      try {
+      Scratch.run(s, table) { tmp =>
         TextIndex.writeBandIndexRows(s.read.parquet(baseRows),
           table, tmp.resolve("idx").toString)
         TextIndex.appendToBandIndex(corpus.filter(col("doc_id") % 5 === 4),
@@ -1129,12 +1078,6 @@ object PipelinePack extends QueryPack {
         TextIndex.probe(TextIndex.readBandIndex(s, table), batch)
           .filter(col("doc_id") =!= col("corpus_id"))
           .orderBy(col("doc_id"), col("corpus_id"))
-          .localCheckpoint(true)
-      } finally {
-        s.sql(s"DROP TABLE IF EXISTS `$table`")
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
       }
     }),
 
@@ -1146,9 +1089,8 @@ object PipelinePack extends QueryPack {
     "q354_fastss_at_rest" -> ((s, d) => {
       val terms = fastssTerms(s, d)
       val batch = terms.filter(substring(col("term"), 3, 1).isin("0", "7", "e"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_fssidx_")
       val table = "graft_fastss_index_q354"
-      try {
+      Scratch.run(s, table) { tmp =>
         graft.pipeline.ErIndex.writeFastSSIndex(
           terms.filter(crc32(col("term")) % 5 =!= 4), table,
           tmp.resolve("idx").toString)
@@ -1157,12 +1099,6 @@ object PipelinePack extends QueryPack {
         graft.pipeline.ErIndex.probeFastSS(s, table, batch)
           .select(col("term"), col("corpus_term"), col("dist").cast("int").as("dist"))
           .orderBy(col("term"), col("corpus_term"))
-          .localCheckpoint(true)
-      } finally {
-        s.sql(s"DROP TABLE IF EXISTS `$table`")
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
       }
     }),
 
@@ -1175,8 +1111,7 @@ object PipelinePack extends QueryPack {
       val terms = fastssTerms(s, d)
       val batch = terms.filter(substring(col("term"), 3, 1).isin("0", "7", "e"))
       val table = fastssStreamIndex(s, d, terms)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_fss_stream_")
-      try {
+      Scratch.run(s) { tmp =>
         val srcDir = tmp.resolve("src").toString
         batch.repartition(3).write.parquet(srcDir)
         val outDir = tmp.resolve("out").toString
@@ -1189,11 +1124,6 @@ object PipelinePack extends QueryPack {
         s.read.parquet(outDir)
           .select(col("term"), col("corpus_term"), col("dist").cast("int").as("dist"))
           .orderBy(col("term"), col("corpus_term"))
-          .localCheckpoint(true)
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
       }
     }),
 
@@ -1211,8 +1141,7 @@ object PipelinePack extends QueryPack {
           col("c_custkey").cast("string"))), 1, 8).as("key"))
       val batch = recs.filter(col("id") % 10 === 3)
       val table = snmStreamLayout(s, d, recs.filter(col("id") % 10 =!= 3))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_snm_stream_")
-      try {
+      Scratch.run(s) { tmp =>
         val srcDir = tmp.resolve("src").toString
         (0 to 2).foreach { i =>
           batch.filter(col("id") % 3 === i).coalesce(1)
@@ -1228,11 +1157,6 @@ object PipelinePack extends QueryPack {
         s.read.parquet(outDir)
           .select(col("id_a"), col("id_b"), col("key_a"), col("key_b"))
           .orderBy(col("id_a"), col("id_b"))
-          .localCheckpoint(true)
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
       }
     }),
 
@@ -1248,9 +1172,8 @@ object PipelinePack extends QueryPack {
           col("c_custkey").cast("string"))), 1, 8).as("key"))
       val batch = recs.filter(col("id") % 10 === 3)
       val stored = recs.filter(col("id") % 10 =!= 3)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_snmidx_")
       val table = "graft_snm_layout_q355"
-      try {
+      Scratch.run(s, table, s"${table}_manifest") { tmp =>
         graft.pipeline.ErIndex.writeSnmLayout(
           stored.filter(col("id") % 5 =!= 4), table,
           tmp.resolve("layout").toString, "key", "id", numRanges = 8)
@@ -1258,13 +1181,6 @@ object PipelinePack extends QueryPack {
           stored.filter(col("id") % 5 === 4), table, "key", "id")
         graft.pipeline.ErIndex.probeSnm(s, table, batch, "key", "id", window = 4)
           .orderBy(col("id_a"), col("id_b"))
-          .localCheckpoint(true)
-      } finally {
-        s.sql(s"DROP TABLE IF EXISTS `$table`")
-        s.sql(s"DROP TABLE IF EXISTS `${table}_manifest`")
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
       }
     }),
 
@@ -1284,9 +1200,8 @@ object PipelinePack extends QueryPack {
       val batch = stored.filter(col("id") % 10 === 3)
         .select((col("id") + 1000000L).as("id"),
           concat(substring(col("key"), 1, 7), lit("z")).as("key"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_snmref_")
       val table = "graft_snm_layout_q361"
-      try {
+      Scratch.run(s, table, s"${table}_manifest") { tmp =>
         graft.pipeline.ErIndex.writeSnmLayout(stored, table,
           tmp.resolve("layout").toString, "key", "id", numRanges = 8)
         graft.pipeline.ErIndex.probeSnm(s, table, batch, "key", "id", window = 6)
@@ -1294,32 +1209,18 @@ object PipelinePack extends QueryPack {
             TextAnalysis.jaroWinklerCol(col("key_a"), col("key_b"))) >= 0.9)
           .select(col("id_a"), col("id_b"), col("key_a"), col("key_b"))
           .orderBy(col("id_a"), col("id_b"))
-          .localCheckpoint(true)
-      } finally {
-        s.sql(s"DROP TABLE IF EXISTS `$table`")
-        s.sql(s"DROP TABLE IF EXISTS `${table}_manifest`")
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
       }
     }),
 
     "q162_band_index_probe" -> ((s, d) => {
       val corpus = Tables.documents(s, d).select(col("doc_id"), col("text"))
       val batch = corpus.filter(col("doc_id") % 5 === 0)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_bandidx_")
       val table = "graft_band_index_q162"
-      try {
+      Scratch.run(s, table) { tmp =>
         TextIndex.writeBandIndex(corpus, table, tmp.resolve("idx").toString)
         TextIndex.probe(TextIndex.readBandIndex(s, table), batch)
           .filter(col("doc_id") =!= col("corpus_id"))
           .orderBy(col("doc_id"), col("corpus_id"))
-          .localCheckpoint(true)
-      } finally {
-        s.sql(s"DROP TABLE IF EXISTS `$table`")
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
       }
     }),
 
@@ -1338,8 +1239,7 @@ object PipelinePack extends QueryPack {
       val corpus = Tables.documents(s, d).select(col("doc_id"), col("text"))
       val newDocs = corpus.filter(col("doc_id") % 5 === 0)
       val table = streamProbeIndex(s, d, corpus)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_streamprobe_")
-      try {
+      Scratch.run(s) { tmp =>
         val srcDir = tmp.resolve("src").toString
         newDocs.repartition(3).write.parquet(srcDir)
         val outDir = tmp.resolve("out").toString
@@ -1348,8 +1248,8 @@ object PipelinePack extends QueryPack {
           TextIndex.readBandIndex(s, table), outDir,
           maxFilesPerTrigger = Some(1))
         // awaitTermination returns false on timeout — a silent partial
-        // output would hash-mismatch confusingly, and the finally block
-        // would delete the temp dir under the still-live query
+        // output would hash-mismatch confusingly, and Scratch.run
+        // would delete the directory under the still-live query
         try assert(q.awaitTermination(180000),
           "q171: streaming probe did not terminate within 180 s")
         finally q.stop()
@@ -1357,11 +1257,6 @@ object PipelinePack extends QueryPack {
           .filter(col("doc_id") =!= col("corpus_id"))
           .select(col("doc_id"), col("corpus_id"), col("n_bands"))
           .orderBy(col("doc_id"), col("corpus_id"))
-          .localCheckpoint(true)
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
       }
     }),
 
@@ -1484,21 +1379,13 @@ object PipelinePack extends QueryPack {
     // match q204's full-recompute algebra bit-for-bit (same oracle)
     "q206_bm25_at_rest" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_bm25idx_")
       val table = "graft_bm25_index_q206"
-      try {
+      Scratch.run(s, table, s"${table}_stats") { tmp =>
         TextIndex.writeBm25Index(docs, table, tmp.resolve("idx").toString)
         val (postings, stats) = TextIndex.readBm25Index(s, table)
         TextIndex.bm25RankIndexed(postings, stats,
           Seq("spark", "join", "vector"), k = 10)
           .orderBy(col("score").desc, col("doc_id"))
-          .localCheckpoint(true)
-      } finally {
-        s.sql(s"DROP TABLE IF EXISTS `$table`")
-        s.sql(s"DROP TABLE IF EXISTS `${table}_stats`")
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
       }
     }),
 
@@ -1508,9 +1395,8 @@ object PipelinePack extends QueryPack {
     // full-corpus build bit-for-bit (q204's oracle verbatim)
     "q213_bm25_index_append" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_bm25app_")
       val table = "graft_bm25_index_q213"
-      try {
+      Scratch.run(s, table, s"${table}_stats") { tmp =>
         TextIndex.writeBm25Index(docs.filter(col("doc_id") % 5 =!= 0),
           table, tmp.resolve("idx").toString)
         TextIndex.appendToBm25Index(docs.filter(col("doc_id") % 5 === 0), table)
@@ -1518,13 +1404,6 @@ object PipelinePack extends QueryPack {
         TextIndex.bm25RankIndexed(postings, stats,
           Seq("spark", "join", "vector"), k = 10)
           .orderBy(col("score").desc, col("doc_id"))
-          .localCheckpoint(true)
-      } finally {
-        s.sql(s"DROP TABLE IF EXISTS `$table`")
-        s.sql(s"DROP TABLE IF EXISTS `${table}_stats`")
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
       }
     }),
 

@@ -189,9 +189,8 @@ object RasterPack extends QueryPack {
           when(col("bar") || col("dot"), 1.0).otherwise(0.0).as("value"))
       val tiles = RasterOps.pixelsToTilesExact(pix, H, W, tileSize = 16,
         channelCol = None)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_tilestore_")
-      val path = tmp.resolve("t").toString
-      try {
+      Scratch.run(s) { tmp =>
+        val path = tmp.resolve("t").toString
         graft.ops.TileLayout.write(tiles, path, blockTiles = 2)
         graft.ops.TileLayout.append(tiles.withColumn("scale", lit(1)), path)
         RasterOps.tilesToPixels(
@@ -199,11 +198,6 @@ object RasterPack extends QueryPack {
             tileSize = 16)
           .select(col("y"), col("x"), col("value"))
           .orderBy(col("y"), col("x"))
-          .localCheckpoint(true)
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
       }
     }),
 

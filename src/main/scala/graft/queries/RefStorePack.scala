@@ -74,42 +74,43 @@ object RefStorePack extends QueryPack {
     // the foreign format round trip
     "q79_ref_write_roundtrip" -> ((s, d) => {
       import graft.model._
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_refw_" +
-        java.lang.Integer.toHexString(d.hashCode)
-      val shp = Models.ShapesModel.parse(graft.Tables.supplier(s, d).select(
-        col("s_suppkey").as("index"),
-        ((col("s_suppkey") * 7) % 50).cast("double").as("x0"),
-        ((col("s_suppkey") * 3) % 40).cast("double").as("y0"))
-        .withColumn("geometry", st_make_box(col("x0"), col("y0"),
-          col("x0") + 4.0, col("y0") + 2.0))
-        .withColumn("geom_type", lit("polygon")).drop("x0", "y0"))
-      val obs = graft.Tables.supplier(s, d).select(
-        col("s_suppkey").as("instance_id"), lit("shp").as("region"),
-        (col("s_suppkey") * 0.25).as("score"))
-      val x = graft.Tables.supplier(s, d).select(
-        col("s_suppkey").as("instance_id"), lit("shp").as("region"),
-        concat(lit("v"), (col("s_suppkey") % 2).cast("string")).as("var_name"),
-        (col("s_suppkey") % 7 + 1).cast("double").as("value"))
-      val sd = SpatialDataset(s, Seq(
-        SpatialElement(Models.ShapesModel.meta("shp"), shp),
-        SpatialElement(Models.TableModel.meta("tab",
-          Some(TableAnnotation(Seq("shp"), "region", "instance_id"))), obs,
-          Map("X" -> x))))
-      graft.sources.RefStoreWriter.write(sd, dir)
-      val back = graft.sources.ZarrStore.read(s, dir)
-      val areas = back("shp")
-        .agg(count(lit(1)).as("n"), dsum(st_area(col("geometry"))).as("total"))
-        .withColumn("k", lit("area"))
-      val scores = back.element("tab").obs
-        .agg(count(lit(1)).as("n"), dsum(col("score")).as("total"))
-        .withColumn("k", lit("score"))
-      val xs = back.element("tab").x
-        .groupBy(col("var_name").as("k"))
-        .agg(count(lit(1)).as("n"), dsum(col("value")).as("total"))
-      areas.select("k", "n", "total")
-        .unionByName(scores.select("k", "n", "total"))
-        .unionByName(xs.select("k", "n", "total"))
-        .orderBy("k")
+      Scratch.run(s) { tmp =>
+        val dir = tmp.resolve("refw").toString
+        val shp = Models.ShapesModel.parse(graft.Tables.supplier(s, d).select(
+          col("s_suppkey").as("index"),
+          ((col("s_suppkey") * 7) % 50).cast("double").as("x0"),
+          ((col("s_suppkey") * 3) % 40).cast("double").as("y0"))
+          .withColumn("geometry", st_make_box(col("x0"), col("y0"),
+            col("x0") + 4.0, col("y0") + 2.0))
+          .withColumn("geom_type", lit("polygon")).drop("x0", "y0"))
+        val obs = graft.Tables.supplier(s, d).select(
+          col("s_suppkey").as("instance_id"), lit("shp").as("region"),
+          (col("s_suppkey") * 0.25).as("score"))
+        val x = graft.Tables.supplier(s, d).select(
+          col("s_suppkey").as("instance_id"), lit("shp").as("region"),
+          concat(lit("v"), (col("s_suppkey") % 2).cast("string")).as("var_name"),
+          (col("s_suppkey") % 7 + 1).cast("double").as("value"))
+        val sd = SpatialDataset(s, Seq(
+          SpatialElement(Models.ShapesModel.meta("shp"), shp),
+          SpatialElement(Models.TableModel.meta("tab",
+            Some(TableAnnotation(Seq("shp"), "region", "instance_id"))), obs,
+            Map("X" -> x))))
+        graft.sources.RefStoreWriter.write(sd, dir)
+        val back = graft.sources.ZarrStore.read(s, dir)
+        val areas = back("shp")
+          .agg(count(lit(1)).as("n"), dsum(st_area(col("geometry"))).as("total"))
+          .withColumn("k", lit("area"))
+        val scores = back.element("tab").obs
+          .agg(count(lit(1)).as("n"), dsum(col("score")).as("total"))
+          .withColumn("k", lit("score"))
+        val xs = back.element("tab").x
+          .groupBy(col("var_name").as("k"))
+          .agg(count(lit(1)).as("n"), dsum(col("value")).as("total"))
+        areas.select("k", "n", "total")
+          .unionByName(scores.select("k", "n", "total"))
+          .unionByName(xs.select("k", "n", "total"))
+          .orderBy("k")
+      }
     }),
 
     // AnnData CSC X (indptr over columns, indices = row ids) -> same
@@ -141,30 +142,31 @@ object RefStorePack extends QueryPack {
     // through the anndata `categorical` encoding, booleans through '|b1'
     "q82_ref_write_catbool" -> ((s, d) => {
       import graft.model._
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_refcb_" +
-        java.lang.Integer.toHexString(d.hashCode)
-      val shp = Models.ShapesModel.parse(graft.Tables.supplier(s, d).select(
-        col("s_suppkey").as("index"),
-        ((col("s_suppkey") * 7) % 50).cast("double").as("x0"),
-        ((col("s_suppkey") * 3) % 40).cast("double").as("y0"))
-        .withColumn("geometry", st_make_box(col("x0"), col("y0"),
-          col("x0") + 4.0, col("y0") + 2.0))
-        .withColumn("geom_type", lit("polygon")).drop("x0", "y0"))
-      val obs = graft.Tables.supplier(s, d).select(
-        col("s_suppkey").as("instance_id"), lit("shp").as("region"),
-        concat(lit("g"), (col("s_suppkey") % 3).cast("string")).as("grp"),
-        (col("s_suppkey") % 2 === 0).as("flag"),
-        (col("s_suppkey") * 0.25).as("score"))
-      val sd = SpatialDataset(s, Seq(
-        SpatialElement(Models.ShapesModel.meta("shp"), shp),
-        SpatialElement(Models.TableModel.meta("tab",
-          Some(TableAnnotation(Seq("shp"), "region", "instance_id"))), obs)))
-      graft.sources.RefStoreWriter.write(sd, dir)
-      val back = graft.sources.ZarrStore.read(s, dir)
-      back.element("tab").obs
-        .groupBy("grp", "flag")
-        .agg(count(lit(1)).as("n"), dsum(col("score")).as("total"))
-        .orderBy("grp", "flag")
+      Scratch.run(s) { tmp =>
+        val dir = tmp.resolve("refcb").toString
+        val shp = Models.ShapesModel.parse(graft.Tables.supplier(s, d).select(
+          col("s_suppkey").as("index"),
+          ((col("s_suppkey") * 7) % 50).cast("double").as("x0"),
+          ((col("s_suppkey") * 3) % 40).cast("double").as("y0"))
+          .withColumn("geometry", st_make_box(col("x0"), col("y0"),
+            col("x0") + 4.0, col("y0") + 2.0))
+          .withColumn("geom_type", lit("polygon")).drop("x0", "y0"))
+        val obs = graft.Tables.supplier(s, d).select(
+          col("s_suppkey").as("instance_id"), lit("shp").as("region"),
+          concat(lit("g"), (col("s_suppkey") % 3).cast("string")).as("grp"),
+          (col("s_suppkey") % 2 === 0).as("flag"),
+          (col("s_suppkey") * 0.25).as("score"))
+        val sd = SpatialDataset(s, Seq(
+          SpatialElement(Models.ShapesModel.meta("shp"), shp),
+          SpatialElement(Models.TableModel.meta("tab",
+            Some(TableAnnotation(Seq("shp"), "region", "instance_id"))), obs)))
+        graft.sources.RefStoreWriter.write(sd, dir)
+        val back = graft.sources.ZarrStore.read(s, dir)
+        back.element("tab").obs
+          .groupBy("grp", "flag")
+          .agg(count(lit(1)).as("n"), dsum(col("score")).as("total"))
+          .orderBy("grp", "flag")
+      }
     }),
 
     // obsm write-side round trip: spatial coordinates written as an
@@ -172,33 +174,34 @@ object RefStorePack extends QueryPack {
     // aux frame with exact values
     "q112_ref_write_obsm" -> ((s, d) => {
       import graft.model._
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_refobsm_" +
-        java.lang.Integer.toHexString(d.hashCode)
-      val shp = Models.ShapesModel.parse(graft.Tables.supplier(s, d).select(
-        col("s_suppkey").as("index"),
-        ((col("s_suppkey") * 7) % 50).cast("double").as("x0"),
-        ((col("s_suppkey") * 3) % 40).cast("double").as("y0"))
-        .withColumn("geometry", st_make_box(col("x0"), col("y0"),
-          col("x0") + 4.0, col("y0") + 2.0))
-        .withColumn("geom_type", lit("polygon")).drop("x0", "y0"))
-      val obs = graft.Tables.supplier(s, d).select(
-        col("s_suppkey").as("instance_id"), lit("shp").as("region"))
-      val spatial = graft.Tables.supplier(s, d).select(
-        col("s_suppkey").as("instance_id"),
-        (col("s_suppkey") * 2.0).as("spatial_0"),
-        (col("s_suppkey") % 13 + 0.25).as("spatial_1"))
-      val sd = SpatialDataset(s, Seq(
-        SpatialElement(Models.ShapesModel.meta("shp"), shp),
-        SpatialElement(Models.TableModel.meta("tab",
-          Some(TableAnnotation(Seq("shp"), "region", "instance_id"))), obs,
-          Map("obsm:spatial" -> spatial))))
-      graft.sources.RefStoreWriter.write(sd, dir)
-      val back = graft.sources.ZarrStore.read(s, dir)
-      back.element("tab").aux("obsm:spatial")
-        .groupBy((col("instance_id") % 4).as("bucket"))
-        .agg(count(lit(1)).as("n"), dsum(col("spatial_0")).as("sum_x"),
-          dsum(col("spatial_1")).as("sum_y"))
-        .orderBy("bucket")
+      Scratch.run(s) { tmp =>
+        val dir = tmp.resolve("refobsm").toString
+        val shp = Models.ShapesModel.parse(graft.Tables.supplier(s, d).select(
+          col("s_suppkey").as("index"),
+          ((col("s_suppkey") * 7) % 50).cast("double").as("x0"),
+          ((col("s_suppkey") * 3) % 40).cast("double").as("y0"))
+          .withColumn("geometry", st_make_box(col("x0"), col("y0"),
+            col("x0") + 4.0, col("y0") + 2.0))
+          .withColumn("geom_type", lit("polygon")).drop("x0", "y0"))
+        val obs = graft.Tables.supplier(s, d).select(
+          col("s_suppkey").as("instance_id"), lit("shp").as("region"))
+        val spatial = graft.Tables.supplier(s, d).select(
+          col("s_suppkey").as("instance_id"),
+          (col("s_suppkey") * 2.0).as("spatial_0"),
+          (col("s_suppkey") % 13 + 0.25).as("spatial_1"))
+        val sd = SpatialDataset(s, Seq(
+          SpatialElement(Models.ShapesModel.meta("shp"), shp),
+          SpatialElement(Models.TableModel.meta("tab",
+            Some(TableAnnotation(Seq("shp"), "region", "instance_id"))), obs,
+            Map("obsm:spatial" -> spatial))))
+        graft.sources.RefStoreWriter.write(sd, dir)
+        val back = graft.sources.ZarrStore.read(s, dir)
+        back.element("tab").aux("obsm:spatial")
+          .groupBy((col("instance_id") % 4).as("bucket"))
+          .agg(count(lit(1)).as("n"), dsum(col("spatial_0")).as("sum_x"),
+            dsum(col("spatial_1")).as("sum_y"))
+          .orderBy("bucket")
+      }
     }),
 
     // obsp pairwise graphs: the CSR (n_obs x n_obs) neighbor matrix under

@@ -176,43 +176,44 @@ object RelationalPack extends QueryPack {
     "q90_container_roundtrip" -> ((s, d) => {
       import graft.geom.st._
       import graft.model._
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_ctr_" +
-        java.lang.Integer.toHexString(d.hashCode)
-      val shp = Models.ShapesModel.parse(Tables.supplier(s, d).select(
-        col("s_suppkey").as("index"),
-        ((col("s_suppkey") * 7) % 50).cast("double").as("x0"),
-        ((col("s_suppkey") * 3) % 40).cast("double").as("y0"))
-        .withColumn("geometry", st_make_box(col("x0"), col("y0"),
-          col("x0") + 4.0, col("y0") + 2.0))
-        .withColumn("geom_type", lit("polygon")).drop("x0", "y0"))
-      val pts = Models.PointsModel.parse(Tables.supplier(s, d).select(
-        (((col("s_suppkey") * 7) % 50) + 0.5).cast("double").as("x"),
-        ((col("s_suppkey") * 3) % 40).cast("double").as("y")))
-      val obs = Tables.supplier(s, d).select(
-        col("s_suppkey").as("instance_id"), lit("shp").as("region"),
-        (col("s_suppkey") * 0.25).as("score"))
-      SpatialDataset(s, Seq(
-        SpatialElement(Models.ShapesModel.meta("shp"), shp),
-        SpatialElement(Models.PointsModel.meta("pts"), pts),
-        SpatialElement(Models.TableModel.meta("tab",
-          Some(TableAnnotation(Seq("shp"), "region", "instance_id"))), obs)))
-        .write(dir)
-      val back = SpatialDataset.read(s, dir)
-      val a = back("shp").agg(count(lit(1)).as("n"),
-        dsum(st_area(col("geometry"))).as("total")).withColumn("k", lit("shapes"))
-      val b = back.element("tab").obs.agg(count(lit(1)).as("n"),
-        dsum(col("score")).as("total")).withColumn("k", lit("obs"))
-      val c = back("pts").agg(count(lit(1)).as("n"),
-        dsum(col("x")).as("total")).withColumn("k", lit("pts"))
-      // subset to pts only: the shp-annotating table cascades away
-      val sub = back.subset(Seq("pts"))
-      val e = s.range(1).select(
-        lit(sub.manifest.elements.size.toLong).as("n"),
-        lit(0.0).as("total"), lit("subset_size").as("k"))
-      a.select("k", "n", "total").unionByName(b.select("k", "n", "total"))
-        .unionByName(c.select("k", "n", "total"))
-        .unionByName(e.select("k", "n", "total"))
-        .orderBy("k")
+      Scratch.run(s) { tmp =>
+        val dir = tmp.resolve("ctr").toString
+        val shp = Models.ShapesModel.parse(Tables.supplier(s, d).select(
+          col("s_suppkey").as("index"),
+          ((col("s_suppkey") * 7) % 50).cast("double").as("x0"),
+          ((col("s_suppkey") * 3) % 40).cast("double").as("y0"))
+          .withColumn("geometry", st_make_box(col("x0"), col("y0"),
+            col("x0") + 4.0, col("y0") + 2.0))
+          .withColumn("geom_type", lit("polygon")).drop("x0", "y0"))
+        val pts = Models.PointsModel.parse(Tables.supplier(s, d).select(
+          (((col("s_suppkey") * 7) % 50) + 0.5).cast("double").as("x"),
+          ((col("s_suppkey") * 3) % 40).cast("double").as("y")))
+        val obs = Tables.supplier(s, d).select(
+          col("s_suppkey").as("instance_id"), lit("shp").as("region"),
+          (col("s_suppkey") * 0.25).as("score"))
+        SpatialDataset(s, Seq(
+          SpatialElement(Models.ShapesModel.meta("shp"), shp),
+          SpatialElement(Models.PointsModel.meta("pts"), pts),
+          SpatialElement(Models.TableModel.meta("tab",
+            Some(TableAnnotation(Seq("shp"), "region", "instance_id"))), obs)))
+          .write(dir)
+        val back = SpatialDataset.read(s, dir)
+        val a = back("shp").agg(count(lit(1)).as("n"),
+          dsum(st_area(col("geometry"))).as("total")).withColumn("k", lit("shapes"))
+        val b = back.element("tab").obs.agg(count(lit(1)).as("n"),
+          dsum(col("score")).as("total")).withColumn("k", lit("obs"))
+        val c = back("pts").agg(count(lit(1)).as("n"),
+          dsum(col("x")).as("total")).withColumn("k", lit("pts"))
+        // subset to pts only: the shp-annotating table cascades away
+        val sub = back.subset(Seq("pts"))
+        val e = s.range(1).select(
+          lit(sub.manifest.elements.size.toLong).as("n"),
+          lit(0.0).as("total"), lit("subset_size").as("k"))
+        a.select("k", "n", "total").unionByName(b.select("k", "n", "total"))
+          .unionByName(c.select("k", "n", "total"))
+          .unionByName(e.select("k", "n", "total"))
+          .orderBy("k")
+      }
     }),
 
     "q06_distinct_instances" -> ((s, d) => {
@@ -230,31 +231,32 @@ object RelationalPack extends QueryPack {
     // through the in-place mutations
     "q175_element_lifecycle" -> ((s, d) => {
       import graft.model._
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_lifecycle_" +
-        java.lang.Integer.toHexString(d.hashCode)
-      def pts(df: DataFrame) = Models.PointsModel.parse(df)
-      val sd = SpatialDataset(s, Seq(
-        SpatialElement(Models.PointsModel.meta("ptsA"), pts(
-          Tables.supplier(s, d).select(col("s_suppkey").cast("double").as("x"),
-            (col("s_suppkey") * 2).cast("double").as("y")))),
-        SpatialElement(Models.PointsModel.meta("ptsB"), pts(
-          Tables.customer(s, d).select(col("c_custkey").cast("double").as("x"),
-            (col("c_custkey") * 3).cast("double").as("y"))))))
-      sd.write(dir)
-      val afterDel = SpatialDataset.read(s, dir)
-        .deleteElementFromDisk("ptsB", dir)
-      val withNew = afterDel.withElement(
-        SpatialElement(Models.PointsModel.meta("ptsC"), pts(
-          Tables.nation(s, d).select(col("n_nationkey").cast("double").as("x"),
-            (col("n_nationkey") * 5).cast("double").as("y")))))
-      withNew.writeElement("ptsC", dir)
-      val back = SpatialDataset.read(s, dir)
-      val perElement = back.manifest.elements.map(_.name).sorted.map { n =>
-        back(n).agg(count(lit(1)).as("n"),
-            sum(col("x").cast("decimal(28,6)")).cast("double").as("total_x"))
-          .select(lit(n).as("k"), col("n"), col("total_x"))
-      }.reduce(_.unionByName(_))
-      perElement.orderBy(col("k"))
+      Scratch.run(s) { tmp =>
+        val dir = tmp.resolve("lifecycle").toString
+        def pts(df: DataFrame) = Models.PointsModel.parse(df)
+        val sd = SpatialDataset(s, Seq(
+          SpatialElement(Models.PointsModel.meta("ptsA"), pts(
+            Tables.supplier(s, d).select(col("s_suppkey").cast("double").as("x"),
+              (col("s_suppkey") * 2).cast("double").as("y")))),
+          SpatialElement(Models.PointsModel.meta("ptsB"), pts(
+            Tables.customer(s, d).select(col("c_custkey").cast("double").as("x"),
+              (col("c_custkey") * 3).cast("double").as("y"))))))
+        sd.write(dir)
+        val afterDel = SpatialDataset.read(s, dir)
+          .deleteElementFromDisk("ptsB", dir)
+        val withNew = afterDel.withElement(
+          SpatialElement(Models.PointsModel.meta("ptsC"), pts(
+            Tables.nation(s, d).select(col("n_nationkey").cast("double").as("x"),
+              (col("n_nationkey") * 5).cast("double").as("y")))))
+        withNew.writeElement("ptsC", dir)
+        val back = SpatialDataset.read(s, dir)
+        val perElement = back.manifest.elements.map(_.name).sorted.map { n =>
+          back(n).agg(count(lit(1)).as("n"),
+              sum(col("x").cast("decimal(28,6)")).cast("double").as("total_x"))
+            .select(lit(n).as("k"), col("n"), col("total_x"))
+        }.reduce(_.unionByName(_))
+        perElement.orderBy(col("k"))
+      }
     }),
 
     // blobs synthetic dataset (datasets.py:37-101): the deterministic

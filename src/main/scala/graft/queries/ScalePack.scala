@@ -16,11 +16,6 @@ object ScalePack extends QueryPack {
   private def dsum(c: Column): Column =
     sum(c.cast("decimal(28,6)")).cast("double")
 
-  private def tmp(tag: String, d: String): String = {
-    val h = java.lang.Integer.toHexString(d.hashCode)
-    s"${System.getProperty("java.io.tmpdir")}/graft_scale_${tag}_$h"
-  }
-
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // salted skew join: ~75% of lineitem collapses onto key 1 (the hot-key
@@ -47,21 +42,22 @@ object ScalePack extends QueryPack {
     // training epoch); the join itself plans with no exchange on either
     // side (pinned in ScaleJoinsSpec) and must equal the oracle's plain join
     "q144_bucketed_join" -> ((s, d) => {
-      val h = java.lang.Integer.toHexString(d.hashCode)
-      val (lt, ot) = (s"graft_li_b_$h", s"graft_ord_b_$h")
-      ScaleJoins.writeBucketed(
-        Tables.lineitem(s, d).select("l_orderkey", "l_quantity", "l_extendedprice"),
-        lt, "l_orderkey", buckets = 8, path = tmp("li", d))
-      ScaleJoins.writeBucketed(
-        Tables.orders(s, d).select(col("o_orderkey").as("l_orderkey"),
-          col("o_orderpriority")),
-        ot, "l_orderkey", buckets = 8, path = tmp("ord", d))
-      ScaleJoins.bucketedJoin(s, lt, ot, "l_orderkey")
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n"),
-          dsum(col("l_quantity")).as("sum_qty"),
-          dsum(col("l_extendedprice")).as("revenue"))
-        .orderBy("o_orderpriority")
+      val (lt, ot) = ("graft_li_b_q144", "graft_ord_b_q144")
+      Scratch.run(s, lt, ot) { tmp =>
+        ScaleJoins.writeBucketed(
+          Tables.lineitem(s, d).select("l_orderkey", "l_quantity", "l_extendedprice"),
+          lt, "l_orderkey", buckets = 8, path = tmp.resolve("li").toString)
+        ScaleJoins.writeBucketed(
+          Tables.orders(s, d).select(col("o_orderkey").as("l_orderkey"),
+            col("o_orderpriority")),
+          ot, "l_orderkey", buckets = 8, path = tmp.resolve("ord").toString)
+        ScaleJoins.bucketedJoin(s, lt, ot, "l_orderkey")
+          .groupBy("o_orderpriority")
+          .agg(count(lit(1)).as("n"),
+            dsum(col("l_quantity")).as("sum_qty"),
+            dsum(col("l_extendedprice")).as("revenue"))
+          .orderBy("o_orderpriority")
+      }
     }),
 
     // CUSTOM Catalyst operator (logical node + strategy + exec pair):

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
+import graft.{Bench, SparkEntry}
 import org.apache.spark.sql.SparkSession
 
 /** Ad-hoc profiler: run gate queries repeatedly, print timings + plan.
@@ -27,13 +27,8 @@ object Profile {
         // column — q152's entire segment computation was optimized away,
         // yielding a fictitious 0.2 s "isolated" number vs the real 7 s.
         // Isolated numbers must measure what Bench measures.
-        val df = fn(spark, sfDir)
-        val plan = df.queryExecution.analyzed match {
-          case org.apache.spark.sql.catalyst.plans.logical.Sort(_, true, child, _) => child
-          case p => p
-        }
-        val stripped = org.apache.spark.sql.graftbridge.Bridge.ofRows(spark, plan)
-        stripped.write.mode("overwrite").format("noop").save()
+        Bench.stripTopSort(spark, fn(spark, sfDir))
+          .write.mode("overwrite").format("noop").save()
         println(f"[profile] $name rep $i: ${(System.nanoTime() - t0) / 1e9}%.2f s")
         // emulate Bench's cache hygiene: persisted intermediates from one rep
         // must not subsidize the next (set PROFILE_KEEPCACHE to disable)

@@ -6,7 +6,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{SparkEntry, Tables}
+import graft.{Bench, SparkEntry, Tables}
 import graft.pipeline.{TextIndex, VectorIndex}
 
 /** Empirical scale-stress harness for the pair-generating and
@@ -152,16 +152,11 @@ object ScaleStress {
       // clock starts BEFORE construction: iterative loops (CC) and the
       // memoized at-rest index builds run eagerly inside the gate body
       val t0 = System.nanoTime()
-      val frame0 = df
-      // top-level global Sort is oracle plumbing, stripped as in Bench
-      val plan = frame0.queryExecution.analyzed match {
-        case org.apache.spark.sql.catalyst.plans.logical.Sort(_, true, child, _) => child
-        case p => p
-      }
+      // top-level global Sort is oracle plumbing, stripped as in Bench.
       // Observation is listener-backed, so the metric survives the
       // writer's fresh QueryExecution (plain observe(name, ...) would not)
       val obs = org.apache.spark.sql.Observation(s"__stress_$name")
-      val frame = org.apache.spark.sql.graftbridge.Bridge.ofRows(spark, plan)
+      val frame = Bench.stripTopSort(spark, df)
         .observe(obs, count(lit(1)).as("rows"))
       // noop write materializes every row+column (Bench semantics)
       frame.write.format("noop").mode("overwrite").save()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
+import graft.{Bench, SparkEntry}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
@@ -44,12 +44,7 @@ object StageTrace {
     (1 to reps).foreach { i =>
       println(s"[stagetrace] ---- $name rep $i ----")
       val t0 = System.nanoTime()
-      val df = fn(spark, sfDir)
-      val plan = df.queryExecution.analyzed match {
-        case org.apache.spark.sql.catalyst.plans.logical.Sort(_, true, child, _) => child
-        case p => p
-      }
-      org.apache.spark.sql.graftbridge.Bridge.ofRows(spark, plan)
+      Bench.stripTopSort(spark, fn(spark, sfDir))
         .write.mode("overwrite").format("noop").save()
       Thread.sleep(500) // listener bus is async
       println(f"[stagetrace] $name rep $i: ${(System.nanoTime() - t0) / 1e9}%.2f s")
