@@ -3,7 +3,10 @@ package graft.sources
 import graft.model._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 import org.json4s._
 import org.json4s.JsonDSL._
 import org.json4s.jackson.JsonMethods
@@ -24,8 +27,9 @@ import org.json4s.jackson.JsonMethods
   *    a thousand executors in parallel, no driver materialization.
   *    Chunks absent from the store are `fill_value` (zarr semantics) and
   *    are skipped, keeping sparse rasters sparse.
-  *  - WRITE: one zarr chunk per tile row, written from `foreachPartition`
-  *    (task-parallel); the driver writes only the group/array JSON.
+  *  - WRITE: one Spark job; each task writes one zarr chunk per tile row
+  *    and returns the array extents it wrote, and the driver writes only
+  *    the group/array JSON, last.
   *
   * Supported: `(c, y, x)` / `(c, z, y, x)` images and `(y, x)` / `(z, y, x)`
   * labels (the reference's Image2D/3D and Labels2D/3D dims,
@@ -159,6 +163,13 @@ object NgffRaster {
     * Image2D/3D and Labels2D/3D dims (models.py:409-447, io_raster.py
     * reads/writes the same rank-2..4 arrays). Absent tiles become absent
     * chunks (= `fill_value` 0 on read): sparse in, sparse stored.
+    *
+    * One Spark job, like the reference's single dask compute: each task
+    * writes its tiles' chunks through a [[ChunkWriter]] and returns the
+    * per-scale extents it wrote; the driver folds them into the `.zarray`
+    * shapes and writes the group metadata last. An empty raster or a gap
+    * in the scales is refused after the chunks are written, so a refused
+    * store has no metadata and does not read.
     */
   def write(tiles: DataFrame, groupDir: String, name: String,
       tileSize: Int, axes: Seq[String] = Seq("c", "y", "x"),
@@ -166,97 +177,101 @@ object NgffRaster {
       channels: Seq[String] = Nil, dtype: String = "<f8",
       compressorId: String = "blosc", isLabels: Boolean = false): Unit = {
     require(SupportedAxes.contains(axes), s"unsupported axes $axes")
-    val hasC = axes.contains("c")
-    val hasZ = axes.contains("z")
-    val spark = tiles.sparkSession
-    import org.apache.spark.sql.functions._
-
+    val layout = ChunkLayout(groupDir, tileSize, axes, dtype, compressorId)
+    chunkSizeWarning(layout.chunks, dtype).foreach(logger.warn(_))
+    val sc = tiles.sparkSession.sparkContext
     val gd = new Path(groupDir)
-    val fs = gd.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = gd.getFileSystem(sc.hadoopConfiguration)
     if (fs.exists(gd)) fs.delete(gd, true)
     fs.mkdirs(gd)
 
-    val zc = if (hasZ) col("z") else lit(0)
-    // per-scale extents: a tiny driver-side aggregate (the same planning
-    // metadata the reference computes from dask shapes)
-    val stats = tiles.groupBy(col("scale"))
-      .agg(max(col("c")).as("maxc"), max(zc).as("maxz"),
-        max(col("tile_y") * tileSize + col("h")).as("maxy"),
-        max(col("tile_x") * tileSize + col("w")).as("maxx"))
-      .collect().map(r => (r.getInt(0),
-        (r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4)))).toMap
-    require(stats.nonEmpty, "cannot write an empty raster")
-    val scaleIds = stats.keys.toSeq.sorted
-    require(scaleIds == (0 until stats.size), s"scales must be 0..n, got $scaleIds")
-
-    // default matches the reference writers: numcodecs Blosc with zstd
-    // inner codec + byte-shuffle (io_raster.py:383-393)
-    val comp = Some(compressorId match {
-      case "blosc" => Zarr.Compressor("blosc", cname = "zstd", clevel = 5, shuffle = 1)
-      case id => Zarr.Compressor(id, clevel = 3)
-    })
-    val metas: Seq[Zarr.ArrayMeta] = scaleIds.map { s =>
-      val (maxc, maxz, maxy, maxx) = stats(s)
-      val extent = Map("c" -> (maxc + 1), "z" -> (maxz + 1), "y" -> maxy, "x" -> maxx)
-      val chunk = Map("c" -> 1, "z" -> 1, "y" -> tileSize, "x" -> tileSize)
-      Zarr.ArrayMeta(axes.map(extent), axes.map(chunk), dtype, comp, 0.0, "C", ".")
+    val schema = if (axes.contains("z")) Tile3DSchema else TileSchema
+    val qe = tiles.select(schema.fieldNames.toSeq.map(tiles.col): _*).queryExecution
+    val confB = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
+    // an SQL execution, so QueryExecutionListeners (CacheScope) see the
+    // write as one action, as they see a Dataset action
+    val extents = SQLExecution.withNewExecutionId(qe, Some("ngffWrite")) {
+      qe.toRdd.mapPartitions { rows =>
+        val w = new ChunkWriter(layout, confB.value.value)
+        rows.foreach(w.write)
+        w.extents.iterator
+      }.collect()
     }
-    metas.headOption.foreach(m =>
-      chunkSizeWarning(m.chunks, dtype).foreach(logger.warn(_)))
-
-    // task-parallel chunk writes: one file per tile, no two tasks share a file
-    val metasB = spark.sparkContext.broadcast(metas)
-    val confB = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration))
-    val groupDirB = groupDir
-    val tsB = tileSize
-    val (hasCB, hasZB) = (hasC, hasZ)
-    tiles.select(col("scale"), col("c"), zc.as("z"),
-        col("tile_y"), col("tile_x"), col("h"), col("w"), col("px"))
-      .foreachPartition { rows: Iterator[Row] =>
-        val fsT = new Path(groupDirB).getFileSystem(confB.value.value)
-        rows.foreach { r =>
-          val (s, c, z, ty, tx) =
-            (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4))
-          val (h, w) = (r.getInt(5), r.getInt(6))
-          val px = r.getSeq[Double](7)
-          require(hasCB || c == 0, s"axes without c require c == 0, got $c")
-          require(hasZB || z == 0, s"axes without z require z == 0, got $z")
-          require(h <= tsB && w <= tsB,
-            s"tile ${h}x$w exceeds the chunk extent $tsB — tiles must be " +
-              "built with the same tileSize the store is written with")
-          val m = metasB.value(s)
-          // pad the (h, w) payload into the full chunk extent, fill 0
-          val full = new Array[Double](tsB * tsB)
-          var yy = 0
-          while (yy < h) {
-            var xx = 0
-            while (xx < w) { full(yy * tsB + xx) = px(yy * w + xx); xx += 1 }
-            yy += 1
-          }
-          val lead = (if (hasCB) Seq(c) else Nil) ++ (if (hasZB) Seq(z) else Nil)
-          val key = (lead ++ Seq(ty, tx)).mkString(".")
-          val p = new Path(s"$groupDirB/$s/$key")
-          val out = fsT.create(p, true)
-          try out.write(Zarr.encodeChunk(full, m)) finally out.close()
-        }
-      }
-
-    writeGroupMetadata(fs, groupDir, name, axes, metas, transforms,
-      channels, isLabels)
+    writeGroupMetadata(fs, layout, extents.toSeq, name, transforms, channels, isLabels)
   }
 
-  /** Driver-side group metadata: .zgroup, per-scale .zarray, group .zattrs
-    * (multiscales + transforms + omero/image-label). Shared by the v1
-    * writer and the DataSourceV2 commit (which learns the array extents
-    * from task commit messages).
+  /** `scale -> (maxc, maxz, maxY, maxX)`: the extents of the tiles written. */
+  private[sources] type Extents = Seq[(Int, (Int, Int, Int, Int))]
+
+  /** Where and how a store's chunks are encoded: the chunk extent, dtype and
+    * compressor, which is all [[Zarr.encodeChunk]] reads — never the array
+    * shape, so chunks are written before the shapes are known.
+    */
+  private[sources] final case class ChunkLayout(dir: String, tileSize: Int,
+      axes: Seq[String], dtype: String, compressorId: String) {
+    val chunks: Seq[Int] = axes.map { case "y" | "x" => tileSize; case _ => 1 }
+    def meta(maxc: Int, maxz: Int, maxy: Int, maxx: Int): Zarr.ArrayMeta = {
+      val extent = Map("c" -> (maxc + 1), "z" -> (maxz + 1), "y" -> maxy, "x" -> maxx)
+      // default matches the reference writers: numcodecs Blosc with zstd
+      // inner codec + byte-shuffle (io_raster.py:383-393)
+      val comp = compressorId match {
+        case "blosc" => Zarr.Compressor("blosc", cname = "zstd", clevel = 5, shuffle = 1)
+        case id => Zarr.Compressor(id, clevel = 3)
+      }
+      Zarr.ArrayMeta(axes.map(extent), chunks, dtype, Some(comp), 0.0, "C", ".")
+    }
+  }
+
+  /** One task's chunk writer, shared by [[write]] and the DSv2 writer: pads
+    * each tile row ([[TileSchema]], or [[Tile3DSchema]] when the axes have
+    * `z`) into the full chunk, writes it under its zarr key — one file per
+    * tile, no two tasks share a file — and keeps the extents it wrote.
+    */
+  private[sources] final class ChunkWriter(layout: ChunkLayout,
+      conf: org.apache.hadoop.conf.Configuration) {
+    import layout.{dir, tileSize => ts}
+    private val (hasC, hasZ) = (layout.axes.contains("c"), layout.axes.contains("z"))
+    private val fs = new Path(dir).getFileSystem(conf)
+    private val enc = layout.meta(0, 0, 0, 0)
+    private val seen = scala.collection.mutable.Map.empty[Int, (Int, Int, Int, Int)]
+
+    def write(r: InternalRow): Unit = {
+      val i = if (hasZ) 3 else 2
+      val (s, c, z) = (r.getInt(0), r.getInt(1), if (hasZ) r.getInt(2) else 0)
+      val (ty, tx, h, w) = (r.getInt(i), r.getInt(i + 1), r.getInt(i + 2), r.getInt(i + 3))
+      require(hasC || c == 0, s"axes without c require c == 0, got $c")
+      require(h <= ts && w <= ts, s"tile ${h}x$w exceeds the chunk extent $ts — tiles " +
+        "must be built with the same tileSize the store is written with")
+      val px = r.getArray(i + 4).toDoubleArray()
+      val full = new Array[Double](ts * ts) // the (h, w) payload, fill 0
+      (0 until h).foreach(yy => System.arraycopy(px, yy * w, full, yy * ts, w))
+      val key = ((if (hasC) Seq(c) else Nil) ++ (if (hasZ) Seq(z) else Nil) ++ Seq(ty, tx))
+      val out = fs.create(new Path(s"$dir/$s/${key.mkString(".")}"), true)
+      try out.write(Zarr.encodeChunk(full, enc)) finally out.close()
+      val (mc, mz, my, mx) = seen.getOrElse(s, (0, 0, 0, 0))
+      seen(s) = (mc max c, mz max z, my max (ty * ts + h), mx max (tx * ts + w))
+    }
+
+    def extents: Extents = seen.toSeq
+  }
+
+  /** Driver-side group metadata, written after the chunks: .zgroup,
+    * per-scale .zarray, group .zattrs (multiscales + transforms +
+    * omero/image-label). Folds the chunk tasks' extents into the array
+    * shapes; shared by [[write]] and the DataSourceV2 commit.
     */
   private[sources] def writeGroupMetadata(fs: org.apache.hadoop.fs.FileSystem,
-      groupDir: String, name: String, axes: Seq[String],
-      metas: Seq[Zarr.ArrayMeta], transforms: Map[String, Transform],
-      channels: Seq[String], isLabels: Boolean): Unit = {
-    val scaleIds = metas.indices
+      layout: ChunkLayout, extents: Extents, name: String,
+      transforms: Map[String, Transform], channels: Seq[String],
+      isLabels: Boolean): Unit = {
+    val perScale = extents.groupMapReduce(_._1)(_._2) { case ((c, z, y, x), (c2, z2, y2, x2)) =>
+      (c max c2, z max z2, y max y2, x max x2)
+    }
+    require(perScale.nonEmpty, "cannot write an empty raster")
+    val scaleIds = perScale.keys.toSeq.sorted
+    require(scaleIds == (0 until perScale.size), s"scales must be 0..n, got $scaleIds")
+    val metas = scaleIds.map(perScale).map { case (c, z, y, x) => layout.meta(c, z, y, x) }
+    val (groupDir, axes) = (layout.dir, layout.axes)
     def writeText(p: String, text: String): Unit = {
       val out = fs.create(new Path(p), true)
       try out.write(text.getBytes("UTF-8")) finally out.close()

@@ -22,7 +22,9 @@ import org.json4s.jackson.JsonMethods
   *    columns, dense f8 X, spatialdata annotation attrs. Column and X
   *    chunks are written task-parallel from `foreachPartition`.
   *  - points: parquet + reference-style attrs (io_points.py:50-99).
-  *  - images/labels: [[NgffRaster.write]] output is already NGFF.
+  *  - images/labels: [[NgffRaster.write]] output is already NGFF. It is
+  *    one Spark job per raster (the chunk tasks return the array extents),
+  *    so a labels element's `pixelsToTiles` exchange runs once.
   *
   * Transforms are serialized as reference-style NGFF dicts with
   * input/output coordinate-system objects (ngff_transformations.py

@@ -91,11 +91,12 @@ final class NgffTable(dir: String, providedSchema: Option[StructType] = None)
     new NgffWriteBuilder(dir, info)
 }
 
-/** Write side: each task encodes its own chunk files (same wire layout as
-  * [[NgffRaster.write]]) and reports the extents it saw; the driver-side
-  * `commit` folds the per-task extents into the array shapes and writes
-  * the group metadata LAST — so the standard DSv2 contract (no readable
-  * store until commit, abort leaves no metadata) falls out naturally.
+/** Write side: each task writes its chunk files through the same
+  * [[NgffRaster.ChunkWriter]] as [[NgffRaster.write]] and reports the
+  * extents it wrote; the driver-side `commit` folds them into the array
+  * shapes with the same [[NgffRaster.writeGroupMetadata]] and writes the
+  * group metadata LAST — so the standard DSv2 contract (no readable store
+  * until commit, abort leaves no metadata) falls out naturally.
   * `mode("overwrite")` maps to truncate (clear the group dir up front);
   * v2 path writes reject ErrorIfExists/Ignore by Spark's own rules.
   *
@@ -120,54 +121,33 @@ final class NgffWrite(dir: String, info: LogicalWriteInfo, doTruncate: Boolean)
     schema.fieldNames.toSeq == expected3d,
     s"ngff write expects the tile schema ${expected2d.mkString("(", ", ", ")")} " +
       s"or its 3D form; got ${schema.fieldNames.mkString("(", ", ", ")")}")
-  private val hasZ = schema.fieldNames.contains("z")
-  private val axes = if (hasZ) Seq("c", "z", "y", "x") else Seq("c", "y", "x")
-  private val tileSize = {
+  private val layout = {
     val t = info.options.get("tilesize")
     require(t != null, "ngff write: .option(\"tileSize\", n) is required")
-    t.toInt
+    val axes = if (schema.fieldNames.contains("z")) Seq("c", "z", "y", "x") else Seq("c", "y", "x")
+    NgffRaster.ChunkLayout(dir, t.toInt, axes, "<f8", "blosc")
   }
 
   override def toBatch: BatchWrite = this
 
   override def createBatchWriterFactory(pInfo: PhysicalWriteInfo): DataWriterFactory = {
-    val spark = SparkSession.active
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val conf = SparkSession.active.sparkContext.hadoopConfiguration
     val gd = new Path(dir)
+    val fs = gd.getFileSystem(conf)
     if (doTruncate && fs.exists(gd)) fs.delete(gd, true)
     fs.mkdirs(gd)
-    NgffWriterFactory(dir, tileSize, hasZ,
-      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
+    NgffWriterFactory(layout, new SerializableConfiguration(conf))
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val perScale = messages.collect { case m: NgffExtentsMessage => m.extents }
-      .flatten
-      .groupBy(_._1)
-      .map { case (s, es) =>
-        val vs = es.map(_._2)
-        s -> ((vs.map(_._1).max, vs.map(_._2).max, vs.map(_._3).max, vs.map(_._4).max))
-      }
-    require(perScale.nonEmpty, "ngff write: no tiles were written")
-    val scaleIds = perScale.keys.toSeq.sorted
-    require(scaleIds == (0 until perScale.size),
-      s"ngff write: scales must be 0..n, got $scaleIds")
-    val comp = Some(Zarr.Compressor("blosc", cname = "zstd", clevel = 5, shuffle = 1))
-    val metas = scaleIds.map { s =>
-      val (maxc, maxz, maxy, maxx) = perScale(s)
-      val extent = Map("c" -> (maxc + 1), "z" -> (maxz + 1), "y" -> maxy, "x" -> maxx)
-      val chunk = Map("c" -> 1, "z" -> 1, "y" -> tileSize, "x" -> tileSize)
-      Zarr.ArrayMeta(axes.map(extent), axes.map(chunk), "<f8", comp, 0.0, "C", ".")
-    }
     val opts = info.options
-    val name = Option(opts.get("name")).getOrElse("image")
     val channels = Option(opts.get("channels"))
       .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
-    val isLabels = Option(opts.get("labels")).exists(_.toBoolean)
-    val spark = SparkSession.active
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    NgffRaster.writeGroupMetadata(fs, dir, name, axes, metas,
-      Map("global" -> graft.model.IdentityT), channels, isLabels)
+    val fs = new Path(dir).getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
+    NgffRaster.writeGroupMetadata(fs, layout,
+      messages.toSeq.collect { case m: NgffExtentsMessage => m.extents }.flatten,
+      Option(opts.get("name")).getOrElse("image"), Map("global" -> graft.model.IdentityT),
+      channels, Option(opts.get("labels")).exists(_.toBoolean))
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
@@ -176,57 +156,18 @@ final class NgffWrite(dir: String, info: LogicalWriteInfo, doTruncate: Boolean)
   }
 }
 
-final case class NgffWriterFactory(dir: String, tileSize: Int, hasZ: Boolean,
+final case class NgffWriterFactory(layout: NgffRaster.ChunkLayout,
     conf: SerializableConfiguration) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new NgffDataWriter(dir, tileSize, hasZ, conf)
+    new NgffDataWriter(new NgffRaster.ChunkWriter(layout, conf.value))
 }
 
-/** scale -> (maxc, maxz, maxY, maxX) extents this task observed. */
-final case class NgffExtentsMessage(
-    extents: Seq[(Int, (Int, Int, Int, Int))]) extends WriterCommitMessage
+/** scale -> (maxc, maxz, maxY, maxX) extents this task wrote. */
+final case class NgffExtentsMessage(extents: NgffRaster.Extents) extends WriterCommitMessage
 
-final class NgffDataWriter(dir: String, tileSize: Int, hasZ: Boolean,
-    conf: SerializableConfiguration) extends DataWriter[InternalRow] {
-
-  private lazy val fs = new Path(dir).getFileSystem(conf.value)
-  private val extents = scala.collection.mutable.Map.empty[Int, (Int, Int, Int, Int)]
-  // chunk wire meta: only dtype/compressor/order matter for encode
-  private val enc = Zarr.ArrayMeta(Seq(1, tileSize, tileSize),
-    Seq(1, tileSize, tileSize), "<f8",
-    Some(Zarr.Compressor("blosc", cname = "zstd", clevel = 5, shuffle = 1)),
-    0.0, "C", ".")
-
-  override def write(row: InternalRow): Unit = {
-    // field order is pinned by NgffWrite's schema check
-    var i = 0
-    val s = row.getInt(i); i += 1
-    val c = row.getInt(i); i += 1
-    val z = if (hasZ) { val v = row.getInt(i); i += 1; v } else 0
-    val ty = row.getInt(i); i += 1
-    val tx = row.getInt(i); i += 1
-    val h = row.getInt(i); i += 1
-    val w = row.getInt(i); i += 1
-    val px = row.getArray(i).toDoubleArray()
-    require(h <= tileSize && w <= tileSize,
-      s"tile ${h}x$w exceeds the chunk extent $tileSize")
-    val full = new Array[Double](tileSize * tileSize)
-    var yy = 0
-    while (yy < h) {
-      var xx = 0
-      while (xx < w) { full(yy * tileSize + xx) = px(yy * w + xx); xx += 1 }
-      yy += 1
-    }
-    val lead = Seq(c) ++ (if (hasZ) Seq(z) else Nil)
-    val key = (lead ++ Seq(ty, tx)).mkString(".")
-    val p = new Path(s"$dir/$s/$key")
-    val out = fs.create(p, true)
-    try out.write(Zarr.encodeChunk(full, enc)) finally out.close()
-    val (mc, mz, my, mx) = extents.getOrElse(s, (0, 0, 0, 0))
-    extents(s) = (mc max c, mz max z, my max (ty * tileSize + h), mx max (tx * tileSize + w))
-  }
-
-  override def commit(): WriterCommitMessage = NgffExtentsMessage(extents.toSeq)
+final class NgffDataWriter(chunks: NgffRaster.ChunkWriter) extends DataWriter[InternalRow] {
+  override def write(row: InternalRow): Unit = chunks.write(row)
+  override def commit(): WriterCommitMessage = NgffExtentsMessage(chunks.extents)
   override def abort(): Unit = ()
   override def close(): Unit = ()
 }

@@ -99,6 +99,25 @@ class NgffDataSourceV2Spec extends SparkTestBase {
     assert(v2 === a)
   }
 
+  test("v1 NgffRaster.write and write.format(\"ngff\") write identical stores") {
+    val src = NgffRaster.read(spark, storeDir)._1
+    val (v1, v2) = (s"${tmpDir()}/v1", s"${tmpDir()}/v2")
+    NgffRaster.write(src, v1, "image", tileSize = 8)
+    src.write.format("ngff").option("tileSize", 8).mode("overwrite").save(v2)
+    def files(root: String): Map[String, Seq[Byte]] = {
+      val r = java.nio.file.Paths.get(root)
+      val walk = java.nio.file.Files.walk(r)
+      try walk.filter(java.nio.file.Files.isRegularFile(_)).toArray.toSeq
+        .map(_.asInstanceOf[java.nio.file.Path])
+        .map(p => r.relativize(p).toString -> java.nio.file.Files.readAllBytes(p).toSeq).toMap
+      finally walk.close()
+    }
+    val (a, b) = (files(v1), files(v2))
+    assert(a.keySet === b.keySet)
+    assert(a.keySet.contains("0/.zarray") && a.keys.count(_.startsWith("0/0.")) > 1)
+    a.keys.foreach(k => assert(a(k) === b(k), s"$k differs"))
+  }
+
   test("v2 write: 3D tiles round-trip with a z axis") {
     val dir = s"${tmpDir()}/vol"
     import spark.implicits._
