@@ -1592,11 +1592,11 @@ object Dedup {
     */
   /** SemDeDup-style semantic dedup (cluster-then-prune over embeddings,
     * after Abbas et al. 2023, arXiv:2303.09540): assign every vector to
-    * its nearest centroid ([[Similarity.ivfAssign]] — broadcast centroids,
-    * one keyed aggregate), generate WITHIN-CELL candidate pairs only, and
-    * drop every vector that has a lower-id clustermate at
-    * `cosine >= threshold` (cosine 6-decimal-rounded, so the keep set is
-    * engine-exact). Never corpus-quadratic: pair generation is an
+    * its nearest centroid ([[Similarity.ivfAssign]] — one kernel
+    * projection over the driver-held centroids), generate WITHIN-CELL
+    * candidate pairs only, and drop every vector that has a lower-id
+    * clustermate at `cosine >= threshold` (cosine 6-decimal-rounded, so
+    * the keep set is engine-exact). Never corpus-quadratic: pair generation is an
     * equi-join on the cell id, and cells above `maxCellSize` are excluded
     * from pruning (kept whole, same loud-in-scaladoc skew policy as the
     * LSH buckets — at scale the real control is training enough

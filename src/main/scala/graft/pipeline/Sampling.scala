@@ -222,11 +222,12 @@ object Sampling {
     * (the D4/SemDeDup-lineage selection step: cluster the corpus, then
     * draw evenly per cluster so no dense region dominates the training
     * mix): assign every vector to its nearest centroid
-    * ([[Similarity.ivfAssign]] — broadcast centroids, struct-min argmin,
-    * no window) and keep a deterministic per-cell quota
-    * ([[stratifiedQuota]] — salted-hash order, so the draw is
-    * reproducible and engine-portable). The per-cell window is bounded by
-    * cell population, the only corpus-wide work is the argmin scan.
+    * ([[Similarity.ivfAssign]] — one kernel projection over the
+    * driver-held centroids, no join or aggregate) and keep a
+    * deterministic per-cell quota ([[stratifiedQuota]] — salted-hash
+    * order, so the draw is reproducible and engine-portable). The
+    * per-cell window is bounded by cell population, the only corpus-wide
+    * work is the assignment projection.
     * Output: (idCol, centroidIdCol) of the kept vectors.
     */
   def clusterBalancedSample(vecs: DataFrame, centroids: DataFrame,

@@ -1,8 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -14,7 +15,7 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  private def norm2(v: org.apache.spark.sql.Column) =
+  private def norm2(v: Column) =
     sqrt(dot(v, v))
 
   /** Norm that RAISES on zero-norm vectors. A zero embedding makes
@@ -26,8 +27,7 @@ object Similarity {
     * [[sameWidth]]: a zero-norm vector is an upstream data bug the
     * caller should see by name, not a quiet rank shuffle.
     */
-  private def checkedNorm(v: org.apache.spark.sql.Column,
-      op: String): org.apache.spark.sql.Column = {
+  private def checkedNorm(v: Column, op: String): Column = {
     val n = norm2(v)
     when(n === 0d, raise_error(lit(
       s"$op: zero-norm embedding vector — cosine is 0/0 (NaN); " +
@@ -39,8 +39,7 @@ object Similarity {
     * checked loudly via [[sameWidth]]); also the `graft_cosine(a, b)` SQL
     * function. NaN when either vector is all-zero.
     */
-  def cosineCol(a: org.apache.spark.sql.Column,
-      b: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+  def cosineCol(a: Column, b: Column): Column = {
     val ad = a.cast("array<double>")
     val bd = b.cast("array<double>")
     when(sameWidth(ad, bd, "cosineCol"),
@@ -51,16 +50,11 @@ object Similarity {
   // aggregate(zip_with(..)) folds they replace were CodegenFallback and
   // allocated a per-row intermediate array; accumulation order and
   // per-element arithmetic are identical, so every gate hash is unchanged
-  private[pipeline] def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-    org.apache.spark.sql.graftbridge.Bridge.column(graft.functions.VecDot(
-      org.apache.spark.sql.graftbridge.Bridge.expression(a),
-      org.apache.spark.sql.graftbridge.Bridge.expression(b)))
+  private[pipeline] def dot(a: Column, b: Column) =
+    Bridge.column(graft.functions.VecDot(Bridge.expression(a), Bridge.expression(b)))
 
-  private[pipeline] def dist2Fold(a: org.apache.spark.sql.Column,
-      b: org.apache.spark.sql.Column) =
-    org.apache.spark.sql.graftbridge.Bridge.column(graft.functions.VecDist2(
-      org.apache.spark.sql.graftbridge.Bridge.expression(a),
-      org.apache.spark.sql.graftbridge.Bridge.expression(b)))
+  private[pipeline] def dist2Fold(a: Column, b: Column) =
+    Bridge.column(graft.functions.VecDist2(Bridge.expression(a), Bridge.expression(b)))
 
   /** Always-true predicate that RAISES on mismatched vector widths.
     * `zip_with` silently null-pads the shorter array, so a wrong-width
@@ -74,8 +68,7 @@ object Similarity {
     * embedding in a similarity pipeline is a data-quality bug the caller
     * should see by name and filter upstream, not a width mismatch.
     */
-  private[pipeline] def sameWidth(a: org.apache.spark.sql.Column,
-      b: org.apache.spark.sql.Column, op: String): org.apache.spark.sql.Column =
+  private[pipeline] def sameWidth(a: Column, b: Column, op: String): Column =
     when(a.isNull || b.isNull, raise_error(lit(
       s"$op: null embedding vector — filter null embeddings upstream")))
       .when(size(a) === size(b), lit(true))
@@ -241,8 +234,7 @@ object Similarity {
       queryIdCol: String = "query_id", idCol: String = "vec_id",
       rankCol: String = "rank", relCol: String = "rel"): DataFrame = {
     require(k >= 1, s"ndcgAtK: k must be >= 1, got $k")
-    def gainTerm(rel: org.apache.spark.sql.Column,
-        pos: org.apache.spark.sql.Column) =
+    def gainTerm(rel: Column, pos: Column) =
       TextAnalysis.round6(
         (pow(lit(2.0), rel) - 1.0) / log2(pos.cast("double") + 1.0))
     val rel = relevance.select(col(queryIdCol), col(idCol),
@@ -516,8 +508,8 @@ object Similarity {
     * scale. Narrow `dims` below the [[MaxDims]] default only to slim the
     * plan for known-narrow embeddings.
     */
-  def lshBucket(vecCol: org.apache.spark.sql.Column, numPlanes: Int,
-      planeOffset: Int = 0, dims: Int = MaxDims): org.apache.spark.sql.Column = {
+  def lshBucket(vecCol: Column, numPlanes: Int,
+      planeOffset: Int = 0, dims: Int = MaxDims): Column = {
     require(dims >= 1 && dims <= MaxDims,
       s"lshBucket: dims must be in [1, $MaxDims], got $dims")
     require(numPlanes >= 1 && numPlanes <= 30,
@@ -667,48 +659,33 @@ object Similarity {
   }
 
   /** IVF-style coarse quantization: assign each vector to the nearest of
-    * `centroids` (a small broadcast table of (centroid_id, embedding)); ANN
-    * probes only the closest cells. Returns corpus annotated with cell id.
+    * `centroids` (a small (centroid_id, embedding) table, collected on the
+    * driver) in one [[IvfKernel]] projection, ties to the lower id; ANN
+    * probes only the closest cells. Output: (idCol, centroidIdCol, dist2),
+    * one row per corpus row, with the raw squared distance.
     */
   def ivfAssign(corpus: DataFrame, centroids: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding",
       centroidIdCol: String = "centroid_id"): DataFrame = {
-    val c = corpus.select(col(idCol), col(vecCol).cast("array<double>").as("__v"))
-    val cent = centroids.select(col(centroidIdCol), col(vecCol).cast("array<double>").as("__c"))
-    val dist2 = dist2Fold(col("__v"), col("__c"))
-    // argmin as a struct-min aggregate (lexicographic on (dist2, centroid_id),
-    // same tiebreak as an ORDER BY window) — partial-aggregates map-side, so
-    // the shuffle carries one row per vec_id instead of the full corpus x K
-    // expansion a row_number window would reshuffle.
-    c.crossJoin(broadcast(cent))
-      .filter(sameWidth(col("__v"), col("__c"), "ivfAssign"))
-      .withColumn("__d", dist2)
-      .groupBy(col(idCol))
-      .agg(min(struct(col("__d"), col(centroidIdCol))).as("__best"))
-      .select(col(idCol), col("__best")(centroidIdCol).as(centroidIdCol),
-        col("__best")("__d").as("dist2"))
+    val t = IvfKernel.idType(centroids, centroidIdCol, "ivfAssign")
+    IvfKernel.project(corpus, Seq(col(idCol)), "assign", IvfKernel.AssignType, vecCol,
+        IvfKernel.centroids(centroids, centroidIdCol, vecCol))
+      .select(col(idCol), col("__k.cell").cast(t).as(centroidIdCol),
+        col("__k.dist2").as("dist2"))
   }
 
   /** SIMPLIFIED SILHOUETTE (Hruschka et al. 2004) — the clustering-quality
-    * score for a centroid model ([[kmeansTrain]], [[ivfAssign]]'s cells,
-    * [[graft.pipeline.Sampling]]'s cluster-balanced cells): per point,
-    * a = distance to its own (nearest) centroid, b = distance to the
-    * second-nearest, s = (b − a) / max(a, b) ∈ [0, 1] here (a is the min
-    * by construction — the centroid form never goes negative); near-0
-    * means the point sits on a cell boundary (ambiguous cell, bad k),
-    * near-1 means tight cells. The full silhouette needs all pairwise
-    * point distances (quadratic — impossible at corpus scale); the
-    * simplified form is its standard centroid-model estimator.
+    * score for a centroid model ([[kmeansTrain]], [[ivfAssign]]'s cells):
+    * per point, a = distance to its nearest centroid, b = to the
+    * second-nearest, s = (b − a) / max(a, b) ∈ [0, 1]; near-0 means a cell
+    * boundary (bad k), near-1 tight cells. The centroid-model estimator of
+    * the full (quadratic) silhouette.
     *
     * Scale shape: centroids are collected to a driver literal (k × dims
-    * doubles — the same O(model) handoff as [[kmeansTrain]]'s codebook),
-    * so the whole per-point computation is ONE stateless codegen
-    * projection (transform over the centroid literal + array_sort, no
-    * join, no corpus × k shuffle), followed by one keyed per-cluster
-    * aggregation. Distance folds run in index order (zip_with +
-    * left-to-right aggregate — the q54 mirror convention); the IEEE sqrt
-    * is correctly rounded, per-point s snaps to the 1e-6 grid, cluster
-    * means are exact DECIMAL sums of snapped values with one final
+    * doubles), so the per-point computation is ONE stateless projection
+    * (no join, no corpus × k shuffle), then one keyed per-cluster
+    * aggregation. Distances fold left to right, per-point s snaps to the
+    * 1e-6 grid, cluster means are exact DECIMAL sums with one final
     * snapped division.
     * Output: (cluster_id, n, mean_sil), one row per non-empty cell.
     */
@@ -753,18 +730,12 @@ object Similarity {
     * quantizer [[ivfAssign]]/[[ivfTopK]] probe (the reference's ANN story
     * stops at brute force; a 100 TB corpus needs a trained IVF index).
     *
-    * Scale design: the centroid set is k x dims doubles — driver-resident
-    * BY DEFINITION (the one structure k-means keeps globally); the corpus
+    * Scale design: the k x dims centroids are driver-resident; the corpus
     * never leaves executors. Each iteration is one broadcast nearest-cell
     * assign (struct-min aggregate, no window) plus one per-dimension mean
-    * (posexplode + partial-aggregating groupBy), i.e. two shuffle-light
-    * passes over the data regardless of corpus size.
-    *
-    * Determinism contract (what makes the training trace reproducible
-    * bit-for-bit on any engine): squared distances and centroid
-    * components are rounded to 6 decimals at every step, and all
-    * cross-row sums run in DECIMAL(28,6) — exact, order-independent —
-    * so no IEEE fold-order noise accumulates across iterations.
+    * (partial-aggregating groupBy). Deterministic on any engine: distances
+    * and centroid components are rounded to 6 decimals at every step and
+    * all cross-row sums run in exact DECIMAL(28,6).
     *
     * Returns the final assignment summary `(centroid_id, n_members,
     * inertia)` where inertia = exact sum of the rounded member distances.
@@ -773,42 +744,11 @@ object Similarity {
     */
   def kmeansTrain(corpus: DataFrame, initCentroids: DataFrame, iters: Int = 2,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      centroidIdCol: String = "centroid_id"): DataFrame =
-    kmeansAssignments(corpus, initCentroids, iters, idCol, vecCol, centroidIdCol)
-      .groupBy(col(centroidIdCol))
-      .agg(count(lit(1)).as("n_members"),
-        sum(col("__d").cast("decimal(28,6)")).cast("double").as("inertia"))
-
-  /** Per-dimension cluster means in exact decimal arithmetic, re-rounded
-    * to the 6-decimal grid, collected to the driver (k x dims rows — the
-    * one legitimate collect; centroids ARE the model).
-    */
-  private def collectMeans(assign: DataFrame, c: DataFrame, idCol: String,
-      centroidIdCol: String): Seq[(Long, Seq[Double])] =
-    assign.select(col(idCol), col(centroidIdCol))
-      .join(c, idCol)
-      .select(col(centroidIdCol), posexplode(col("__v")).as(Seq("__i", "__x")))
-      .groupBy(col(centroidIdCol), col("__i"))
-      .agg((sum(TextAnalysis.round6(col("__x")).cast("decimal(28,6)"))
-        .cast("double") / count(lit(1))).as("__m"))
-      .select(col(centroidIdCol), col("__i"), TextAnalysis.round6(col("__m")).as("__m"))
-      .collect()
-      .groupBy(_.getLong(0)).map { case (cid, rows) =>
-        (cid, rows.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq)
-      }.toSeq.sortBy(_._1)
-
-  /** The Lloyd loop itself: final-iteration assignment
-    * (id, centroid_id, __d) — shared by [[kmeansTrain]] (summary) and
-    * [[pqTrain]] (per-subspace codebooks).
-    */
-  private[pipeline] def kmeansAssignments(corpus: DataFrame,
-      initCentroids: DataFrame, iters: Int, idCol: String, vecCol: String,
-      centroidIdCol: String): DataFrame = {
+      centroidIdCol: String = "centroid_id"): DataFrame = {
     require(iters >= 1, s"kmeansTrain: iters must be >= 1, got $iters")
     val spark = corpus.sparkSession
     import spark.implicits._
     val c = corpus.select(col(idCol), col(vecCol).cast("array<double>").as("__v"))
-
     // nearest-centroid assignment against the CURRENT centroid table:
     // (vec_id, centroid_id, d2) with d2 pre-rounded so the argmin tiebreak
     // (centroid_id) is engine-independent even at near-ties
@@ -833,66 +773,62 @@ object Similarity {
         cent = collectMeans(lastAssign, c, idCol, centroidIdCol)
           .toDF(centroidIdCol, "__c")
     }
-    lastAssign
+    lastAssign.groupBy(col(centroidIdCol))
+      .agg(count(lit(1)).as("n_members"),
+        sum(col("__d").cast("decimal(28,6)")).cast("double").as("inertia"))
   }
 
-  /** Product-quantization ENCODE: split each vector into `m` contiguous
-    * `subDim`-wide subvectors and assign each to its nearest codebook
-    * entry — the compression step of PQ-based ANN (a 64-dim float vector
-    * becomes m bytes; the standard way a 100 TB vector corpus fits an
-    * index). `codebooks` is the small trained table
-    * (sub, code_id, subvec); it broadcasts, the corpus explodes to
-    * (id, sub, subvec) rows, and the argmin is the same window-free
-    * struct-min aggregate as [[ivfAssign]], keyed by (id, sub). Distances
-    * are 6-decimal-rounded before the argmin so ties break identically on
-    * any engine. Output: (id, sub, code_id, dist2), one row per subspace.
+  /** Per-dimension cluster means in exact decimal arithmetic, re-rounded
+    * to the 6-decimal grid, collected to the driver (k x dims rows — the
+    * one legitimate collect; centroids ARE the model).
+    */
+  private def collectMeans(assign: DataFrame, c: DataFrame, idCol: String,
+      centroidIdCol: String): Seq[(Long, Seq[Double])] =
+    assign.select(col(idCol), col(centroidIdCol))
+      .join(c, idCol)
+      .select(col(centroidIdCol), posexplode(col("__v")).as(Seq("__i", "__x")))
+      .groupBy(col(centroidIdCol), col("__i"))
+      .agg((sum(TextAnalysis.round6(col("__x")).cast("decimal(28,6)"))
+        .cast("double") / count(lit(1))).as("__m"))
+      .select(col(centroidIdCol), col("__i"), TextAnalysis.round6(col("__m")).as("__m"))
+      .collect()
+      .groupBy(_.getLong(0)).map { case (cid, rows) =>
+        (cid, rows.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq)
+      }.toSeq.sortBy(_._1)
+
+  /** Product-quantization ENCODE: each vector's m `subDim`-wide subvectors
+    * to their nearest codebook entries — the compression step of PQ-based
+    * ANN (a 64-dim float vector becomes m bytes). `codebooks` is the small
+    * trained table (sub, code_id, subvec), collected on the driver; a
+    * vector's m codes are one [[IvfKernel]] call. Distances are
+    * 6-decimal-rounded before the argmin, ties to the lower code_id; a
+    * codebook without entries for a sub in `0 until m` is refused.
+    * Output: (id, sub, code_id, dist2), one row per subspace.
     */
   def pqEncode(corpus: DataFrame, codebooks: DataFrame, m: Int, subDim: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val slices = transform(sequence(lit(0), lit(m - 1)),
-      s => slice(col(vecCol).cast("array<double>"), s * subDim + 1, lit(subDim)))
-    val subRows = corpus.select(col(idCol), posexplode(slices).as(Seq("sub", "__sv")))
-    val cb = codebooks.select(col("sub"), col("code_id"),
-      col("subvec").cast("array<double>").as("__cv"))
-    val dist2 = dist2Fold(col("__sv"), col("__cv"))
-    subRows.join(broadcast(cb), Seq("sub"))
-      .filter(sameWidth(col("__sv"), col("__cv"), "pqEncode"))
-      .withColumn("__d", TextAnalysis.round6(dist2))
-      .groupBy(col(idCol), col("sub"))
-      .agg(min(struct(col("__d"), col("code_id"))).as("__best"))
-      .select(col(idCol), col("sub"),
-        col("__best")("code_id").as("code_id"),
-        col("__best")("__d").as("dist2"))
+    val t = IvfKernel.idType(codebooks, "code_id", "pqEncode")
+    IvfKernel.project(corpus, Seq(col(idCol)), "encode", IvfKernel.EncodeType, vecCol,
+        IvfKernel.codebook(codebooks, m, subDim))
+      // _outer: the array is never empty, and posexplode would infer a
+      // `size(__k) > 0` filter that runs the kernel twice
+      .select(col(idCol), posexplode_outer(col("__k")).as(Seq("sub", "__e")))
+      .select(col(idCol), col("sub"), col("__e.code_id").cast(t).as("code_id"),
+        col("__e.dist2").as("dist2"))
   }
 
   /** Product-quantization TRAIN: Lloyd over every subspace AT ONCE.
     * Returns the codebook table [[pqEncode]] consumes:
-    * (sub, code_id, subvec) — m * k rows, driver-sized by definition
-    * (codebooks ARE the model). Codebook entries are the
-    * final-assignment cluster means on the same 6-decimal grid as every
-    * other training step.
-    *
-    * Scale design — ONE PLAN PER LLOYD ITERATION, independent of m: the
-    * corpus explodes once to (id, sub, subvec) rows and the centroid
-    * table is keyed by (sub, code_id), so each iteration is a single
-    * broadcast nearest-cell assign (struct-min aggregate keyed by
-    * (id, sub)) feeding a single per-(sub, code, dim) mean aggregation —
-    * one scheduled job per iteration. (A per-subspace loop would plan,
-    * schedule, and collect ~3m separate jobs per train, each rescanning
-    * the cached sample: pure orchestration latency at small scale and m×
-    * wasted scans at large.) Between iterations the m*k*subDim means
-    * collect to the driver — the model — and rebroadcast.
-    *
-    * PQ codebooks are standardly trained on a bounded SAMPLE — pass
-    * `sampleFraction` < 1 to train on a deterministic
-    * [[Sampling.hashSample]] draw (salted md5 of `idCol` — reproducible
-    * on any engine, so the trained codebooks are oracle-mirrorable).
-    * The training set (sampled or not) is persisted for the duration of
-    * the run, so the SOURCE is scanned once per iteration at most;
-    * [[pqEncode]] then compresses the full corpus against the result.
-    * All arithmetic matches [[kmeansTrain]]'s determinism contract:
-    * distances and means 6-decimal-rounded, cross-row sums in exact
-    * DECIMAL(28,6), argmin ties broken on code_id.
+    * (sub, code_id, subvec), m * k rows of final-assignment cluster means
+    * on the 6-decimal grid. ONE PLAN PER LLOYD ITERATION, independent of
+    * m: the corpus explodes once to (id, sub, subvec) rows; each iteration
+    * is one broadcast nearest-code assign (struct-min aggregate keyed by
+    * (id, sub)) feeding one per-(sub, code, dim) mean aggregation, whose
+    * means collect to the driver and rebroadcast. `sampleFraction` < 1
+    * trains on a deterministic [[Sampling.hashSample]] draw (salted md5 of
+    * `idCol`). The training set is persisted for the run, so the source is
+    * scanned once. Arithmetic follows [[kmeansTrain]]'s determinism
+    * contract, ties on code_id.
     */
   def pqTrain(corpus: DataFrame, initCodebooks: DataFrame, m: Int, subDim: Int,
       iters: Int = 2, idCol: String = "vec_id",
@@ -957,18 +893,10 @@ object Similarity {
   }
 
   /** Product-quantization SEARCH via ADC (asymmetric distance
-    * computation) — the query path that completes the PQ story
-    * ([[pqTrain]] -> [[pqEncode]] -> here): the model-side inputs (query
-    * subvectors: queries x m rows; codebook: m x k rows) BROADCAST, and
-    * every encoded vector is scored through two keyed equi-joins plus a
-    * partial-aggregating sum — the subspace distance is evaluated inline
-    * per scored row (codegen'd fold), which keeps the broadcast size
-    * independent of the query batch. The corpus is touched only through
-    * its m-code rows, never its raw vectors — the read-bandwidth win that
-    * makes PQ the standard 100 TB ANN index format. Subspace distances
-    * are 6-decimal-rounded and summed in exact DECIMAL, so ranking is
-    * engine-independent; ties break on corpus id.
-    * Output: (query_id, vec_id, adist, rank <= k).
+    * computation), after [[pqTrain]] and [[pqEncode]]: every vector is
+    * scored through its m-code rows, never its raw vector ([[adcTopK]]).
+    * Subspace distances are 6-decimal-rounded and summed in exact DECIMAL,
+    * ties on corpus id. Output: (query_id, vec_id, adist, rank <= k).
     */
   def pqSearch(codes: DataFrame, codebooks: DataFrame, queries: DataFrame,
       k: Int, m: Int, subDim: Int, idCol: String = "vec_id",
@@ -990,18 +918,10 @@ object Similarity {
     val cb = codebooks.select(col("sub"), col("code_id"),
       col("subvec").cast("array<double>").as("__cv"))
     val dist2 = dist2Fold(col("__qv"), col("__cv"))
-    // INLINE ADC: the LUT used to materialize queries x m x k_codebook
-    // rounded distances and broadcast them as one hash relation keyed by
-    // (query, sub, code) — a relation whose size scales with the query
-    // batch (1.6M entries at the q214 fixture), built single-threaded on
-    // the driver and lock-waited on by every task. The two model-side
-    // inputs are what actually stay small: broadcast THEM (query subvecs:
-    // queries x m rows; codebook: m x k rows) and evaluate the identical
-    // round6(dist2) expression per scored row — same fold order, same
-    // rounding, bit-identical sums, no driver-built mega-relation. The
-    // extra arithmetic (subDim mults per scored row instead of a 3-key
-    // hash probe) is codegen'd VecDist2 — comparable CPU, and the
-    // broadcast no longer grows with the query batch.
+    // INLINE ADC: broadcast the two small model sides (query subvectors:
+    // queries x m rows; codebook: m x k rows) and evaluate round6(dist2)
+    // per scored row, instead of a queries x m x k lookup table whose
+    // broadcast grows with the query batch
     val scored = rows
       .join(broadcast(qsub), qsubKeys)
       .join(broadcast(cb), Seq("sub", "code_id"))
@@ -1018,55 +938,53 @@ object Similarity {
       .select(col(queryIdCol), col(idCol), col("adist"), col("rank"))
   }
 
-  /** The composed IVF + PQ query path — the full 100 TB ANN index in one
-    * operator: [[ivfAssign]] partitions the corpus into inverted lists,
-    * [[pqEncode]] compresses every vector to m codes, and a query (a) probes
-    * its `nprobe` nearest cells and (b) scores ONLY those cells' members
-    * through their codes via the inline ADC arithmetic of [[pqSearch]].
-    * The corpus is touched once for the cell join (ids only) and once
-    * through its m-code rows — raw vectors never ship to the query side.
-    * Every join is an equi-join (cell id; then (query, sub) / (sub, code)
-    * against the broadcast model sides); distances are 6-decimal-rounded and summed in
-    * exact DECIMAL so ranking is engine-independent, ties on corpus id.
+  /** The composed IVF + PQ query path, recomputed per query batch:
+    * [[VectorIndex.buildIndex]] encodes every vector, a query probes its
+    * `nprobe` nearest cells ([[probeCells]]) and scores only their members
+    * with [[pqSearch]]'s join+aggregate ADC (independent of the at-rest
+    * [[AdcKernel]]; VectorIndexSpec checks one against the other).
     * Output: (query_id, vec_id, adist, rank <= k).
     */
   def ivfPqSearch(corpus: DataFrame, centroids: DataFrame, codebooks: DataFrame,
       queries: DataFrame, k: Int, m: Int, subDim: Int, nprobe: Int = 2,
       idCol: String = "vec_id", vecCol: String = "embedding",
       queryIdCol: String = "query_id", centroidIdCol: String = "centroid_id"): DataFrame = {
-    val cells = ivfAssign(corpus, centroids, idCol, vecCol, centroidIdCol)
-      .select(col(idCol), col(centroidIdCol))
-    val codes = pqEncode(corpus, codebooks, m, subDim, idCol, vecCol)
-      .select(col(idCol), col("sub"), col("code_id"))
-    // nprobe nearest cells per query — the tiny per-query K-entry sort of
-    // ivfTopK, carrying only ids into the big join
+    val cand = probeCells(queries, centroids, nprobe, "ivfPqSearch", vecCol,
+        queryIdCol, centroidIdCol)
+      .join(VectorIndex.buildIndex(corpus, centroids, codebooks, m, subDim,
+        idCol, vecCol, centroidIdCol), Seq(centroidIdCol))
+      // _outer: see pqEncode
+      .select(col(queryIdCol), col(idCol),
+        posexplode_outer(col("codes")).as(Seq("sub", "code_id")))
+    adcTopK(cand, Seq(queryIdCol, "sub"), codebooks, queries, k, m, subDim,
+      idCol, vecCol, queryIdCol, "ivfPqSearch")
+  }
+
+  /** (queryIdCol, __qv, centroidIdCol): each query's `nprobe` nearest cells,
+    * queries x the broadcast centroids with each query's K-entry (distance,
+    * id) list sorted in an aggregate; ties to the lower id.
+    */
+  private[pipeline] def probeCells(queries: DataFrame, centroids: DataFrame,
+      nprobe: Int, op: String, vecCol: String, queryIdCol: String,
+      centroidIdCol: String): DataFrame = {
     val cent = centroids.select(col(centroidIdCol), col(vecCol).cast("array<double>").as("__c"))
-    val qDist2 = dist2Fold(col("__qv"), col("__c"))
-    val probes = queries
-      .select(col(queryIdCol), col(vecCol).cast("array<double>").as("__qv"))
+    queries.select(col(queryIdCol), col(vecCol).cast("array<double>").as("__qv"))
       .crossJoin(broadcast(cent))
-      .filter(sameWidth(col("__qv"), col("__c"), "ivfPqSearch"))
-      .withColumn("__d", qDist2)
+      .filter(sameWidth(col("__qv"), col("__c"), op))
+      .withColumn("__d", dist2Fold(col("__qv"), col("__c")))
       .groupBy(col(queryIdCol))
-      .agg(slice(array_sort(collect_list(struct(col("__d"), col(centroidIdCol)))),
-        1, nprobe).as("__cells"))
-      .select(col(queryIdCol), explode(col("__cells")).as("__cell"))
-      .select(col(queryIdCol), col(s"__cell.$centroidIdCol").as(centroidIdCol))
-    // candidate pairs: probed cells' inverted lists, ids only
-    val cand = probes.join(cells, Seq(centroidIdCol))
-      .select(col(queryIdCol), col(idCol))
-    // INLINE ADC (see [[pqSearch]]) per candidate row
-    adcTopK(cand.join(codes, Seq(idCol)), Seq(queryIdCol, "sub"),
-      codebooks, queries, k, m, subDim, idCol, vecCol, queryIdCol, "ivfPqSearch")
+      .agg(first(col("__qv")).as("__qv"),
+        slice(array_sort(collect_list(struct(col("__d"), col(centroidIdCol)))),
+          1, nprobe).as("__cells"))
+      .select(col(queryIdCol), col("__qv"), explode(col("__cells")).as("__cell"))
+      .select(col(queryIdCol), col("__qv"), col(s"__cell.$centroidIdCol").as(centroidIdCol))
   }
 
   /** Distance-to-assigned-centroid outlier pruning — the embedding-space
     * quality gate a curation pipeline runs after clustering (vectors far
-    * from every cluster center are junk/noise candidates). One
-    * [[ivfAssign]] pass (broadcast centroids, struct-min argmin), then a
-    * stateless threshold on the rounded squared distance. Output: every
-    * vector with its cell, rounded dist2, and the outlier flag — callers
-    * filter on `is_outlier` to drop or audit.
+    * from every cluster center are junk/noise candidates): [[ivfAssign]],
+    * then a threshold on the rounded squared distance. Output: every
+    * vector with its cell, rounded dist2 and `is_outlier`.
     */
   def outlierFlags(corpus: DataFrame, centroids: DataFrame, maxDist2: Double,
       idCol: String = "vec_id", vecCol: String = "embedding",
@@ -1114,8 +1032,7 @@ object Similarity {
   def binarize(corpus: DataFrame, idCol: String = "vec_id",
       vecCol: String = "embedding", outCol: String = "bits"): DataFrame = {
     val v = col(vecCol).cast("array<double>")
-    val nWords = org.apache.spark.sql.graftbridge.Bridge
-      .integralDivide(size(v) + 31, lit(32L))
+    val nWords = Bridge.integralDivide(size(v) + 31, lit(32L))
     val words = transform(sequence(lit(0L), nWords - 1L), w =>
       aggregate(slice(v, (w * 32L + 1L).cast("int"), lit(32)),
         lit(0L), (a, x) => a * 2L + when(x > 0d, 1L).otherwise(0L)))
@@ -1172,14 +1089,11 @@ object Similarity {
         col("rank"))
   }
 
-  /** The IVF QUERY path: each query probes its `nprobe` nearest cells and
-    * searches only the corpus vectors [[ivfAssign]] put there — the classic
-    * inverted-file ANN. The per-query cell shortlist expands to `nprobe`
-    * rows (a tiny explode on the query batch), then ONE equi-join on
-    * cell id against the partitioned corpus lists; exact cosine + top-k
-    * inside the probed union. At 100 TB the corpus shuffles once by cell
-    * id (or is bucketed by it at rest) and each query touches
-    * nprobe/|cells| of the data — no product anywhere.
+  /** The IVF QUERY path: each query probes its `nprobe` nearest cells
+    * ([[probeCells]]) and searches only the corpus vectors [[ivfAssign]]
+    * put there — the classic inverted-file ANN: ONE equi-join on cell id
+    * against the corpus lists, exact cosine + top-k inside the probed
+    * union, so each query touches nprobe/|cells| of the data.
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
       k: Int, nprobe: Int = 2, idCol: String = "vec_id",
@@ -1189,23 +1103,8 @@ object Similarity {
       .select(col(idCol), col(centroidIdCol))
       .join(corpus.select(col(idCol), col(vecCol).cast("array<double>").as("__cv")), idCol)
       .withColumn("__cn", norm2(col("__cv")))
-    val cent = centroids.select(col(centroidIdCol), col(vecCol).cast("array<double>").as("__c"))
-    val qDist2 = dist2Fold(col("__qv"), col("__c"))
-    val probes = queries
-      .select(col(queryIdCol), col(vecCol).cast("array<double>").as("__qv"))
-      .crossJoin(broadcast(cent))
-      .filter(sameWidth(col("__qv"), col("__c"), "ivfTopK"))
-      .withColumn("__d", qDist2)
-      // nprobe nearest cells per query: sort the tiny per-query cell list
-      // in an aggregate (K entries), no window over the corpus
-      .groupBy(col(queryIdCol))
-      .agg(first(col("__qv")).as("__qv"),
-        slice(array_sort(collect_list(struct(col("__d"), col(centroidIdCol)))),
-          1, nprobe).as("__cells"))
-      .select(col(queryIdCol), col("__qv"),
-        explode(col("__cells")).as("__cell"))
-      .select(col(queryIdCol), col("__qv"),
-        col(s"__cell.$centroidIdCol").as(centroidIdCol))
+    val probes = probeCells(queries, centroids, nprobe, "ivfTopK", vecCol,
+        queryIdCol, centroidIdCol)
       .withColumn("__qn", norm2(col("__qv")))
     val scored = probes.join(lists, Seq(centroidIdCol))
       .filter(sameWidth(col("__qv"), col("__cv"), "ivfTopK"))

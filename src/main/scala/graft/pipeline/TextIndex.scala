@@ -179,15 +179,22 @@ object TextIndex {
     * the full-corpus oracle). This is how a production lexical index
     * absorbs a daily crawl batch without re-tokenizing the corpus.
     *
-    * The old stats row is collected first (a 1-row O(model) handoff) so
-    * the overwrite never reads the table it replaces.
+    * The batch's (n, Σdl) are observed metrics of the postings write; the
+    * old stats row is collected (a 1-row O(model) handoff) so the
+    * overwrite never reads the table it replaces.
     */
   def appendToBm25Index(newDocs: DataFrame, table: String,
       textCol: String = "text", idCol: String = "doc_id",
       buckets: Int = 16): Unit = {
     val spark = newDocs.sparkSession
+    // the batch's (n, Σdl) ride the postings write as observed metrics, so
+    // the batch is tokenized once and the stats need no job of their own
+    val batchStats = new org.apache.spark.sql.Observation()
     val base = newDocs.select(col(idCol), Dedup.words(col(textCol)).as("__w"))
       .withColumn("dl", size(col("__w")).cast("double"))
+      .observe(batchStats, count(lit(1)).as("n"),
+        coalesce(sum(col("dl").cast("decimal(28,6)")),
+          lit(0).cast("decimal(28,6)")).as("s"))
     base.select(col(idCol), col("dl"), explode(col("__w")).as("term"))
       .groupBy(col("term"), col(idCol), col("dl"))
       .agg(count(lit(1)).cast("double").as("tf"))
@@ -199,11 +206,9 @@ object TextIndex {
       .saveAsTable(table)
     val old = spark.table(s"${table}_stats")
       .select(col("n_docs"), col("sum_dl")).head()
-    val batch = base.agg(count(lit(1)).as("n"),
-      coalesce(sum(col("dl").cast("decimal(28,6)")),
-        lit(0).cast("decimal(28,6)")).as("s")).head()
-    val n = old.getLong(0) + batch.getLong(0)
-    val sumDl = old.getDecimal(1).add(batch.getDecimal(1))
+    val batch = batchStats.get
+    val n = old.getLong(0) + batch("n").asInstanceOf[Long]
+    val sumDl = old.getDecimal(1).add(batch("s").asInstanceOf[java.math.BigDecimal])
     spark.sql(
       s"""SELECT CAST($n AS BIGINT) AS n_docs,
          |  CAST(CAST('${sumDl.toPlainString}' AS DECIMAL(28,6)) AS DOUBLE)

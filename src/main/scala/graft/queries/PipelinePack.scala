@@ -1568,7 +1568,7 @@ object PipelinePack extends QueryPack {
         .orderBy(col("query_id"), col("rank"))
     }),
 
-    // IVF coarse quantization: nearest of 5 broadcast centroids per vector
+    // IVF coarse quantization: nearest of 5 driver-held centroids per vector
     "q54_ivf_assign" -> ((s, d) => {
       val corpus = Tables.embeddings(s, d)
       val centroids = corpus.filter(col("vec_id") % 100 === 1)

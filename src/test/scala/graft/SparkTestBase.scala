@@ -1,11 +1,57 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for Spark-backed specs (one JVM-wide session). */
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
+
+  /** Jobs `body` starts and shuffle-map stages it runs (stages that write
+    * shuffle output), counted by a SparkListener on the job group `body`
+    * runs in. The listener bus is asynchronous but delivers in order, so
+    * once a later marker job's end is seen, every event of `body` has been
+    * too.
+    */
+  protected def traced(body: => Unit): (Int, Int) = {
+    val sc = spark.sparkContext
+    val group = s"traced-${java.util.UUID.randomUUID()}"
+    val (jobs, shuffleStages, markerJob) =
+      (new AtomicInteger, new AtomicInteger, new AtomicInteger(-1))
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val flushed = new CountDownLatch(1)
+    def groupOf(p: java.util.Properties) =
+      Option(p).map(_.getProperty("spark.jobGroup.id")).orNull
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groupOf(e.properties) match {
+          case `group` => jobs.incrementAndGet()
+          case g if g == s"$group-marker" => markerJob.set(e.jobId)
+          case _ =>
+        }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (groupOf(e.properties) == group) stages.add(e.stageInfo.stageId)
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (stages.contains(e.stageInfo.stageId) &&
+            e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
+          shuffleStages.incrementAndGet()
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerJob.get) flushed.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "body under test")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-marker", "listener flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, TimeUnit.SECONDS), "listener bus did not flush")
+    } finally sc.removeSparkListener(listener)
+    (jobs.get, shuffleStages.get)
+  }
 }
 
 object SparkTestBase {

@@ -95,10 +95,11 @@ class PlanShapeSpec extends SparkTestBase {
       k = 3, shortlist = 10, m = 2, subDim = 8, nprobe = 2)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"), s"CartesianProduct in:\n$plan")
-    // the only nested-loop joins are stage 1's broadcast MODEL crossJoins
-    // (queries/vectors x centroids, identifiable by their width-check
-    // condition); the rerank stage itself must add none — its corpus and
-    // query joins are keyed and broadcast-hash
+    // the only nested-loop join is stage 1's probe crossJoin (queries x
+    // the broadcast centroids, identifiable by its width-check condition;
+    // the index build is a kernel projection); the rerank stage itself
+    // must add none — its corpus and query joins are keyed and
+    // broadcast-hash
     val bnlj = plan.linesIterator
       .filter(_.contains("BroadcastNestedLoopJoin")).toSeq
     assert(bnlj.forall(_.contains("vector width mismatch")),

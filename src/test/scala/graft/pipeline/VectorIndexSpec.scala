@@ -212,5 +212,13 @@ class VectorIndexSpec extends SparkTestBase {
       .queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"), s"CartesianProduct in:\n$plan")
     assert(plan.contains("BroadcastHashJoin"), s"probe join must broadcast:\n$plan")
+    // and at run time the probe side prunes the index scan dynamically
+    val search = VectorIndex.searchIndex(idx, cent, cb, queries,
+      k = 3, m = 2, subDim = 8, nprobe = 1)
+    search.collect()
+    val ran = search.queryExecution.executedPlan.toString
+    assert(ran.linesIterator.exists(l => l.contains("PartitionFilters") &&
+      l.contains("dynamicpruningexpression")),
+      s"index scan must carry a dynamic partition filter:\n$ran")
   }
 }

@@ -1,13 +1,9 @@
 package graft.sources
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.SparkTestBase
 import graft.model._
 import graft.ops.RasterOps
 import org.apache.spark.SparkException
-import org.apache.spark.scheduler._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -26,48 +22,6 @@ class NgffWriteSpec extends SparkTestBase {
     Seq.tabulate(300)(i => (i % 2, i % 20, (i * 7) % 19, (i % 13 + 1).toDouble))
       .toDF("c", "y", "x", "value")
       .groupBy("c", "y", "x").agg(sum("value").as("value"))
-
-  /** Jobs `body` starts and shuffle-map stages it runs (stages that write
-    * shuffle output), counted by a SparkListener on the job group `body`
-    * runs in. The listener bus is asynchronous but delivers in order, so
-    * once a later marker job's end is seen, every event of `body` has been
-    * too.
-    */
-  private def traced(body: => Unit): (Int, Int) = {
-    val sc = spark.sparkContext
-    val group = s"ngff-write-${java.util.UUID.randomUUID()}"
-    val (jobs, shuffleStages, markerJob) =
-      (new AtomicInteger, new AtomicInteger, new AtomicInteger(-1))
-    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val flushed = new CountDownLatch(1)
-    def groupOf(p: java.util.Properties) =
-      Option(p).map(_.getProperty("spark.jobGroup.id")).orNull
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groupOf(e.properties) match {
-          case `group` => jobs.incrementAndGet()
-          case g if g == s"$group-marker" => markerJob.set(e.jobId)
-          case _ =>
-        }
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        if (groupOf(e.properties) == group) stages.add(e.stageInfo.stageId)
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        if (stages.contains(e.stageInfo.stageId) &&
-            e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
-          shuffleStages.incrementAndGet()
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == markerJob.get) flushed.countDown()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "write under test")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-marker", "listener flush")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(flushed.await(60, TimeUnit.SECONDS), "listener bus did not flush")
-    } finally sc.removeSparkListener(listener)
-    (jobs.get, shuffleStages.get)
-  }
 
   private def readBack(dir: String): Set[(Int, Int, Int, Double)] =
     RasterOps.tilesToPixels(NgffRaster.read(spark, dir)._1, tileSize = 8)
