@@ -2,6 +2,7 @@ package graft.model
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetOpen
 import java.nio.charset.StandardCharsets
 
 /** One element = manifest entry + its DataFrame(s).
@@ -322,9 +323,11 @@ object SpatialDataset {
     finally out.close()
   }
 
-  /** Read a container: manifest parse + lazy `spark.read.parquet` per element
-    * (reference `SpatialData.read`, spatialdata.py:1853-1882). `selection`
-    * restricts to named elements without touching the rest (partial read,
+  /** Read a container: manifest parse + lazy parquet open per element
+    * (reference `SpatialData.read`, spatialdata.py:1853-1882), with no
+    * Spark job: each element's schema comes from one parquet footer read
+    * on the driver ([[ParquetOpen.read]]). `selection` restricts to named
+    * elements without touching the rest (partial read,
     * `_io/io_zarr.py:33-83`).
     */
   def read(spark: SparkSession, root: String, selection: Option[Seq[String]] = None): SpatialDataset = {
@@ -348,13 +351,13 @@ object SpatialDataset {
       val dir = elementDir(root, m)
       val el =
         if (m.kind == ElementKind.Tables) {
-          val obs = spark.read.parquet(s"$dir/obs")
+          val obs = ParquetOpen.read(spark, s"$dir/obs")
           val xPath = new Path(s"$dir/X")
           val aux =
-            if (fs.exists(xPath)) Map("X" -> spark.read.parquet(s"$dir/X"))
+            if (fs.exists(xPath)) Map("X" -> ParquetOpen.read(spark, s"$dir/X"))
             else Map.empty[String, DataFrame]
           SpatialElement(m, obs, aux)
-        } else SpatialElement(m, spark.read.parquet(s"$dir/data"))
+        } else SpatialElement(m, ParquetOpen.read(spark, s"$dir/data"))
       m.name -> el
     }.toMap
     new SpatialDataset(spark, manifest, els)

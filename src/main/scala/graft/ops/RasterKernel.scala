@@ -4,16 +4,18 @@ import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Dense tile assembly kernel, invoked via `StaticInvoke` (the
+/** Tile payload kernels, invoked via `StaticInvoke` (the
   * [[graft.geom.GeomKernel]] / [[graft.pipeline.AdcKernel]] pattern) so a
-  * tile's payload is built by one codegen'd static call per tile.
+  * tile's payload is built or cut by one codegen'd static call per tile.
   *
   * Every long-form → tiled conversion ([[RasterOps.pixelsToTiles]],
   * [[RasterOps.pixelsToTilesExact]], [[RasterOps.pixelsToTiles3d]],
   * [[ImageTiles.tileBatch]]) groups its pixels by tile, collects the
   * row-major in-tile positions and the values side by side, and hands the
   * two lists here — the numpy block write of the reference, one pass over
-  * the collected pixels into a zero-filled array.
+  * the collected pixels into a zero-filled array. The halo exchange
+  * ([[RasterOps.haloSent]], [[RasterOps.haloSent3d]]) cuts each margin
+  * slab it ships with [[slab]].
   */
 object RasterKernel {
 
@@ -48,6 +50,35 @@ object RasterKernel {
       seen(p >>> 6) |= bit
       out(p) = value.getDouble(i)
       i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  /** The `sh` x `sw` block at row `r0`, column `c0` of a row-major tile
+    * `w` pixels wide, row-major: the margin slab one halo copy ships.
+    * Refuses a block reaching past the payload (a tile whose `px` is
+    * shorter than its `h` x `w`) and a null pixel inside the block: the
+    * halo kernels read doubles, and a silent 0.0 would be a wrong
+    * neighbour value.
+    */
+  def slab(px: ArrayData, w: Int, r0: Int, c0: Int, sh: Int, sw: Int): ArrayData = {
+    if (sh > 0 && sw > 0 && (r0 + sh - 1) * w + c0 + sw > px.numElements())
+      throw new IllegalArgumentException(
+        s"halo slab: ${sh}x$sw block at ($r0, $c0) of a $w-wide tile reaches " +
+          s"past its ${px.numElements()} pixels")
+    val out = new Array[Double](sh * sw)
+    var r = 0
+    while (r < sh) {
+      var c = 0
+      val from = (r0 + r) * w + c0
+      while (c < sw) {
+        if (px.isNullAt(from + c))
+          throw new IllegalArgumentException(
+            s"halo slab: null pixel at in-tile position ${from + c}")
+        out(r * sw + c) = px.getDouble(from + c)
+        c += 1
+      }
+      r += 1
     }
     UnsafeArrayData.fromPrimitiveArray(out)
   }

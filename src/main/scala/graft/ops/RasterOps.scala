@@ -197,6 +197,15 @@ object RasterOps {
   private val haloOffsets =
     Seq((-1, -1), (-1, 0), (-1, 1), (0, -1), (0, 1), (1, -1), (1, 0), (1, 1))
 
+  /** The 3D copies of a tile besides itself: every (dz, dy, dx) with dz in
+    * [-depthZ, depthZ] over the 8-neighbour ring plus the pure-z column.
+    */
+  private def haloOffsets3d(depthZ: Int): Seq[(Int, Int, Int)] = for {
+    dz <- -depthZ to depthZ
+    (dy, dx) <- (0, 0) +: haloOffsets
+    if !(dz == 0 && dy == 0 && dx == 0)
+  } yield (dz, dy, dx)
+
   /** The halo exchange: each tile, exploded into its 8 neighbor copies,
     * keyed by the RECEIVING tile and clipped to the `depth`-wide margin
     * facing that receiver. A copy to the tile below ships the sender's
@@ -205,35 +214,80 @@ object RasterOps {
     * moves ~(4*depth*TS + 4*depth^2) pixels per tile instead of 8 full
     * tiles (at depth 1, TS 64: ~1.06x the raster bytes vs the 9x
     * whole-tile shipping would cost). This mirrors dask `map_overlap`'s
-    * ghost cells (map.py:110-126), which ships margins, not chunks.
-    * Package-visible so specs can pin the shipped payload sizes.
+    * ghost cells (map.py:110-126), which ships margins, not chunks. Each
+    * slab is cut by one codegen'd [[RasterKernel.slab]] call.
+    * [[mapRasterWithHalo]] ships these copies plus the tile itself in the
+    * same exchange. Package-visible so specs can pin the shipped payload
+    * sizes.
     */
-  private[graft] def haloSent(tiles: DataFrame, depth: Int): DataFrame = {
-    val neighborCols = haloOffsets.map { case (dy, dx) =>
-      // slab the sender ships toward a receiver at (dy, dx): the margin
-      // facing it, at most `depth` wide on each clipped axis
+  private[graft] def haloSent(tiles: DataFrame, depth: Int): DataFrame =
+    shipSlabs(tiles, depth, haloOffsets.map { case (dy, dx) => (0, dy, dx) },
+      planes = false)
+
+  /** The 3D halo exchange over z-stacked tiles ([[pixelsToTiles3d]]:
+    * one TSxTS tile per (c, z, tile_y, tile_x) — each tile is ONE z
+    * plane thick). Offsets run dz in [-depthZ, depthZ] x the 8-neighbor
+    * (dy, dx) ring plus the pure-z (dz, 0, 0) columns. In (y, x) only the
+    * `depth`-wide margin facing the receiver ships, exactly like
+    * [[haloSent]]; in z a kernel of half-extent depthZ needs WHOLE
+    * adjacent planes (the chunk is 1 plane thick), so the (dz, 0, 0)
+    * copies ship full tiles — ~2*depthZ x the raster bytes, the same
+    * ghost-cell cost dask `map_overlap(depth={z:k})` pays on
+    * (1, ty, tx)-chunked arrays (map.py:110-126 is dim-generic). A
+    * z-thick re-chunk is the lever when depthZ grows; for the blur/
+    * morphology kernels here depthZ is 1-2.
+    */
+  private[graft] def haloSent3d(tiles: DataFrame, depth: Int,
+      depthZ: Int): DataFrame =
+    shipSlabs(tiles, depth, haloOffsets3d(depthZ), planes = true)
+
+  /** One row per (tile, offset): the margin slab the tile ships toward
+    * the receiver at (dz, dy, dx), keyed by the receiver — `n_h` x `n_w`
+    * pixels in `n_px`, at most `depth` wide on each clipped axis. The
+    * (dz, 0, 0) copies are the whole tile. With `planes` the rows carry
+    * `dz` and the receiving `z`; without, dz must be 0 throughout.
+    */
+  private def shipSlabs(tiles: DataFrame, depth: Int,
+      offsets: Seq[(Int, Int, Int)], planes: Boolean): DataFrame = {
+    val copies = offsets.map { case (dz, dy, dx) =>
       val sh = if (dy == 0) col("h") else least(lit(depth), col("h"))
       val sw = if (dx == 0) col("w") else least(lit(depth), col("w"))
-      val r0 = if (dy == 1) col("h") - sh else lit(0)
-      val c0 = if (dx == 1) col("w") - sw else lit(0)
       val pay =
         if (dy == 0 && dx == 0) col("px")
-        else filter(col("px"), (_, i) => {
-          val r = floor(i / col("w")).cast("int")
-          val cc = i % col("w")
-          val rowOk = if (dy == 0) lit(true) else r >= r0 && r < r0 + sh
-          val colOk = if (dx == 0) lit(true) else cc >= c0 && cc < c0 + sw
-          rowOk && colOk
-        })
-      struct(lit(dy).as("dy"), lit(dx).as("dx"),
-        (col("tile_y") + dy).as("to_y"), (col("tile_x") + dx).as("to_x"),
+        else Bridge.staticInvoke(Kernel, ArrayType(DoubleType, containsNull = false),
+          "slab", Seq(col("px"), col("w"),
+            if (dy == 1) col("h") - sh else lit(0),
+            if (dx == 1) col("w") - sw else lit(0), sh, sw),
+          ArrayType(DoubleType) +: Seq.fill(5)(IntegerType), returnNullable = false)
+      struct(lit(dz).as("dz"), lit(dy).as("dy"), lit(dx).as("dx"),
         sh.cast("int").as("n_h"), sw.cast("int").as("n_w"), pay.as("n_px"))
     }
-    tiles.select(col("scale"), col("c"), explode(array(neighborCols: _*)).as("o"))
-      .select(col("scale"), col("c"), col("o.n_px").as("n_px"),
+    val (z, toZ) =
+      if (planes) (Seq(col("z")), Seq(col("o.dz").as("dz"), (col("z") + col("o.dz")).as("z")))
+      else (Nil, Nil)
+    tiles.select(Seq(col("scale"), col("c"), col("tile_y"), col("tile_x")) ++ z :+
+        explode(array(copies: _*)).as("o"): _*)
+      .select(Seq(col("scale"), col("c"), col("o.n_px").as("n_px"),
         col("o.n_h").as("n_h"), col("o.n_w").as("n_w"),
         col("o.dy").as("dy"), col("o.dx").as("dx"),
-        col("o.to_y").as("tile_y"), col("o.to_x").as("tile_x"))
+        (col("tile_y") + col("o.dy")).as("tile_y"),
+        (col("tile_x") + col("o.dx")).as("tile_x")) ++ toZ: _*)
+  }
+
+  /** The slabs one tile group received, keyed by the SENDER's offset as
+    * the receiver sees it (the negated shipping offset; the tile itself
+    * at the zero offset). Two slabs from one offset mean a sender whose
+    * tile key occurs twice, named by `tile(key)` in the refusal: keeping
+    * either copy would be an arbitrary choice.
+    */
+  private def received[K](slabs: Iterable[(K, HaloTile)])(
+      tile: K => String): Map[K, HaloTile] = {
+    val m = scala.collection.mutable.HashMap.empty[K, HaloTile]
+    slabs.foreach { case (k, t) =>
+      if (m.put(k, t).isDefined)
+        throw new IllegalArgumentException(s"${tile(k)} occurs more than once")
+    }
+    m.toMap
   }
 
   /** Clip a (possibly synthetic) neighbor tile to the margin the receiver
@@ -256,14 +310,18 @@ object RasterOps {
   }
 
   /** Neighborhood kernel with halo: assembles each tile with its 8
-    * neighbors' margin slabs (`map_overlap(depth)`, map.py:110-126) via
-    * an adjacency self-join, then hands `(h, w, center,
-    * Map[(dy,dx) -> HaloTile])` to `fn` per tile. Only the `depth`-wide
-    * strip facing each receiver ships (see [[haloSent]]) — pass the
-    * kernel's true depth; the default `depth = tileSize` ships whole
-    * tiles, supporting any kernel depth up to the tile size at ~9x the
-    * shuffle bytes. `boundary` fills in missing neighbors (raster edges)
-    * before `fn` runs — see [[Boundary]].
+    * neighbors' margin slabs (`map_overlap(depth)`, map.py:110-126) in ONE
+    * shuffle — every tile ships itself and its margin slabs
+    * ([[haloSent]]) keyed by the receiving tile, and one group per tile
+    * key collects them — then hands `(h, w, center,
+    * Map[(dy,dx) -> HaloTile])` to `fn` per tile. A group whose own tile
+    * is absent is an off-raster receiver and is dropped; a tile key that
+    * occurs twice is refused (`mapRasterWithHalo: tile (…) occurs more
+    * than once`). Only the `depth`-wide strip facing each receiver ships
+    * — pass the kernel's true depth; the default `depth = tileSize` ships
+    * whole tiles, supporting any kernel depth up to the tile size at ~9x
+    * the shuffle bytes. `boundary` fills in missing neighbors (raster
+    * edges) before `fn` runs — see [[Boundary]].
     */
   def mapRasterWithHalo(tiles: DataFrame, tileSize: Int = TS,
       boundary: Boundary = Boundary.NoPad, depth: Int = -1)(
@@ -274,34 +332,36 @@ object RasterOps {
     require(d <= tileSize,
       s"mapRasterWithHalo: depth $d exceeds tileSize $tileSize — pixels " +
         "beyond the 8-neighbor ring are never shipped; re-tile first")
-    // neighbor margin slabs keyed by the receiving tile, carrying the
-    // SLAB'S dims: partial edge tiles and depth clipping both mean a
-    // neighbor's stride can differ from the center tile's
-    val sent = haloSent(tiles, d)
-    val joined = tiles.join(sent, Seq("scale", "c", "tile_y", "tile_x"), "left")
-      .groupBy(col("scale"), col("c"), col("tile_y"), col("tile_x"),
-        col("h"), col("w"), col("px"))
+    // each slab carries ITS OWN dims: partial edge tiles and depth
+    // clipping both mean a neighbor's stride can differ from the center's
+    shipSlabs(tiles, d, (0, 0, 0) +: haloOffsets.map { case (dy, dx) => (0, dy, dx) },
+        planes = false)
+      .groupBy(col("scale"), col("c"), col("tile_y"), col("tile_x"))
       .agg(collect_list(struct(col("dy"), col("dx"), col("n_h"), col("n_w"),
         col("n_px"))).as("halo"))
-    joined
-      .as[(Int, Int, Int, Int, Int, Int, Array[Double],
-        Seq[(Option[Int], Option[Int], Option[Int], Option[Int], Option[Seq[Double]])])]
-      .map { case (scale, c, ty, tx, h, w, px, halo) =>
-        val real = halo.collect { case (Some(dy), Some(dx), Some(nh), Some(nw), Some(npx)) =>
-          // sender offset (dy,dx) seen from the receiver is (-dy,-dx)
-          ((-dy, -dx), HaloTile(nh, nw, npx.toArray))
-        }.toMap
-        val m = boundary match {
-          case Boundary.NoPad => real
-          case b =>
-            val synth = for {
-              off <- haloOffsets
-              if !real.contains(off)
-            } yield off -> synthNeighbor2d(HaloTile(h, w, px), real, off, d, b)
-            real ++ synth
+      .as[(Int, Int, Int, Int, Seq[(Int, Int, Int, Int, Array[Double])])]
+      .flatMap { case (scale, c, ty, tx, slabs) =>
+        val real = received(slabs.map { case (dy, dx, nh, nw, npx) =>
+          (-dy, -dx) -> HaloTile(nh, nw, npx)
+        }) { case (ky, kx) =>
+          s"mapRasterWithHalo: tile (scale=$scale, c=$c, tile_y=${ty + ky}, tile_x=${tx + kx})"
         }
-        (scale, c, ty, tx, h, w, fn(h, w, px, m))
+        real.get((0, 0)).map { center =>
+          val m = padHalo2d(center, real - ((0, 0)), d, boundary, haloOffsets)
+          (scale, c, ty, tx, center.h, center.w, fn(center.h, center.w, center.px, m))
+        }
       }.toDF("scale", "c", "tile_y", "tile_x", "h", "w", "px")
+  }
+
+  /** `real` plus a synthetic slab ([[synthNeighbor2d]]) at each of
+    * `offsets` that has no real one — `real` alone under NoPad.
+    */
+  private def padHalo2d(center: HaloTile, real: Map[(Int, Int), HaloTile],
+      depth: Int, boundary: Boundary,
+      offsets: Seq[(Int, Int)]): Map[(Int, Int), HaloTile] = boundary match {
+    case Boundary.NoPad => real
+    case b => real ++ offsets.filterNot(real.contains)
+      .map(off => off -> synthNeighbor2d(center, real, off, depth, b))
   }
 
   /** Synthesize ONE missing 2D neighbor slab (raster edge / sparse store)
@@ -340,58 +400,15 @@ object RasterOps {
 
   // ---- 3D halo (z-depth ghost planes over the z-stacked tile layout) ----
 
-  /** The 3D halo exchange over z-stacked tiles ([[pixelsToTiles3d]]:
-    * one TSxTS tile per (c, z, tile_y, tile_x) — each tile is ONE z
-    * plane thick). Offsets run dz in [-depthZ, depthZ] x the 8-neighbor
-    * (dy, dx) ring plus the pure-z (dz, 0, 0) columns. In (y, x) only the
-    * `depth`-wide margin facing the receiver ships, exactly like
-    * [[haloSent]]; in z a kernel of half-extent depthZ needs WHOLE
-    * adjacent planes (the chunk is 1 plane thick), so the (dz, 0, 0)
-    * copies ship full tiles — ~2*depthZ x the raster bytes, the same
-    * ghost-cell cost dask `map_overlap(depth={z:k})` pays on
-    * (1, ty, tx)-chunked arrays (map.py:110-126 is dim-generic). A
-    * z-thick re-chunk is the lever when depthZ grows; for the blur/
-    * morphology kernels here depthZ is 1-2.
-    */
-  private[graft] def haloSent3d(tiles: DataFrame, depth: Int,
-      depthZ: Int): DataFrame = {
-    val offsets = for {
-      dz <- -depthZ to depthZ
-      (dy, dx) <- (0, 0) +: haloOffsets
-      if !(dz == 0 && dy == 0 && dx == 0)
-    } yield (dz, dy, dx)
-    val neighborCols = offsets.map { case (dz, dy, dx) =>
-      val sh = if (dy == 0) col("h") else least(lit(depth), col("h"))
-      val sw = if (dx == 0) col("w") else least(lit(depth), col("w"))
-      val r0 = if (dy == 1) col("h") - sh else lit(0)
-      val c0 = if (dx == 1) col("w") - sw else lit(0)
-      val pay =
-        if (dy == 0 && dx == 0) col("px")
-        else filter(col("px"), (_, i) => {
-          val r = floor(i / col("w")).cast("int")
-          val cc = i % col("w")
-          val rowOk = if (dy == 0) lit(true) else r >= r0 && r < r0 + sh
-          val colOk = if (dx == 0) lit(true) else cc >= c0 && cc < c0 + sw
-          rowOk && colOk
-        })
-      struct(lit(dz).as("dz"), lit(dy).as("dy"), lit(dx).as("dx"),
-        (col("z") + dz).as("to_z"),
-        (col("tile_y") + dy).as("to_y"), (col("tile_x") + dx).as("to_x"),
-        sh.cast("int").as("n_h"), sw.cast("int").as("n_w"), pay.as("n_px"))
-    }
-    tiles.select(col("scale"), col("c"), explode(array(neighborCols: _*)).as("o"))
-      .select(col("scale"), col("c"), col("o.n_px").as("n_px"),
-        col("o.n_h").as("n_h"), col("o.n_w").as("n_w"),
-        col("o.dz").as("dz"), col("o.dy").as("dy"), col("o.dx").as("dx"),
-        col("o.to_z").as("z"),
-        col("o.to_y").as("tile_y"), col("o.to_x").as("tile_x"))
-  }
-
   /** 3D neighborhood kernel with halo — `map_overlap(depth)` with a z
     * component (the reference's map.py:110-126 applies to 3D dask arrays;
     * ghost margins ship in z too). Assembles each z-stacked tile with its
-    * neighbors' slabs keyed by (dz, dy, dx) and hands `(h, w, center,
-    * halo)` to `fn`. `boundary` fills missing neighbors; Reflect is
+    * neighbors' slabs keyed by (dz, dy, dx) in ONE shuffle, exactly like
+    * [[mapRasterWithHalo]]: every tile ships itself and its
+    * [[haloSent3d]] slabs, one group per (scale, c, z, tile_y, tile_x)
+    * collects them, groups without their own tile are dropped and a
+    * repeated tile key is refused. `fn` gets `(h, w, center, halo)`.
+    * `boundary` fills missing neighbors; Reflect is
     * numpy "symmetric" applied per axis — in z a missing plane resolves
     * to the mirrored IN-RANGE plane (multi-bounce for rasters thinner
     * than the reach), then the (dy, dx) margin of that plane is taken,
@@ -409,73 +426,75 @@ object RasterOps {
       s"mapRasterWithHalo3d: depth $d exceeds tileSize $tileSize — re-tile first")
     require(depthZ >= 1, s"mapRasterWithHalo3d: depthZ must be >= 1, got $depthZ")
     val dZ = depthZ
-    val sent = haloSent3d(tiles, d, dZ)
-    val joined = tiles.join(sent, Seq("scale", "c", "z", "tile_y", "tile_x"), "left")
-      .groupBy(col("scale"), col("c"), col("z"), col("tile_y"), col("tile_x"),
-        col("h"), col("w"), col("px"))
+    shipSlabs(tiles, d, (0, 0, 0) +: haloOffsets3d(dZ), planes = true)
+      .groupBy(col("scale"), col("c"), col("z"), col("tile_y"), col("tile_x"))
       .agg(collect_list(struct(col("dz"), col("dy"), col("dx"),
         col("n_h"), col("n_w"), col("n_px"))).as("halo"))
-    joined
-      .as[(Int, Int, Int, Int, Int, Int, Int, Array[Double],
-        Seq[(Option[Int], Option[Int], Option[Int], Option[Int], Option[Int], Option[Seq[Double]])])]
-      .map { case (scale, c, z, ty, tx, h, w, px, halo) =>
-        val real = halo.collect {
-          case (Some(dz), Some(dy), Some(dx), Some(nh), Some(nw), Some(npx)) =>
-            // sender offset seen from the receiver is the negation
-            ((-dz, -dy, -dx), HaloTile(nh, nw, npx.toArray))
-        }.toMap
-        val center = HaloTile(h, w, px)
-        val m = boundary match {
-          case Boundary.NoPad => real
-          case b =>
-            // the full plane at offset pz (pure-z shipments are whole tiles)
-            def planeCenter(pz: Int): Option[HaloTile] =
-              if (pz == 0) Some(center) else real.get((pz, 0, 0))
-            def real2d(pz: Int): Map[(Int, Int), HaloTile] = real.collect {
-              case ((z2, dy, dx), t) if z2 == pz && !(dy == 0 && dx == 0) =>
-                (dy, dx) -> t
-            }
-            // symmetric z-reflection on the known window: planes exist
-            // contiguously, so a missing (dz, 0, 0) marks the raster edge;
-            // mirror across it (and across the opposite edge if the raster
-            // is thinner than the reach — numpy's multi-bounce)
-            def reflectZ(dz: Int): Int = {
-              def extent(sign: Int): Int = {
-                var e = 0
-                while (e < dZ && planeCenter(sign * (e + 1)).isDefined) e += 1
-                e
-              }
-              val (ePos, eNeg) = (extent(1), extent(-1))
-              var r = dz
-              var guard = 0
-              while ((r > ePos || r < -eNeg) && guard < 8) {
-                if (r > ePos) r = 2 * ePos + 1 - r
-                if (r < -eNeg) r = -2 * eNeg - 1 - r
-                guard += 1
-              }
-              r
-            }
-            val offsets = for {
-              dz <- -dZ to dZ
-              (dy, dx) <- (0, 0) +: haloOffsets
-              if !(dz == 0 && dy == 0 && dx == 0)
-            } yield (dz, dy, dx)
-            val synth = for {
-              off @ (dz, dy, dx) <- offsets
-              if !real.contains(off)
-            } yield off -> (b match {
-              case Boundary.Constant(v) =>
-                clipHalo(HaloTile(h, w, Array.fill(h * w)(v)), dy, dx, d)
-              case _ =>
-                val pz = if (planeCenter(dz).isDefined) dz else reflectZ(dz)
-                if (dy == 0 && dx == 0) planeCenter(pz).get
-                else real.getOrElse((pz, dy, dx),
-                  synthNeighbor2d(planeCenter(pz).get, real2d(pz), (dy, dx), d, b))
-            })
-            real ++ synth
+      .as[(Int, Int, Int, Int, Int, Seq[(Int, Int, Int, Int, Int, Array[Double])])]
+      .flatMap { case (scale, c, z, ty, tx, slabs) =>
+        val all = received(slabs.map { case (dz, dy, dx, nh, nw, npx) =>
+          (-dz, -dy, -dx) -> HaloTile(nh, nw, npx)
+        }) { case (kz, ky, kx) =>
+          s"mapRasterWithHalo3d: tile (scale=$scale, c=$c, z=${z + kz}, " +
+            s"tile_y=${ty + ky}, tile_x=${tx + kx})"
         }
-        (scale, c, z, ty, tx, h, w, fn(h, w, px, m))
+        all.get((0, 0, 0)).map { center =>
+          val m = padHalo3d(center, all - ((0, 0, 0)), d, dZ, boundary)
+          (scale, c, z, ty, tx, center.h, center.w, fn(center.h, center.w, center.px, m))
+        }
       }.toDF("scale", "c", "z", "tile_y", "tile_x", "h", "w", "px")
+  }
+
+  /** `real` plus a synthetic slab at every 3D offset that has no real one
+    * (see [[mapRasterWithHalo3d]] for the rule) — `real` alone under NoPad.
+    */
+  private def padHalo3d(center: HaloTile, real: Map[(Int, Int, Int), HaloTile],
+      d: Int, dZ: Int, boundary: Boundary): Map[(Int, Int, Int), HaloTile] = {
+    val (h, w) = (center.h, center.w)
+    boundary match {
+      case Boundary.NoPad => real
+      case b =>
+        // the full plane at offset pz (pure-z shipments are whole tiles)
+        def planeCenter(pz: Int): Option[HaloTile] =
+          if (pz == 0) Some(center) else real.get((pz, 0, 0))
+        def real2d(pz: Int): Map[(Int, Int), HaloTile] = real.collect {
+          case ((z2, dy, dx), t) if z2 == pz && !(dy == 0 && dx == 0) =>
+            (dy, dx) -> t
+        }
+        // symmetric z-reflection on the known window: planes exist
+        // contiguously, so a missing (dz, 0, 0) marks the raster edge;
+        // mirror across it (and across the opposite edge if the raster
+        // is thinner than the reach — numpy's multi-bounce)
+        def reflectZ(dz: Int): Int = {
+          def extent(sign: Int): Int = {
+            var e = 0
+            while (e < dZ && planeCenter(sign * (e + 1)).isDefined) e += 1
+            e
+          }
+          val (ePos, eNeg) = (extent(1), extent(-1))
+          var r = dz
+          var guard = 0
+          while ((r > ePos || r < -eNeg) && guard < 8) {
+            if (r > ePos) r = 2 * ePos + 1 - r
+            if (r < -eNeg) r = -2 * eNeg - 1 - r
+            guard += 1
+          }
+          r
+        }
+        val synth = for {
+          off @ (dz, dy, dx) <- haloOffsets3d(dZ)
+          if !real.contains(off)
+        } yield off -> (b match {
+          case Boundary.Constant(v) =>
+            clipHalo(HaloTile(h, w, Array.fill(h * w)(v)), dy, dx, d)
+          case _ =>
+            val pz = if (planeCenter(dz).isDefined) dz else reflectZ(dz)
+            if (dy == 0 && dx == 0) planeCenter(pz).get
+            else real.getOrElse((pz, dy, dx),
+              synthNeighbor2d(planeCenter(pz).get, real2d(pz), (dy, dx), d, b))
+        })
+        real ++ synth
+    }
   }
 
   /** Reader over a 3D-assembled halo: value at plane offset pz, row r,
@@ -544,10 +563,10 @@ object RasterOps {
     * clamped to the raster). Integer-valued rasters stay engine-exact: 9
     * small-int doubles sum exactly in any order, then one division.
     *
-    * Scale shape: one tile->neighbor equi-join (keyed by tile coords) and
-    * a per-tile kernel — no corpus-wide shuffle beyond the halo exchange,
-    * which ships only the depth-1 margin strips (~(1 + 2/TS)^2 ≈ 1.03x
-    * the raster bytes at TS 64 — dask map_overlap's ghost-cell cost).
+    * Scale shape: one shuffle keyed by tile coords ([[mapRasterWithHalo]])
+    * and a per-tile kernel — the halo exchange ships each tile once plus
+    * only its depth-1 margin strips (~(1 + 2/TS)^2 ≈ 1.03x the raster
+    * bytes at TS 64 for the strips — dask map_overlap's ghost-cell cost).
     */
   def meanBlur3x3(tiles: DataFrame, tileSize: Int = TS,
       boundary: Boundary = Boundary.Reflect): DataFrame =
@@ -618,35 +637,59 @@ object RasterOps {
     * standard smoothing/anti-alias kernel (Burt/Adelson 1983 Gaussian
     * pyramids use exactly this tap). Separability is the point at scale:
     * two 5-tap passes cost 10 reads/pixel where the equivalent direct
-    * 5x5 costs 25, at the price of a SECOND depth-2 halo exchange
-    * (~2·(1+4d/TS)x vs 1x margin bytes) — the classic compute-vs-shuffle
-    * trade, chosen here because per-pixel kernel work grows linearly
-    * with depth instead of quadratically. Exactness: binomial weights
-    * are dyadic, so on integer-valued rasters pass 1 emits exact
-    * multiples of 1/16 and pass 2 exact multiples of 1/256 — bit-equal
-    * to the direct 2D outer-product kernel on any engine. The `Reflect`
-    * boundary commutes with per-axis passes (symmetric padding is a
-    * tensor-product extension), so edge pixels also match the direct
-    * form.
+    * 5x5 costs 25. Both passes run inside ONE depth-2 halo exchange: the
+    * vertical pass covers the tile plus the 2 columns each real
+    * horizontal neighbour shipped (read with the vertical context that
+    * neighbour's own pass would see: the diagonal corner blocks, or the
+    * boundary rule on the neighbour's columns), and the horizontal pass
+    * reads that buffer. Where no real horizontal neighbour exists, the
+    * columns past the tile take `boundary` applied to the vertical pass's
+    * output (mirror for Reflect, the constant, the clamp for NoPad) — the
+    * same values a second exchange of the pass-1 tiles would ship, so the
+    * output is bit-identical to two chained depth-2 halo passes for every
+    * boundary. Exactness: binomial weights are dyadic, so on
+    * integer-valued rasters pass 1 emits exact multiples of 1/16 and pass
+    * 2 exact multiples of 1/256 — bit-equal to the direct 2D
+    * outer-product kernel on any engine. The `Reflect` boundary commutes
+    * with per-axis passes (symmetric padding is a tensor-product
+    * extension), so edge pixels also match the direct form.
     */
   def binomialBlur5(tiles: DataFrame, tileSize: Int = TS,
-      boundary: Boundary = Boundary.Reflect): DataFrame = {
-    val wts = Array(1.0, 4.0, 6.0, 4.0, 1.0)
-    def pass(in: DataFrame, vertical: Boolean) =
-      mapRasterWithHalo(in, tileSize, boundary, depth = 2) { (h, w, px, halo) =>
-        val at = haloReader(h, w, px, halo, 2, "binomialBlur5")
-        Array.tabulate(h * w) { i =>
-          val r = i / w; val c = i % w
-          var s = 0.0
-          var k = -2
-          while (k <= 2) {
-            s += wts(k + 2) * (if (vertical) at(r + k, c) else at(r, c + k))
-            k += 1
-          }
-          s / 16.0
-        }
+      boundary: Boundary = Boundary.Reflect): DataFrame =
+    mapRasterWithHalo(tiles, tileSize, Boundary.NoPad, depth = 2) { (h, w, px, real) =>
+      // pass 1 over a horizontal neighbour's shipped columns: above and
+      // below them sit the diagonal corner blocks this tile received
+      val sides = for {
+        dx <- Seq(-1, 1)
+        cols <- real.get((0, dx))
+      } yield (0, dx) -> binomialPass(cols,
+        Seq(-1, 1).flatMap(dy => real.get((dy, dx)).map((dy, 0) -> _)).toMap,
+        boundary, vertical = true)
+      binomialPass(binomialPass(HaloTile(h, w, px), real, boundary, vertical = true),
+        sides.toMap, boundary, vertical = false).px
+    }
+
+  private val binomialWeights = Array(1.0, 4.0, 6.0, 4.0, 1.0)
+
+  /** One [1,4,6,4,1]/16 pass of [[binomialBlur5]] over `t`, whose
+    * neighbours in the pass's direction are `ring` (padded by `boundary`
+    * where absent).
+    */
+  private def binomialPass(t: HaloTile, ring: Map[(Int, Int), HaloTile],
+      boundary: Boundary, vertical: Boolean): HaloTile = {
+    val sides = if (vertical) Seq((-1, 0), (1, 0)) else Seq((0, -1), (0, 1))
+    val at = haloReader(t.h, t.w, t.px, padHalo2d(t, ring, 2, boundary, sides),
+      2, "binomialBlur5")
+    HaloTile(t.h, t.w, Array.tabulate(t.h * t.w) { i =>
+      val r = i / t.w; val c = i % t.w
+      var s = 0.0
+      var k = -2
+      while (k <= 2) {
+        s += binomialWeights(k + 2) * (if (vertical) at(r + k, c) else at(r, c + k))
+        k += 1
       }
-    pass(pass(tiles, vertical = true), vertical = false)
+      s / 16.0
+    })
   }
 
   /** (2·depth+1)-square MORPHOLOGICAL dilate/erode — the flat-structuring-

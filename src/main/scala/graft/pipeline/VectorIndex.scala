@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetOpen
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
@@ -73,13 +74,15 @@ object VectorIndex {
       .repartition(col(centroidIdCol)) // one task per cell — see writeIndex
       .write.mode("append").partitionBy(centroidIdCol).parquet(path)
 
-  /** Read the at-rest index back. The partition column comes back typed by
-    * directory-name inference (int); it is cast back to long so the probe
-    * join key matches the centroid table exactly.
+  /** Read the at-rest index back, with no Spark job: the schema comes
+    * from one parquet footer read on the driver ([[ParquetOpen.read]]).
+    * The partition column comes back typed by directory-name inference
+    * (int); it is cast back to long so the probe join key matches the
+    * centroid table exactly.
     */
   def readIndex(spark: SparkSession, path: String,
       centroidIdCol: String = "centroid_id"): DataFrame = {
-    val df = spark.read.parquet(path)
+    val df = ParquetOpen.read(spark, path)
     df.withColumn(centroidIdCol, col(centroidIdCol).cast("long"))
   }
 

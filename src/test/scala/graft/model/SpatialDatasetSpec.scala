@@ -48,6 +48,30 @@ class SpatialDatasetSpec extends SparkTestBase {
       .sameAs(Matrix(3, 3, Array(2, 0, 0, 0, 2, 0, 0, 0, 1))))
   }
 
+  test("read opens every element with no Spark job, schemas as spark.read.parquet infers them") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-sd-open").toString
+    fixture.write(dir)
+    var back: SpatialDataset = null
+    val (jobs, _) = traced { back = SpatialDataset.read(spark, dir) }
+    assert(jobs == 0)
+    // every element kind, the table's obs and its X matrix
+    val opened = back.manifest.elements.flatMap { m =>
+      val el = back.element(m.name)
+      val d = SpatialDataset.elementDir(dir, m)
+      if (m.kind == ElementKind.Tables) Seq(s"$d/obs" -> el.obs, s"$d/X" -> el.x)
+      else Seq(s"$d/data" -> el.data)
+    }
+    assert(opened.size == 5)
+    opened.foreach { case (d, df) =>
+      assert(df.schema == spark.read.parquet(d).schema, d)
+      val (j, _) = traced {
+        assert(org.apache.spark.sql.execution.datasources.parquet.ParquetOpen
+          .read(spark, d).schema == df.schema)
+      }
+      assert(j == 0, d)
+    }
+  }
+
   test("partial read by selection") {
     val dir = java.nio.file.Files.createTempDirectory("graft-sd2").toString
     fixture.write(dir)

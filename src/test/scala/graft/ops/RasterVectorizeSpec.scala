@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.SparkTestBase
 import graft.geom.GeomKernel
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class RasterVectorizeSpec extends SparkTestBase {
@@ -660,5 +661,127 @@ class RasterVectorizeSpec extends SparkTestBase {
     val (_, lvl0) = RasterOps.rasterizeRaster3d(pyr, "value", ident,
       Seq(0, 0, 0), Seq(8, 8, 8), 8, 8, 8, numLevels = 2)
     assert(lvl0 == 0)
+  }
+
+  // ---- one-shuffle halo assembly ----
+
+  private def messages(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+      .map(e => Option(e.getMessage).getOrElse("")).mkString(" | ")
+
+  private def tilesOf(df: DataFrame): Seq[((Int, Int), Seq[Long])] =
+    df.select("tile_y", "tile_x", "px").as[(Int, Int, Seq[Double])].collect()
+      .map { case (ty, tx, px) => (ty, tx) -> px.map(java.lang.Double.doubleToLongBits) }
+      .sortBy(_._1).toSeq
+
+  /** The two chained depth-2 halo passes `binomialBlur5` ran before its
+    * passes were fused into one exchange: pass 2 reads pass 1's output of
+    * the neighbouring tiles, or `b` applied to pass 1's own output.
+    */
+  private def twoPassBinomial(tiles: DataFrame, ts: Int,
+      b: RasterOps.Boundary): DataFrame = {
+    val wts = Array(1.0, 4.0, 6.0, 4.0, 1.0)
+    def pass(in: DataFrame, vertical: Boolean) =
+      RasterOps.mapRasterWithHalo(in, ts, b, depth = 2) { (h, w, px, halo) =>
+        def at(r: Int, c: Int): Double = {
+          val dy = if (r < 0) -1 else if (r >= h) 1 else 0
+          val dx = if (c < 0) -1 else if (c >= w) 1 else 0
+          if (dy == 0 && dx == 0) px(r * w + c)
+          else halo.get((dy, dx)) match {
+            case Some(t) =>
+              val rr = if (dy < 0) t.h + r else if (dy > 0) r - h else r
+              val cc = if (dx < 0) t.w + c else if (dx > 0) c - w else c
+              t.px(rr * t.w + cc)
+            case None => px(r.max(0).min(h - 1) * w + c.max(0).min(w - 1))
+          }
+        }
+        Array.tabulate(h * w) { i =>
+          val r = i / w; val c = i % w
+          var s = 0.0
+          var k = -2
+          while (k <= 2) {
+            s += wts(k + 2) * (if (vertical) at(r + k, c) else at(r, c + k))
+            k += 1
+          }
+          s / 16.0
+        }
+      }
+    pass(pass(tiles, vertical = true), vertical = false)
+  }
+
+  test("fused binomialBlur5 is bit-identical to the two-pass composition") {
+    // 11x10 raster in 4x4 tiles: a 3x3 grid whose last row is 3 high and
+    // last column 2 wide; non-dyadic values, so only the same arithmetic
+    // in the same order matches bit for bit
+    val hh = 11; val ww = 10; val ts = 4
+    val dense = Array.tabulate(hh * ww)(i => math.sin(i * 0.7) * 3.1 + 0.3)
+    val full = partialTiles(dense, hh, ww, ts)
+    // a sparse store: the one interior tile is missing
+    val holed = full.filter(!(col("tile_y") === 1 && col("tile_x") === 1))
+    for {
+      b <- Seq(RasterOps.Boundary.Reflect, RasterOps.Boundary.Constant(0.1),
+        RasterOps.Boundary.NoPad)
+      (tiles, n) <- Seq((full, 9), (holed, 8))
+    } {
+      val got = tilesOf(RasterOps.binomialBlur5(tiles, ts, b))
+      assert(got.size == n)
+      assert(got == tilesOf(twoPassBinomial(tiles, ts, b)), s"$b on $n tiles")
+    }
+  }
+
+  test("halo kernels run one shuffle; the fused binomialBlur5 no more jobs than a box blur") {
+    val pix = (for (c <- 0 until 2; y <- 0 until 16; x <- 0 until 16)
+      yield (c, y, x, ((y * 16 + x) % 7).toDouble)).toDF("c", "y", "x", "value")
+    val tiles = RasterOps.pixelsToTiles(pix, tileSize = 4).persist()
+    try {
+      tiles.count()
+      def run(df: => DataFrame): (Int, Int) = traced { df.collect(); () }
+      val (meanJobs, meanShuffles) = run(RasterOps.meanBlurBox(tiles, 1, 4))
+      val (_, medianShuffles) = run(RasterOps.medianFilterBox(tiles, 1, 4))
+      val (binJobs, binShuffles) = run(RasterOps.binomialBlur5(tiles, 4))
+      assert((meanShuffles, medianShuffles, binShuffles) == ((1, 1, 1)))
+      assert(binJobs <= meanJobs, s"binomialBlur5 $binJobs jobs, meanBlurBox $meanJobs")
+    } finally tiles.unpersist()
+  }
+
+  test("halo plans: no join, no aggregate keyed on px, no interpreted array filter") {
+    import org.apache.spark.sql.catalyst.expressions.ArrayFilter
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan}
+    // literal tiles: the only aggregate in a plan is the halo assembly's
+    val t2 = partialTiles(Array.tabulate(70)(_.toDouble), 7, 10, 4)
+    val t3 = Seq(0, 1).map(z => t2.withColumn("z", lit(z))).reduce(_ union _)
+    def has(plan: LogicalPlan)(p: PartialFunction[Any, Boolean]): Boolean =
+      plan.find(_.expressions.exists(_.find(e => p.applyOrElse(e, (_: Any) => false))
+        .isDefined)).isDefined
+    for ((what, df) <- Seq(
+        "mapRasterWithHalo" -> RasterOps.meanBlurBox(t2, 1, 4),
+        "binomialBlur5" -> RasterOps.binomialBlur5(t2, 4),
+        "mapRasterWithHalo3d" -> RasterOps.meanBlurBox3d(t3, 1, 1, 4))) {
+      val plan = df.queryExecution.optimizedPlan
+      assert(plan.collect { case j: Join => j }.isEmpty, s"$what joins")
+      val aggs = plan.collect { case a: Aggregate => a }
+      assert(aggs.size == 1, s"$what: ${aggs.size} aggregates")
+      assert(aggs.forall(_.groupingExpressions.forall(_.references.forall(_.name != "px"))),
+        s"$what groups on px")
+      assert(!has(plan) { case _: ArrayFilter => true }, s"$what filters arrays")
+      assert(has(plan) { case s: StaticInvoke => s.functionName == "slab" },
+        s"$what cuts no slab with the kernel")
+    }
+  }
+
+  test("halo assembly refuses a tile key that occurs twice (2D and 3D)") {
+    val t2 = partialTiles(Array.tabulate(64)(_.toDouble), 8, 8, 4)
+    val dup2 = t2.union(t2.filter(col("tile_y") === 1 && col("tile_x") === 0))
+    val m2 = messages(intercept[Exception](RasterOps.meanBlurBox(dup2, 1, 4).collect()))
+    assert(m2.contains(
+      "mapRasterWithHalo: tile (scale=0, c=0, tile_y=1, tile_x=0) occurs more than once"), m2)
+    val t3 = RasterOps.pixelsToTiles3d((for (z <- 0 until 2; y <- 0 until 8; x <- 0 until 8)
+      yield (0, z, y, x, 1.0)).toDF("c", "z", "y", "x", "value"), tileSize = 4)
+    val dup3 = t3.union(t3.filter(col("z") === 1 && col("tile_y") === 0 && col("tile_x") === 1))
+    val m3 = messages(intercept[Exception](
+      RasterOps.meanBlurBox3d(dup3, 1, 1, 4, RasterOps.Boundary.NoPad).collect()))
+    assert(m3.contains("mapRasterWithHalo3d: tile (scale=0, c=0, z=1, tile_y=0, " +
+      "tile_x=1) occurs more than once"), m3)
   }
 }

@@ -60,6 +60,25 @@ class VectorIndexSpec extends SparkTestBase {
     assert(got === search(full) && got.nonEmpty)
   }
 
+  test("readIndex opens a partitioned index with no Spark job, after an append too") {
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetOpen
+    val path = tmpPath("open")
+    VectorIndex.writeIndex(emb.filter(col("vec_id") % 3 =!= 0),
+      cent, cb, m = 2, subDim = 8, path)
+    VectorIndex.appendToIndex(emb.filter(col("vec_id") % 3 === 0),
+      cent, cb, m = 2, subDim = 8, path)
+    var opened: org.apache.spark.sql.DataFrame = null
+    var idx: org.apache.spark.sql.DataFrame = null
+    val (jobs, _) = traced {
+      opened = ParquetOpen.read(spark, path)
+      idx = VectorIndex.readIndex(spark, path)
+    }
+    assert(jobs == 0)
+    assert(opened.schema == spark.read.parquet(path).schema)
+    assert(idx.schema("centroid_id").dataType == org.apache.spark.sql.types.LongType)
+    assert(idx.count() == 200)
+  }
+
   test("index layout: one partition directory per cell; codes only, no raw vectors") {
     val path = tmpPath("layout")
     VectorIndex.writeIndex(emb, cent, cb, m = 2, subDim = 8, path)
