@@ -15,7 +15,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * two lists here — the numpy block write of the reference, one pass over
   * the collected pixels into a zero-filled array. The halo exchange
   * ([[RasterOps.haloSent]], [[RasterOps.haloSent3d]]) cuts each margin
-  * slab it ships with [[slab]].
+  * slab it ships with [[slab]]. The receiving side has no kernel here:
+  * [[RasterOps.mapRasterWithHalo]] places the slabs a tile received into
+  * one padded buffer, applies the boundary rule and notes which
+  * neighbours were real, all inside the typed `flatMap` that already
+  * runs the halo kernel's closure.
   */
 object RasterKernel {
 

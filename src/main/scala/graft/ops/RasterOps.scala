@@ -161,19 +161,25 @@ object RasterOps {
     tiles.withColumn("px", transform(col("px"), fn))
 
   /** Edge policy for [[mapRasterWithHalo]] when a neighbor tile is absent
-    * (`map_overlap(boundary=...)`, map.py:110-126 / dask.array.overlap):
-    *  - [[Boundary.NoPad]]: absent neighbors simply lack a map entry — the
-    *    kernel handles borders itself (the pre-round-8 behavior);
-    *  - [[Boundary.Reflect]]: a synthetic neighbor is materialized by
-    *    mirroring the CENTER tile across the shared edge/corner (numpy
-    *    "symmetric": the border pixel repeats), so an edge-tile kernel
-    *    sees the same neighborhood structure as an interior one;
-    *  - [[Boundary.Constant]]: a synthetic neighbor filled with `v`.
-    * Synthetic neighbors are built at the source tile's dims and then
-    * clipped to the same depth-wide margin slab a real neighbor would
-    * have shipped. Any missing neighbor counts as "outside the raster" —
-    * sparse stores that omit all-zero interior tiles should use
-    * `Constant(0)` or `NoPad`.
+    * (`map_overlap(boundary=...)`, map.py:110-126 / dask.array.overlap).
+    * The halo assembler applies it once, to the margins of the padded
+    * buffer a kernel reads, that no received neighbor filled:
+    *  - [[Boundary.NoPad]]: a missing margin reads the nearest pixel of the
+    *    tile itself (the clamped centre pixel; in 3D, of the centre
+    *    plane). 2D kernels learn which neighbors were real from the mask
+    *    [[mapRasterWithHalo]] passes;
+    *  - [[Boundary.Reflect]]: numpy "symmetric" padding of the GLOBAL
+    *    raster (the border pixel repeats, and an axis shorter than the
+    *    reach bounces again), so an edge-tile kernel sees the same
+    *    neighborhood structure as an interior one. A missing edge margin
+    *    mirrors the tile across the shared edge. A missing corner past
+    *    only the vertical axis (the horizontal edge neighbor is real) is
+    *    the vertical mirror OF THAT NEIGHBOR, symmetrically for the
+    *    horizontal axis; past both, or with both edge neighbors real (a
+    *    sparse store's hole), it is the double mirror of the tile;
+    *  - [[Boundary.Constant]]: a missing margin holds `v`.
+    * Any missing neighbor counts as "outside the raster" — sparse stores
+    * that omit all-zero interior tiles should use `Constant(0)` or `NoPad`.
     */
   sealed trait Boundary
   object Boundary {
@@ -181,18 +187,6 @@ object RasterOps {
     case object Reflect extends Boundary
     final case class Constant(v: Double) extends Boundary
   }
-
-  /** One neighbor slab as the halo kernel sees it: the SHIPPED payload's
-    * OWN dims plus its row-major pixels. Two things shape a slab:
-    * (1) edge tiles of a raster whose shape is not a chunk multiple are
-    * PARTIAL (`NgffRaster` emits h = min(chunk, shape - offset)); (2) the
-    * exchange ships only the `depth`-wide margin strip facing the
-    * receiver (a depth x depth block for corner neighbors). Kernels must
-    * index `px(r * w + c)` with THIS struct's `w`/`h`, never the
-    * center's, and must not reach more than `depth` pixels into a
-    * neighbor (the rest was never shipped).
-    */
-  final case class HaloTile(h: Int, w: Int, px: Array[Double])
 
   private val haloOffsets =
     Seq((-1, -1), (-1, 0), (-1, 1), (0, -1), (0, 1), (1, -1), (1, 0), (1, 1))
@@ -274,66 +268,35 @@ object RasterOps {
         (col("tile_x") + col("o.dx")).as("tile_x")) ++ toZ: _*)
   }
 
-  /** The slabs one tile group received, keyed by the SENDER's offset as
-    * the receiver sees it (the negated shipping offset; the tile itself
-    * at the zero offset). Two slabs from one offset mean a sender whose
-    * tile key occurs twice, named by `tile(key)` in the refusal: keeping
-    * either copy would be an arbitrary choice.
-    */
-  private def received[K](slabs: Iterable[(K, HaloTile)])(
-      tile: K => String): Map[K, HaloTile] = {
-    val m = scala.collection.mutable.HashMap.empty[K, HaloTile]
-    slabs.foreach { case (k, t) =>
-      if (m.put(k, t).isDefined)
-        throw new IllegalArgumentException(s"${tile(k)} occurs more than once")
-    }
-    m.toMap
-  }
-
-  /** Clip a (possibly synthetic) neighbor tile to the margin the receiver
-    * may legally read from key (kdy, kdx): the slab ADJACENT to the
-    * center — bottom rows of an above-neighbor, top rows of a
-    * below-neighbor, etc. Keeps synthetic boundary tiles byte-identical
-    * to what a real neighbor would have shipped.
-    */
-  private def clipHalo(t: HaloTile, kdy: Int, kdx: Int, depth: Int): HaloTile = {
-    val sh = if (kdy == 0) t.h else math.min(depth, t.h)
-    val sw = if (kdx == 0) t.w else math.min(depth, t.w)
-    if (sh == t.h && sw == t.w) t
-    else {
-      val r0 = if (kdy == -1) t.h - sh else 0
-      val c0 = if (kdx == -1) t.w - sw else 0
-      HaloTile(sh, sw, Array.tabulate(sh * sw) { i =>
-        t.px((r0 + i / sw) * t.w + (c0 + i % sw))
-      })
-    }
-  }
-
   /** Neighborhood kernel with halo: assembles each tile with its 8
     * neighbors' margin slabs (`map_overlap(depth)`, map.py:110-126) in ONE
     * shuffle — every tile ships itself and its margin slabs
     * ([[haloSent]]) keyed by the receiving tile, and one group per tile
-    * key collects them — then hands `(h, w, center,
-    * Map[(dy,dx) -> HaloTile])` to `fn` per tile. A group whose own tile
-    * is absent is an off-raster receiver and is dropped; a tile key that
-    * occurs twice is refused (`mapRasterWithHalo: tile (…) occurs more
-    * than once`). Only the `depth`-wide strip facing each receiver ships
-    * — pass the kernel's true depth; the default `depth = tileSize` ships
-    * whole tiles, supporting any kernel depth up to the tile size at ~9x
-    * the shuffle bytes. `boundary` fills in missing neighbors (raster
-    * edges) before `fn` runs — see [[Boundary]].
+    * key collects them — into one row-major padded buffer of
+    * (h + 2·depth) x (w + 2·depth) pixels, the block dask hands a
+    * `map_overlap` function ([[pad2d]]). `fn` gets `(h, w, buf, real)`:
+    * tile pixel (r, c), with r in [-depth, h + depth) and c in
+    * [-depth, w + depth), is `buf((r + depth) * (w + 2 * depth) + c +
+    * depth)`, and `real((dy + 1) * 3 + dx + 1)` says whether the neighbor
+    * at (dy, dx) was received; the margins of the others hold `boundary`'s
+    * fill ([[Boundary]]). A group whose own tile is absent is an
+    * off-raster receiver and is dropped. Refused, naming the tile: a tile
+    * key that occurs twice (`mapRasterWithHalo: tile (…) occurs more than
+    * once`), and a neighbor thinner than `depth` (its margin would need
+    * pixels beyond the 8-neighbor ring). Only the `depth`-wide strip
+    * facing each receiver ships — pass the kernel's true depth; the
+    * default `depth = tileSize` ships whole tiles, supporting any kernel
+    * depth up to the tile size at ~9x the shuffle bytes.
     */
   def mapRasterWithHalo(tiles: DataFrame, tileSize: Int = TS,
       boundary: Boundary = Boundary.NoPad, depth: Int = -1)(
-      fn: (Int, Int, Array[Double], Map[(Int, Int), HaloTile]) => Array[Double]): DataFrame = {
+      fn: (Int, Int, Array[Double], Array[Boolean]) => Array[Double]): DataFrame = {
     val spark = tiles.sparkSession
     import spark.implicits._
     val d = if (depth <= 0) tileSize else depth
     require(d <= tileSize,
       s"mapRasterWithHalo: depth $d exceeds tileSize $tileSize — pixels " +
         "beyond the 8-neighbor ring are never shipped; re-tile first")
-    // each slab carries ITS OWN dims: partial edge tiles and depth
-    // clipping both mean a neighbor's stride can differ from the center's
     shipSlabs(tiles, d, (0, 0, 0) +: haloOffsets.map { case (dy, dx) => (0, dy, dx) },
         planes = false)
       .groupBy(col("scale"), col("c"), col("tile_y"), col("tile_x"))
@@ -341,84 +304,51 @@ object RasterOps {
         col("n_px"))).as("halo"))
       .as[(Int, Int, Int, Int, Seq[(Int, Int, Int, Int, Array[Double])])]
       .flatMap { case (scale, c, ty, tx, slabs) =>
-        val real = received(slabs.map { case (dy, dx, nh, nw, npx) =>
-          (-dy, -dx) -> HaloTile(nh, nw, npx)
-        }) { case (ky, kx) =>
-          s"mapRasterWithHalo: tile (scale=$scale, c=$c, tile_y=${ty + ky}, tile_x=${tx + kx})"
-        }
-        real.get((0, 0)).map { center =>
-          val m = padHalo2d(center, real - ((0, 0)), d, boundary, haloOffsets)
-          (scale, c, ty, tx, center.h, center.w, fn(center.h, center.w, center.px, m))
+        slabs.find(s => s._1 == 0 && s._2 == 0).map { case (_, _, h, w, _) =>
+          val (buf, real) = pad2d(h, w, d, boundary, slabs) { (ky, kx) =>
+            s"mapRasterWithHalo: tile (scale=$scale, c=$c, tile_y=${ty + ky}, tile_x=${tx + kx})"
+          }
+          (scale, c, ty, tx, h, w, fn(h, w, buf, real))
         }
       }.toDF("scale", "c", "tile_y", "tile_x", "h", "w", "px")
   }
 
-  /** `real` plus a synthetic slab ([[synthNeighbor2d]]) at each of
-    * `offsets` that has no real one — `real` alone under NoPad.
+  /** The padded buffer and neighbor mask of one h x w tile from the slabs
+    * its group received (keyed by SHIPPING offset: the sender sits at the
+    * negated one). `tile(ky, kx)` names the tile at an offset.
     */
-  private def padHalo2d(center: HaloTile, real: Map[(Int, Int), HaloTile],
-      depth: Int, boundary: Boundary,
-      offsets: Seq[(Int, Int)]): Map[(Int, Int), HaloTile] = boundary match {
-    case Boundary.NoPad => real
-    case b => real ++ offsets.filterNot(real.contains)
-      .map(off => off -> synthNeighbor2d(center, real, off, depth, b))
+  private def pad2d(h: Int, w: Int, d: Int, boundary: Boundary,
+      slabs: Seq[(Int, Int, Int, Int, Array[Double])])(
+      tile: (Int, Int) => String): (Array[Double], Array[Boolean]) = {
+    val buf = new Array[Double]((h + 2 * d) * (w + 2 * d))
+    val real = new Array[Boolean](9)
+    slabs.foreach { case (dy, dx, nh, nw, px) =>
+      place(buf, 0, real, 0, h, w, d, -dy, -dx, nh, nw, px, tile(-dy, -dx))
+    }
+    padPlane(buf, 0, real, 0, h, w, d, boundary, 0, 0)
+    (buf, real)
   }
-
-  /** Synthesize ONE missing 2D neighbor slab (raster edge / sparse store)
-    * — shared by the 2D and 3D halo assemblers. Reflect = numpy
-    * "symmetric" padding of the GLOBAL raster: a missing EDGE neighbor
-    * mirrors the center across the shared edge; a missing DIAGONAL
-    * neighbor sits past the raster on one or both axes — past only the
-    * vertical axis (the horizontal edge-neighbor exists) it is the
-    * vertical mirror OF THAT NEIGHBOR (mirroring the center there would
-    * fabricate the wrong column block), symmetrically for the horizontal
-    * axis, and past both (a raster corner, or a sparse store) the double
-    * mirror of the center. Each mirror keeps its SOURCE's dims and
-    * stride; the result is clipped to the depth margin like a real
-    * shipment ([[clipHalo]]).
-    */
-  private def synthNeighbor2d(center: HaloTile, real: Map[(Int, Int), HaloTile],
-      off: (Int, Int), depth: Int, boundary: Boundary): HaloTile =
-    clipHalo(boundary match {
-      case Boundary.Constant(v) =>
-        HaloTile(center.h, center.w, Array.fill(center.h * center.w)(v))
-      case _ =>
-        val (dy, dx) = off
-        val (src, mirY, mirX) =
-          if (dy != 0 && dx != 0 && !real.contains((dy, 0)) && real.contains((0, dx)))
-            (real((0, dx)), true, false)
-          else if (dy != 0 && dx != 0 && real.contains((dy, 0)) && !real.contains((0, dx)))
-            (real((dy, 0)), false, true)
-          else (center, dy != 0, dx != 0)
-        HaloTile(src.h, src.w, Array.tabulate(src.h * src.w) { i =>
-          val r = i / src.w; val cc = i % src.w
-          val sr = if (mirY) src.h - 1 - r else r
-          val sc = if (mirX) src.w - 1 - cc else cc
-          src.px(sr * src.w + sc)
-        })
-    }, off._1, off._2, depth)
 
   // ---- 3D halo (z-depth ghost planes over the z-stacked tile layout) ----
 
   /** 3D neighborhood kernel with halo — `map_overlap(depth)` with a z
     * component (the reference's map.py:110-126 applies to 3D dask arrays;
     * ghost margins ship in z too). Assembles each z-stacked tile with its
-    * neighbors' slabs keyed by (dz, dy, dx) in ONE shuffle, exactly like
-    * [[mapRasterWithHalo]]: every tile ships itself and its
-    * [[haloSent3d]] slabs, one group per (scale, c, z, tile_y, tile_x)
-    * collects them, groups without their own tile are dropped and a
-    * repeated tile key is refused. `fn` gets `(h, w, center, halo)`.
-    * `boundary` fills missing neighbors; Reflect is
-    * numpy "symmetric" applied per axis — in z a missing plane resolves
-    * to the mirrored IN-RANGE plane (multi-bounce for rasters thinner
-    * than the reach), then the (dy, dx) margin of that plane is taken,
-    * 2D-synthesized through [[synthNeighbor2d]] when the plane's own
-    * (y, x) neighbor is past the raster (the full plane is always on
-    * hand: pure-z copies ship whole tiles).
+    * neighbors' slabs in ONE shuffle, exactly like [[mapRasterWithHalo]]:
+    * every tile ships itself and its [[haloSent3d]] slabs, one group per
+    * (scale, c, z, tile_y, tile_x) collects them, groups without their own
+    * tile are dropped, and a repeated tile key or a neighbor thinner than
+    * `depth` is refused. `fn` gets `(h, w, buf)`: 2·depthZ + 1 padded
+    * planes of (h + 2·depth) x (w + 2·depth) pixels, plane offset pz in
+    * [-depthZ, depthZ] first ([[pad3d]]). `boundary` fills each plane's
+    * missing margins by the 2D rule over that plane's own neighbors; a
+    * missing plane is, under Reflect, the plane numpy "symmetric" picks
+    * in z (bouncing as often as a volume thinner than the reach needs),
+    * under Constant `v`, and under NoPad the clamped centre plane.
     */
   def mapRasterWithHalo3d(tiles: DataFrame, tileSize: Int = TS,
       boundary: Boundary = Boundary.NoPad, depth: Int = -1, depthZ: Int = 1)(
-      fn: (Int, Int, Array[Double], Map[(Int, Int, Int), HaloTile]) => Array[Double]): DataFrame = {
+      fn: (Int, Int, Array[Double]) => Array[Double]): DataFrame = {
     val spark = tiles.sparkSession
     import spark.implicits._
     val d = if (depth <= 0) tileSize else depth
@@ -432,92 +362,123 @@ object RasterOps {
         col("n_h"), col("n_w"), col("n_px"))).as("halo"))
       .as[(Int, Int, Int, Int, Int, Seq[(Int, Int, Int, Int, Int, Array[Double])])]
       .flatMap { case (scale, c, z, ty, tx, slabs) =>
-        val all = received(slabs.map { case (dz, dy, dx, nh, nw, npx) =>
-          (-dz, -dy, -dx) -> HaloTile(nh, nw, npx)
-        }) { case (kz, ky, kx) =>
-          s"mapRasterWithHalo3d: tile (scale=$scale, c=$c, z=${z + kz}, " +
-            s"tile_y=${ty + ky}, tile_x=${tx + kx})"
-        }
-        all.get((0, 0, 0)).map { center =>
-          val m = padHalo3d(center, all - ((0, 0, 0)), d, dZ, boundary)
-          (scale, c, z, ty, tx, center.h, center.w, fn(center.h, center.w, center.px, m))
+        slabs.find(s => s._1 == 0 && s._2 == 0 && s._3 == 0).map { case (_, _, _, h, w, _) =>
+          val buf = pad3d(h, w, d, dZ, boundary, slabs) { (kz, ky, kx) =>
+            s"mapRasterWithHalo3d: tile (scale=$scale, c=$c, z=${z + kz}, " +
+              s"tile_y=${ty + ky}, tile_x=${tx + kx})"
+          }
+          (scale, c, z, ty, tx, h, w, fn(h, w, buf))
         }
       }.toDF("scale", "c", "z", "tile_y", "tile_x", "h", "w", "px")
   }
 
-  /** `real` plus a synthetic slab at every 3D offset that has no real one
-    * (see [[mapRasterWithHalo3d]] for the rule) — `real` alone under NoPad.
+  /** The 2·dZ + 1 padded planes of one h x w tile from the slabs its
+    * group received (shipping offsets, as in [[pad2d]]). Planes exist
+    * contiguously, so the first missing plane on each side marks the
+    * raster's z edge: the known planes span the whole volume wherever a
+    * reflection is needed.
     */
-  private def padHalo3d(center: HaloTile, real: Map[(Int, Int, Int), HaloTile],
-      d: Int, dZ: Int, boundary: Boundary): Map[(Int, Int, Int), HaloTile] = {
-    val (h, w) = (center.h, center.w)
-    boundary match {
-      case Boundary.NoPad => real
-      case b =>
-        // the full plane at offset pz (pure-z shipments are whole tiles)
-        def planeCenter(pz: Int): Option[HaloTile] =
-          if (pz == 0) Some(center) else real.get((pz, 0, 0))
-        def real2d(pz: Int): Map[(Int, Int), HaloTile] = real.collect {
-          case ((z2, dy, dx), t) if z2 == pz && !(dy == 0 && dx == 0) =>
-            (dy, dx) -> t
-        }
-        // symmetric z-reflection on the known window: planes exist
-        // contiguously, so a missing (dz, 0, 0) marks the raster edge;
-        // mirror across it (and across the opposite edge if the raster
-        // is thinner than the reach — numpy's multi-bounce)
-        def reflectZ(dz: Int): Int = {
-          def extent(sign: Int): Int = {
-            var e = 0
-            while (e < dZ && planeCenter(sign * (e + 1)).isDefined) e += 1
-            e
-          }
-          val (ePos, eNeg) = (extent(1), extent(-1))
-          var r = dz
-          var guard = 0
-          while ((r > ePos || r < -eNeg) && guard < 8) {
-            if (r > ePos) r = 2 * ePos + 1 - r
-            if (r < -eNeg) r = -2 * eNeg - 1 - r
-            guard += 1
-          }
-          r
-        }
-        val synth = for {
-          off @ (dz, dy, dx) <- haloOffsets3d(dZ)
-          if !real.contains(off)
-        } yield off -> (b match {
-          case Boundary.Constant(v) =>
-            clipHalo(HaloTile(h, w, Array.fill(h * w)(v)), dy, dx, d)
-          case _ =>
-            val pz = if (planeCenter(dz).isDefined) dz else reflectZ(dz)
-            if (dy == 0 && dx == 0) planeCenter(pz).get
-            else real.getOrElse((pz, dy, dx),
-              synthNeighbor2d(planeCenter(pz).get, real2d(pz), (dy, dx), d, b))
-        })
-        real ++ synth
+  private def pad3d(h: Int, w: Int, d: Int, dZ: Int, boundary: Boundary,
+      slabs: Seq[(Int, Int, Int, Int, Int, Array[Double])])(
+      tile: (Int, Int, Int) => String): Array[Double] = {
+    val plane = (h + 2 * d) * (w + 2 * d)
+    val buf = new Array[Double]((2 * dZ + 1) * plane)
+    val real = new Array[Boolean](9 * (2 * dZ + 1))
+    slabs.foreach { case (dz, dy, dx, nh, nw, px) =>
+      val p = dZ - dz
+      place(buf, p * plane, real, 9 * p, h, w, d, -dy, -dx, nh, nw, px, tile(-dz, -dy, -dx))
     }
+    def has(pz: Int) = real(9 * (pz + dZ) + ringIx(0, 0))
+    val above = (1 to dZ).takeWhile(has).size
+    val below = (1 to dZ).takeWhile(k => has(-k)).size
+    // real planes first: a missing one copies the plane it reflects to
+    for (pz <- (-dZ to dZ).sortBy(pz => !has(pz))) {
+      val from = if (has(pz)) pz else sym(pz + below, above + below + 1) - below
+      padPlane(buf, (pz + dZ) * plane, real, 9 * (pz + dZ), h, w, d, boundary,
+        (from + dZ) * plane, dZ * plane)
+    }
+    buf
   }
 
-  /** Reader over a 3D-assembled halo: value at plane offset pz, row r,
-    * col c (r/c may run `depth` outside the tile; pz in [-depthZ,
-    * depthZ]). The NoPad clamp mirrors [[haloReader]]'s: missing
-    * neighbors clamp to the nearest center-plane pixel.
+  /** Mask index of the neighbor at (dy, dx): the 3x3 ring, row-major. */
+  private def ringIx(dy: Int, dx: Int): Int = (dy + 1) * 3 + dx + 1
+
+  /** Rows (columns) [lo, hi) of a padded plane that the neighbor at
+    * offset k in {-1, 0, 1} fills, along an axis of tile length n.
     */
-  private def haloReader3d(h: Int, w: Int, px: Array[Double],
-      halo: Map[(Int, Int, Int), HaloTile], depth: Int,
-      op: String): (Int, Int, Int) => Double = { (pz, r, c) =>
-    val dy = if (r < 0) -1 else if (r >= h) 1 else 0
-    val dx = if (c < 0) -1 else if (c >= w) 1 else 0
-    if (pz == 0 && dy == 0 && dx == 0) px(r * w + c)
-    else halo.get((pz, dy, dx)) match {
-      case Some(t) =>
-        val rr = if (dy < 0) t.h + r else if (dy > 0) r - h else r
-        val cc = if (dx < 0) t.w + c else if (dx > 0) c - w else c
-        if (rr < 0 || rr >= t.h || cc < 0 || cc >= t.w)
-          throw new IllegalStateException(
-            s"$op: neighbor tile ${t.h}x${t.w} is thinner than " +
-              s"kernel depth $depth — re-tile with tiles >= depth in each dim")
-        t.px(rr * t.w + cc)
-      case None => px(r.max(0).min(h - 1) * w + c.max(0).min(w - 1))
+  private def band(k: Int, n: Int, d: Int): (Int, Int) =
+    if (k < 0) (-d, 0) else if (k == 0) (0, n) else (n, n + d)
+
+  /** numpy "symmetric" index of i on an axis of length n: the border
+    * repeats, with period 2n (-1 -> 0, n -> n - 1, and on past).
+    */
+  private def sym(i: Int, n: Int): Int = {
+    val m = Math.floorMod(i, 2 * n)
+    if (m < n) m else 2 * n - 1 - m
+  }
+
+  /** Copies the slab received from the neighbor at (dy, dx) into its band
+    * of the padded plane at `base` (its mask at `real(m + ringIx)`): an
+    * above neighbor's bottom rows fill [-d, 0), a same-row neighbor fills
+    * [0, h), a below neighbor's top rows [h, h + d); columns likewise.
+    * Refuses a second slab from one offset and a slab thinner than its
+    * band, naming the sending tile.
+    */
+  private def place(buf: Array[Double], base: Int, real: Array[Boolean], m: Int,
+      h: Int, w: Int, d: Int, dy: Int, dx: Int, nh: Int, nw: Int,
+      px: Array[Double], tile: => String): Unit = {
+    val k = m + ringIx(dy, dx)
+    if (real(k)) throw new IllegalArgumentException(s"$tile occurs more than once")
+    val (r0, r1) = band(dy, h, d)
+    val (c0, c1) = band(dx, w, d)
+    if (nh < r1 - r0 || nw < c1 - c0)
+      throw new IllegalArgumentException(
+        s"$tile ships ${nh}x$nw pixels, thinner than kernel depth $d — pixels " +
+          "beyond the 8-neighbor ring are not shipped; re-tile with tiles >= " +
+          "depth in each dim")
+    val bw = w + 2 * d
+    val sr = if (dy < 0) nh - d else 0
+    val sc = if (dx < 0) nw - d else 0
+    var r = r0
+    while (r < r1) {
+      System.arraycopy(px, (sr + r - r0) * nw + sc, buf, base + (r + d) * bw + c0 + d, c1 - c0)
+      r += 1
+    }
+    real(k) = true
+  }
+
+  /** Fills the bands of the padded plane at `base` that no received
+    * neighbor filled, by `boundary` ([[Boundary]]): NoPad clamps into the
+    * tile of the centre plane at `centre`; Constant writes `v`; Reflect
+    * mirrors the plane's own pixels when `from == base`, and otherwise
+    * copies the plane at `from` (a missing plane's z reflection).
+    */
+  private def padPlane(buf: Array[Double], base: Int, real: Array[Boolean], m: Int,
+      h: Int, w: Int, d: Int, boundary: Boundary, from: Int, centre: Int): Unit = {
+    val bw = w + 2 * d
+    def has(dy: Int, dx: Int) = real(m + ringIx(dy, dx))
+    for (dy <- -1 to 1; dx <- -1 to 1 if !has(dy, dx)) {
+      // a corner past one axis only mirrors the real edge neighbor beside it
+      val mirY = from == base && dy != 0 && !(dx != 0 && has(dy, 0) && !has(0, dx))
+      val mirX = from == base && dx != 0 && !(dy != 0 && !has(dy, 0) && has(0, dx))
+      val (r0, r1) = band(dy, h, d)
+      val (c0, c1) = band(dx, w, d)
+      var r = r0
+      while (r < r1) {
+        var c = c0
+        while (c < c1) {
+          buf(base + (r + d) * bw + c + d) = boundary match {
+            case Boundary.Constant(v) => v
+            case Boundary.NoPad =>
+              buf(centre + (r.max(0).min(h - 1) + d) * bw + c.max(0).min(w - 1) + d)
+            case Boundary.Reflect =>
+              buf(from + ((if (mirY) sym(r, h) else r) + d) * bw +
+                (if (mirX) sym(c, w) else c) + d)
+          }
+          c += 1
+        }
+        r += 1
+      }
     }
   }
 
@@ -533,24 +494,8 @@ object RasterOps {
       tileSize: Int = TS, boundary: Boundary = Boundary.Reflect): DataFrame = {
     require(depth >= 1 && depth <= tileSize,
       s"meanBlurBox3d: depth must be in [1, tileSize=$tileSize], got $depth")
-    val n = (2 * depthZ + 1) * (2 * depth + 1) * (2 * depth + 1)
-    mapRasterWithHalo3d(tiles, tileSize, boundary, depth, depthZ) { (h, w, px, halo) =>
-      val at = haloReader3d(h, w, px, halo, depth, "meanBlurBox3d")
-      Array.tabulate(h * w) { i =>
-        val r = i / w; val c = i % w
-        var s = 0.0
-        var pz = -depthZ
-        while (pz <= depthZ) {
-          var dy = -depth
-          while (dy <= depth) {
-            var dx = -depth
-            while (dx <= depth) { s += at(pz, r + dy, c + dx); dx += 1 }
-            dy += 1
-          }
-          pz += 1
-        }
-        s / n
-      }
+    mapRasterWithHalo3d(tiles, tileSize, boundary, depth, depthZ) { (h, w, buf) =>
+      windows(h, w, buf, 2 * depthZ + 1, depth)(mean)
     }
   }
 
@@ -576,30 +521,19 @@ object RasterOps {
     * consumer (the reference's map.py:110-126 takes any depth, not just
     * 1). The halo exchange ships only the `depth`-wide margin facing each
     * receiver, so the shuffle scales with depth*perimeter, not tile
-    * count x tile area ([[haloSent]]). Neighbor pixels
-    * are indexed with EACH NEIGHBOR'S OWN stride ([[HaloTile]]), so
-    * partial edge tiles (raster shape not a chunk multiple) read
-    * correctly; a tile thinner than `depth` would need pixels beyond the
-    * 8-neighbor ring and raises a clear error instead of reading garbage.
+    * count x tile area ([[haloSent]]). The kernel reads one padded buffer
+    * per tile ([[mapRasterWithHalo]]), which the assembler fills from each
+    * neighbor's slab at that slab's own dims, so partial edge tiles
+    * (raster shape not a chunk multiple) read correctly; a neighbor
+    * thinner than `depth` would need pixels beyond the 8-neighbor ring
+    * and is refused instead of read as garbage.
     */
   def meanBlurBox(tiles: DataFrame, depth: Int, tileSize: Int = TS,
       boundary: Boundary = Boundary.Reflect): DataFrame = {
     require(depth >= 1 && depth <= tileSize,
       s"meanBlurBox: depth must be in [1, tileSize=$tileSize], got $depth")
-    val n = (2 * depth + 1) * (2 * depth + 1)
-    mapRasterWithHalo(tiles, tileSize, boundary, depth) { (h, w, px, halo) =>
-      val at = haloReader(h, w, px, halo, depth, "meanBlurBox")
-      Array.tabulate(h * w) { i =>
-        val r = i / w; val c = i % w
-        var s = 0.0
-        var dy = -depth
-        while (dy <= depth) {
-          var dx = -depth
-          while (dx <= depth) { s += at(r + dy, c + dx); dx += 1 }
-          dy += 1
-        }
-        s / n
-      }
+    mapRasterWithHalo(tiles, tileSize, boundary, depth) { (h, w, buf, _) =>
+      windows(h, w, buf, 1, depth)(mean)
     }
   }
 
@@ -613,23 +547,61 @@ object RasterOps {
       boundary: Boundary = Boundary.Reflect): DataFrame = {
     require(depth >= 1 && depth <= tileSize,
       s"medianFilterBox: depth must be in [1, tileSize=$tileSize], got $depth")
-    val n = (2 * depth + 1) * (2 * depth + 1)
-    mapRasterWithHalo(tiles, tileSize, boundary, depth) { (h, w, px, halo) =>
-      val at = haloReader(h, w, px, halo, depth, "medianFilterBox")
-      val buf = new Array[Double](n)
-      Array.tabulate(h * w) { i =>
-        val r = i / w; val c = i % w
-        var j = 0
-        var dy = -depth
-        while (dy <= depth) {
-          var dx = -depth
-          while (dx <= depth) { buf(j) = at(r + dy, c + dx); j += 1; dx += 1 }
-          dy += 1
-        }
-        java.util.Arrays.sort(buf)
-        buf(n / 2)
+    mapRasterWithHalo(tiles, tileSize, boundary, depth) { (h, w, buf, _) =>
+      windows(h, w, buf, 1, depth) { win =>
+        java.util.Arrays.sort(win)
+        win(win.length / 2)
       }
     }
+  }
+
+  /** `f` of each pixel's window in the padded buffer of an h x w tile
+    * with `planes` planes and margin k: the (2k+1)-square around the
+    * pixel in every plane, copied into one array planes first, then rows,
+    * then columns (the order the box kernels sum in). `f` may reorder it.
+    */
+  private def windows(h: Int, w: Int, buf: Array[Double], planes: Int, k: Int)(
+      f: Array[Double] => Double): Array[Double] = {
+    val bw = w + 2 * k
+    val plane = (h + 2 * k) * bw
+    val side = 2 * k + 1
+    val win = new Array[Double](planes * side * side)
+    val out = new Array[Double](h * w)
+    var i = 0
+    while (i < h * w) {
+      var p = 0
+      while (p < planes) {
+        var y = 0
+        while (y < side) {
+          System.arraycopy(buf, p * plane + (i / w + y) * bw + i % w, win,
+            (p * side + y) * side, side)
+          y += 1
+        }
+        p += 1
+      }
+      out(i) = f(win)
+      i += 1
+    }
+    out
+  }
+
+  private def mean(win: Array[Double]): Double = {
+    var s = 0.0
+    var j = 0
+    while (j < win.length) { s += win(j); j += 1 }
+    s / win.length
+  }
+
+  /** The window's max (`dilate`) or min, first occurrence kept. */
+  private def extreme(dilate: Boolean)(win: Array[Double]): Double = {
+    var m = win(0)
+    var j = 0
+    while (j < win.length) {
+      val v = win(j)
+      if (if (dilate) v > m else v < m) m = v
+      j += 1
+    }
+    m
   }
 
   /** 5-tap binomial (Gaussian-approximating) blur, SEPARABLE form: the
@@ -647,49 +619,69 @@ object RasterOps {
     * output (mirror for Reflect, the constant, the clamp for NoPad) — the
     * same values a second exchange of the pass-1 tiles would ship, so the
     * output is bit-identical to two chained depth-2 halo passes for every
-    * boundary. Exactness: binomial weights are dyadic, so on
-    * integer-valued rasters pass 1 emits exact multiples of 1/16 and pass
-    * 2 exact multiples of 1/256 — bit-equal to the direct 2D
-    * outer-product kernel on any engine. The `Reflect` boundary commutes
-    * with per-axis passes (symmetric padding is a tensor-product
-    * extension), so edge pixels also match the direct form.
+    * boundary. The kernel therefore pads by itself: it takes the
+    * assembler's buffer unpadded (NoPad) and reads its `real` mask. On a
+    * store with a missing interior tile the two rules differ: a side
+    * column's missing corner mirrors that side's columns, where the
+    * assembler's diagonal rule would double-mirror the tile. Exactness:
+    * binomial weights are dyadic, so on integer-valued rasters pass 1
+    * emits exact multiples of 1/16 and pass 2 exact multiples of 1/256 —
+    * bit-equal to the direct 2D outer-product kernel on any engine. The
+    * `Reflect` boundary commutes with per-axis passes (symmetric padding
+    * is a tensor-product extension), so edge pixels also match the direct
+    * form.
     */
   def binomialBlur5(tiles: DataFrame, tileSize: Int = TS,
       boundary: Boundary = Boundary.Reflect): DataFrame =
-    mapRasterWithHalo(tiles, tileSize, Boundary.NoPad, depth = 2) { (h, w, px, real) =>
-      // pass 1 over a horizontal neighbour's shipped columns: above and
-      // below them sit the diagonal corner blocks this tile received
-      val sides = for {
-        dx <- Seq(-1, 1)
-        cols <- real.get((0, dx))
-      } yield (0, dx) -> binomialPass(cols,
-        Seq(-1, 1).flatMap(dy => real.get((dy, dx)).map((dy, 0) -> _)).toMap,
-        boundary, vertical = true)
-      binomialPass(binomialPass(HaloTile(h, w, px), real, boundary, vertical = true),
-        sides.toMap, boundary, vertical = false).px
+    mapRasterWithHalo(tiles, tileSize, Boundary.NoPad, depth = 2) { (h, w, buf, real) =>
+      val bw = w + 4
+      // pass 1 over buffer columns [c0, c1): the tile's, and the 2 each
+      // real horizontal neighbour shipped
+      val (left, right) = (real(ringIx(0, -1)), real(ringIx(0, 1)))
+      val c0 = if (left) 0 else 2
+      val c1 = if (right) bw else w + 2
+      val p1 = new Array[Double](h * bw)
+      var bc = c0
+      while (bc < c1) {
+        val dx = if (bc < 2) -1 else if (bc < w + 2) 0 else 1
+        var r = 0
+        while (r < h) {
+          p1(r * bw + bc) =
+            binomialTap(buf, 2 * bw + bc, bw, r, h, real(ringIx(-1, dx)), real(ringIx(1, dx)),
+              boundary)
+          r += 1
+        }
+        bc += 1
+      }
+      Array.tabulate(h * w) { i =>
+        binomialTap(p1, i / w * bw + 2, 1, i % w, w, left, right, boundary)
+      }
     }
 
   private val binomialWeights = Array(1.0, 4.0, 6.0, 4.0, 1.0)
 
-  /** One [1,4,6,4,1]/16 pass of [[binomialBlur5]] over `t`, whose
-    * neighbours in the pass's direction are `ring` (padded by `boundary`
-    * where absent).
+  /** One [1,4,6,4,1]/16 tap of [[binomialBlur5]] at index i of an axis of
+    * tile length n whose index j (in [-2, n + 2)) sits at
+    * `a(at0 + j * stride)`. Past the tile on a side with no real neighbor
+    * (`lo`, `hi`), the tap reads `boundary` applied to the tile's values.
     */
-  private def binomialPass(t: HaloTile, ring: Map[(Int, Int), HaloTile],
-      boundary: Boundary, vertical: Boolean): HaloTile = {
-    val sides = if (vertical) Seq((-1, 0), (1, 0)) else Seq((0, -1), (0, 1))
-    val at = haloReader(t.h, t.w, t.px, padHalo2d(t, ring, 2, boundary, sides),
-      2, "binomialBlur5")
-    HaloTile(t.h, t.w, Array.tabulate(t.h * t.w) { i =>
-      val r = i / t.w; val c = i % t.w
-      var s = 0.0
-      var k = -2
-      while (k <= 2) {
-        s += binomialWeights(k + 2) * (if (vertical) at(r + k, c) else at(r, c + k))
-        k += 1
-      }
-      s / 16.0
-    })
+  private def binomialTap(a: Array[Double], at0: Int, stride: Int, i: Int, n: Int,
+      lo: Boolean, hi: Boolean, boundary: Boundary): Double = {
+    var s = 0.0
+    var k = -2
+    while (k <= 2) {
+      val j = i + k
+      val v =
+        if (j >= 0 && j < n || j < 0 && lo || j >= n && hi) a(at0 + j * stride)
+        else boundary match {
+          case Boundary.Constant(c) => c
+          case Boundary.Reflect => a(at0 + sym(j, n) * stride)
+          case Boundary.NoPad => a(at0 + j.max(0).min(n - 1) * stride)
+        }
+      s += binomialWeights(k + 2) * v
+      k += 1
+    }
+    s / 16.0
   }
 
   /** (2·depth+1)-square MORPHOLOGICAL dilate/erode — the flat-structuring-
@@ -706,23 +698,8 @@ object RasterOps {
       tileSize: Int = TS, boundary: Boundary = Boundary.Reflect): DataFrame = {
     require(depth >= 1 && depth <= tileSize,
       s"morphBox: depth must be in [1, tileSize=$tileSize], got $depth")
-    mapRasterWithHalo(tiles, tileSize, boundary, depth) { (h, w, px, halo) =>
-      val at = haloReader(h, w, px, halo, depth, "morphBox")
-      Array.tabulate(h * w) { i =>
-        val r = i / w; val c = i % w
-        var m = at(r - depth, c - depth)
-        var dy = -depth
-        while (dy <= depth) {
-          var dx = -depth
-          while (dx <= depth) {
-            val v = at(r + dy, c + dx)
-            if (if (dilate) v > m else v < m) m = v
-            dx += 1
-          }
-          dy += 1
-        }
-        m
-      }
+    mapRasterWithHalo(tiles, tileSize, boundary, depth) { (h, w, buf, _) =>
+      windows(h, w, buf, 1, depth)(extreme(dilate))
     }
   }
 
@@ -737,27 +714,8 @@ object RasterOps {
       tileSize: Int = TS, boundary: Boundary = Boundary.Reflect): DataFrame = {
     require(depth >= 1 && depth <= tileSize,
       s"morphBox3d: depth must be in [1, tileSize=$tileSize], got $depth")
-    mapRasterWithHalo3d(tiles, tileSize, boundary, depth, depthZ) { (h, w, px, halo) =>
-      val at = haloReader3d(h, w, px, halo, depth, "morphBox3d")
-      Array.tabulate(h * w) { i =>
-        val r = i / w; val c = i % w
-        var m = at(-depthZ, r - depth, c - depth)
-        var pz = -depthZ
-        while (pz <= depthZ) {
-          var dy = -depth
-          while (dy <= depth) {
-            var dx = -depth
-            while (dx <= depth) {
-              val v = at(pz, r + dy, c + dx)
-              if (if (dilate) v > m else v < m) m = v
-              dx += 1
-            }
-            dy += 1
-          }
-          pz += 1
-        }
-        m
-      }
+    mapRasterWithHalo3d(tiles, tileSize, boundary, depth, depthZ) { (h, w, buf) =>
+      windows(h, w, buf, 2 * depthZ + 1, depth)(extreme(dilate))
     }
   }
 
@@ -809,15 +767,18 @@ object RasterOps {
     */
   def sobelFilter(tiles: DataFrame, tileSize: Int = TS,
       boundary: Boundary = Boundary.Reflect): DataFrame =
-    mapRasterWithHalo(tiles, tileSize, boundary, depth = 1) { (h, w, px, halo) =>
-      val at = haloReader(h, w, px, halo, 1, "sobelFilter")
+    mapRasterWithHalo(tiles, tileSize, boundary, depth = 1) { (h, w, buf, _) =>
+      val bw = w + 2
       Array.tabulate(h * w) { i =>
-        val r = i / w; val c = i % w
-        val gx = -at(r - 1, c - 1) + at(r - 1, c + 1) -
-          2.0 * at(r, c - 1) + 2.0 * at(r, c + 1) -
-          at(r + 1, c - 1) + at(r + 1, c + 1)
-        val gy = -at(r - 1, c - 1) - 2.0 * at(r - 1, c) - at(r - 1, c + 1) +
-          at(r + 1, c - 1) + 2.0 * at(r + 1, c) + at(r + 1, c + 1)
+        // buffer indices of the rows above, through and below the pixel
+        val up = i / w * bw + i % w + 1
+        val mid = up + bw
+        val dn = mid + bw
+        val gx = -buf(up - 1) + buf(up + 1) -
+          2.0 * buf(mid - 1) + 2.0 * buf(mid + 1) -
+          buf(dn - 1) + buf(dn + 1)
+        val gy = -buf(up - 1) - 2.0 * buf(up) - buf(up + 1) +
+          buf(dn - 1) + 2.0 * buf(dn) + buf(dn + 1)
         math.abs(gx) + math.abs(gy)
       }
     }
@@ -951,38 +912,36 @@ object RasterOps {
       when(v > 0, lit(0.0)).otherwise(lit(DtInf)))
     for (_ <- 0 until rounds) {
       d = mapRasterWithHalo(d, tileSize, Boundary.Constant(DtInf), depth = 1) {
-        (h, w, px, halo) =>
-          val at = haloReader(h, w, px, halo, 1, "distanceTransform34")
-          val out = px.clone()
-          // cur: updated in-tile values where available, neighbor margins
-          // (this round's INPUT state) beyond the tile
-          def cur(r: Int, c: Int): Double =
-            if (r >= 0 && r < h && c >= 0 && c < w) out(r * w + c) else at(r, c)
-          def relax(r: Int, c: Int, offs: Array[(Int, Int, Double)]): Unit = {
-            var m = out(r * w + c)
+        (h, w, buf, _) =>
+          // relax in place: pixels inside the tile see this round's
+          // updates, the margins keep the neighbors' INPUT state
+          val bw = w + 2
+          val fwd = Array(-bw - 1, -bw, -bw + 1, -1)
+          val bwd = Array(bw + 1, bw, bw - 1, 1)
+          val cost = Array(4.0, 3.0, 4.0, 3.0)
+          def relax(o: Int, offs: Array[Int]): Unit = {
+            var m = buf(o)
             var i = 0
             while (i < offs.length) {
-              val v = cur(r + offs(i)._1, c + offs(i)._2) + offs(i)._3
+              val v = buf(o + offs(i)) + cost(i)
               if (v < m) m = v
               i += 1
             }
-            out(r * w + c) = m
+            buf(o) = m
           }
-          val fwd = Array((-1, -1, 4.0), (-1, 0, 3.0), (-1, 1, 4.0), (0, -1, 3.0))
-          val bwd = Array((1, 1, 4.0), (1, 0, 3.0), (1, -1, 4.0), (0, 1, 3.0))
           var r = 0
           while (r < h) {
             var c = 0
-            while (c < w) { relax(r, c, fwd); c += 1 }
+            while (c < w) { relax((r + 1) * bw + c + 1, fwd); c += 1 }
             r += 1
           }
           r = h - 1
           while (r >= 0) {
             var c = w - 1
-            while (c >= 0) { relax(r, c, bwd); c -= 1 }
+            while (c >= 0) { relax((r + 1) * bw + c + 1, bwd); c -= 1 }
             r -= 1
           }
-          out
+          Array.tabulate(h * w)(i => buf((i / w + 1) * bw + i % w + 1))
       }.localCheckpoint(true)
     }
     d
@@ -1002,8 +961,8 @@ object RasterOps {
     */
   def bilinearUpsample2x(tiles: DataFrame, tileSize: Int = TS): DataFrame =
     mapRasterWithHalo(tiles, tileSize, Boundary.Reflect, depth = 1) {
-      (h, w, px, halo) =>
-        val at = haloReader(h, w, px, halo, 1, "bilinearUpsample2x")
+      (h, w, buf, _) =>
+        val bw = w + 2
         Array.tabulate(2 * h * 2 * w) { i =>
           val oy = i / (2 * w); val ox = i % (2 * w)
           // source center = oy/2 - 0.25: an EVEN output row 2k sits at
@@ -1014,8 +973,10 @@ object RasterOps {
           val wy = if (oy % 2 == 0) 0.25 else 0.75
           val rx = if (ox % 2 == 0) ox / 2 - 1 else ox / 2
           val wx = if (ox % 2 == 0) 0.25 else 0.75
-          val v00 = at(ry, rx); val v01 = at(ry, rx + 1)
-          val v10 = at(ry + 1, rx); val v11 = at(ry + 1, rx + 1)
+          // buffer index of source pixel (ry, rx)
+          val o = (ry + 1) * bw + rx + 1
+          val v00 = buf(o); val v01 = buf(o + 1)
+          val v10 = buf(o + bw); val v11 = buf(o + bw + 1)
           wy * (wx * v00 + (1.0 - wx) * v01) +
             (1.0 - wy) * (wx * v10 + (1.0 - wx) * v11)
         }
@@ -1102,33 +1063,6 @@ object RasterOps {
       .withColumn("__rk", row_number().over(
         Window.orderBy(col("sigma_b").desc, col("threshold"))))
       .filter(col("__rk") === 1).drop("__rk")
-  }
-
-  /** Shared neighborhood accessor for the box kernels: resolves (r, c)
-    * offsets that fall outside the center tile into the neighbor ring,
-    * indexing each neighbor with ITS OWN dims/stride (partial edge
-    * tiles). Raises if a tile is thinner than the kernel depth (the
-    * pixel would live beyond the 8-neighbor ring); clamps to the border
-    * only for NoPad's genuinely-absent neighbors.
-    */
-  private def haloReader(h: Int, w: Int, px: Array[Double],
-      halo: Map[(Int, Int), HaloTile], depth: Int,
-      op: String): (Int, Int) => Double = { (r, c) =>
-    val dy = if (r < 0) -1 else if (r >= h) 1 else 0
-    val dx = if (c < 0) -1 else if (c >= w) 1 else 0
-    if (dy == 0 && dx == 0) px(r * w + c)
-    else halo.get((dy, dx)) match {
-      case Some(t) =>
-        val rr = if (dy < 0) t.h + r else if (dy > 0) r - h else r
-        val cc = if (dx < 0) t.w + c else if (dx > 0) c - w else c
-        if (rr < 0 || rr >= t.h || cc < 0 || cc >= t.w)
-          throw new IllegalStateException(
-            s"$op: neighbor tile ${t.h}x${t.w} is thinner than " +
-              s"kernel depth $depth — pixels beyond the 8-neighbor ring " +
-              "are not shipped; re-tile with tiles >= depth in each dim")
-        t.px(rr * t.w + cc)
-      case None => px(r.max(0).min(h - 1) * w + c.max(0).min(w - 1))
-    }
   }
 
   // ---- pyramid (models.py:234-263 multiscale; coarsen/subsample) ----

@@ -1,7 +1,10 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
@@ -10,6 +13,20 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for Spark-backed specs (one JVM-wide session). */
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
+
+  /** Runs `body` on a fresh directory under `java.io.tmpdir` whose name
+    * starts with `prefix`, and deletes it with everything below it when
+    * `body` returns or throws.
+    */
+  protected def tempDir[T](prefix: String)(body: Path => T): T = {
+    val dir = Files.createTempDirectory(prefix)
+    try body(dir)
+    finally {
+      val walk = Files.walk(dir)
+      try walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists)
+      finally walk.close()
+    }
+  }
 
   /** Jobs `body` starts and shuffle-map stages it runs (stages that write
     * shuffle output), counted by a SparkListener on the job group `body`

@@ -138,16 +138,18 @@ class GraftGuardrailsSpec extends SparkTestBase {
         .parseGeoJsonLines(s, s"$root/features.ndjson")
       assert(nd.count() === 12)
       // geoarrow path: struct<x,y> points through readGeoParquet
-      val dir = java.nio.file.Files.createTempDirectory("geoarrow").toString
-      (1 to 8).map(i => (i.toLong, i.toDouble, i * 2.0, 1.5))
-        .toDF("index", "x", "y", "radius")
-        .select(col("index"), struct(col("x"), col("y")).as("geometry"),
-          col("radius"))
-        .write.mode("overwrite").parquet(dir)
-      val ga = graft.model.Models.ShapesModel.readGeoParquet(s, dir)
-      assert(ga.count() === 8)
-      assert(ga.select("geom_type").distinct().as[String].collect()
-        .toSeq === Seq("circle"))
+      tempDir("geoarrow") { d =>
+        val dir = d.toString
+        (1 to 8).map(i => (i.toLong, i.toDouble, i * 2.0, 1.5))
+          .toDF("index", "x", "y", "radius")
+          .select(col("index"), struct(col("x"), col("y")).as("geometry"),
+            col("radius"))
+          .write.mode("overwrite").parquet(dir)
+        val ga = graft.model.Models.ShapesModel.readGeoParquet(s, dir)
+        assert(ga.count() === 8)
+        assert(ga.select("geom_type").distinct().as[String].collect()
+          .toSeq === Seq("circle"))
+      }
     }
   }
 

@@ -54,11 +54,13 @@ class GeoJsonSpec extends SparkTestBase {
   }
 
   test("a non-collection document fails loudly") {
-    val p = java.nio.file.Files.createTempFile("gj", ".json")
-    java.nio.file.Files.write(p, """{"type": "Polygon", "coordinates": []}""".getBytes)
-    val e = intercept[RuntimeException] {
-      Models.ShapesModel.parseGeoJson(spark, p.toString)
+    tempDir("gj") { d =>
+      val p = d.resolve("polygon.json")
+      java.nio.file.Files.write(p, """{"type": "Polygon", "coordinates": []}""".getBytes)
+      val e = intercept[RuntimeException] {
+        Models.ShapesModel.parseGeoJson(spark, p.toString)
+      }
+      assert(e.getMessage.contains("GeometryCollection"))
     }
-    assert(e.getMessage.contains("GeometryCollection"))
   }
 }

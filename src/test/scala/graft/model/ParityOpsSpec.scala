@@ -63,21 +63,23 @@ class ParityOpsSpec extends SparkTestBase {
   }
 
   test("deleteElementFromDisk removes the dir and the manifest entry") {
-    val root = java.nio.file.Files.createTempDirectory("graft-del").toString
-    val pts = Models.PointsModel.parse(Seq((1L, 0.0, 0.0)).toDF("id", "x", "y"))
-    val sd = SpatialDataset(spark, Seq(
-      SpatialElement(Models.PointsModel.meta("a"), pts),
-      SpatialElement(Models.PointsModel.meta("b"), pts)))
-    sd.write(root)
-    assert(new java.io.File(s"$root/points/a").exists())
-    val after = sd.deleteElementFromDisk("a", root)
-    assert(!new java.io.File(s"$root/points/a").exists())
-    assert(after.manifest.elements.map(_.name) == Seq("b"))
-    val reread = SpatialDataset.read(spark, root)
-    assert(reread.manifest.elements.map(_.name) == Seq("b"))
-    assert(reread("b").count() == 1)
-    // in-memory original unchanged
-    assert(sd.manifest.elements.map(_.name).toSet == Set("a", "b"))
+    tempDir("graft-del") { d =>
+      val root = d.toString
+      val pts = Models.PointsModel.parse(Seq((1L, 0.0, 0.0)).toDF("id", "x", "y"))
+      val sd = SpatialDataset(spark, Seq(
+        SpatialElement(Models.PointsModel.meta("a"), pts),
+        SpatialElement(Models.PointsModel.meta("b"), pts)))
+      sd.write(root)
+      assert(new java.io.File(s"$root/points/a").exists())
+      val after = sd.deleteElementFromDisk("a", root)
+      assert(!new java.io.File(s"$root/points/a").exists())
+      assert(after.manifest.elements.map(_.name) == Seq("b"))
+      val reread = SpatialDataset.read(spark, root)
+      assert(reread.manifest.elements.map(_.name) == Seq("b"))
+      assert(reread("b").count() == 1)
+      // in-memory original unchanged
+      assert(sd.manifest.elements.map(_.name).toSet == Set("a", "b"))
+    }
   }
 
   test("rasterizeBinsLinkTableToLabels re-points the annotation target") {

@@ -35,48 +35,54 @@ class SpatialDatasetSpec extends SparkTestBase {
   }
 
   test("write/read round-trip preserves manifest and data") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sd").toString
-    val sd = fixture
-    sd.write(dir)
-    val back = SpatialDataset.read(spark, dir)
-    // the full golden-output contract: names, kinds, transforms, table
-    // annotation, attrs, data multisets, aux frames
-    graft.testing.Comparators.assertContainersIdentical(sd, back)
-    assert(back.points.keySet == Set("pts") && back.shapes.keySet == Set("cells"))
-    val t = back.manifest.element("pts").transforms("global")
-    assert(t.toAffineMatrix(Seq("x", "y"), Seq("x", "y"))
-      .sameAs(Matrix(3, 3, Array(2, 0, 0, 0, 2, 0, 0, 0, 1))))
+    tempDir("graft-sd") { d =>
+      val dir = d.toString
+      val sd = fixture
+      sd.write(dir)
+      val back = SpatialDataset.read(spark, dir)
+      // the full golden-output contract: names, kinds, transforms, table
+      // annotation, attrs, data multisets, aux frames
+      graft.testing.Comparators.assertContainersIdentical(sd, back)
+      assert(back.points.keySet == Set("pts") && back.shapes.keySet == Set("cells"))
+      val t = back.manifest.element("pts").transforms("global")
+      assert(t.toAffineMatrix(Seq("x", "y"), Seq("x", "y"))
+        .sameAs(Matrix(3, 3, Array(2, 0, 0, 0, 2, 0, 0, 0, 1))))
+    }
   }
 
   test("read opens every element with no Spark job, schemas as spark.read.parquet infers them") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sd-open").toString
-    fixture.write(dir)
-    var back: SpatialDataset = null
-    val (jobs, _) = traced { back = SpatialDataset.read(spark, dir) }
-    assert(jobs == 0)
-    // every element kind, the table's obs and its X matrix
-    val opened = back.manifest.elements.flatMap { m =>
-      val el = back.element(m.name)
-      val d = SpatialDataset.elementDir(dir, m)
-      if (m.kind == ElementKind.Tables) Seq(s"$d/obs" -> el.obs, s"$d/X" -> el.x)
-      else Seq(s"$d/data" -> el.data)
-    }
-    assert(opened.size == 5)
-    opened.foreach { case (d, df) =>
-      assert(df.schema == spark.read.parquet(d).schema, d)
-      val (j, _) = traced {
-        assert(org.apache.spark.sql.execution.datasources.parquet.ParquetOpen
-          .read(spark, d).schema == df.schema)
+    tempDir("graft-sd-open") { d =>
+      val dir = d.toString
+      fixture.write(dir)
+      var back: SpatialDataset = null
+      val (jobs, _) = traced { back = SpatialDataset.read(spark, dir) }
+      assert(jobs == 0)
+      // every element kind, the table's obs and its X matrix
+      val opened = back.manifest.elements.flatMap { m =>
+        val el = back.element(m.name)
+        val d = SpatialDataset.elementDir(dir, m)
+        if (m.kind == ElementKind.Tables) Seq(s"$d/obs" -> el.obs, s"$d/X" -> el.x)
+        else Seq(s"$d/data" -> el.data)
       }
-      assert(j == 0, d)
+      assert(opened.size == 5)
+      opened.foreach { case (d, df) =>
+        assert(df.schema == spark.read.parquet(d).schema, d)
+        val (j, _) = traced {
+          assert(org.apache.spark.sql.execution.datasources.parquet.ParquetOpen
+            .read(spark, d).schema == df.schema)
+        }
+        assert(j == 0, d)
+      }
     }
   }
 
   test("partial read by selection") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sd2").toString
-    fixture.write(dir)
-    val back = SpatialDataset.read(spark, dir, selection = Some(Seq("pts")))
-    assert(back.manifest.elements.map(_.name) == Seq("pts"))
+    tempDir("graft-sd2") { d =>
+      val dir = d.toString
+      fixture.write(dir)
+      val back = SpatialDataset.read(spark, dir, selection = Some(Seq("pts")))
+      assert(back.manifest.elements.map(_.name) == Seq("pts"))
+    }
   }
 
   test("subset cascades table annotations") {

@@ -74,9 +74,8 @@ class KnnJoinSpec extends SparkTestBase {
   }
 
   test("knnWithinRadiusZ over a Z layout == the grid path; bands reach the scan") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_knnz_spec_")
-    val path = tmp.resolve("pts").toString
-    try {
+    tempDir("graft_knnz_spec_") { tmp =>
+      val path = tmp.resolve("pts").toString
       ZOrder.writeZOrdered(pts, "x", "y", path, 0.0, 20.0, 0.0, 20.0,
         bits = 8, numPartitions = Some(3))
       val viaZ = SpatialJoin.knnWithinRadiusZ(spark, path, probes,
@@ -85,10 +84,6 @@ class KnnJoinSpec extends SparkTestBase {
       assert(viaZ.exceptAll(plain).isEmpty && plain.exceptAll(viaZ).isEmpty)
       val plan = viaZ.queryExecution.executedPlan.toString
       assert(plan.contains("PushedFilters") && plan.contains("zkey"), plan)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
     }
   }
 

@@ -35,9 +35,13 @@ class RasterVectorizeSpec extends SparkTestBase {
     val pixels = (Seq.tabulate(4)(i => (0, i / 2, i % 2, 1.0)) ++
       Seq.tabulate(4)(i => (0, i / 2, 2 + i % 2, 10.0))).toDF("c", "y", "x", "value")
     val tiles = RasterOps.pixelsToTiles(pixels, tileSize = 2)
-    val out = RasterOps.mapRasterWithHalo(tiles, tileSize = 2) { (h, w, px, halo) =>
-      val right = halo.get((0, 1)).map(_.px.sum).getOrElse(0.0)
-      px.map(_ + right)
+    val out = RasterOps.mapRasterWithHalo(tiles, tileSize = 2) { (h, w, buf, real) =>
+      // depth 2 (the tile size): the right neighbor fills buffer columns
+      // [w + 2, w + 4) of rows [2, h + 2)
+      val bw = w + 4
+      val right = if (!real(5)) 0.0
+        else (for (r <- 2 until h + 2; c <- w + 2 until w + 4) yield buf(r * bw + c)).sum
+      Array.tabulate(h * w)(i => buf((i / w + 2) * bw + i % w + 2) + right)
     }
     val tile0 = RasterOps.tilesToPixels(out, tileSize = 2)
       .filter(col("x") < 2).select("value").as[Double].collect().toSeq
@@ -50,28 +54,34 @@ class RasterVectorizeSpec extends SparkTestBase {
       .toDF("c", "y", "x", "value")
     val tiles = RasterOps.pixelsToTiles(pixels, tileSize = 2)
     val offsets = Seq((-1, -1), (-1, 0), (-1, 1), (0, -1), (0, 1), (1, -1), (1, 0), (1, 1))
-    // the kernel runs on executors — surface the halo AS the output array
-    // ([present, v...] per offset in fixed order) instead of closure state
-    def haloOf(b: RasterOps.Boundary): Map[(Int, Int), Seq[Double]] = {
+    // the kernel runs on executors — surface each neighbor's 2x2 margin of
+    // the padded 6x6 buffer AS the output array ([real, v...] per offset in
+    // fixed order) instead of closure state
+    def haloOf(b: RasterOps.Boundary): Map[(Int, Int), (Boolean, Seq[Double])] = {
       val enc = RasterOps.mapRasterWithHalo(tiles, tileSize = 2, boundary = b) {
-        (h, w, px, halo) =>
-          offsets.toArray.flatMap(off =>
-            halo.get(off).map(t => 1.0 +: t.px).getOrElse(Array(0.0)))
+        (h, w, buf, real) =>
+          offsets.toArray.flatMap { case (dy, dx) =>
+            val margin = for (r <- 0 until 2; c <- 0 until 2)
+              yield buf(((dy + 1) * 2 + r) * 6 + (dx + 1) * 2 + c)
+            (if (real((dy + 1) * 3 + dx + 1)) 1.0 else 0.0) +: margin
+          }
       }.select("px").as[Seq[Double]].collect()(0)
-      var rest = enc
-      offsets.flatMap { off =>
-        if (rest.head == 0.0) { rest = rest.tail; None }
-        else { val v = rest.slice(1, 5); rest = rest.drop(5); Some(off -> v) }
+      offsets.zip(enc.grouped(5).toSeq).map { case (off, v) =>
+        off -> (v.head == 1.0, v.tail)
       }.toMap
     }
-    val refl = haloOf(RasterOps.Boundary.Reflect)
+    val refl = haloOf(RasterOps.Boundary.Reflect).map { case (k, (_, v)) => k -> v }
     assert(refl.size == 8)
     assert(refl((0, 1)) == Seq(2.0, 1.0, 4.0, 3.0), "right = horizontal mirror")
     assert(refl((-1, 0)) == Seq(3.0, 4.0, 1.0, 2.0), "above = vertical mirror")
     assert(refl((-1, -1)) == Seq(4.0, 3.0, 2.0, 1.0), "corner = both mirrors")
     val const = haloOf(RasterOps.Boundary.Constant(7.0))
-    assert(const.size == 8 && const.values.forall(_ == Seq(7.0, 7.0, 7.0, 7.0)))
-    assert(haloOf(RasterOps.Boundary.NoPad).isEmpty)
+    assert(const.size == 8 && const.values.forall(_._2 == Seq(7.0, 7.0, 7.0, 7.0)))
+    // NoPad: no neighbor is real, and each margin reads the clamped center pixel
+    val noPad = haloOf(RasterOps.Boundary.NoPad)
+    assert(noPad.values.forall(!_._1), "no real neighbor")
+    assert(noPad((0, 1))._2 == Seq(2.0, 2.0, 4.0, 4.0), "right = clamped last column")
+    assert(noPad((-1, -1))._2 == Seq(1.0, 1.0, 1.0, 1.0), "corner = clamped corner pixel")
   }
 
   test("edge-tile kernel under Reflect runs the interior code path (vertical 3-tap mean)") {
@@ -79,15 +89,13 @@ class RasterVectorizeSpec extends SparkTestBase {
     val pixels = Seq.tabulate(4)(y => (0, y, 0, y.toDouble)).toDF("c", "y", "x", "value")
     val tiles = RasterOps.pixelsToTiles(pixels, tileSize = 2)
     val out = RasterOps.mapRasterWithHalo(tiles, tileSize = 2,
-      boundary = RasterOps.Boundary.Reflect) { (h, w, px, halo) =>
-      // the kernel NEVER branches on missing neighbors — reflect guarantees
-      // both vertical neighbors exist for every tile
-      val above = halo((-1, 0)); val below = halo((1, 0))
+      boundary = RasterOps.Boundary.Reflect) { (h, w, buf, _) =>
+      // the kernel NEVER branches on missing neighbors — reflect fills both
+      // vertical margins of every tile's buffer (depth 2, row stride w + 4)
+      val bw = w + 4
       Array.tabulate(h * w) { i =>
-        val r = i / w; val c = i % w
-        val up = if (r == 0) above.px((above.h - 1) * above.w + c) else px((r - 1) * w + c)
-        val dn = if (r == h - 1) below.px(c) else px((r + 1) * w + c)
-        (up + px(i) + dn) / 3.0
+        val o = (i / w + 2) * bw + i % w + 2
+        (buf(o - bw) + buf(o) + buf(o + bw)) / 3.0
       }
     }
     val vals = RasterOps.tilesToPixels(out, tileSize = 2)
@@ -114,9 +122,12 @@ class RasterVectorizeSpec extends SparkTestBase {
     rows.toDF("scale", "c", "tile_y", "tile_x", "h", "w", "px")
   }
 
-  // numpy "symmetric" index mirror: -1 -> 0, -2 -> 1; n -> n-1, n+1 -> n-2
-  private def mir(i: Int, n: Int) =
-    if (i < 0) -i - 1 else if (i >= n) 2 * n - 1 - i else i
+  // numpy "symmetric" index mirror: -1 -> 0, -2 -> 1; n -> n-1, n+1 -> n-2;
+  // an axis shorter than the reach bounces again (period 2n)
+  private def mir(i: Int, n: Int) = {
+    val m = Math.floorMod(i, 2 * n)
+    if (m < n) m else 2 * n - 1 - m
+  }
 
   test("halo exchange ships depth-clipped margin slabs, not whole tiles") {
     // 10x12 raster in 4x4 tiles (partial edges). At depth d, an edge
@@ -215,6 +226,43 @@ class RasterVectorizeSpec extends SparkTestBase {
       for (dz <- -2 to 2; dy <- -1 to 1; dx <- -1 to 1)
         s += dense(mir(z + dz, zz) * hh * ww + mir(r + dy, hh) * ww + mir(c + dx, ww))
       s / 45.0
+    }
+    assert(out.map(v => math.round(v * 1e9)) == expect.map(v => math.round(v * 1e9)))
+  }
+
+  test("meanBlurBox3d depthZ 16 on a one-plane volume: z reflects past any number of bounces") {
+    // a single plane: every one of the 33 z offsets reflects back onto it
+    val hh = 4; val ww = 4; val ts = 4
+    val dense = Array.tabulate(hh * ww)(i => (i * 3 % 7).toDouble)
+    val pixels = (for (y <- 0 until hh; x <- 0 until ww)
+      yield (0, 0, y, x, dense(y * ww + x))).toDF("c", "z", "y", "x", "value")
+    val tiles = RasterOps.pixelsToTiles3d(pixels, tileSize = ts)
+    val out = RasterOps.tilesToPixels3d(
+      RasterOps.meanBlurBox3d(tiles, depth = 1, depthZ = 16, tileSize = ts),
+      tileSize = ts)
+      .orderBy("z", "y", "x").select("value").as[Double].collect().toSeq
+    val expect = for (r <- 0 until hh; c <- 0 until ww) yield {
+      var s = 0.0
+      for (dz <- -16 to 16; dy <- -1 to 1; dx <- -1 to 1)
+        s += dense(mir(dz, 1) * hh * ww + mir(r + dy, hh) * ww + mir(c + dx, ww))
+      s / (33 * 9)
+    }
+    assert(out.map(v => math.round(v * 1e9)) == expect.map(v => math.round(v * 1e9)))
+  }
+
+  test("meanBlurBox on a raster thinner than the depth: Reflect bounces as numpy does") {
+    // one row in 4x4 tiles (1x4 and 1x2): rows -2..2 all reflect onto row 0
+    val hh = 1; val ww = 6
+    val dense = Array.tabulate(hh * ww)(i => (i * 5 % 7).toDouble)
+    val out = RasterOps.tilesToPixels(
+      RasterOps.meanBlurBox(partialTiles(dense, hh, ww, 4), depth = 2, tileSize = 4),
+      tileSize = 4)
+      .orderBy("y", "x").select("value").as[Double].collect().toSeq
+    val expect = for (r <- 0 until hh; c <- 0 until ww) yield {
+      var s = 0.0
+      for (dy <- -2 to 2; dx <- -2 to 2)
+        s += dense(mir(r + dy, hh) * ww + mir(c + dx, ww))
+      s / 25.0
     }
     assert(out.map(v => math.round(v * 1e9)) == expect.map(v => math.round(v * 1e9)))
   }
@@ -682,25 +730,15 @@ class RasterVectorizeSpec extends SparkTestBase {
       b: RasterOps.Boundary): DataFrame = {
     val wts = Array(1.0, 4.0, 6.0, 4.0, 1.0)
     def pass(in: DataFrame, vertical: Boolean) =
-      RasterOps.mapRasterWithHalo(in, ts, b, depth = 2) { (h, w, px, halo) =>
-        def at(r: Int, c: Int): Double = {
-          val dy = if (r < 0) -1 else if (r >= h) 1 else 0
-          val dx = if (c < 0) -1 else if (c >= w) 1 else 0
-          if (dy == 0 && dx == 0) px(r * w + c)
-          else halo.get((dy, dx)) match {
-            case Some(t) =>
-              val rr = if (dy < 0) t.h + r else if (dy > 0) r - h else r
-              val cc = if (dx < 0) t.w + c else if (dx > 0) c - w else c
-              t.px(rr * t.w + cc)
-            case None => px(r.max(0).min(h - 1) * w + c.max(0).min(w - 1))
-          }
-        }
+      RasterOps.mapRasterWithHalo(in, ts, b, depth = 2) { (h, w, buf, _) =>
+        val bw = w + 4
         Array.tabulate(h * w) { i =>
-          val r = i / w; val c = i % w
+          val o = (i / w + 2) * bw + i % w + 2
+          val step = if (vertical) bw else 1
           var s = 0.0
           var k = -2
           while (k <= 2) {
-            s += wts(k + 2) * (if (vertical) at(r + k, c) else at(r, c + k))
+            s += wts(k + 2) * buf(o + k * step)
             k += 1
           }
           s / 16.0
@@ -783,5 +821,18 @@ class RasterVectorizeSpec extends SparkTestBase {
       RasterOps.meanBlurBox3d(dup3, 1, 1, 4, RasterOps.Boundary.NoPad).collect()))
     assert(m3.contains("mapRasterWithHalo3d: tile (scale=0, c=0, z=1, tile_y=0, " +
       "tile_x=1) occurs more than once"), m3)
+  }
+
+  test("halo assembly refuses a neighbor tile thinner than the kernel depth (2D and 3D)") {
+    // 9 rows in 4x4 tiles: the last tile row is 1 high, and depth 2 needs 2
+    val t2 = partialTiles(Array.tabulate(72)(_.toDouble), 9, 8, 4)
+    val m2 = messages(intercept[Exception](RasterOps.meanBlurBox(t2, 2, 4).collect()))
+    assert(m2.contains("mapRasterWithHalo: tile (scale=0, c=0, tile_y=2, tile_x="), m2)
+    assert(m2.contains("thinner than kernel depth 2"), m2)
+    val t3 = Seq(0, 1).map(z => t2.withColumn("z", lit(z))).reduce(_ union _)
+    val m3 = messages(intercept[Exception](RasterOps.meanBlurBox3d(t3, 2, 1, 4).collect()))
+    assert(m3.contains("mapRasterWithHalo3d: tile (scale=0, c=0, z="), m3)
+    assert(m3.contains(", tile_y=2, tile_x="), m3)
+    assert(m3.contains("thinner than kernel depth 2"), m3)
   }
 }

@@ -12,15 +12,8 @@ import org.apache.spark.sql.functions._
 class RasterZoneSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def withDir[T](f: String => T): T = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_rz_")
-    try f(tmp.resolve("t").toString)
-    finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
-  }
+  private def withDir[T](f: String => T): T =
+    tempDir("graft_rz_")(tmp => f(tmp.resolve("t").toString))
 
   /** 8×8 tiles of 16px (128×128 image), value = tile id — enough blocks
     * (16 at blockTiles=2) for pruning to be observable in the plan.

@@ -69,26 +69,28 @@ class ScaleJoinsSpec extends SparkTestBase {
   }
 
   test("bucketed join plans with no exchange under the join") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bucketed").toString
-    val left = Seq.tabulate(5000)(i => (i.toLong % 400, i.toDouble)).toDF("k", "v")
-    val right = Seq.tabulate(400)(i => (i.toLong, s"g${i % 7}")).toDF("k", "grp")
-    ScaleJoins.writeBucketed(left, "graft_spec_left", "k", 8, s"$dir/l")
-    ScaleJoins.writeBucketed(right, "graft_spec_right", "k", 8, s"$dir/r")
-    try {
-      // keep the join a SortMergeJoin so the exchange-free shape is visible
-      val joined = spark.table("graft_spec_left")
-        .join(spark.table("graft_spec_right").hint("merge"), Seq("k"))
-      val want = left.join(right, Seq("k")).agg(sum($"v").as("s"), count(lit(1)))
-        .collect().toSeq
-      val got = joined.agg(sum($"v").as("s"), count(lit(1))).collect().toSeq
-      assert(got === want)
-      val plan = finalPlanString(joined)
-      assert(plan.contains("SortMergeJoin"), s"expected a SortMergeJoin, got:\n$plan")
-      assert(!plan.contains("Exchange"), s"bucketed join still shuffles:\n$plan")
-      assert(plan.contains("Bucketed: true"), s"scan not bucketed:\n$plan")
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS graft_spec_left")
-      spark.sql("DROP TABLE IF EXISTS graft_spec_right")
+    tempDir("graft-bucketed") { d =>
+      val dir = d.toString
+      val left = Seq.tabulate(5000)(i => (i.toLong % 400, i.toDouble)).toDF("k", "v")
+      val right = Seq.tabulate(400)(i => (i.toLong, s"g${i % 7}")).toDF("k", "grp")
+      ScaleJoins.writeBucketed(left, "graft_spec_left", "k", 8, s"$dir/l")
+      ScaleJoins.writeBucketed(right, "graft_spec_right", "k", 8, s"$dir/r")
+      try {
+        // keep the join a SortMergeJoin so the exchange-free shape is visible
+        val joined = spark.table("graft_spec_left")
+          .join(spark.table("graft_spec_right").hint("merge"), Seq("k"))
+        val want = left.join(right, Seq("k")).agg(sum($"v").as("s"), count(lit(1)))
+          .collect().toSeq
+        val got = joined.agg(sum($"v").as("s"), count(lit(1))).collect().toSeq
+        assert(got === want)
+        val plan = finalPlanString(joined)
+        assert(plan.contains("SortMergeJoin"), s"expected a SortMergeJoin, got:\n$plan")
+        assert(!plan.contains("Exchange"), s"bucketed join still shuffles:\n$plan")
+        assert(plan.contains("Bucketed: true"), s"scan not bucketed:\n$plan")
+      } finally {
+        spark.sql("DROP TABLE IF EXISTS graft_spec_left")
+        spark.sql("DROP TABLE IF EXISTS graft_spec_right")
+      }
     }
   }
 }

@@ -9,15 +9,8 @@ import org.apache.spark.sql.functions._
 class VersionedLayoutSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def withDir[T](f: String => T): T = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_vl_")
-    try f(tmp.resolve("t").toString)
-    finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
-  }
+  private def withDir[T](f: String => T): T =
+    tempDir("graft_vl_")(tmp => f(tmp.resolve("t").toString))
 
   private lazy val a = (0 until 100).map(i => (i.toLong, s"a$i")).toDF("id", "s")
   private lazy val b = (100 until 150).map(i => (i.toLong, s"b$i")).toDF("id", "s")

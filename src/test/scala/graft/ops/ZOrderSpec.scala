@@ -39,9 +39,8 @@ class ZOrderSpec extends SparkTestBase {
   }
 
   test("clusteringDepth: 1 after write and compact, layered after appends") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_zdepth_")
-    val path = tmp.resolve("pts").toString
-    try {
+    tempDir("graft_zdepth_") { tmp =>
+      val path = tmp.resolve("pts").toString
       val pts = (0 until 2000).map(i =>
         (i.toLong, (i * 7 % 100).toDouble, (i * 13 % 100).toDouble))
         .toDF("id", "x", "y")
@@ -57,10 +56,6 @@ class ZOrderSpec extends SparkTestBase {
       assert(ZOrder.clusteringDepth(spark, path) >= 3)
       ZOrder.compact(spark, path, numPartitions = Some(4))
       assert(ZOrder.clusteringDepth(spark, path) === 1)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
     }
   }
 
@@ -89,33 +84,35 @@ class ZOrderSpec extends SparkTestBase {
     val pts = (0 until 4000).map { i =>
       (i.toLong, (i * 131 % 997).toDouble / 10.0, (i * 379 % 991).toDouble / 10.0)
     }.toDF("id", "x", "y")
-    val dir = java.nio.file.Files.createTempDirectory("graft_zorder_").toString
-    ZOrder.writeZOrdered(pts, "x", "y", dir, 0.0, 100.0, 0.0, 100.0,
-      bits = 10, numPartitions = Some(4))
-    val got = ZOrder.readBox(spark, dir, "x", "y", 20.0, 40.0, 30.0, 60.0,
-      0.0, 100.0, 0.0, 100.0, bits = 10, level = 4)
-    val want = pts.filter(col("x") >= 20.0 && col("x") <= 40.0 &&
-      col("y") >= 30.0 && col("y") <= 60.0)
-      .as[(Long, Double, Double)].collect().toSet
-    assert(got.select("id", "x", "y").as[(Long, Double, Double)].collect().toSet == want)
-    assert(want.nonEmpty, "fixture box must be non-empty")
-    // the Morton range predicate must reach the parquet scan as a pushed
-    // filter — that is the whole point of the layout
-    val plan = got.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters") && plan.contains("zkey"),
-      s"zkey ranges not pushed to the scan:\n$plan")
-    // the write persisted its layout parameters; mismatched query params
-    // refuse instead of silently pruning real rows
-    val m = ZOrder.readMeta(spark, dir)
-    assert(m.contains(ZOrder.ZOrderMeta("x", "y", "zkey", 10, 0.0, 100.0, 0.0, 100.0)))
-    intercept[IllegalArgumentException] {
-      ZOrder.readBox(spark, dir, "x", "y", 20.0, 40.0, 30.0, 60.0,
-        0.0, 100.0, 0.0, 100.0, bits = 12, level = 4)
+    tempDir("graft_zorder_") { d =>
+      val dir = d.toString
+      ZOrder.writeZOrdered(pts, "x", "y", dir, 0.0, 100.0, 0.0, 100.0,
+        bits = 10, numPartitions = Some(4))
+      val got = ZOrder.readBox(spark, dir, "x", "y", 20.0, 40.0, 30.0, 60.0,
+        0.0, 100.0, 0.0, 100.0, bits = 10, level = 4)
+      val want = pts.filter(col("x") >= 20.0 && col("x") <= 40.0 &&
+        col("y") >= 30.0 && col("y") <= 60.0)
+        .as[(Long, Double, Double)].collect().toSet
+      assert(got.select("id", "x", "y").as[(Long, Double, Double)].collect().toSet == want)
+      assert(want.nonEmpty, "fixture box must be non-empty")
+      // the Morton range predicate must reach the parquet scan as a pushed
+      // filter — that is the whole point of the layout
+      val plan = got.queryExecution.executedPlan.toString
+      assert(plan.contains("PushedFilters") && plan.contains("zkey"),
+        s"zkey ranges not pushed to the scan:\n$plan")
+      // the write persisted its layout parameters; mismatched query params
+      // refuse instead of silently pruning real rows
+      val m = ZOrder.readMeta(spark, dir)
+      assert(m.contains(ZOrder.ZOrderMeta("x", "y", "zkey", 10, 0.0, 100.0, 0.0, 100.0)))
+      intercept[IllegalArgumentException] {
+        ZOrder.readBox(spark, dir, "x", "y", 20.0, 40.0, 30.0, 60.0,
+          0.0, 100.0, 0.0, 100.0, bits = 12, level = 4)
+      }
+      // the self-configuring overload needs nothing but the box
+      val got2 = ZOrder.readBox(spark, dir, 20.0, 40.0, 30.0, 60.0, level = 4)
+        .select("id", "x", "y").as[(Long, Double, Double)].collect().toSet
+      assert(got2 == want)
     }
-    // the self-configuring overload needs nothing but the box
-    val got2 = ZOrder.readBox(spark, dir, 20.0, 40.0, 30.0, 60.0, level = 4)
-      .select("id", "x", "y").as[(Long, Double, Double)].collect().toSet
-    assert(got2 == want)
   }
 
   test("boundingBoxPointsMultiZ == plain multi-box path under an affine transform") {
@@ -124,35 +121,37 @@ class ZOrderSpec extends SparkTestBase {
     val pts = (0 until 4000).map { i =>
       (i.toLong, (i * 131 % 997).toDouble / 10.0, (i * 379 % 991).toDouble / 10.0)
     }.toDF("id", "x", "y")
-    val dir = java.nio.file.Files.createTempDirectory("graft_zmbspec_").toString
-    ZOrder.writeZOrdered(pts, "x", "y", dir, 0.0, 100.0, 0.0, 100.0,
-      bits = 10, numPartitions = Some(4))
-    // 30-degree-ish rotation + shift: the intrinsic box is ROTATED, so
-    // the coarse prune uses the back-mapped polygon's envelope
-    val t = AffineT(Matrix(3, 3, Array(
-      0.866, -0.5, 3.0,
-      0.5, 0.866, -2.0,
-      0.0, 0.0, 1.0)), Seq("x", "y"), Seq("x", "y"))
-    val boxes = Seq(
-      (Seq(10.0, 20.0), Seq(50.0, 60.0)),
-      (Seq(-30.0, 70.0), Seq(10.0, 95.0)))
-    val got = SpatialQuery.boundingBoxPointsMultiZ(spark, dir, t,
-        Seq("x", "y"), boxes, level = 5)
-      .select("id", "x", "y").as[(Long, Double, Double)].collect().toSet
-    val want = SpatialQuery.boundingBoxPointsMulti(pts, t, Seq("x", "y"), boxes)
-      .as[(Long, Double, Double)].collect().toSet
-    assert(want.nonEmpty, "fixture boxes must be non-empty under the transform")
-    assert(got == want, s"Z path diverged: ${got.size} vs ${want.size} rows")
+    tempDir("graft_zmbspec_") { d =>
+      val dir = d.toString
+      ZOrder.writeZOrdered(pts, "x", "y", dir, 0.0, 100.0, 0.0, 100.0,
+        bits = 10, numPartitions = Some(4))
+      // 30-degree-ish rotation + shift: the intrinsic box is ROTATED, so
+      // the coarse prune uses the back-mapped polygon's envelope
+      val t = AffineT(Matrix(3, 3, Array(
+        0.866, -0.5, 3.0,
+        0.5, 0.866, -2.0,
+        0.0, 0.0, 1.0)), Seq("x", "y"), Seq("x", "y"))
+      val boxes = Seq(
+        (Seq(10.0, 20.0), Seq(50.0, 60.0)),
+        (Seq(-30.0, 70.0), Seq(10.0, 95.0)))
+      val got = SpatialQuery.boundingBoxPointsMultiZ(spark, dir, t,
+          Seq("x", "y"), boxes, level = 5)
+        .select("id", "x", "y").as[(Long, Double, Double)].collect().toSet
+      val want = SpatialQuery.boundingBoxPointsMulti(pts, t, Seq("x", "y"), boxes)
+        .as[(Long, Double, Double)].collect().toSet
+      assert(want.nonEmpty, "fixture boxes must be non-empty under the transform")
+      assert(got == want, s"Z path diverged: ${got.size} vs ${want.size} rows")
 
-    // the polygon query rides the same coarse prune + plain-path refine
-    val poly = graft.geom.WKB.write(graft.geom.GPolygon(Array(Array(
-      20.13, 10.07, 80.21, 30.63, 40.17, 71.49))))
-    val gotP = SpatialQuery.polygonQueryPointsZ(spark, dir,
-        graft.model.IdentityT, poly, level = 5)
-      .select("id", "x", "y").as[(Long, Double, Double)].collect().toSet
-    val wantP = SpatialQuery.polygonQueryPoints(pts, graft.model.IdentityT, poly)
-      .as[(Long, Double, Double)].collect().toSet
-    assert(wantP.nonEmpty && gotP == wantP,
-      s"polygon Z path diverged: ${gotP.size} vs ${wantP.size} rows")
+      // the polygon query rides the same coarse prune + plain-path refine
+      val poly = graft.geom.WKB.write(graft.geom.GPolygon(Array(Array(
+        20.13, 10.07, 80.21, 30.63, 40.17, 71.49))))
+      val gotP = SpatialQuery.polygonQueryPointsZ(spark, dir,
+          graft.model.IdentityT, poly, level = 5)
+        .select("id", "x", "y").as[(Long, Double, Double)].collect().toSet
+      val wantP = SpatialQuery.polygonQueryPoints(pts, graft.model.IdentityT, poly)
+        .as[(Long, Double, Double)].collect().toSet
+      assert(wantP.nonEmpty && gotP == wantP,
+        s"polygon Z path diverged: ${gotP.size} vs ${wantP.size} rows")
+    }
   }
 }

@@ -9,15 +9,8 @@ import org.apache.spark.sql.functions._
 class BloomIndexSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def withLayout[T](f: String => T): T = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bloomspec_")
-    try f(tmp.resolve("data").toString)
-    finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
-  }
+  private def withLayout[T](f: String => T): T =
+    tempDir("graft_bloomspec_")(tmp => f(tmp.resolve("data").toString))
 
   // 4 partitions x 250 keys, keys globally unique and part-disjoint
   private lazy val rows = (0 until 1000).map { i =>

@@ -17,15 +17,8 @@ class ErIndexSpec extends SparkTestBase {
     (base ++ variants).distinct.toDF("term")
   }
 
-  private def withTmp[A](tag: String)(f: java.nio.file.Path => A): A = {
-    val tmp = java.nio.file.Files.createTempDirectory(s"eridx_$tag")
-    try f(tmp)
-    finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
-  }
+  private def withTmp[A](tag: String)(f: java.nio.file.Path => A): A =
+    tempDir(s"eridx_$tag")(f)
 
   test("FastSS index: probe-after-append == probe-after-rebuild == brute force") {
     withTmp("fss") { tmp =>

@@ -354,62 +354,58 @@ class PlanShapeSpec extends SparkTestBase {
   test("bm25RankIndexed: term IN pushes to the postings scan; stats broadcast; top-k TakeOrdered") {
     val docs = (1 to 50).map(i => (i.toLong, s"spark join filter scan number $i"))
       .toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bm25spec_")
-    val table = "graft_bm25_spec_idx"
-    try {
-      TextIndex.writeBm25Index(docs, table, tmp.resolve("idx").toString)
-      val (postings, stats) = TextIndex.readBm25Index(spark, table)
-      val out = TextIndex.bm25RankIndexed(postings, stats, Seq("spark", "join"), k = 5)
-      val plan = out.queryExecution.executedPlan.toString
-      // the whole point of the index: the probe reads postings for ITS
-      // terms only — the IN filter must reach the parquet scan
-      assert(plan.contains("PushedFilters: [In(term"),
-        s"term IN not pushed to the postings scan:\n$plan")
-      assert(plan.contains("TakeOrderedAndProject"),
-        s"top-k must plan as TakeOrderedAndProject:\n$plan")
-      assert(plan.contains("BroadcastExchange"), s"stats/df must broadcast:\n$plan")
-      assert(!plan.contains("CartesianProduct"), s"CartesianProduct in:\n$plan")
-      // and the ranking itself agrees with the recompute path exactly
-      val got = out.collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2)))
-      val want = TextIndex.bm25Rank(docs, Seq("spark", "join"), k = 5)
-        .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2)))
-      assert(got.sameElements(want), s"indexed != recompute:\n${got.toSeq}\n${want.toSeq}")
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS `$table`")
-      spark.sql(s"DROP TABLE IF EXISTS `${table}_stats`")
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
+    tempDir("graft_bm25spec_") { tmp =>
+      val table = "graft_bm25_spec_idx"
+      try {
+        TextIndex.writeBm25Index(docs, table, tmp.resolve("idx").toString)
+        val (postings, stats) = TextIndex.readBm25Index(spark, table)
+        val out = TextIndex.bm25RankIndexed(postings, stats, Seq("spark", "join"), k = 5)
+        val plan = out.queryExecution.executedPlan.toString
+        // the whole point of the index: the probe reads postings for ITS
+        // terms only — the IN filter must reach the parquet scan
+        assert(plan.contains("PushedFilters: [In(term"),
+          s"term IN not pushed to the postings scan:\n$plan")
+        assert(plan.contains("TakeOrderedAndProject"),
+          s"top-k must plan as TakeOrderedAndProject:\n$plan")
+        assert(plan.contains("BroadcastExchange"), s"stats/df must broadcast:\n$plan")
+        assert(!plan.contains("CartesianProduct"), s"CartesianProduct in:\n$plan")
+        // and the ranking itself agrees with the recompute path exactly
+        val got = out.collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2)))
+        val want = TextIndex.bm25Rank(docs, Seq("spark", "join"), k = 5)
+          .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2)))
+        assert(got.sameElements(want), s"indexed != recompute:\n${got.toSeq}\n${want.toSeq}")
+      } finally {
+        spark.sql(s"DROP TABLE IF EXISTS `$table`")
+        spark.sql(s"DROP TABLE IF EXISTS `${table}_stats`")
+      }
     }
   }
 
   test("qlRankIndexed: term IN pushes to the postings scan; top-k TakeOrdered; == scan form") {
     val docs = (1 to 50).map(i => (i.toLong, s"spark join filter scan number $i"))
       .toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_qlspec_")
-    val table = "graft_ql_spec_idx"
-    try {
-      TextIndex.writeBm25Index(docs, table, tmp.resolve("idx").toString)
-      val (postings, stats) = TextIndex.readBm25Index(spark, table)
-      val out = TextIndex.qlRankIndexed(postings, stats, Seq("spark", "join"), k = 5)
-      val plan = out.queryExecution.executedPlan.toString
-      // the index serves BOTH ranking families: the QL probe too must
-      // read only its own terms' postings
-      assert(plan.contains("PushedFilters: [In(term"),
-        s"term IN not pushed to the postings scan:\n$plan")
-      assert(plan.contains("TakeOrderedAndProject"),
-        s"top-k must plan as TakeOrderedAndProject:\n$plan")
-      assert(!plan.contains("CartesianProduct"), s"CartesianProduct in:\n$plan")
-      val got = out.collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2)))
-      val want = TextIndex.qlRank(docs, Seq("spark", "join"), k = 5)
-        .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2)))
-      assert(got.sameElements(want), s"indexed != recompute:\n${got.toSeq}\n${want.toSeq}")
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS `$table`")
-      spark.sql(s"DROP TABLE IF EXISTS `${table}_stats`")
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
+    tempDir("graft_qlspec_") { tmp =>
+      val table = "graft_ql_spec_idx"
+      try {
+        TextIndex.writeBm25Index(docs, table, tmp.resolve("idx").toString)
+        val (postings, stats) = TextIndex.readBm25Index(spark, table)
+        val out = TextIndex.qlRankIndexed(postings, stats, Seq("spark", "join"), k = 5)
+        val plan = out.queryExecution.executedPlan.toString
+        // the index serves BOTH ranking families: the QL probe too must
+        // read only its own terms' postings
+        assert(plan.contains("PushedFilters: [In(term"),
+          s"term IN not pushed to the postings scan:\n$plan")
+        assert(plan.contains("TakeOrderedAndProject"),
+          s"top-k must plan as TakeOrderedAndProject:\n$plan")
+        assert(!plan.contains("CartesianProduct"), s"CartesianProduct in:\n$plan")
+        val got = out.collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2)))
+        val want = TextIndex.qlRank(docs, Seq("spark", "join"), k = 5)
+          .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2)))
+        assert(got.sameElements(want), s"indexed != recompute:\n${got.toSeq}\n${want.toSeq}")
+      } finally {
+        spark.sql(s"DROP TABLE IF EXISTS `$table`")
+        spark.sql(s"DROP TABLE IF EXISTS `${table}_stats`")
+      }
     }
   }
 

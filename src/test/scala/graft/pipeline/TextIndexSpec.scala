@@ -21,16 +21,14 @@ class TextIndexSpec extends SparkTestBase {
   private lazy val batch = corpus.filter($"doc_id" % 4 === 0)
 
   private def withIndex[A](tag: String)(f: org.apache.spark.sql.DataFrame => A): A = {
-    val tmp = java.nio.file.Files.createTempDirectory(s"tidx_$tag")
-    val table = s"graft_tidx_$tag"
-    try {
-      TextIndex.writeBandIndex(corpus, table, tmp.resolve("idx").toString)
-      f(TextIndex.readBandIndex(spark, table))
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS `$table`")
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
+    tempDir(s"tidx_$tag") { tmp =>
+      val table = s"graft_tidx_$tag"
+      try {
+        TextIndex.writeBandIndex(corpus, table, tmp.resolve("idx").toString)
+        f(TextIndex.readBandIndex(spark, table))
+      } finally {
+        spark.sql(s"DROP TABLE IF EXISTS `$table`")
+      }
     }
   }
 
@@ -41,31 +39,29 @@ class TextIndexSpec extends SparkTestBase {
       (3L, "alpha beta gamma"),            // once
       (4L, "nothing relevant here")
     ).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("tidx_pos")
-    val table = "graft_tidx_pos"
-    try {
-      TextIndex.writePositionalIndex(docs, table, tmp.resolve("idx").toString)
-      for (phrase <- Seq("alpha beta", "alpha beta alpha", "beta alpha")) {
-        val indexed = TextIndex.phraseCountIndexed(spark, table, phrase)
+    tempDir("tidx_pos") { tmp =>
+      val table = "graft_tidx_pos"
+      try {
+        TextIndex.writePositionalIndex(docs, table, tmp.resolve("idx").toString)
+        for (phrase <- Seq("alpha beta", "alpha beta alpha", "beta alpha")) {
+          val indexed = TextIndex.phraseCountIndexed(spark, table, phrase)
+            .as[(Long, Long)].collect().toMap
+          val scan = TextIndex.phraseCount(docs, phrase)
+            .filter($"n_occurrences" > 0)
+            .select($"doc_id", $"n_occurrences").as[(Long, Long)].collect().toMap
+          assert(indexed === scan, s"phrase '$phrase' mismatch")
+        }
+        // the duplicated-term phrase intersects the SAME posting list twice
+        val dup = TextIndex.phraseCountIndexed(spark, table, "alpha beta alpha")
           .as[(Long, Long)].collect().toMap
-        val scan = TextIndex.phraseCount(docs, phrase)
-          .filter($"n_occurrences" > 0)
-          .select($"doc_id", $"n_occurrences").as[(Long, Long)].collect().toMap
-        assert(indexed === scan, s"phrase '$phrase' mismatch")
+        assert(dup === Map(1L -> 2L))
+        val plan = TextIndex.phraseCountIndexed(spark, table, "alpha beta")
+          .queryExecution.executedPlan.toString
+        assert(plan.contains("PushedFilters") && plan.contains("In(term"),
+          s"term IN must push to the postings scan:\n$plan")
+      } finally {
+        spark.sql(s"DROP TABLE IF EXISTS `$table`")
       }
-      // the duplicated-term phrase intersects the SAME posting list twice
-      val dup = TextIndex.phraseCountIndexed(spark, table, "alpha beta alpha")
-        .as[(Long, Long)].collect().toMap
-      assert(dup === Map(1L -> 2L))
-      val plan = TextIndex.phraseCountIndexed(spark, table, "alpha beta")
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("PushedFilters") && plan.contains("In(term"),
-        s"term IN must push to the postings scan:\n$plan")
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS `$table`")
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
     }
   }
 
@@ -108,36 +104,34 @@ class TextIndexSpec extends SparkTestBase {
     // empty-text doc in the APPENDED batch: contributes to N/avgdl but
     // has no postings — the stats merge must still be exact
     val docs = corpus.union(Seq((9999L, "")).toDF("doc_id", "text"))
-    val tmpF = java.nio.file.Files.createTempDirectory("tidx_bm25_full")
-    val tmpI = java.nio.file.Files.createTempDirectory("tidx_bm25_incr")
-    val (tf, ti) = ("graft_tidx_bm25_full", "graft_tidx_bm25_incr")
-    try {
-      TextIndex.writeBm25Index(docs, tf, tmpF.resolve("idx").toString)
-      TextIndex.writeBm25Index(docs.filter($"doc_id" % 4 =!= 0),
-        ti, tmpI.resolve("idx").toString)
-      TextIndex.appendToBm25Index(docs.filter($"doc_id" % 4 === 0), ti)
-      val (pF, sF) = TextIndex.readBm25Index(spark, tf)
-      val (pI, sI) = TextIndex.readBm25Index(spark, ti)
-      assert(pI.as[(String, Long, Double, Double)].collect().toSet ===
-        pF.as[(String, Long, Double, Double)].collect().toSet)
-      // stats merge is EXACT: n adds, decimal sum_dl adds, avgdl is the
-      // same double as the rebuild's
-      assert(sI.select("n_docs", "avgdl").as[(Long, Double)].head() ===
-        sF.select("n_docs", "avgdl").as[(Long, Double)].head())
-      val rF = TextIndex.bm25RankIndexed(pF, sF, Seq("quick", "unique"), k = 10)
-        .as[(Long, Double, Long)].collect().toSeq
-      val rI = TextIndex.bm25RankIndexed(pI, sI, Seq("quick", "unique"), k = 10)
-        .as[(Long, Double, Long)].collect().toSeq
-      assert(rI === rF && rI.nonEmpty)
-    } finally {
-      Seq(tf, ti).foreach { t =>
-        spark.sql(s"DROP TABLE IF EXISTS `$t`")
-        spark.sql(s"DROP TABLE IF EXISTS `${t}_stats`")
+    tempDir("tidx_bm25_full") { tmpF =>
+      tempDir("tidx_bm25_incr") { tmpI =>
+        val (tf, ti) = ("graft_tidx_bm25_full", "graft_tidx_bm25_incr")
+        try {
+          TextIndex.writeBm25Index(docs, tf, tmpF.resolve("idx").toString)
+          TextIndex.writeBm25Index(docs.filter($"doc_id" % 4 =!= 0),
+            ti, tmpI.resolve("idx").toString)
+          TextIndex.appendToBm25Index(docs.filter($"doc_id" % 4 === 0), ti)
+          val (pF, sF) = TextIndex.readBm25Index(spark, tf)
+          val (pI, sI) = TextIndex.readBm25Index(spark, ti)
+          assert(pI.as[(String, Long, Double, Double)].collect().toSet ===
+            pF.as[(String, Long, Double, Double)].collect().toSet)
+          // stats merge is EXACT: n adds, decimal sum_dl adds, avgdl is the
+          // same double as the rebuild's
+          assert(sI.select("n_docs", "avgdl").as[(Long, Double)].head() ===
+            sF.select("n_docs", "avgdl").as[(Long, Double)].head())
+          val rF = TextIndex.bm25RankIndexed(pF, sF, Seq("quick", "unique"), k = 10)
+            .as[(Long, Double, Long)].collect().toSeq
+          val rI = TextIndex.bm25RankIndexed(pI, sI, Seq("quick", "unique"), k = 10)
+            .as[(Long, Double, Long)].collect().toSeq
+          assert(rI === rF && rI.nonEmpty)
+        } finally {
+          Seq(tf, ti).foreach { t =>
+            spark.sql(s"DROP TABLE IF EXISTS `$t`")
+            spark.sql(s"DROP TABLE IF EXISTS `${t}_stats`")
+          }
+        }
       }
-      import scala.jdk.CollectionConverters._
-      Seq(tmpF, tmpI).foreach(tmp =>
-        java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p)))
     }
   }
 
@@ -174,20 +168,18 @@ class TextIndexSpec extends SparkTestBase {
       assert(g._3 === w._3)
     }
     // at-rest form: identical rows through the postings/stats layout
-    val tmp = java.nio.file.Files.createTempDirectory("graft_qlidx_")
-    val t = "graft_ql_spec_idx"
-    try {
-      TextIndex.writeBm25Index(docs, t, tmp.resolve("idx").toString)
-      val (p, st) = TextIndex.readBm25Index(spark, t)
-      val idx = TextIndex.qlRankIndexed(p, st, terms, k = 10, mu = mu)
-        .orderBy(col("doc_id")).as[(Long, Double, Long)].collect().toSeq
-      assert(idx === got)
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS `$t`")
-      spark.sql(s"DROP TABLE IF EXISTS `${t}_stats`")
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-        .foreach(pth => java.nio.file.Files.deleteIfExists(pth))
+    tempDir("graft_qlidx_") { tmp =>
+      val t = "graft_ql_spec_idx"
+      try {
+        TextIndex.writeBm25Index(docs, t, tmp.resolve("idx").toString)
+        val (p, st) = TextIndex.readBm25Index(spark, t)
+        val idx = TextIndex.qlRankIndexed(p, st, terms, k = 10, mu = mu)
+          .orderBy(col("doc_id")).as[(Long, Double, Long)].collect().toSeq
+        assert(idx === got)
+      } finally {
+        spark.sql(s"DROP TABLE IF EXISTS `$t`")
+        spark.sql(s"DROP TABLE IF EXISTS `${t}_stats`")
+      }
     }
   }
 
@@ -214,42 +206,40 @@ class TextIndexSpec extends SparkTestBase {
     }.toDF("doc_id", "text")
     val batch = docs.filter($"doc_id" % 4 === 1)
     val stored = docs.filter($"doc_id" % 4 =!= 1)
-    val tmp = java.nio.file.Files.createTempDirectory("tidx_span")
-    val t1 = "graft_tidx_span_a"; val t2 = "graft_tidx_span_b"
-    try {
-      TextIndex.writeSpanIndex(stored.filter($"doc_id" % 3 =!= 0), t1,
-        tmp.resolve("a").toString, k = 8)
-      TextIndex.appendToSpanIndex(stored.filter($"doc_id" % 3 === 0), t1)
-      val inc = TextIndex.probeSpans(spark, t1, batch)
-        .orderBy("doc_id", "span_start")
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSeq
-      TextIndex.writeSpanIndex(stored, t2, tmp.resolve("b").toString, k = 8)
-      val full = TextIndex.probeSpans(spark, t2, batch)
-        .orderBy("doc_id", "span_start")
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSeq
-      assert(inc === full, "append != rebuild")
-      // recompute oracle: full-union duplicateSpans restricted to batch
-      val batchIds = batch.select("doc_id").as[Long].collect().toSet
-      val want = Dedup.duplicateSpans(docs, k = 8)
-        .orderBy("doc_id", "span_start")
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2)))
-        .filter(x => batchIds.contains(x._1)).toSeq
-      assert(inc === want, "probe != full-union recompute")
-      assert(inc.nonEmpty, "fixture must contain duplicated spans")
-      // the index-side gram count aggregates bucket-locally: no exchange
-      // between the index scan and its aggregate
-      val plan = TextIndex.probeSpans(spark, t2, batch)
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("Bucketed: true"),
-        s"span probe must engage the bucketed layout:\n$plan")
-      // k mismatch refuses loudly via the stored property
-      assert(TextIndex.spanIndexK(spark, t2) == 8)
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS `$t1`")
-      spark.sql(s"DROP TABLE IF EXISTS `$t2`")
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
+    tempDir("tidx_span") { tmp =>
+      val t1 = "graft_tidx_span_a"; val t2 = "graft_tidx_span_b"
+      try {
+        TextIndex.writeSpanIndex(stored.filter($"doc_id" % 3 =!= 0), t1,
+          tmp.resolve("a").toString, k = 8)
+        TextIndex.appendToSpanIndex(stored.filter($"doc_id" % 3 === 0), t1)
+        val inc = TextIndex.probeSpans(spark, t1, batch)
+          .orderBy("doc_id", "span_start")
+          .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSeq
+        TextIndex.writeSpanIndex(stored, t2, tmp.resolve("b").toString, k = 8)
+        val full = TextIndex.probeSpans(spark, t2, batch)
+          .orderBy("doc_id", "span_start")
+          .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSeq
+        assert(inc === full, "append != rebuild")
+        // recompute oracle: full-union duplicateSpans restricted to batch
+        val batchIds = batch.select("doc_id").as[Long].collect().toSet
+        val want = Dedup.duplicateSpans(docs, k = 8)
+          .orderBy("doc_id", "span_start")
+          .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2)))
+          .filter(x => batchIds.contains(x._1)).toSeq
+        assert(inc === want, "probe != full-union recompute")
+        assert(inc.nonEmpty, "fixture must contain duplicated spans")
+        // the index-side gram count aggregates bucket-locally: no exchange
+        // between the index scan and its aggregate
+        val plan = TextIndex.probeSpans(spark, t2, batch)
+          .queryExecution.executedPlan.toString
+        assert(plan.contains("Bucketed: true"),
+          s"span probe must engage the bucketed layout:\n$plan")
+        // k mismatch refuses loudly via the stored property
+        assert(TextIndex.spanIndexK(spark, t2) == 8)
+      } finally {
+        spark.sql(s"DROP TABLE IF EXISTS `$t1`")
+        spark.sql(s"DROP TABLE IF EXISTS `$t2`")
+      }
     }
   }
 }

@@ -9,15 +9,8 @@ import org.apache.spark.sql.functions._
 class ZoneMapIndexSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def withLayout[T](f: String => T): T = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_zmspec_")
-    try f(tmp.resolve("data").toString)
-    finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
-  }
+  private def withLayout[T](f: String => T): T =
+    tempDir("graft_zmspec_")(tmp => f(tmp.resolve("data").toString))
 
   // partitions with DISJOINT value bands: p0 [0,99], p1 [100,199], p2
   // [200,299], plus a NULL-only partition

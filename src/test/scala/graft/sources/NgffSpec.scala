@@ -8,9 +8,6 @@ import org.apache.spark.sql.functions._
 class NgffSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def tmpDir(): String =
-    java.nio.file.Files.createTempDirectory("graft-ngff").toString
-
   test("zarr dtype codec round-trips every numeric dtype") {
     val vals = Array(0.0, 1.0, 7.0, 250.0, 31000.0)
     for (dt <- Seq("<u1", "<i1", "<u2", "<i2", "<u4", "<i4", "<i8", "<f4", "<f8", ">u2", ">f8")) {
@@ -136,124 +133,134 @@ class NgffSpec extends SparkTestBase {
   }
 
   test("ngff write -> read round-trips tiles, transforms and channels") {
-    val dir = tmpDir()
-    val pixels = Seq.tabulate(500)(i =>
-      (i % 2, i % 20, (i * 7) % 23, (i % 89 + 1).toDouble))
-      .toDF("c", "y", "x", "value")
-      .groupBy("c", "y", "x").agg(sum("value").as("value"))
-    val tiles = RasterOps.pixelsToTiles(pixels, tileSize = 8)
-    val t = Map("global" -> ScaleT(Seq(2.0, 2.0), Seq("x", "y")),
-      "micron" -> TranslationT(Seq(1.5, -3.0), Seq("x", "y")))
-    NgffRaster.write(tiles, s"$dir/img", "img", tileSize = 8,
-      transforms = t, channels = Seq("ch0", "ch1"))
-    val (got, meta) = NgffRaster.read(spark, s"$dir/img")
-    assert(meta.axes == Seq("c", "y", "x"))
-    assert(meta.channels == Seq("ch0", "ch1"))
-    assert(meta.transforms == t)
-    assert(!meta.isLabels)
-    // pixel-exact round trip (compare via long-form)
-    val want = RasterOps.tilesToPixels(tiles, tileSize = 8)
-      .select("c", "y", "x", "value").as[(Int, Int, Int, Double)].collect().toSet
-    val back = RasterOps.tilesToPixels(got, tileSize = 8)
-      .select("c", "y", "x", "value").as[(Int, Int, Int, Double)].collect().toSet
-    assert(back == want)
+    tempDir("graft-ngff") { d =>
+      val dir = d.toString
+      val pixels = Seq.tabulate(500)(i =>
+        (i % 2, i % 20, (i * 7) % 23, (i % 89 + 1).toDouble))
+        .toDF("c", "y", "x", "value")
+        .groupBy("c", "y", "x").agg(sum("value").as("value"))
+      val tiles = RasterOps.pixelsToTiles(pixels, tileSize = 8)
+      val t = Map("global" -> ScaleT(Seq(2.0, 2.0), Seq("x", "y")),
+        "micron" -> TranslationT(Seq(1.5, -3.0), Seq("x", "y")))
+      NgffRaster.write(tiles, s"$dir/img", "img", tileSize = 8,
+        transforms = t, channels = Seq("ch0", "ch1"))
+      val (got, meta) = NgffRaster.read(spark, s"$dir/img")
+      assert(meta.axes == Seq("c", "y", "x"))
+      assert(meta.channels == Seq("ch0", "ch1"))
+      assert(meta.transforms == t)
+      assert(!meta.isLabels)
+      // pixel-exact round trip (compare via long-form)
+      val want = RasterOps.tilesToPixels(tiles, tileSize = 8)
+        .select("c", "y", "x", "value").as[(Int, Int, Int, Double)].collect().toSet
+      val back = RasterOps.tilesToPixels(got, tileSize = 8)
+        .select("c", "y", "x", "value").as[(Int, Int, Int, Double)].collect().toSet
+      assert(back == want)
+    }
   }
 
   test("rank-2 labels store round-trips with integer dtype") {
-    val dir = tmpDir()
-    val labels = Seq.tabulate(300)(i => (0, i % 21, (i * 5) % 19, (i % 6).toDouble))
-      .toDF("c", "y", "x", "value").groupBy("c", "y", "x").agg(max("value").as("value"))
-    val tiles = RasterOps.pixelsToTiles(labels, tileSize = 8)
-    NgffRaster.write(tiles, s"$dir/lab", "lab", tileSize = 8,
-      axes = Seq("y", "x"), dtype = "<i4", compressorId = "zlib", isLabels = true)
-    val (got, meta) = NgffRaster.read(spark, s"$dir/lab")
-    assert(meta.isLabels && meta.axes == Seq("y", "x"))
-    assert(meta.scales.head.meta.dtype == "<i4")
-    val want = RasterOps.tilesToPixels(tiles, tileSize = 8)
-      .select("y", "x", "value").as[(Int, Int, Double)].collect().toSet
-    val back = RasterOps.tilesToPixels(got, tileSize = 8)
-      .select("y", "x", "value").as[(Int, Int, Double)].collect().toSet
-    assert(back == want)
+    tempDir("graft-ngff") { d =>
+      val dir = d.toString
+      val labels = Seq.tabulate(300)(i => (0, i % 21, (i * 5) % 19, (i % 6).toDouble))
+        .toDF("c", "y", "x", "value").groupBy("c", "y", "x").agg(max("value").as("value"))
+      val tiles = RasterOps.pixelsToTiles(labels, tileSize = 8)
+      NgffRaster.write(tiles, s"$dir/lab", "lab", tileSize = 8,
+        axes = Seq("y", "x"), dtype = "<i4", compressorId = "zlib", isLabels = true)
+      val (got, meta) = NgffRaster.read(spark, s"$dir/lab")
+      assert(meta.isLabels && meta.axes == Seq("y", "x"))
+      assert(meta.scales.head.meta.dtype == "<i4")
+      val want = RasterOps.tilesToPixels(tiles, tileSize = 8)
+        .select("y", "x", "value").as[(Int, Int, Double)].collect().toSet
+      val back = RasterOps.tilesToPixels(got, tileSize = 8)
+        .select("y", "x", "value").as[(Int, Int, Double)].collect().toSet
+      assert(back == want)
+    }
   }
 
   test("rank-4 (c, z, y, x) image store round-trips pixel-exact") {
-    val dir = tmpDir()
-    val pixels = Seq.tabulate(600)(i =>
-      (i % 2, i % 3, i % 12, (i * 7) % 17, (i % 53 + 1).toDouble))
-      .toDF("c", "z", "y", "x", "value")
-      .groupBy("c", "z", "y", "x").agg(sum("value").as("value"))
-    val tiles = RasterOps.pixelsToTiles3d(pixels, tileSize = 8)
-    NgffRaster.write(tiles, s"$dir/vol", "vol", tileSize = 8,
-      axes = Seq("c", "z", "y", "x"), channels = Seq("a", "b"))
-    val (got, meta) = NgffRaster.read(spark, s"$dir/vol")
-    assert(meta.axes == Seq("c", "z", "y", "x"))
-    assert(meta.scales.head.meta.shape.length == 4)
-    assert(meta.scales.head.meta.chunks == Seq(1, 1, 8, 8))
-    val want = RasterOps.tilesToPixels3d(tiles, tileSize = 8)
-      .select("c", "z", "y", "x", "value").as[(Int, Int, Int, Int, Double)].collect().toSet
-    val back = RasterOps.tilesToPixels3d(got, tileSize = 8)
-      .select("c", "z", "y", "x", "value").as[(Int, Int, Int, Int, Double)].collect().toSet
-    assert(back == want)
+    tempDir("graft-ngff") { d =>
+      val dir = d.toString
+      val pixels = Seq.tabulate(600)(i =>
+        (i % 2, i % 3, i % 12, (i * 7) % 17, (i % 53 + 1).toDouble))
+        .toDF("c", "z", "y", "x", "value")
+        .groupBy("c", "z", "y", "x").agg(sum("value").as("value"))
+      val tiles = RasterOps.pixelsToTiles3d(pixels, tileSize = 8)
+      NgffRaster.write(tiles, s"$dir/vol", "vol", tileSize = 8,
+        axes = Seq("c", "z", "y", "x"), channels = Seq("a", "b"))
+      val (got, meta) = NgffRaster.read(spark, s"$dir/vol")
+      assert(meta.axes == Seq("c", "z", "y", "x"))
+      assert(meta.scales.head.meta.shape.length == 4)
+      assert(meta.scales.head.meta.chunks == Seq(1, 1, 8, 8))
+      val want = RasterOps.tilesToPixels3d(tiles, tileSize = 8)
+        .select("c", "z", "y", "x", "value").as[(Int, Int, Int, Int, Double)].collect().toSet
+      val back = RasterOps.tilesToPixels3d(got, tileSize = 8)
+        .select("c", "z", "y", "x", "value").as[(Int, Int, Int, Int, Double)].collect().toSet
+      assert(back == want)
+    }
   }
 
   test("rank-3 (z, y, x) labels reads back through an external-style chunked-z store") {
     // write with our writer (z-chunk extent 1), then verify the reader's
     // generic chunk-plane iteration by reading a store whose chunks span
     // multiple z planes (hand-built, as an external writer would chunk)
-    val dir = tmpDir()
-    val m = Zarr.ArrayMeta(Seq(4, 4, 4), Seq(2, 4, 4), "<i4",
-      Some(Zarr.Compressor("zlib", clevel = 1)), 0.0, "C", ".")
-    val fs = new java.io.File(s"$dir/zlab/0")
-    fs.mkdirs()
-    def writeJson(p: String, s: String): Unit = {
-      val w = new java.io.FileWriter(p); w.write(s); w.close()
+    tempDir("graft-ngff") { d =>
+      val dir = d.toString
+      val m = Zarr.ArrayMeta(Seq(4, 4, 4), Seq(2, 4, 4), "<i4",
+        Some(Zarr.Compressor("zlib", clevel = 1)), 0.0, "C", ".")
+      val fs = new java.io.File(s"$dir/zlab/0")
+      fs.mkdirs()
+      def writeJson(p: String, s: String): Unit = {
+        val w = new java.io.FileWriter(p); w.write(s); w.close()
+      }
+      writeJson(s"$dir/zlab/.zgroup", """{"zarr_format": 2}""")
+      writeJson(s"$dir/zlab/.zattrs",
+        """{"multiscales": [{"version": "0.4", "name": "zlab",
+          |  "axes": [{"name": "z", "type": "space"}, {"name": "y", "type": "space"},
+          |           {"name": "x", "type": "space"}],
+          |  "datasets": [{"path": "0", "coordinateTransformations":
+          |    [{"type": "scale", "scale": [1.0, 1.0, 1.0]}]}]}],
+          | "image-label": {"version": "0.4"}}""".stripMargin)
+      writeJson(s"$dir/zlab/0/.zarray", Zarr.arrayMetaJson(m))
+      // chunk (zc, 0, 0) covers z planes [2*zc, 2*zc+2); value = z*100 + y*10 + x
+      for (zc <- 0 until 2) {
+        val vals = new Array[Double](2 * 4 * 4)
+        for (zi <- 0 until 2; y <- 0 until 4; x <- 0 until 4)
+          vals((zi * 4 + y) * 4 + x) = (2 * zc + zi) * 100 + y * 10 + x
+        val bytes = Zarr.encodeChunk(vals, m)
+        val out = new java.io.FileOutputStream(s"$dir/zlab/0/$zc.0.0")
+        out.write(bytes); out.close()
+      }
+      val (got, meta) = NgffRaster.read(spark, s"$dir/zlab")
+      assert(meta.isLabels && meta.axes == Seq("z", "y", "x"))
+      val px = RasterOps.tilesToPixels3d(got, tileSize = 4)
+        .select("z", "y", "x", "value").as[(Int, Int, Int, Double)].collect()
+      assert(px.length == 64)
+      assert(px.forall { case (z, y, x, v) => v == z * 100 + y * 10 + x })
     }
-    writeJson(s"$dir/zlab/.zgroup", """{"zarr_format": 2}""")
-    writeJson(s"$dir/zlab/.zattrs",
-      """{"multiscales": [{"version": "0.4", "name": "zlab",
-        |  "axes": [{"name": "z", "type": "space"}, {"name": "y", "type": "space"},
-        |           {"name": "x", "type": "space"}],
-        |  "datasets": [{"path": "0", "coordinateTransformations":
-        |    [{"type": "scale", "scale": [1.0, 1.0, 1.0]}]}]}],
-        | "image-label": {"version": "0.4"}}""".stripMargin)
-    writeJson(s"$dir/zlab/0/.zarray", Zarr.arrayMetaJson(m))
-    // chunk (zc, 0, 0) covers z planes [2*zc, 2*zc+2); value = z*100 + y*10 + x
-    for (zc <- 0 until 2) {
-      val vals = new Array[Double](2 * 4 * 4)
-      for (zi <- 0 until 2; y <- 0 until 4; x <- 0 until 4)
-        vals((zi * 4 + y) * 4 + x) = (2 * zc + zi) * 100 + y * 10 + x
-      val bytes = Zarr.encodeChunk(vals, m)
-      val out = new java.io.FileOutputStream(s"$dir/zlab/0/$zc.0.0")
-      out.write(bytes); out.close()
-    }
-    val (got, meta) = NgffRaster.read(spark, s"$dir/zlab")
-    assert(meta.isLabels && meta.axes == Seq("z", "y", "x"))
-    val px = RasterOps.tilesToPixels3d(got, tileSize = 4)
-      .select("z", "y", "x", "value").as[(Int, Int, Int, Double)].collect()
-    assert(px.length == 64)
-    assert(px.forall { case (z, y, x, v) => v == z * 100 + y * 10 + x })
   }
 
   test("multiscale store: per-level .zarray, partial-scale read") {
-    val dir = tmpDir()
-    val pixels = Seq.tabulate(400)(i => (0, i % 16, (i * 3) % 16, 1.0 + i % 7))
-      .toDF("c", "y", "x", "value").groupBy("c", "y", "x").agg(sum("value").as("value"))
-    val pyr = RasterOps.buildPyramid(pixels, levels = 1)
-    val tiles = RasterOps.pixelsToTiles(pyr.filter(col("scale") === 0).drop("scale"), tileSize = 8)
-      .unionByName(RasterOps.pixelsToTiles(
-        pyr.filter(col("scale") === 1).drop("scale"), tileSize = 8, scale = 1))
-    NgffRaster.write(tiles, s"$dir/ms", "ms", tileSize = 8)
-    val meta = NgffRaster.readMeta(spark, s"$dir/ms")
-    assert(meta.scales.map(_.path) == Seq("0", "1"))
-    assert(meta.scales(1).scaleFactors == Seq(1.0, 2.0, 2.0))
-    val (onlyL1, _) = NgffRaster.read(spark, s"$dir/ms", scaleSelection = Some(Seq(1)))
-    assert(onlyL1.select("scale").distinct().as[Int].collect().toSeq == Seq(1))
-    val wantL1 = pyr.filter(col("scale") === 1)
-      .select("c", "y", "x", "value").as[(Int, Int, Int, Double)].collect().toSet
-    val backL1 = RasterOps.tilesToPixels(onlyL1, tileSize = 8)
-      .filter(col("value") =!= 0.0)
-      .select("c", "y", "x", "value").as[(Int, Int, Int, Double)].collect().toSet
-    assert(backL1 == wantL1)
+    tempDir("graft-ngff") { d =>
+      val dir = d.toString
+      val pixels = Seq.tabulate(400)(i => (0, i % 16, (i * 3) % 16, 1.0 + i % 7))
+        .toDF("c", "y", "x", "value").groupBy("c", "y", "x").agg(sum("value").as("value"))
+      val pyr = RasterOps.buildPyramid(pixels, levels = 1)
+      val tiles = RasterOps.pixelsToTiles(pyr.filter(col("scale") === 0).drop("scale"), tileSize = 8)
+        .unionByName(RasterOps.pixelsToTiles(
+          pyr.filter(col("scale") === 1).drop("scale"), tileSize = 8, scale = 1))
+      NgffRaster.write(tiles, s"$dir/ms", "ms", tileSize = 8)
+      val meta = NgffRaster.readMeta(spark, s"$dir/ms")
+      assert(meta.scales.map(_.path) == Seq("0", "1"))
+      assert(meta.scales(1).scaleFactors == Seq(1.0, 2.0, 2.0))
+      val (onlyL1, _) = NgffRaster.read(spark, s"$dir/ms", scaleSelection = Some(Seq(1)))
+      assert(onlyL1.select("scale").distinct().as[Int].collect().toSeq == Seq(1))
+      val wantL1 = pyr.filter(col("scale") === 1)
+        .select("c", "y", "x", "value").as[(Int, Int, Int, Double)].collect().toSet
+      val backL1 = RasterOps.tilesToPixels(onlyL1, tileSize = 8)
+        .filter(col("value") =!= 0.0)
+        .select("c", "y", "x", "value").as[(Int, Int, Int, Double)].collect().toSet
+      assert(backL1 == wantL1)
+    }
   }
 
   test("blosc frame decode: zstd inner codec") {

@@ -15,9 +15,6 @@ import org.apache.spark.sql.functions._
 class NgffWriteSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def tmpDir(): String =
-    java.nio.file.Files.createTempDirectory("graft-ngff-write").toString
-
   private def pixels: DataFrame =
     Seq.tabulate(300)(i => (i % 2, i % 20, (i * 7) % 19, (i % 13 + 1).toDouble))
       .toDF("c", "y", "x", "value")
@@ -35,10 +32,12 @@ class NgffWriteSpec extends SparkTestBase {
     val tiles = RasterOps.pixelsToTiles(pixels, tileSize = 8).persist()
     try {
       tiles.count()
-      val dir = s"${tmpDir()}/img"
-      val (jobs, _) = traced(NgffRaster.write(tiles, dir, "img", tileSize = 8))
-      assert(jobs === 1)
-      assert(readBack(dir) === want)
+      tempDir("graft-ngff-write") { d =>
+        val dir = s"$d/img"
+        val (jobs, _) = traced(NgffRaster.write(tiles, dir, "img", tileSize = 8))
+        assert(jobs === 1)
+        assert(readBack(dir) === want)
+      }
     } finally tiles.unpersist(blocking = true)
   }
 
@@ -47,37 +46,43 @@ class NgffWriteSpec extends SparkTestBase {
     try {
       tiles.count()
       val meta = Models.ImageModel.meta("img").copy(attrs = Map("tile_size" -> "8"))
-      val root = s"${tmpDir()}/store.zarr"
-      val (jobs, _) = traced(RefStoreWriter.write(
-        SpatialDataset(spark, Seq(SpatialElement(meta, tiles))), root, tileSize = 8))
-      assert(jobs === 1)
-      assert(readBack(s"$root/images/img") === want)
+      tempDir("graft-ngff-write") { d =>
+        val root = s"$d/store.zarr"
+        val (jobs, _) = traced(RefStoreWriter.write(
+          SpatialDataset(spark, Seq(SpatialElement(meta, tiles))), root, tileSize = 8))
+        assert(jobs === 1)
+        assert(readBack(s"$root/images/img") === want)
+      }
     } finally tiles.unpersist(blocking = true)
   }
 
   test("a labels element's pixelsToTiles exchange runs once") {
     val labels = Seq.tabulate(120)(i => (i % 11, (i * 5) % 13, (i % 4 + 1).toLong))
       .toDF("y", "x", "label")
-    val root = s"${tmpDir()}/store.zarr"
-    val (_, shuffleStages) = traced(RefStoreWriter.write(
-      SpatialDataset(spark, Seq(SpatialElement(Models.LabelsModel.meta("lab"), labels))),
-      root, tileSize = 8))
-    assert(shuffleStages === 1)
-    val (back, meta) = NgffRaster.read(spark, s"$root/labels/lab")
-    assert(meta.isLabels && meta.axes === Seq("y", "x"))
-    val got = RasterOps.tilesToPixels(back, tileSize = 8).filter(col("value") =!= 0.0)
-      .select("y", "x", "value").as[(Int, Int, Double)].collect().toSet
-    assert(got === labels.as[(Int, Int, Long)].collect().map { case (y, x, l) =>
-      (y, x, l.toDouble) }.toSet)
+    tempDir("graft-ngff-write") { d =>
+      val root = s"$d/store.zarr"
+      val (_, shuffleStages) = traced(RefStoreWriter.write(
+        SpatialDataset(spark, Seq(SpatialElement(Models.LabelsModel.meta("lab"), labels))),
+        root, tileSize = 8))
+      assert(shuffleStages === 1)
+      val (back, meta) = NgffRaster.read(spark, s"$root/labels/lab")
+      assert(meta.isLabels && meta.axes === Seq("y", "x"))
+      val got = RasterOps.tilesToPixels(back, tileSize = 8).filter(col("value") =!= 0.0)
+        .select("y", "x", "value").as[(Int, Int, Double)].collect().toSet
+      assert(got === labels.as[(Int, Int, Long)].collect().map { case (y, x, l) =>
+        (y, x, l.toDouble) }.toSet)
+    }
   }
 
   /** The write's refusal, after which the store has no metadata and does not read. */
   private def refused(tiles: DataFrame): IllegalArgumentException = {
-    val dir = s"${tmpDir()}/img"
-    val e = intercept[IllegalArgumentException](NgffRaster.write(tiles, dir, "img", tileSize = 8))
-    Seq(".zattrs", ".zgroup").foreach(f => assert(!new java.io.File(s"$dir/$f").exists, f))
-    intercept[Exception](NgffRaster.read(spark, dir))
-    e
+    tempDir("graft-ngff-write") { d =>
+      val dir = s"$d/img"
+      val e = intercept[IllegalArgumentException](NgffRaster.write(tiles, dir, "img", tileSize = 8))
+      Seq(".zattrs", ".zgroup").foreach(f => assert(!new java.io.File(s"$dir/$f").exists, f))
+      intercept[Exception](NgffRaster.read(spark, dir))
+      e
+    }
   }
 
   test("an empty raster is refused and leaves no readable store") {
@@ -91,12 +96,14 @@ class NgffWriteSpec extends SparkTestBase {
   }
 
   test("a tile larger than the chunk extent refuses from inside the task") {
-    val dir = s"${tmpDir()}/img"
-    val e = intercept[SparkException](NgffRaster.write(
-      RasterOps.pixelsToTiles(pixels, tileSize = 8), dir, "img", tileSize = 4))
-    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
-    assert(causes.exists(c => c.isInstanceOf[IllegalArgumentException] &&
-      c.getMessage.contains("tile 8x8 exceeds the chunk extent 4")), causes.mkString("\n"))
-    assert(!new java.io.File(s"$dir/.zattrs").exists)
+    tempDir("graft-ngff-write") { d =>
+      val dir = s"$d/img"
+      val e = intercept[SparkException](NgffRaster.write(
+        RasterOps.pixelsToTiles(pixels, tileSize = 8), dir, "img", tileSize = 4))
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(causes.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+        c.getMessage.contains("tile 8x8 exceeds the chunk extent 4")), causes.mkString("\n"))
+      assert(!new java.io.File(s"$dir/.zattrs").exists)
+    }
   }
 }

@@ -9,8 +9,8 @@ class EventStreamSpec extends SparkTestBase {
   private val schemaDDL =
     "event_id LONG, ts LONG, user_id LONG, event_type STRING, value DOUBLE, props STRING"
 
-  test("streaming windowed counts equal the batch plan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream").toString
+  test("streaming windowed counts equal the batch plan") { tempDir("graft-stream") { d =>
+    val dir = d.toString
     // stage the events parquet as a stream source directory (ts as LONG ns)
     Tables.eventsWithTs(spark, "/root/testdata/sf0.001")
       .write.mode("overwrite").parquet(dir)
@@ -28,14 +28,13 @@ class EventStreamSpec extends SparkTestBase {
     val streamed = spark.table("win_out")
       .orderBy("window_start", "event_type").collect().toSeq
     assert(streamed == batch && batch.nonEmpty)
-  }
+  }}
 
-  test("streaming versioned ingest: per-batch atomic commits, compaction in-stream") {
+  test("streaming versioned ingest: per-batch atomic commits, compaction in-stream") { tempDir("graft-vingest") { d =>
     import graft.ops.VersionedLayout
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-vsrc").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-vout")
-      .resolve("table").toString
+    val dir = d.resolve("src").toString
+    val out = d.resolve("table").toString
     val events = Tables.eventsWithTs(spark, "/root/testdata/sf0.001")
     events.filter(col("event_id") % 2 === 0).coalesce(1)
       .write.mode("overwrite").parquet(dir)
@@ -57,13 +56,12 @@ class EventStreamSpec extends SparkTestBase {
     val all = spark.read.schema(schemaDDL).parquet(dir)
       .select("event_id").as[Long].collect().toSet
     assert(latest === all)
-  }
+  }}
 
-  test("streaming HLL register maintenance equals the one-shot batch sketch") {
+  test("streaming HLL register maintenance equals the one-shot batch sketch") { tempDir("graft-hll") { d =>
     import graft.pipeline.Sketches
-    val dir = java.nio.file.Files.createTempDirectory("graft-hllsrc").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-hllout")
-      .resolve("registers").toString
+    val dir = d.resolve("src").toString
+    val out = d.resolve("registers").toString
     val events = Tables.eventsWithTs(spark, "/root/testdata/sf0.001")
     // two part files -> two micro-batches with maxFilesPerTrigger=1
     events.filter(col("event_id") % 2 === 0).coalesce(1)
@@ -89,14 +87,13 @@ class EventStreamSpec extends SparkTestBase {
       spark.read.schema(schemaDDL).parquet(dir), Seq("event_type"), "user_id",
       p = 7).select("event_type", "est_distinct").collect().toSet
     assert(est.nonEmpty)
-  }
+  }}
 
-  test("streaming CMS grid maintenance: merged batches equal the one-shot sketch; replay is idempotent") {
+  test("streaming CMS grid maintenance: merged batches equal the one-shot sketch; replay is idempotent") { tempDir("graft-cms") { d =>
     import graft.pipeline.Sketches
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-cmssrc").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-cmsout")
-      .resolve("grids").toString
+    val dir = d.resolve("src").toString
+    val out = d.resolve("grids").toString
     val events = Tables.eventsWithTs(spark, "/root/testdata/sf0.001")
     events.filter(col("event_id") % 2 === 0).coalesce(1)
       .write.mode("overwrite").parquet(dir)
@@ -140,13 +137,12 @@ class EventStreamSpec extends SparkTestBase {
     val afterReplay = Sketches.cmsMerge(Seq(spark.read.parquet(out)))
     assert(afterReplay.exceptAll(oneShot).isEmpty &&
       oneShot.exceptAll(afterReplay).isEmpty, "replay changed the sketch")
-  }
+  }}
 
-  test("streaming histogram maintenance: merged batch bins equal the one-shot histogram") {
+  test("streaming histogram maintenance: merged batch bins equal the one-shot histogram") { tempDir("graft-hist") { d =>
     import graft.pipeline.Sketches
-    val dir = java.nio.file.Files.createTempDirectory("graft-histsrc").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-histout")
-      .resolve("bins").toString
+    val dir = d.resolve("src").toString
+    val out = d.resolve("bins").toString
     val events = Tables.eventsWithTs(spark, "/root/testdata/sf0.001")
     events.filter(col("event_id") % 2 === 0).coalesce(1)
       .write.mode("overwrite").parquet(dir)
@@ -169,14 +165,13 @@ class EventStreamSpec extends SparkTestBase {
     assert(merged.exceptAll(oneShot).isEmpty &&
       oneShot.exceptAll(merged).isEmpty, "merged bins != one-shot bins")
     assert(merged.count() > 0)
-  }
+  }}
 
-  test("streaming priority sample: merged batch states equal the one-shot weighted draw") {
+  test("streaming priority sample: merged batch states equal the one-shot weighted draw") { tempDir("graft-pri") { d =>
     import graft.pipeline.Sampling
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-prisrc").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-priout")
-      .resolve("state").toString
+    val dir = d.resolve("src").toString
+    val out = d.resolve("state").toString
     val events = Tables.eventsWithTs(spark, "/root/testdata/sf0.001")
       .withColumn("value", abs(col("value")) + 1.0) // positive weights
     events.filter(col("event_id") % 2 === 0).coalesce(1)
@@ -198,13 +193,12 @@ class EventStreamSpec extends SparkTestBase {
       .select("event_id", "priority", "est_w")
       .as[(Long, Double, Double)].collect().sortBy(_._1)
     assert(live.toSeq === oneShot.toSeq && live.length === 25)
-  }
+  }}
 
-  test("streaming decay buckets: state-read equals the bucket-aligned one-shot; asOf moves without touching state") {
+  test("streaming decay buckets: state-read equals the bucket-aligned one-shot; asOf moves without touching state") { tempDir("graft-dec") { d =>
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-decsrc").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-decout")
-      .resolve("buckets").toString
+    val dir = d.resolve("src").toString
+    val out = d.resolve("buckets").toString
     val events = Tables.eventsWithTs(spark, "/root/testdata/sf0.001")
     events.filter(col("event_id") % 2 === 0).coalesce(1)
       .write.mode("overwrite").parquet(dir)
@@ -244,7 +238,7 @@ class EventStreamSpec extends SparkTestBase {
       assert(math.abs(later(k) - dc / 2) < 1.5e-6,
         s"one extra half-life must halve $k: ${later(k)} vs ${dc / 2}")
     }
-  }
+  }}
 
   test("forwardFill: carries the last observation per key; leading NULLs stay NULL") {
     import spark.implicits._
@@ -371,8 +365,8 @@ class EventStreamSpec extends SparkTestBase {
     assert(two === Map("x>y" -> 4L, "y>z" -> 4L))
   }
 
-  test("streaming stream-static enrichment equals the batch plan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-enrich").toString
+  test("streaming stream-static enrichment equals the batch plan") { tempDir("graft-enrich") { d =>
+    val dir = d.toString
     Tables.eventsWithTs(spark, "/root/testdata/sf0.001")
       .write.mode("overwrite").parquet(dir)
     val dim = Tables.customer(spark, "/root/testdata/sf0.001")
@@ -393,7 +387,7 @@ class EventStreamSpec extends SparkTestBase {
     val streamed = spark.table("enrich_out")
       .orderBy("c_mktsegment", "event_type").collect().toSeq
     assert(streamed == batch && batch.nonEmpty)
-  }
+  }}
 
   test("enrichWithDim works when the event and dim key share a name") {
     import spark.implicits._
@@ -407,8 +401,8 @@ class EventStreamSpec extends SparkTestBase {
     assert(out == Seq(("A", 1L, 2.0), ("B", 1L, 3.0)))
   }
 
-  test("stream-stream attribution join emits the batch pairs") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-attr").toString
+  test("stream-stream attribution join emits the batch pairs") { tempDir("graft-attr") { d =>
+    val dir = d.toString
     Tables.eventsWithTs(spark, "/root/testdata/sf0.001")
       .write.mode("overwrite").parquet(dir)
 
@@ -429,7 +423,7 @@ class EventStreamSpec extends SparkTestBase {
       .select("src_event_id", "dst_event_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(streamed == batch && batch.nonEmpty)
-  }
+  }}
 
   test("attribution pairs respect the window bounds (exclusive start, inclusive end)") {
     import spark.implicits._
@@ -462,11 +456,11 @@ class EventStreamSpec extends SparkTestBase {
     assert(got == Seq((7L, 1L, 2L), (7L, 2L, 1L), (9L, 1L, 1L)))
   }
 
-  test("streamingSessionize emits the batch sessions (gap close + timeout flush)") {
+  test("streamingSessionize emits the batch sessions (gap close + timeout flush)") { tempDir("graft-sess") { d =>
     import spark.implicits._
     val ns = (m: Long) => m * 60L * 1000000000L
     val us = (m: Long) => m * 60L * 1000000L
-    val dir = java.nio.file.Files.createTempDirectory("graft-sess").toString
+    val dir = d.toString
 
     def stage(name: String, rows: Seq[(Long, Long, Long, String, Double, String)]): Unit =
       rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -500,13 +494,13 @@ class EventStreamSpec extends SparkTestBase {
         (7L, us(1000), us(1010), 2L), (7L, us(1060), us(1060), 1L),
         (9L, us(1005), us(1005), 1L)))
     } finally q.stop()
-  }
+  }}
 
-  test("session_window streaming emits the same sessions as the hand-rolled state") {
+  test("session_window streaming emits the same sessions as the hand-rolled state") { tempDir("graft-sessw") { d =>
     import spark.implicits._
     val ns = (m: Long) => m * 60L * 1000000000L
     val us = (m: Long) => m * 60L * 1000000L
-    val dir = java.nio.file.Files.createTempDirectory("graft-sessw").toString
+    val dir = d.toString
     Seq((1L, ns(1000), 7L, "a", 1.0, ""), (2L, ns(1010), 7L, "a", 1.0, ""),
       (3L, ns(1060), 7L, "a", 1.0, ""), (4L, ns(1005), 9L, "b", 1.0, ""))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -529,12 +523,12 @@ class EventStreamSpec extends SparkTestBase {
         (7L, us(1000), us(1010 + 30), 2L), (7L, us(1060), us(1060 + 30), 1L),
         (9L, us(1005), us(1005 + 30), 1L)))
     } finally q.stop()
-  }
+  }}
 
-  test("streaming dedup-by-key keeps one row per key, matching the batch form") {
+  test("streaming dedup-by-key keeps one row per key, matching the batch form") { tempDir("graft-dedup") { d =>
     import spark.implicits._
     val ns = (m: Long) => m * 60L * 1000000000L
-    val dir = java.nio.file.Files.createTempDirectory("graft-dedup").toString
+    val dir = d.toString
     // at-least-once delivery: event 1 and 3 arrive twice (once across files)
     Seq((1L, ns(1000), 7L, "a", 1.0, ""), (1L, ns(1000), 7L, "a", 1.0, ""),
       (2L, ns(1001), 7L, "b", 2.0, ""), (3L, ns(1002), 9L, "a", 3.0, ""))
@@ -559,7 +553,7 @@ class EventStreamSpec extends SparkTestBase {
       .select("event_id", "user_id", "value").as[(Long, Long, Double)]
       .collect().toSet
     assert(streamed == batch)
-  }
+  }}
 
   test("parseJsonCol: pinned schema; malformed and NULL rows parse to NULL fields") {
     import spark.implicits._
